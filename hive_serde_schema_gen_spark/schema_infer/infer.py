@@ -4,52 +4,58 @@ The reference runs a sequential fold over a lazy line iterator in a single
 JVM thread (``/root/reference/Schemer.scala:7-14``).  Here the same fold is a
 classic **partial/final distributed aggregation**:
 
-    sc.textFile(path)                       # operator 1: line-delimited scan
-      .mapPartitionsWithIndex(local fold)   # operators 2-4: parse + observe,
+    sc.textFile(path, cores)                # operator 1: one split per core
+                                            #   (and per MiB of input)
+      .mapPartitionsWithIndex(_fold)        # operators 2-4: parse + observe,
                                             #   one partial schema per partition
       → driver: prefix-sum line counts, merge partials in partition order
                                             # final merge (first-seen field order)
 
-Each partition emits exactly one tiny record (partition id, line count,
-partial descriptor or first error), so the driver-side work is O(partitions ×
-schema size) — at 100 TB / 128 MB splits that is ~800k small merges, still
-driver-trivial, and the heavy parse work is embarrassingly parallel.  Line
-numbers are exact without a ``zipWithIndex`` second job: local offsets +
-driver prefix sums (SURVEY §7 "cheap line numbers at scale").
+One kernel, :func:`_fold`, is the only parse → observe loop: it folds every
+partition, re-folds a partition on the error path, folds each task of
+:func:`infer_json_column`, and is :func:`infer_ndjson_strings`.  It takes a
+seed schema, and folding lines seeded with the schema of the lines before
+them gives exactly the fold of all of them.
 
-Error semantics (``FAILFAST``, the reference's behavior): the first bad line
-in *file order* aborts the run.  Because every partition stops at its first
-error, the first erroring partition in partition order always carries the
-globally-first error (its predecessors completed with full counts).  A
-cross-partition kind conflict that only surfaces in the driver's final merge
-triggers one targeted re-scan of the conflicting partition, seeded with the
-accumulated schema, to recover the exact line — an extra job on the error
-path only.  ``PERMISSIVE`` instead skips bad rows and returns sampled errors.
+Each partition emits exactly one tiny record (partition id, then the
+kernel's partial schema, line count, sampled errors and first error), so the
+driver-side work is O(partitions × schema size) — at 100 TB / 128 MB splits
+that is ~800k small merges, still driver-trivial, and the heavy parse work
+is embarrassingly parallel.  Line numbers are exact without a
+``zipWithIndex`` second job: local offsets + driver prefix sums (SURVEY §7
+"cheap line numbers at scale").
 
-``infer_json_column`` applies the same lattice to a DataFrame string column
+Error semantics: ``FAILFAST`` (the reference's behavior) aborts at the first
+bad line in *file order*; ``PERMISSIVE`` skips bad rows, keeps the earlier
+kind of a conflicting field, and returns the first 20 errors.  A partition
+whose partial conflicts with the schema of the partitions before it, or
+(FAILFAST) that stopped at a local error, is re-folded on its own — one
+one-task job, error path only — seeded with that schema.  The seeded re-fold
+is the one-partition fold of the file up to there, so FAILFAST's line and
+PERMISSIVE's schema and error lines do not depend on the split.  PERMISSIVE
+re-folds every later partition that conflicts with the same schema in that
+one job, so a field that changes kind partway through a file costs one
+parallel pass, not one job per partition.
+
+``infer_json_column`` applies the same kernel to a DataFrame string column
 (e.g. ``events.props``) via Arrow-batched ``mapInPandas`` — the Spark-idiomatic
 fast path when the JSON is already a column rather than a raw file.
 """
 
 from __future__ import annotations
 
-import base64
 import json
 import pickle
 from dataclasses import dataclass, field
 from decimal import Decimal
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterable, List, Optional, Tuple
 
 from .errors import BadJson, SchemaGenError
 from .lattice import (
-    BOOL,
     EMPTY_STRUCT,
-    UNKNOWN,
+    Arr,
     Descriptor,
-    Num,
-    Str,
     Struct,
-    _scale,
     describe,
     merge,
     merge_lenient,
@@ -97,82 +103,98 @@ class InferenceResult:
         return render_table(self.schema, name, file)
 
 
-# One record per partition: (pid, lines_seen, ok, payload)
-#   ok=True  → payload = (pickled partial descriptor, permissive error list)
-#   ok=False → payload = (local_line_of_first_error, pickled exception)
-_PartRec = Tuple[int, int, bool, bytes]
-
-
 def _observe_lenient(schema: Descriptor, value, detect_dates: bool = False) -> Descriptor:
     """PERMISSIVE fold step for a row that conflicts with the schema:
     field-wise best-effort merge (conflicting fields keep the earlier kind,
-    clean fields still contribute).  This matches what ``merge_lenient``
-    does when the same rows land in *different* partitions, so the inferred
-    field set does not depend on partition boundaries.  A row whose value
-    cannot even be described (e.g. a mixed-kind array) is skipped whole."""
+    clean fields still contribute).  A row whose value cannot even be
+    described (e.g. a mixed-kind array) is skipped whole."""
     try:
         return merge_lenient(schema, describe(value, detect_dates=detect_dates))
     except SchemaGenError:
         return schema
 
 
-def _fold_partition(pid: int, it: Iterator[str], permissive: bool, detect_dates: bool = False):
-    schema: Descriptor = EMPTY_STRUCT
+# What the kernel returns: (schema, lines seen, PERMISSIVE's sampled
+# (local line, message) errors, FAILFAST's first error or None)
+_Fold = Tuple[Descriptor, int, List[Tuple[int, str]], Optional[SchemaGenError]]
+
+
+def _fold(
+    lines: Iterable[str],
+    schema: Descriptor = EMPTY_STRUCT,
+    permissive: bool = False,
+    detect_dates: bool = False,
+) -> _Fold:
+    """The fold kernel: parse each line and observe it into ``schema``.
+
+    Lines are numbered from 1.  FAILFAST stops at the first bad line and
+    returns its error with that local line number set.  PERMISSIVE skips bad
+    JSON, degrades a conflicting row field-wise, and keeps going, keeping
+    the first ``_MAX_ERROR_SAMPLES`` errors.  Seeding ``schema`` with what the
+    lines before these folded to gives exactly the fold of all of them.
+    """
     n = 0
     errors: List[Tuple[int, str]] = []
-    for raw in it:
+    for raw in lines:
         n += 1
         try:
             value = parse_line(raw)
         except ValueError as e:
-            err: SchemaGenError = BadJson(raw, str(e), line=n)
-            if permissive:
-                if len(errors) < _MAX_ERROR_SAMPLES:
-                    errors.append((n, type(err).__name__ + ": " + str(e)))
-                continue
-            yield (pid, n, False, pickle.dumps(err))
-            return
+            if not permissive:
+                return schema, n, errors, BadJson(raw, str(e), line=n)
+            if len(errors) < _MAX_ERROR_SAMPLES:
+                errors.append((n, "BadJson: " + str(e)))
+            continue
         try:
-            schema = observe(schema, value, line=n, detect_dates=detect_dates)
+            schema = observe(schema, value, n, detect_dates)
         except SchemaGenError as e:
-            if permissive:
-                if len(errors) < _MAX_ERROR_SAMPLES:
-                    errors.append((n, type(e).__name__))
-                schema = _observe_lenient(schema, value, detect_dates)
-                continue
-            if getattr(e, "raw", None) is None and hasattr(e, "raw"):
-                e.raw = value
-            yield (pid, n, False, pickle.dumps(e))
-            return
-    yield (pid, n, True, pickle.dumps((schema, errors)))
-
-
-def _rescan_partition(target_pid: int, seed_b64: str, detect_dates: bool = False):
-    """Closure for the error-path re-scan: fold only ``target_pid`` seeded
-    with the schema accumulated from all earlier partitions, to recover the
-    exact line of a conflict first seen at driver merge time."""
-
-    def f(pid: int, it: Iterator[str]):
-        if pid != target_pid:
-            return
-        schema: Descriptor = pickle.loads(base64.b64decode(seed_b64))
-        n = 0
-        for raw in it:
-            n += 1
-            try:
-                value = parse_line(raw)
-            except ValueError as e:
-                yield (n, pickle.dumps(BadJson(raw, str(e), line=n)))
-                return
-            try:
-                schema = observe(schema, value, line=n, detect_dates=detect_dates)
-            except SchemaGenError as e:
+            if not permissive:
                 if getattr(e, "raw", None) is None and hasattr(e, "raw"):
                     e.raw = value
-                yield (n, pickle.dumps(e))
-                return
+                return schema, n, errors, e.with_line(n)
+            if len(errors) < _MAX_ERROR_SAMPLES:
+                errors.append((n, type(e).__name__))
+            schema = _observe_lenient(schema, value, detect_dates)
+    return schema, n, errors, None
 
-    return f
+
+# Fewest bytes in a default split beyond Spark's own default of two, so a
+# small file does not pay a task start-up per core for a millisecond fold.
+_MIN_SPLIT_BYTES = 1 << 20
+
+
+def _input_bytes(sc, path: str) -> int:
+    """Total size of what ``sc.textFile(path)`` reads (comma-separated
+    files, directories or globs, split the way ``textFile`` splits them)."""
+    jvm = sc._jvm
+    job = jvm.org.apache.hadoop.mapred.JobConf(sc._jsc.hadoopConfiguration())
+    jvm.org.apache.hadoop.mapred.FileInputFormat.setInputPaths(job, path)
+    total = 0
+    for hp in jvm.org.apache.hadoop.mapred.FileInputFormat.getInputPaths(job):
+        fs = hp.getFileSystem(job)
+        for st in fs.globStatus(hp) or []:
+            total += fs.getContentSummary(st.getPath()).getLength()
+    return total
+
+
+def _kinds(d: Descriptor):
+    """``d`` without its bounds.  Whether a row conflicts, and the kinds it
+    leaves, depend on nothing else; so if ``t`` is ``s`` widened by folding
+    and has the kinds of ``s``, a fold seeded with ``s`` meets the same
+    errors as one seeded with ``t``, and ``merge(t, fold(s))`` is
+    ``fold(t)``."""
+    if isinstance(d, Struct):
+        return ("struct", tuple((k, _kinds(v)) for k, v in d.fields.items()))
+    if isinstance(d, Arr):
+        return ("array", _kinds(d.element))
+    return d.kind
+
+
+def _merge_or_none(a: Descriptor, b: Descriptor) -> Optional[Descriptor]:
+    try:
+        return merge(a, b)
+    except SchemaGenError:
+        return None
 
 
 def infer_path(
@@ -186,97 +208,79 @@ def infer_path(
     """Infer the schema of an NDJSON file/glob distributively.
 
     ``mode="FAILFAST"`` reproduces the reference's first-bad-line abort with
-    an exact line number; ``"PERMISSIVE"`` skips bad rows and returns up to
-    20 sampled errors per partition.  ``sampling_ratio`` (like
-    ``spark.read.json``'s option) infers from a deterministic row sample —
-    line numbers are then relative to the sample and reported as None.
-    ``detect_dates`` (opt-in deviation, OFF for reference fidelity) types
-    ISO-8601 strings as DATE/TIMESTAMP.
+    an exact line number; ``"PERMISSIVE"`` skips bad rows and returns the
+    first 20 errors in file order.  ``min_partitions`` defaults to one split
+    per core, but no more splits than MiB of input, and never fewer than
+    Spark's default of 2.
+    ``sampling_ratio`` (like ``spark.read.json``'s option) infers from a
+    deterministic row sample — line numbers are then relative to the sample
+    and reported as None.  ``detect_dates`` (opt-in deviation, OFF for
+    reference fidelity) types ISO-8601 strings as DATE/TIMESTAMP.
     """
     permissive = mode.upper() == "PERMISSIVE"
     sc = spark.sparkContext
-    rdd = sc.textFile(path, minPartitions=min_partitions) if min_partitions else sc.textFile(path)
+    if not min_partitions:
+        by_size = -(-_input_bytes(sc, path) // _MIN_SPLIT_BYTES)
+        min_partitions = max(sc.defaultMinPartitions, min(sc.defaultParallelism, by_size))
+    rdd = sc.textFile(path, minPartitions=min_partitions)
     sampled = sampling_ratio is not None and sampling_ratio < 1.0
     if sampled:
         rdd = rdd.sample(False, float(sampling_ratio), seed=42)
 
-    recs: List[_PartRec] = rdd.mapPartitionsWithIndex(
-        lambda pid, it: _fold_partition(pid, it, permissive, detect_dates)
+    recs = rdd.mapPartitionsWithIndex(
+        lambda pid, it: [(pid, _fold(it, EMPTY_STRUCT, permissive, detect_dates))]
     ).collect()
     recs.sort(key=lambda r: r[0])
 
     # Prefix-sum the per-partition line counts → global line offsets.
     offsets = {}
     total = 0
-    for pid, n, _ok, _payload in recs:
+    for pid, (_schema, n, _errors, _err) in recs:
         offsets[pid] = total
         total += n
 
-    # Single pass in partition (= file) order.  FAILFAST must report the
-    # first bad line in *file* order, and a locally-clean partition can
-    # still conflict with the schema accumulated from earlier partitions —
-    # so clean partials merge as we go (a merge conflict triggers a seeded
-    # re-scan for its exact line), and the first locally-erroring partition
-    # is *also* re-scanned seeded with everything before it: an early row of
-    # that partition may conflict cross-partition at a smaller line number
-    # than its local error.  Earlier partitions always win this way.
+    def at(pid: int, local: Optional[int]) -> Optional[int]:
+        return None if sampled else offsets[pid] + local
+
+    # Merge in partition (= file) order.  A partition whose partial does not
+    # merge, or that stopped at a local error, is re-folded seeded with the
+    # schema of the partitions before it: the seeded fold is the fold of the
+    # file up to there, so its first error is the file's first error, and
+    # PERMISSIVE's schema and error lines do not depend on the split.
+    # PERMISSIVE re-folds, in the same job and with the same seed, every
+    # later partition whose partial conflicts with that schema too (a field
+    # that changes kind partway through a file conflicts in each of them);
+    # such a re-fold stands in for its partition's own as long as the
+    # schema before that partition still has the seed's kinds (_kinds).
     schema: Descriptor = EMPTY_STRUCT
     all_errors: List[LineError] = []
-    first_pid = recs[0][0] if recs else None
-    for pid, n, ok, payload in recs:
-        if not ok:
-            err: SchemaGenError = pickle.loads(payload)
-            if pid == first_pid:
-                # no preceding schema: the local error IS the global first
-                local = err.line or n
-                raise err.with_line(None if sampled else offsets[pid] + local)
-            _raise_first_error_in_partition(
-                spark, rdd, pid, schema, offsets, sampled, detect_dates, fallback=err
-            )
-        partial, errors = pickle.loads(payload)
-        if permissive:
-            # conflicts that only surface across partitions degrade the same
-            # way as within a partition: earlier kind wins, error recorded
-            before = schema
-            schema = merge_lenient(schema, partial)
-            try:
-                merge(before, partial)
-            except SchemaGenError as e:
-                all_errors.append(
-                    LineError(None, f"{type(e).__name__} (cross-partition, kept earlier kind)")
+    refolds = {}  # pid -> (kinds of the seed, seeded fold)
+    for i, (pid, (partial, _n, errors, err)) in enumerate(recs):
+        if err is not None and schema == EMPTY_STRUCT:
+            # nothing before it: the partition's own fold is the seeded one
+            raise err.with_line(at(pid, err.line))
+        merged = None if err is not None else _merge_or_none(schema, partial)
+        if merged is None:
+            kinds = _kinds(schema)
+            if pid not in refolds or refolds[pid][0] != kinds:
+                pids = [pid]
+                if permissive:
+                    pids += [p for p, (part, *_) in recs[i + 1:]
+                             if _merge_or_none(schema, part) is None]
+                folds = sc.runJob(
+                    rdd,
+                    lambda it: [_fold(it, schema, permissive, detect_dates)],
+                    partitions=pids,
                 )
-        else:
-            try:
-                schema = merge(schema, partial)
-            except SchemaGenError:
-                _raise_first_error_in_partition(
-                    spark, rdd, pid, schema, offsets, sampled, detect_dates
-                )
-        for local, msg in errors:
-            all_errors.append(
-                LineError(None if sampled else offsets[pid] + local, msg)
-            )
-    return InferenceResult(schema, total, all_errors)
-
-
-def _raise_first_error_in_partition(
-    spark, rdd, pid, schema, offsets, sampled, detect_dates=False, fallback=None
-):
-    """Error path only: re-fold partition ``pid`` seeded with the schema
-    accumulated from all earlier partitions and raise its first error (a
-    cross-partition kind conflict, a local conflict, or bad JSON — whichever
-    comes first in line order) with its exact global line number."""
-    seed = base64.b64encode(pickle.dumps(schema)).decode()
-    found = rdd.mapPartitionsWithIndex(
-        _rescan_partition(pid, seed, detect_dates)
-    ).collect()
-    if found:
-        local, payload = found[0]
-        err = pickle.loads(payload)
-        raise err.with_line(None if sampled else offsets[pid] + local)
-    if fallback is not None:  # pragma: no cover - rescan reproduces the fold
-        raise fallback
-    raise SchemaGenError(f"partition {pid} conflicts with prior schema")  # pragma: no cover
+                refolds.update((p, (kinds, f)) for p, f in zip(pids, folds))
+            refolded, _n, errors, err = refolds[pid][1]
+            if err is not None:
+                raise err.with_line(at(pid, err.line))
+            merged = merge(schema, refolded)
+        schema = merged
+        all_errors.extend(LineError(at(pid, local), msg) for local, msg in errors)
+    # each partition kept its own first errors, so these are the file's
+    return InferenceResult(schema, total, all_errors[:_MAX_ERROR_SAMPLES])
 
 
 # ---------------------------------------------------------------------------
@@ -284,107 +288,17 @@ def _raise_first_error_in_partition(
 # ---------------------------------------------------------------------------
 
 
-class _FastPathMiss(Exception):
-    """Batch contains a shape the accumulator fast path doesn't cover."""
-
-
-def _fold_values_fast(schema: Descriptor, values: list) -> Descriptor:
-    """Fold a batch of parsed rows via per-field accumulators.
-
-    The common LLM-pipeline shape — flat objects of scalars — needs no
-    per-row descriptor allocation or recursive merge: one pass keeps
-    (kind, bounds) per field in plain lists, then builds ONE struct
-    descriptor for the whole batch and merges it into the running schema.
-    Property-tested equivalent to the row-at-a-time fold
-    (tests/test_property.py); anything nested, conflicting, or exotic
-    raises :class:`_FastPathMiss` and the caller replays the batch through
-    ``observe`` for exact semantics.
-
-    Accumulator layout (plain lists, not objects, for speed):
-    ``["u"]`` null-only · ``["b"]`` bool · ``["s", max_len]`` string ·
-    ``["n", lo, hi, max_scale]`` number.
-    """
-    accs: dict = {}
-    for v in values:
-        if type(v) is not dict:
-            raise _FastPathMiss
-        for k, x in v.items():
-            acc = accs.get(k)
-            tx = type(x)
-            if acc is None:
-                if x is None:
-                    accs[k] = ["u"]
-                elif tx is bool:
-                    accs[k] = ["b"]
-                elif tx is str:
-                    accs[k] = ["s", len(x)]
-                elif tx is int:
-                    accs[k] = ["n", x, x, 0]
-                elif tx is Decimal:
-                    accs[k] = ["n", x, x, _scale(x)]
-                else:
-                    raise _FastPathMiss
-                continue
-            kind = acc[0]
-            if x is None:
-                continue
-            if tx is bool:
-                if kind == "u":
-                    acc[0] = "b"
-                elif kind != "b":
-                    raise _FastPathMiss
-            elif tx is str:
-                if kind == "s":
-                    n = len(x)
-                    if n > acc[1]:
-                        acc[1] = n
-                elif kind == "u":
-                    acc[:] = ["s", len(x)]
-                else:
-                    raise _FastPathMiss
-            elif tx is int or tx is Decimal:
-                if kind == "n":
-                    if x < acc[1]:
-                        acc[1] = x
-                    if x > acc[2]:
-                        acc[2] = x
-                    if tx is Decimal:
-                        sc = _scale(x)
-                        if sc > acc[3]:
-                            acc[3] = sc
-                elif kind == "u":
-                    acc[:] = ["n", x, x, _scale(x) if tx is Decimal else 0]
-                else:
-                    raise _FastPathMiss
-            else:
-                raise _FastPathMiss
-    fields = {}
-    for k, acc in accs.items():  # dict preserves first-seen order
-        kind = acc[0]
-        if kind == "u":
-            fields[k] = UNKNOWN
-        elif kind == "b":
-            fields[k] = BOOL
-        elif kind == "s":
-            fields[k] = Str(acc[1])
-        else:
-            fields[k] = Num(acc[1], acc[2], acc[3])
-    return merge(schema, Struct(fields))
-
-
 def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     """Infer the lattice schema of a JSON-bearing string column.
 
-    Uses ``mapInPandas``: each Arrow batch folds locally in Python, each task
-    emits one pickled partial descriptor; the driver merges partials in
-    partition order.  At cluster scale this moves only O(partitions) tiny
-    blobs to the driver.  Null cells are skipped (column-level nullability,
-    not a row error).
-
-    Flat batches of scalar fields take the accumulator fast path
-    (:func:`_fold_values_fast`, ~5× less Python per row); nested or
-    conflicting batches replay row-at-a-time for exact error/lenient
-    semantics.
+    Uses ``mapInPandas``: each task folds its Arrow batches with the same
+    kernel as :func:`infer_path` and emits one pickled (partial descriptor,
+    first error) record; the driver merges partials in partition order.  At
+    cluster scale this moves only O(partitions) tiny blobs to the driver.
+    Null cells are skipped (column-level nullability, not a row error).
+    Strict mode raises the first error as its :class:`SchemaGenError`
+    subclass (line None: a column has no line numbers), wherever the
+    conflicting rows landed.
 
     Repeated raw strings are folded ONCE per task: inference is
     multiplicity-insensitive — every lattice statistic (min/max bound,
@@ -408,15 +322,10 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     _SEEN_MAX_LEN = 1 << 10
     _SEEN_MAX_BYTES = 1 << 24
 
-    def fold(batches):
-        import pandas as pd  # noqa: F401  (worker-side)
-
-        pid = TaskContext.get().partitionId()
-        schema: Descriptor = EMPTY_STRUCT
+    def distinct_cells(batches):
         seen: set = set()
         seen_bytes = 0
         for pdf in batches:
-            values = []
             for raw in pdf[column]:
                 if raw is None or raw in seen:
                     continue
@@ -427,28 +336,14 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
                 ):
                     seen.add(raw)
                     seen_bytes += len(raw)
-                try:
-                    values.append(parse_line(raw))
-                except ValueError:
-                    if not permissive:
-                        raise
-            try:
-                schema = _fold_values_fast(schema, values)
-            except (_FastPathMiss, SchemaGenError):
-                # replay the whole batch row-at-a-time: reproduces the exact
-                # first-row error (strict) / field-wise degradation
-                # (permissive); `schema` was not touched by the failed fast
-                # attempt, so no double counting
-                for value in values:
-                    try:
-                        schema = observe(schema, value)
-                    except SchemaGenError:
-                        if not permissive:
-                            raise
-                        schema = _observe_lenient(schema, value)
-        yield __import__("pandas").DataFrame(
-            {"pid": [pid], "blob": [pickle.dumps(schema)]}
-        )
+                yield raw
+
+    def fold(batches):
+        import pandas as pd  # worker-side
+
+        pid = TaskContext.get().partitionId()
+        schema, _n, _errors, err = _fold(distinct_cells(batches), EMPTY_STRUCT, permissive)
+        yield pd.DataFrame({"pid": [pid], "blob": [pickle.dumps((schema, err))]})
 
     parts = (
         df.select(column)
@@ -457,7 +352,9 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     )
     schema: Descriptor = EMPTY_STRUCT
     for row in sorted(parts, key=lambda r: r["pid"]):
-        partial = pickle.loads(bytes(row["blob"]))
+        partial, err = pickle.loads(bytes(row["blob"]))
+        if err is not None:
+            raise err.with_line(None)
         if permissive:
             schema = merge_lenient(schema, partial)
         else:
@@ -465,21 +362,10 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     return schema
 
 
-def infer_ndjson_strings(lines: Iterator[str], detect_dates: bool = False) -> InferenceResult:
+def infer_ndjson_strings(lines: Iterable[str], detect_dates: bool = False) -> InferenceResult:
     """Single-process fold over an iterable of lines (testing / tiny inputs).
     Semantics identical to the distributed path."""
-    schema: Descriptor = EMPTY_STRUCT
-    n = 0
-    for raw in lines:
-        n += 1
-        try:
-            value = parse_line(raw)
-        except ValueError as e:
-            raise BadJson(raw, str(e), line=n)
-        try:
-            schema = observe(schema, value, line=n, detect_dates=detect_dates)
-        except SchemaGenError as e:
-            if getattr(e, "raw", None) is None and hasattr(e, "raw"):
-                e.raw = value
-            raise e.with_line(n)
+    schema, n, _errors, err = _fold(lines, EMPTY_STRUCT, False, detect_dates)
+    if err is not None:
+        raise err
     return InferenceResult(schema, n)

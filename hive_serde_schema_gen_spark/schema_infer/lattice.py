@@ -40,9 +40,10 @@ from typing import Any, Optional, Union
 from .errors import InconsistentArray, RowMismatch, SchemaGenError
 
 # ---------------------------------------------------------------------------
-# Descriptors.  Plain classes with __slots__: allocated once per *distinct
-# shape*, mutated in the per-partition fold (observe) for speed, merged
-# immutably across partials (merge).  All picklable.
+# Descriptors.  Plain classes with __slots__, never mutated once built:
+# merge and observe return new descriptors (observe returns its input
+# unchanged when nothing widens), so descriptors can be shared freely.  All
+# picklable.
 # ---------------------------------------------------------------------------
 
 
@@ -410,8 +411,73 @@ def observe(
     ``Schemer.scala:11-14``.  The seed is :data:`EMPTY_STRUCT` (the
     reference seeds with ``Json.obj()``, Schemer.scala:10), so a non-object
     top-level row raises RowMismatch exactly as the reference does.
+
+    The common row only widens a few leaves, so :func:`_widen` walks the
+    value and the schema together: it returns ``schema`` itself when nothing
+    widens and copies only the path to a widened leaf.  Every other row (a
+    new field, the first non-null value of a slot, a kind conflict, or any
+    row under ``detect_dates``) takes the ``merge(schema, describe(row))``
+    path, so results and errors are exactly that expression's.
     """
+    if not detect_dates:
+        widened = _widen(schema, value)
+        if widened is not None:
+            return widened
     return merge(schema, describe(value, line, detect_dates), line)
+
+
+def _widen(d: Descriptor, v: Any) -> Optional[Descriptor]:
+    """``merge(d, describe(v))`` for a ``v`` that fits ``d``'s shape, or
+    None when it does not (the caller then takes the general path).
+
+    Exact down to the objects kept: ``d`` itself when nothing widens, and
+    on a tie the existing bound, as ``merge`` keeps its left operand.
+    """
+    if v is None:
+        return d
+    t = type(v)
+    if t is str:
+        if type(d) is not Str:
+            return None
+        n = len(v)
+        return d if n <= d.max_len else Str(n)
+    if t is int or t is Decimal:  # exact types: bool is an int subclass
+        if type(d) is not Num:
+            return None
+        sc = 0 if t is int else _scale(v)
+        lo, hi, ms = d.lo, d.hi, d.max_scale
+        if lo <= v <= hi and sc <= ms:
+            return d
+        return Num(v if v < lo else lo, v if v > hi else hi, sc if sc > ms else ms)
+    if t is dict:
+        if type(d) is not Struct:
+            return None
+        fields = d.fields
+        out = None
+        for k, x in v.items():
+            old = fields.get(k)
+            if old is None:  # new field: first-seen order is merge's to keep
+                return None
+            new = _widen(old, x)
+            if new is None:
+                return None
+            if new is not old:
+                if out is None:
+                    out = dict(fields)
+                out[k] = new
+        return d if out is None else Struct(out)
+    if t is bool:
+        return d if type(d) is Bool else None
+    if t is list:
+        if type(d) is not Arr:
+            return None
+        elem = d.element
+        for x in v:
+            elem = _widen(elem, x)
+            if elem is None:
+                return None
+        return d if elem is d.element else Arr(elem)
+    return None
 
 
 # ---------------------------------------------------------------------------

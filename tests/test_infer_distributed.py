@@ -9,8 +9,11 @@ import os
 import pytest
 
 from hive_serde_schema_gen_spark.schema_infer import (
+    BadJson,
     RowMismatch,
+    SchemaGenError,
     infer_json_column,
+    infer_ndjson_strings,
     infer_path,
     render_definition,
     to_spark_schema,
@@ -79,6 +82,20 @@ def test_infer_json_column(spark):
     assert render_definition(desc) == "k FLOAT,\ns VARCHAR(3)"
 
 
+@pytest.mark.parametrize("parts", [1, 3])
+@pytest.mark.parametrize(
+    "rows, error",
+    [(['{"a": 1}', '{"a": "xyz"}', '{"a": 2}'], RowMismatch),
+     (['{"a": 1}', "{broken", '{"a": 2}'], BadJson)],
+)
+def test_infer_json_column_strict_error_is_typed(spark, parts, rows, error):
+    """A strict column error reaches the caller as its SchemaGenError
+    subclass whether the rows share a task or not."""
+    df = spark.createDataFrame([(r,) for r in rows], ["props"]).repartition(parts)
+    with pytest.raises(error):
+        infer_json_column(df, "props")
+
+
 def test_infer_json_column_permissive_cross_partition_conflict(spark):
     """Kind conflicts split across partitions must degrade gracefully in
     permissive mode (first-seen kind wins) instead of raising at the driver
@@ -126,3 +143,79 @@ def test_infer_json_column_dedup_is_exact(spark):
     ).repartition(3)
     desc = infer_json_column(dfp, "props", permissive=True)
     assert render_definition(desc) == "a TINYINT"
+
+
+def _outcomes(spark, path, parts):
+    """FAILFAST's DDL or (error type, line); PERMISSIVE's DDL and errors."""
+    try:
+        failfast = render_definition(infer_path(spark, path, min_partitions=parts).schema)
+    except SchemaGenError as e:
+        failfast = (type(e).__name__, e.line)
+    permissive = infer_path(spark, path, mode="PERMISSIVE", min_partitions=parts)
+    errors = [(e.line, e.message) for e in permissive.errors]
+    return failfast, render_definition(permissive.schema), errors
+
+
+def _drift_line(i: int) -> str:
+    """Line ``i`` of a file whose ``v`` turns from a number into a string
+    at line 7, and which gains a field ``w`` at line 21 that turns into a
+    string at line 31."""
+    v = str(i) if i < 7 else '"s%d"' % i
+    w = "" if i < 21 else ', "w": %s' % (i if i < 31 else '"w%d"' % i)
+    return '{"id": %d, "v": %s%s}' % (i, v, w)
+
+
+def test_infer_path_partition_matrix(spark, tmp_path):
+    """The split never shows: 1, 2, 3, 4 and 8 partitions give the same
+    FAILFAST DDL or error line and the same PERMISSIVE schema and error
+    lines as the one-partition fold."""
+    growing = [
+        '{"id": %d, "ts": %d, "user": {"n": "%s"}, "s": [%d]}'
+        % (i, 1_700_000_000_000 + i * 997, "x" * (i % 7), -i)
+        for i in range(1, 41)
+    ]
+    array_conflict = [
+        '{"id": %d, "items": [{"sku": "k%d", "qty": %d}]}' % (i, i, i)
+        for i in range(1, 41)
+    ]
+    array_conflict[22] = '{"id": 23, "items": [{"sku": "k", "qty": "many"}, {"qty": 5}]}'
+    array_conflict[29] = '{"id": 30, "items": [{"sku": "k30", "qty": 300}]}'
+    conflict_then_bad = ['{"id": %d, "v": %d}' % (i, i) for i in range(1, 41)]
+    conflict_then_bad[11] = '{"id": 12, "v": "x"}'
+    conflict_then_bad[29] = "{broken"
+    drift = [_drift_line(i) for i in range(1, 41)]
+    cases = [
+        ("growing", growing,
+         render_definition(infer_ndjson_strings(growing).schema), []),
+        ("array_conflict", array_conflict,
+         ("InconsistentArray", 23), [23]),
+        ("conflict_then_bad", conflict_then_bad,
+         ("RowMismatch", 12), [12, 30]),
+        # 34 conflicting rows: PERMISSIVE keeps the file's first 20
+        ("drift", drift, ("RowMismatch", 7), list(range(7, 27))),
+    ]
+    for name, lines, failfast, error_lines in cases:
+        path = tmp_path / f"{name}.json"
+        path.write_text("\n".join(lines) + "\n")
+        want = _outcomes(spark, str(path), 1)
+        assert want[0] == failfast, name
+        assert [line for line, _ in want[2]] == error_lines, name
+        for parts in (2, 3, 4, 8):
+            assert _outcomes(spark, str(path), parts) == want, (name, parts)
+
+
+def test_infer_path_permissive_drift_refolds_in_few_jobs(spark, tmp_path):
+    """A field that changes kind partway through a file conflicts in every
+    later partition; PERMISSIVE re-folds them together, one job per change
+    of the schema's kinds, not one job per partition."""
+    path = tmp_path / "drift.json"
+    path.write_text("\n".join(_drift_line(i) for i in range(1, 41)) + "\n")
+    sc = spark.sparkContext
+    sc.setJobGroup("drift", "drift")
+    try:
+        result = infer_path(spark, str(path), mode="PERMISSIVE", min_partitions=8)
+    finally:
+        sc.setJobGroup(None, None)
+    # the scan, then one re-fold job for v's change and one after w appears
+    assert len(sc.statusTracker().getJobIdsForGroup("drift")) <= 3
+    assert render_definition(result.schema) == "id TINYINT,\nv TINYINT,\nw TINYINT"
