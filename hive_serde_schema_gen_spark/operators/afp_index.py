@@ -1,29 +1,12 @@
-"""Incremental AUDIO near-dup dedup against a persisted AFP index — the
-audio member of the persisted-artifact family (text: ``dedup_index.py``,
-image: ``phash_index.py``, embedding: ``clustering.persist_semdedup_index``).
-A new clip batch dedups against the historical corpus by probing the
-on-disk fingerprints, never re-decoding audio already processed.
+"""The persisted AUDIO fingerprint index: ``phash_index`` under the
+:data:`~.phash_index.AUDIO` family — probes return ``(aud_id,
+matched_aud_id, dist)``, and the meta grid pin (``AFP_WINDOWS``) makes a
+cross-family probe fail loudly.  Kept as an import path."""
 
-The artifact mechanics are the pHash index's REUSED VERBATIM (same band
-layout, same writer lease, same exact-popcount verify, same exact-recall
-bound at radius <= bands-1) — ``phash_index``'s functions are
-parameterized by (id_col, hash_col, grid) and this module passes the
-audio configuration: hash_col='afp' (the 64-bit energy-difference
-fingerprint, ``multimodal.audio_fingerprints``), no aux hash, and
-``grid=AFP_WINDOWS`` pinned in the index meta — so probing an audio
-index with image code (or vice versa) fails loudly on the meta check
-instead of silently missing candidates.  On disk the shared layout keeps
-the image column names (img_id/dhash); this module's API renames at the
-boundary so callers see (aud_id, matched_aud_id, afp).
-"""
+from functools import partial
 
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .multimodal import AFP_WINDOWS, PHASH_RADIUS
 from .phash_index import (
+    AUDIO,
     build_phash_index,
     compact_phash_index,
     extend_phash_index,
@@ -31,68 +14,8 @@ from .phash_index import (
     phash_against_index,
 )
 
-_AFP_KW = dict(id_col="aud_id", hash_col="afp", aux_cols=(), grid=AFP_WINDOWS)
-
-
-def build_afp_index(
-    fps: DataFrame, path: str, n_files: int = 32, owner: str | None = None
-) -> None:
-    """Build the persisted audio index from an ``audio_fingerprints``
-    frame ``(aud_id, …, afp)``."""
-    build_phash_index(fps, path, n_files, owner, **_AFP_KW)
-
-
-def extend_afp_index(
-    fps: DataFrame,
-    path: str,
-    epoch: int | None = None,
-    owner: str | None = None,
-) -> None:
-    """Append a batch's fingerprints (run AFTER dedup: index the
-    survivors); ``epoch`` stamps rows for the streaming replay
-    discipline."""
-    extend_phash_index(fps, path, epoch, owner, **_AFP_KW)
-
-
-def afp_against_index(
-    new_fps: DataFrame,
-    path: str,
-    radius: int = PHASH_RADIUS,
-    broadcast_batch: bool = True,
-) -> DataFrame:
-    """Probe the index with a batch's fingerprint frame: ``(aud_id,
-    matched_aud_id, dist)`` — exact verification, exact recall at
-    ``radius <= bands - 1``."""
-    out = phash_against_index(
-        new_fps,
-        path,
-        radius,
-        broadcast_batch,
-        id_col="aud_id",
-        hash_col="afp",
-        grid=AFP_WINDOWS,
-    )
-    return out.select(
-        F.col("img_id").alias("aud_id"),
-        F.col("matched_img_id").alias("matched_aud_id"),
-        "dist",
-    )
-
-
-def novel_clips(new_fps: DataFrame, matches: DataFrame) -> DataFrame:
-    """The batch rows with no index match — the survivors to keep and
-    index."""
-    return novel_images(
-        new_fps, matches, id_col="aud_id", match_id_col="aud_id"
-    )
-
-
-def compact_afp_index(
-    spark: SparkSession,
-    path: str,
-    n_files: int = 32,
-    owner: str | None = None,
-) -> None:
-    """Reclaim replayed duplicates and restore the range clustering —
-    the shared swap discipline, under the audio meta pin."""
-    compact_phash_index(spark, path, n_files, owner, grid=AFP_WINDOWS)
+build_afp_index = partial(build_phash_index, family=AUDIO)
+extend_afp_index = partial(extend_phash_index, family=AUDIO)
+afp_against_index = partial(phash_against_index, family=AUDIO)
+novel_clips = partial(novel_images, id_col=AUDIO.id_col)
+compact_afp_index = partial(compact_phash_index, family=AUDIO)

@@ -10,7 +10,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from .media_core import (
     PHASH_BANDS,
@@ -21,8 +20,10 @@ from .media_core import (
     PHASH_UP_OFFSET,
     _check_variant_offsets,
     _pack_bits_signed64,
+    payload_per_doc,
     phash_dedup,
     phash_near_dup_pairs,
+    synth_from_docs,
 )
 
 #: audio fingerprint (AFP) configuration — see the audio section at the end
@@ -85,27 +86,9 @@ def _wav_encode(doc_id: int, text: bytes) -> bytes:
 
 
 def with_wav_payload(df):
-    """documents → (doc_id, payload binary): synthesizes real WAV containers
-    (Arrow-batched, constant memory per task) — the audio twin of
-    ``with_bmp_payload``."""
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        _wav_encode(i, t.encode("utf-8"))
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    from ..sources.tables import fanout_for_compute
-
-    return fanout_for_compute(df.select("doc_id", "text"), "doc_id").mapInPandas(
-        encode, schema="doc_id long, payload binary"
-    )
+    """documents → (doc_id, payload binary): synthesizes real WAV
+    containers — the audio twin of ``with_bmp_payload``."""
+    return payload_per_doc(df, _wav_encode)
 
 
 def _wav_decode(payload: bytes) -> dict:
@@ -256,48 +239,43 @@ def audio_evidence_clips(
     :func:`phash_evidence_images`."""
     import numpy as np
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # same loud-failure discipline as phash_evidence_images
-            _check_variant_offsets(pdf, (up_offset, pert_offset, vol_offset))
-            ids, pays = [], []
-            for d, t in zip(pdf["doc_id"], pdf["text"]):
-                tb = t.encode("utf-8")
-                s = _wav_pcm_samples(tb)
-                rate = _wav_rate(d)
-                ids.append(d)
-                pays.append(_wav_container(rate, s.tobytes()))
-                if d % PHASH_UP_MOD == 0:
-                    ids.append(d + up_offset)
-                    pays.append(
-                        _wav_container(
-                            2 * rate, np.repeat(s, 2).astype("<i2").tobytes()
-                        )
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        # same loud-failure discipline as phash_evidence_images
+        _check_variant_offsets(pdf, (up_offset, pert_offset, vol_offset))
+        ids, pays = [], []
+        for d, t in zip(pdf["doc_id"], pdf["text"]):
+            tb = t.encode("utf-8")
+            s = _wav_pcm_samples(tb)
+            rate = _wav_rate(d)
+            ids.append(d)
+            pays.append(_wav_container(rate, s.tobytes()))
+            if d % PHASH_UP_MOD == 0:
+                ids.append(d + up_offset)
+                pays.append(
+                    _wav_container(
+                        2 * rate, np.repeat(s, 2).astype("<i2").tobytes()
                     )
-                if d % PHASH_PERT_MOD == 0 and len(tb) > 0:
-                    p = d % len(tb)
-                    k = min(len(tb) - p, len(tb) // AUDIO_PERT_RUN_DIV + 1)
-                    ids.append(d + pert_offset)
-                    pays.append(
-                        _wav_encode(d, tb[:p] + b"Z" * k + tb[p + k:])
+                )
+            if d % PHASH_PERT_MOD == 0 and len(tb) > 0:
+                p = d % len(tb)
+                k = min(len(tb) - p, len(tb) // AUDIO_PERT_RUN_DIV + 1)
+                ids.append(d + pert_offset)
+                pays.append(
+                    _wav_encode(d, tb[:p] + b"Z" * k + tb[p + k:])
+                )
+            if d % AUDIO_VOL_MOD == 0:
+                # samples are (b-128)<<8, always even, so ">> 1" is an
+                # EXACT halving — every window energy scales by the
+                # same factor and the fingerprint is bit-identical
+                ids.append(d + vol_offset)
+                pays.append(
+                    _wav_container(
+                        rate, (s >> 1).astype("<i2").tobytes()
                     )
-                if d % AUDIO_VOL_MOD == 0:
-                    # samples are (b-128)<<8, always even, so ">> 1" is an
-                    # EXACT halving — every window energy scales by the
-                    # same factor and the fingerprint is bit-identical
-                    ids.append(d + vol_offset)
-                    pays.append(
-                        _wav_container(
-                            rate, (s >> 1).astype("<i2").tobytes()
-                        )
-                    )
-            yield pd.DataFrame({"aud_id": ids, "payload": pays})
+                )
+        return pd.DataFrame({"aud_id": ids, "payload": pays})
 
-    from ..sources.tables import fanout_for_compute
-
-    return fanout_for_compute(df.select("doc_id", "text"), "doc_id").mapInPandas(
-        build, schema="aud_id long, payload binary"
-    )
+    return synth_from_docs(df, build, "aud_id long, payload binary")
 
 
 def _trim_silence(samples, threshold: int = 0):

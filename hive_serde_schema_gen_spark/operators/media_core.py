@@ -47,28 +47,46 @@ def _bmp_encode(doc_id: int, text: bytes) -> bytes:
     return header + info + pixels
 
 
-def with_bmp_payload(df):
-    """documents → (doc_id, text, payload binary): the ingest step that in a
-    real pipeline reads image files; here it synthesizes real BMP containers
-    (Arrow-batched, constant memory per task)."""
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        _bmp_encode(i, t.encode("utf-8"))
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
+def synth_from_docs(df, per_batch, schema: str):
+    """documents → a synthesized media frame: ``per_batch`` maps one
+    Arrow batch of ``(doc_id, text)`` (a pandas frame) to one output
+    pandas frame of ``schema``.  The one ``mapInPandas`` stage every
+    synth builder shares — fanned out across cores first
+    (``fanout_for_compute``), constant memory per task."""
     from ..sources.tables import fanout_for_compute
 
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield per_batch(pdf)
+
     return fanout_for_compute(df.select("doc_id", "text"), "doc_id").mapInPandas(
-        encode, schema="doc_id long, payload binary"
+        run, schema=schema
     )
+
+
+def payload_per_doc(df, encode):
+    """documents → (doc_id, payload binary) with ``encode(doc_id,
+    text_bytes)`` building one container per document."""
+    return synth_from_docs(
+        df,
+        lambda pdf: pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "payload": [
+                    encode(i, t.encode("utf-8"))
+                    for i, t in zip(pdf["doc_id"], pdf["text"])
+                ],
+            }
+        ),
+        "doc_id long, payload binary",
+    )
+
+
+def with_bmp_payload(df):
+    """documents → (doc_id, payload binary): the ingest step that in a
+    real pipeline reads image files; here it synthesizes real BMP
+    containers."""
+    return payload_per_doc(df, _bmp_encode)
 
 
 def _bmp_decode(payload: bytes) -> dict:

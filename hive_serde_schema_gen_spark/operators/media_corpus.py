@@ -1,18 +1,21 @@
 """The one-call staged media-dedup pipeline (byte collapse BEFORE any
 decode, then fingerprint, then perceptual keep-first, then the optional
-persisted-index probe) and its accounting surfaces.  Split out of
-``multimodal.py`` in round 17; re-exported there (the public import path
-is unchanged).
+persisted-index probe) and its accounting surfaces, for any media
+family (``phash_index.FAMILIES``).  Split out of ``multimodal.py`` in
+round 17; re-exported there (the public import path is unchanged).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .media_audio import audio_dedup, audio_fingerprints
-from .media_core import PHASH_BANDS, PHASH_RADIUS, phash_dedup
-from .media_image import image_hashes
-from .media_video import video_dedup, video_fingerprints
+from .media_core import PHASH_BANDS, PHASH_RADIUS
+from .phash_index import (
+    FAMILIES,
+    extend_phash_index,
+    novel_images,
+    phash_against_index,
+)
 
 #: op='macct'/'ddrop' configuration (round 16): the media-dedup
 #: ACCOUNTING under the hash gate.  The planted corpus = the distinct-
@@ -118,17 +121,10 @@ def dedup_media_corpus(
             "index probe enforces the same bound — fail here, before any "
             "stage runs, instead of silently-approximate stages 1-3"
         )
-    if modality == "image":
-        id_col = id_col or "img_id"
-        fp_fn, dedup_fn = image_hashes, phash_dedup
-    elif modality == "audio":
-        id_col = id_col or "aud_id"
-        fp_fn, dedup_fn = audio_fingerprints, audio_dedup
-    elif modality == "video":
-        id_col = id_col or "vid_id"
-        fp_fn, dedup_fn = video_fingerprints, video_dedup
-    else:
+    if modality not in FAMILIES:
         raise ValueError(f"unknown modality {modality!r}")
+    family = FAMILIES[modality]
+    id_col = id_col or family.id_col
 
     def _acct(stage, frame):
         if accounting is not None:
@@ -158,7 +154,7 @@ def dedup_media_corpus(
     )
     _acct("byte_unique", survivors)
     # stage 2: decode + fingerprint the survivors only
-    fps = fp_fn(
+    fps = family.fingerprint(
         survivors.select(id_col, "payload"), id_col=id_col
     ).localCheckpoint()
     dropped = survivors.select(id_col).join(
@@ -167,7 +163,7 @@ def dedup_media_corpus(
     _acct("decoded", fps)
     _acct("dropped", dropped)
     # stage 3: perceptual keep-first dedup among the batch's survivors
-    percept = dedup_fn(
+    percept = family.dedup(
         fps,
         radius=radius,
         n_bands=n_bands,
@@ -188,85 +184,29 @@ def dedup_media_corpus(
     # stage 4 (optional): dedup against HISTORY via the persisted index,
     # then extend it with what this batch actually added
     if index_path is not None:
-        _default_ids = {"image": "img_id", "audio": "aud_id",
-                        "video": "vid_id"}
-        if id_col != _default_ids[modality]:
+        if id_col != family.id_col:
             raise ValueError(
                 "index_path requires the modality's default id column "
                 "(the persisted artifact's probe API is keyed on it)"
             )
-        if modality == "image":
-            from .phash_index import (
-                extend_phash_index,
-                novel_images,
-                phash_against_index,
+        matched = f"matched_{id_col}"
+        matches = phash_against_index(
+            kept_fps, index_path, radius=radius, family=family
+        ).localCheckpoint()
+        idx_attr = matches.groupBy(id_col).agg(
+            F.min(F.struct(matched, "dist")).alias("__m")
+        ).select(
+            F.col(id_col),
+            F.col(f"__m.{matched}").alias("dup_of"),
+            F.col("__m.dist").alias("dist"),
+            F.lit("index").alias("stage"),
+        )
+        kept_fps = novel_images(kept_fps, matches, id_col).localCheckpoint()
+        if extend_index:
+            extend_phash_index(
+                kept_fps, index_path, epoch=extend_epoch,
+                owner="dedup_media_corpus", family=family,
             )
-
-            matches = phash_against_index(
-                kept_fps, index_path, radius=radius
-            ).localCheckpoint()
-            idx_attr = matches.groupBy("img_id").agg(
-                F.min(F.struct("matched_img_id", "dist")).alias("__m")
-            ).select(
-                F.col("img_id").alias(id_col),
-                F.col("__m.matched_img_id").alias("dup_of"),
-                F.col("__m.dist").alias("dist"),
-                F.lit("index").alias("stage"),
-            )
-            kept_fps = novel_images(kept_fps, matches).localCheckpoint()
-            if extend_index:
-                extend_phash_index(
-                    kept_fps, index_path, epoch=extend_epoch,
-                    owner="dedup_media_corpus",
-                )
-        elif modality == "video":
-            from .vfp_index import (
-                extend_vfp_index,
-                novel_videos,
-                vfp_against_index,
-            )
-
-            matches = vfp_against_index(
-                kept_fps, index_path, radius=radius
-            ).localCheckpoint()
-            idx_attr = matches.groupBy("vid_id").agg(
-                F.min(F.struct("matched_vid_id", "dist")).alias("__m")
-            ).select(
-                F.col("vid_id").alias(id_col),
-                F.col("__m.matched_vid_id").alias("dup_of"),
-                F.col("__m.dist").alias("dist"),
-                F.lit("index").alias("stage"),
-            )
-            kept_fps = novel_videos(kept_fps, matches).localCheckpoint()
-            if extend_index:
-                extend_vfp_index(
-                    kept_fps, index_path, epoch=extend_epoch,
-                    owner="dedup_media_corpus",
-                )
-        else:
-            from .afp_index import (
-                afp_against_index,
-                extend_afp_index,
-                novel_clips,
-            )
-
-            matches = afp_against_index(
-                kept_fps, index_path, radius=radius
-            ).localCheckpoint()
-            idx_attr = matches.groupBy("aud_id").agg(
-                F.min(F.struct("matched_aud_id", "dist")).alias("__m")
-            ).select(
-                F.col("aud_id").alias(id_col),
-                F.col("__m.matched_aud_id").alias("dup_of"),
-                F.col("__m.dist").alias("dist"),
-                F.lit("index").alias("stage"),
-            )
-            kept_fps = novel_clips(kept_fps, matches).localCheckpoint()
-            if extend_index:
-                extend_afp_index(
-                    kept_fps, index_path, epoch=extend_epoch,
-                    owner="dedup_media_corpus",
-                )
         attribution = attribution.unionByName(idx_attr)
         _acct("index_novel", kept_fps)
     kept = payloads.join(kept_fps.select(id_col), id_col, "left_semi")

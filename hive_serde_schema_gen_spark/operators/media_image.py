@@ -10,7 +10,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from .media_core import (
     PHASH_GRID,
@@ -27,6 +26,7 @@ from .media_core import (
     _pack_bits_signed64,
     _resize_nearest,
     bmp_resize,
+    synth_from_docs,
 )
 
 RESIZE_W = RESIZE_H = 8
@@ -227,34 +227,27 @@ def phash_evidence_images(
     whose doc_ids reach ~99M — passes wider offsets instead of
     colliding."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _check_variant_offsets(pdf, (up_offset, pert_offset))
-            ids, pays = [], []
-            for d, t in zip(pdf["doc_id"], pdf["text"]):
-                tb = t.encode("utf-8")
-                base = _bmp_encode(d, tb)
-                ids.append(d)
-                pays.append(base)
-                if d % PHASH_UP_MOD == 0:
-                    arr = _bmp_pixel_array(base)
-                    h, w = arr.shape[:2]
-                    up = _resize_nearest(arr, 2 * w, 2 * h)
-                    ids.append(d + up_offset)
-                    pays.append(_bmp_from_pixels(up))
-                if d % PHASH_PERT_MOD == 0 and len(tb) > 0:
-                    p = d % len(tb)
-                    ids.append(d + pert_offset)
-                    pays.append(_bmp_encode(d, tb[:p] + b"Z" + tb[p + 1:]))
-            yield pd.DataFrame({"img_id": ids, "payload": pays})
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        _check_variant_offsets(pdf, (up_offset, pert_offset))
+        ids, pays = [], []
+        for d, t in zip(pdf["doc_id"], pdf["text"]):
+            tb = t.encode("utf-8")
+            base = _bmp_encode(d, tb)
+            ids.append(d)
+            pays.append(base)
+            if d % PHASH_UP_MOD == 0:
+                arr = _bmp_pixel_array(base)
+                h, w = arr.shape[:2]
+                up = _resize_nearest(arr, 2 * w, 2 * h)
+                ids.append(d + up_offset)
+                pays.append(_bmp_from_pixels(up))
+            if d % PHASH_PERT_MOD == 0 and len(tb) > 0:
+                p = d % len(tb)
+                ids.append(d + pert_offset)
+                pays.append(_bmp_encode(d, tb[:p] + b"Z" + tb[p + 1:]))
+        return pd.DataFrame({"img_id": ids, "payload": pays})
 
-    from ..sources.tables import fanout_for_compute
-
-    return fanout_for_compute(df.select("doc_id", "text"), "doc_id").mapInPandas(
-        build, schema="img_id long, payload binary"
-    )
-
-
+    return synth_from_docs(df, build, "img_id long, payload binary")
 
 
 def _phash_sql_ctes() -> str:

@@ -10,13 +10,13 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from .media_core import (
     PHASH_BANDS,
     PHASH_RADIUS,
     _check_variant_offsets,
     phash_dedup,
+    synth_from_docs,
 )
 
 FRAME_EVERY_K = 2
@@ -100,27 +100,20 @@ def _video_payloads_batch(docs, texts, kinds):
 
 def with_video_payload(df):
     """documents → (doc_id, payload binary) raw-frame video containers."""
+    import numpy as np
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+        docs = list(pdf["doc_id"])
+        texts = [t.encode("utf-8") for t in pdf["text"]]
+        kinds = np.zeros(len(docs), dtype=np.int64)
+        return pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "payload": _video_payloads_batch(docs, texts, kinds),
+            }
+        )
 
-        for pdf in batches:
-            docs = list(pdf["doc_id"])
-            texts = [t.encode("utf-8") for t in pdf["text"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": _video_payloads_batch(
-                        docs, texts, np.zeros(len(docs), dtype=np.int64)
-                    ),
-                }
-            )
-
-    from ..sources.tables import fanout_for_compute
-
-    return fanout_for_compute(df.select("doc_id", "text"), "doc_id").mapInPandas(
-        encode, schema="doc_id long, payload binary"
-    )
+    return synth_from_docs(df, encode, "doc_id long, payload binary")
 
 
 def sample_frames(df, every_k: int = 2):
@@ -363,38 +356,33 @@ def video_evidence_clips(
     the oracle both re-derive.  Offsets are parameters for larger
     corpora (the image/audio builder discipline)."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _check_variant_offsets(pdf, (dup_offset, pert_offset))
-            ids, docs, texts, kinds = [], [], [], []
-            for d_, t in zip(pdf["doc_id"], pdf["text"]):
-                tb = t.encode("utf-8")
-                ids.append(d_)
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        _check_variant_offsets(pdf, (dup_offset, pert_offset))
+        ids, docs, texts, kinds = [], [], [], []
+        for d_, t in zip(pdf["doc_id"], pdf["text"]):
+            tb = t.encode("utf-8")
+            ids.append(d_)
+            docs.append(d_)
+            texts.append(tb)
+            kinds.append(0)
+            if d_ % VFP_DUP_MOD == 0:
+                ids.append(d_ + dup_offset)
                 docs.append(d_)
                 texts.append(tb)
-                kinds.append(0)
-                if d_ % VFP_DUP_MOD == 0:
-                    ids.append(d_ + dup_offset)
-                    docs.append(d_)
-                    texts.append(tb)
-                    kinds.append(1)
-                if d_ % VFP_PERT_MOD == 0 and len(tb) > 0:
-                    ids.append(d_ + pert_offset)
-                    docs.append(d_)
-                    texts.append(tb)
-                    kinds.append(2)
-            yield pd.DataFrame(
-                {
-                    "vid_id": pd.Series(ids, dtype="int64"),
-                    "payload": _video_payloads_batch(docs, texts, kinds),
-                }
-            )
+                kinds.append(1)
+            if d_ % VFP_PERT_MOD == 0 and len(tb) > 0:
+                ids.append(d_ + pert_offset)
+                docs.append(d_)
+                texts.append(tb)
+                kinds.append(2)
+        return pd.DataFrame(
+            {
+                "vid_id": pd.Series(ids, dtype="int64"),
+                "payload": _video_payloads_batch(docs, texts, kinds),
+            }
+        )
 
-    from ..sources.tables import fanout_for_compute
-
-    return fanout_for_compute(df.select("doc_id", "text"), "doc_id").mapInPandas(
-        build, schema="vid_id long, payload binary"
-    )
+    return synth_from_docs(df, build, "vid_id long, payload binary")
 
 
 

@@ -119,6 +119,16 @@ from .media_corpus import (  # noqa: F401
     decode_drop_report,
     dedup_media_corpus,
 )
+from .phash_index import (
+    AUDIO,
+    IMAGE,
+    VIDEO,
+    build_phash_index,
+    extend_phash_index,
+    novel_images,
+    phash_against_index,
+)
+from .scratch import with_slot_scratch
 
 
 def with_payload(df):
@@ -218,6 +228,68 @@ def multimodal_decode_features(spark, sf_dir):
     )
 
 
+
+
+def _op_rows(frame, op, doc_id, idx=0, width=0, height=0, checksum=None):
+    """One op's rows in the slot's ``(op, doc_id, idx, width, height,
+    checksum)`` union shape: ``str`` arguments name columns of ``frame``,
+    anything else is a literal."""
+
+    def col(v, t):
+        return (F.col(v) if isinstance(v, str) else F.lit(v)).cast(t)
+
+    return frame.select(
+        F.lit(op).alias("op"),
+        col(doc_id, "long").alias("doc_id"),
+        col(idx, "int").alias("idx"),
+        col(width, "int").alias("width"),
+        col(height, "int").alias("height"),
+        col(checksum, "long").alias("checksum"),
+    )
+
+
+def _pair_rows(pairs, op):
+    return _op_rows(pairs, op, "img_a", idx="dist", checksum="img_b")
+
+
+def _dedup_rows(att, op):
+    return _op_rows(att, op, "img_id", idx="dist", checksum="dup_of")
+
+
+def _index_lifecycle(fps, family, variant_from, scratch_prefix, tag):
+    """The persisted-index lifecycle the slot pins for one media family:
+    build on the even base ids, EXTEND with the odd half (a dropped
+    extend batch breaks the hash), probe with the planted variants (ids
+    >= ``variant_from``) → ``(<tag>probe, <tag>novel)`` op rows.  The
+    temp index lives only inside ``with_slot_scratch`` (round-13
+    hygiene)."""
+    id_col = family.id_col
+    base = fps.filter(F.col(id_col) < variant_from)
+    variants = fps.filter(F.col(id_col) >= variant_from)
+
+    def _build(path):
+        build_phash_index(
+            base.filter(F.col(id_col) % 2 == 0), path, n_files=4,
+            family=family,
+        )
+        extend_phash_index(
+            base.filter(F.col(id_col) % 2 == 1), path, epoch=7,
+            family=family,
+        )
+        # Materialize the probe ONCE: novel is an anti-join against the
+        # match set, so a lazy m would re-run the whole index-probe
+        # pipeline when with_slot_scratch checkpoints the novel frame.
+        m = phash_against_index(variants, path, family=family).localCheckpoint()
+        return m, novel_images(variants, m, id_col).select(id_col)
+
+    matches, novel = with_slot_scratch(scratch_prefix, _build)
+    return (
+        _op_rows(
+            matches, f"{tag}probe", id_col, idx="dist",
+            checksum=f"matched_{id_col}",
+        ),
+        _op_rows(novel, f"{tag}novel", id_col),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -493,10 +565,10 @@ def multimodal_resize_frames(spark, sf_dir):
     brought under the hash gate):
 
     - ``aprobe`` / ``anovel`` and ``vprobe`` / ``vnovel`` rows: the
-      persisted AFP/VFP index lifecycles (``afp_index`` / ``vfp_index``
-      — build on the even base ids, EXTEND with the odd half, probe
-      with the planted variants), vs the oracle's brute base×variant
-      pair sets — the image family's ``pprobe``/``pnovel`` discipline.
+      persisted index lifecycle under the AUDIO / VIDEO families (one
+      ``_index_lifecycle`` helper for all three — build on the even base
+      ids, EXTEND with the odd half, probe with the planted variants),
+      vs the oracle's brute base×variant pair sets.
     - ``vclust`` rows: ``media_dup_clusters`` transitive lineage (near-
       dup pairs + keep-first attribution → ``connected_components``
       min-id labels) vs a recursive-reachability SQL re-derivation.
@@ -506,21 +578,13 @@ def multimodal_resize_frames(spark, sf_dir):
     byte i of frame f = text[(f+i) mod len]), and the full pHash chain
     (gray grids, bit packing, Hamming pairs) from the same construction."""
     d = load_table(spark, sf_dir, "documents")
-    rs = resize_checksums(with_bmp_payload(d)).select(
-        F.lit("resize").alias("op"),
-        "doc_id",
-        F.lit(0).alias("idx"),
-        "width",
-        "height",
-        "checksum",
+    rs = _op_rows(
+        resize_checksums(with_bmp_payload(d)), "resize", "doc_id",
+        width="width", height="height", checksum="checksum",
     )
-    fr = sample_frames(with_video_payload(d), FRAME_EVERY_K).select(
-        F.lit("frame").alias("op"),
-        "doc_id",
-        F.col("frame_idx").alias("idx"),
-        F.lit(4).alias("width"),
-        F.lit(4).alias("height"),
-        "checksum",
+    fr = _op_rows(
+        sample_frames(with_video_payload(d), FRAME_EVERY_K), "frame",
+        "doc_id", idx="frame_idx", width=4, height=4, checksum="checksum",
     )
     # The four evidence families below — image, audio, video, and the
     # media-corpus accounting — are mutually independent (each derives
@@ -531,256 +595,78 @@ def multimodal_resize_frames(spark, sf_dir):
     # §2.6): one family's distributed jobs back-fill executors idled by
     # another's driver-side phases.  Every step is deterministic and
     # family-local, so overlap cannot change any result row.
-    from .scratch import with_slot_scratch
 
     def _image_family():
         # three consumers (dhash rows, ahash rows, the pair self-join) read
         # the hash frame — cut lineage so decode+hash runs once
         hashed = image_hashes(phash_evidence_images(d)).localCheckpoint()
-        dh = hashed.select(
-            F.lit("dhash").alias("op"),
-            F.col("img_id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            "width",
-            "height",
-            F.col("dhash").alias("checksum"),
-        )
-        ah = hashed.select(
-            F.lit("ahash").alias("op"),
-            F.col("img_id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            "width",
-            "height",
-            F.col("ahash").alias("checksum"),
-        )
-        pdup = phash_near_dup_pairs(hashed).select(
-            F.lit("pdup").alias("op"),
-            F.col("img_a").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("img_b").alias("checksum"),
-        )
+        dims = dict(width="width", height="height")
         # the oracle pins minpair's global-minimum attribution — the slot
         # must not let the auto diagnostic flip the physical strategy
-        pded = phash_dedup(hashed, strategy="minpair").select(
-            F.lit("pdedup").alias("op"),
-            F.col("img_id").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("dup_of").alias("checksum"),
+        return (
+            _op_rows(hashed, "dhash", "img_id", checksum="dhash", **dims),
+            _op_rows(hashed, "ahash", "img_id", checksum="ahash", **dims),
+            _pair_rows(phash_near_dup_pairs(hashed), "pdup"),
+            _dedup_rows(phash_dedup(hashed, strategy="minpair"), "pdedup"),
+            # op='pprobe'/'pnovel': the PERSISTED index lifecycle driven
+            # at query time — exact recall at the default radius means
+            # the oracle's brute-force base×variant pair set IS the
+            # probe's contract.
+            *_index_lifecycle(
+                hashed, IMAGE, PHASH_UP_OFFSET, "ph-idx-slot-", "p"
+            ),
         )
-        # op='pprobe'/'pnovel': the PERSISTED index lifecycle
-        # (operators/phash_index.py) driven at query time — build on the
-        # even base ids, EXTEND with the odd half (a dropped extend batch
-        # breaks the hash), probe with the planted variants.  Exact recall
-        # at the default radius means the oracle's brute-force base×variant
-        # pair set IS the probe's contract.  The temp index lives only
-        # inside with_slot_scratch (round-13 hygiene).
-        from .phash_index import (
-            build_phash_index,
-            extend_phash_index,
-            novel_images,
-            phash_against_index,
-        )
-        from .scratch import with_slot_scratch
-
-        base = hashed.filter(F.col("img_id") < PHASH_UP_OFFSET)
-        variants = hashed.filter(F.col("img_id") >= PHASH_UP_OFFSET)
-
-        def _idx_build(path):
-            build_phash_index(
-                base.filter(F.col("img_id") % 2 == 0), path, n_files=4
-            )
-            extend_phash_index(
-                base.filter(F.col("img_id") % 2 == 1), path, epoch=7
-            )
-            # Materialize the probe ONCE: novel is an anti-join against the
-            # match set, so a lazy m would re-run the whole index-probe
-            # pipeline when with_slot_scratch checkpoints the novel frame.
-            m = phash_against_index(variants, path).localCheckpoint()
-            return m, novel_images(variants, m).select("img_id")
-
-        matches, novel = with_slot_scratch("ph-idx-slot-", _idx_build)
-        pprobe = matches.select(
-            F.lit("pprobe").alias("op"),
-            F.col("img_id").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("matched_img_id").alias("checksum"),
-        )
-        pnovel = novel.select(
-            F.lit("pnovel").alias("op"),
-            F.col("img_id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.lit(None).cast("long").alias("checksum"),
-        )
-        return dh, ah, pdup, pded, pprobe, pnovel
 
     def _audio_family():
         # round-15: the audio arm — energy-difference fingerprints over the
         # planted clip corpus, then the SAME banded machinery (hash_col='afp').
         # Three consumers read the fingerprint frame — cut lineage once.
         afps = audio_fingerprints(audio_evidence_clips(d)).localCheckpoint()
-        af = afps.select(
-            F.lit("afp").alias("op"),
-            F.col("aud_id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            F.col("sample_rate").alias("width"),
-            F.col("n_samples").cast("int").alias("height"),
-            F.col("afp").alias("checksum"),
+        return (
+            _op_rows(
+                afps, "afp", "aud_id", width="sample_rate",
+                height="n_samples", checksum="afp",
+            ),
+            _pair_rows(audio_near_dup_pairs(afps), "apair"),
+            _dedup_rows(audio_dedup(afps, strategy="minpair"), "adedup"),
+            # round-17: op='aprobe'/'anovel' — the same lifecycle under
+            # the audio meta pin.
+            *_index_lifecycle(
+                afps, AUDIO, PHASH_UP_OFFSET, "afp-idx-slot-", "a"
+            ),
         )
-        ap = audio_near_dup_pairs(afps).select(
-            F.lit("apair").alias("op"),
-            F.col("img_a").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("img_b").alias("checksum"),
-        )
-        ad = audio_dedup(afps, strategy="minpair").select(
-            F.lit("adedup").alias("op"),
-            F.col("img_id").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("dup_of").alias("checksum"),
-        )
-        # round-17: op='aprobe'/'anovel' — the PERSISTED audio-index
-        # lifecycle (operators/afp_index.py), the image family's
-        # build→extend→probe discipline under the audio meta pin.
-        from .afp_index import (
-            afp_against_index,
-            build_afp_index,
-            extend_afp_index,
-            novel_clips,
-        )
-
-        a_base = afps.filter(F.col("aud_id") < PHASH_UP_OFFSET)
-        a_var = afps.filter(F.col("aud_id") >= PHASH_UP_OFFSET)
-
-        def _aidx_build(path):
-            build_afp_index(
-                a_base.filter(F.col("aud_id") % 2 == 0), path, n_files=4
-            )
-            extend_afp_index(
-                a_base.filter(F.col("aud_id") % 2 == 1), path, epoch=7
-            )
-            # one probe materialization serves matches AND the novel anti-join
-            m = afp_against_index(a_var, path).localCheckpoint()
-            return m, novel_clips(a_var, m).select("aud_id")
-
-        amatches, anovel_df = with_slot_scratch("afp-idx-slot-", _aidx_build)
-        aprobe = amatches.select(
-            F.lit("aprobe").alias("op"),
-            F.col("aud_id").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("matched_aud_id").alias("checksum"),
-        )
-        anovel = anovel_df.select(
-            F.lit("anovel").alias("op"),
-            F.col("aud_id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.lit(None).cast("long").alias("checksum"),
-        )
-        return af, ap, ad, aprobe, anovel
 
     def _video_family():
         # round-16: the VIDEO arm — majority-pooled frame dHashes over the
         # planted clip corpus, then the SAME banded machinery (hash_col=
         # 'vfp').  Three consumers read the fingerprint frame — cut once.
         vfps = video_fingerprints(video_evidence_clips(d)).localCheckpoint()
-        vf = vfps.select(
-            F.lit("vfp").alias("op"),
-            F.col("vid_id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            F.col("n_frames").cast("int").alias("width"),
-            F.col("n_sampled").cast("int").alias("height"),
-            F.col("vfp").alias("checksum"),
-        )
         # pairs and attribution feed THREE consumers each (their op rows +
         # the transitive-lineage clusters) — cut lineage once apiece
         vpairs = phash_near_dup_pairs(
             vfps, hash_col="vfp", id_col="vid_id"
         ).localCheckpoint()
         vatt = video_dedup(vfps, strategy="minpair").localCheckpoint()
-        vp = vpairs.select(
-            F.lit("vpair").alias("op"),
-            F.col("img_a").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("img_b").alias("checksum"),
+        return (
+            _op_rows(
+                vfps, "vfp", "vid_id", width="n_frames",
+                height="n_sampled", checksum="vfp",
+            ),
+            _pair_rows(vpairs, "vpair"),
+            _dedup_rows(vatt, "vdedup"),
+            # round-17: op='vprobe'/'vnovel' — the same lifecycle under
+            # the video grid pin.
+            *_index_lifecycle(
+                vfps, VIDEO, VFP_DUP_OFFSET, "vfp-idx-slot-", "v"
+            ),
+            # round-17: op='vclust' — media_dup_clusters' transitive
+            # lineage (pairs + keep-first attribution → connected_components
+            # min-id labels) under the hash gate.
+            _op_rows(
+                media_dup_clusters(vpairs, vatt), "vclust", "id",
+                checksum="component",
+            ),
         )
-        vd = vatt.select(
-            F.lit("vdedup").alias("op"),
-            F.col("img_id").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("dup_of").alias("checksum"),
-        )
-        # round-17: op='vprobe'/'vnovel' — the persisted VIDEO-index
-        # lifecycle (operators/vfp_index.py), same discipline under the
-        # video grid pin.
-        from .vfp_index import (
-            build_vfp_index,
-            extend_vfp_index,
-            novel_videos,
-            vfp_against_index,
-        )
-
-        v_base = vfps.filter(F.col("vid_id") < VFP_DUP_OFFSET)
-        v_var = vfps.filter(F.col("vid_id") >= VFP_DUP_OFFSET)
-
-        def _vidx_build(path):
-            build_vfp_index(
-                v_base.filter(F.col("vid_id") % 2 == 0), path, n_files=4
-            )
-            extend_vfp_index(
-                v_base.filter(F.col("vid_id") % 2 == 1), path, epoch=7
-            )
-            # one probe materialization serves matches AND the novel anti-join
-            m = vfp_against_index(v_var, path).localCheckpoint()
-            return m, novel_videos(v_var, m).select("vid_id")
-
-        vmatches, vnovel_df = with_slot_scratch("vfp-idx-slot-", _vidx_build)
-        vprobe = vmatches.select(
-            F.lit("vprobe").alias("op"),
-            F.col("vid_id").alias("doc_id"),
-            F.col("dist").cast("int").alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("matched_vid_id").alias("checksum"),
-        )
-        vnovel = vnovel_df.select(
-            F.lit("vnovel").alias("op"),
-            F.col("vid_id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.lit(None).cast("long").alias("checksum"),
-        )
-        # round-17: op='vclust' — media_dup_clusters' transitive lineage
-        # (pairs + keep-first attribution → connected_components min-id
-        # labels) under the hash gate, over the video evidence corpus.
-        vcl = media_dup_clusters(vpairs, vatt).select(
-            F.lit("vclust").alias("op"),
-            F.col("id").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            F.lit(0).alias("width"),
-            F.lit(0).alias("height"),
-            F.col("component").alias("checksum"),
-        )
-        return vf, vp, vd, vprobe, vnovel, vcl
 
     def _mac_family():
         # round-16: op='macct'/'ddrop' — the dedup_media_corpus accounting
@@ -829,13 +715,9 @@ def multimodal_resize_frames(spark, sf_dir):
             ),
         )
         ddr_in = mac_copies.unionAll(mac_garbage)
-        ddr = decode_drop_report(ddr_in, image_hashes(ddr_in), "img_id").select(
-            F.lit("ddrop").alias("op"),
-            F.col("n_input").cast("long").alias("doc_id"),
-            F.lit(0).alias("idx"),
-            F.col("n_decoded").cast("int").alias("width"),
-            F.col("n_dropped").cast("int").alias("height"),
-            F.lit(None).cast("long").alias("checksum"),
+        ddr = _op_rows(
+            decode_drop_report(ddr_in, image_hashes(ddr_in), "img_id"),
+            "ddrop", "n_input", width="n_decoded", height="n_dropped",
         )
         return macct, ddr
 

@@ -1,21 +1,26 @@
-"""Incremental image near-dup dedup against a PERSISTED pHash index —
-the image twin of ``dedup_index.py``: a new image batch dedups against
+"""Incremental media near-dup dedup against a PERSISTED fingerprint
+index — the media twin of ``dedup_index.py``: a new batch dedups against
 the historical corpus by probing an on-disk artifact, never re-decoding
-the petabytes already processed.  (Batch twin:
+the petabytes already processed.  One index serves every modality: a
+:class:`MediaFamily` names the modality's id and hash columns, the meta
+grid pin, and its fingerprint and dedup functions, and every function
+here takes ``family=`` (default :data:`IMAGE`).  (Batch twin:
 ``multimodal.phash_near_dup_pairs`` / ``phash_dedup``; streaming twin:
-``streaming/image_ingest.py``.)
+``streaming/media_ingest.py``.)
 
-Index layout (parquet, under one directory):
+Index layout (parquet, under one directory; shared by all families, so
+an audio frame ``(aud_id, afp)`` lands on disk as ``(img_id, dhash)``):
 
-- ``bands/``  — ``(band, band_val, img_id)``: the 64-bit dHash split
+- ``bands/``  — ``(band, band_val, img_id)``: the 64-bit hash split
   into ``PHASH_BANDS`` byte bands, range-clustered + sorted on
   ``(band, band_val)`` so a probe batch's band values prune row groups
   via min/max footers (the ``dedup_index`` mechanics);
-- ``hashes/`` — ``(img_id, dhash, ahash, epoch)``: one 17-byte row per
-  indexed image — the FULL hash, so verification is EXACT popcount;
+- ``hashes/`` — ``(img_id, dhash[, ahash], epoch)``: one row per
+  indexed item — the FULL hash, so verification is EXACT popcount;
 - ``meta/``   — one row pinning (version, n_bands, grid); probes assert
-  the constants match, so an index built under different banding fails
-  loudly instead of silently missing candidates.
+  the constants match, so an index built under different banding — or
+  by another family (the grid pin differs per family) — fails loudly
+  instead of silently missing candidates.
 
 Two contracts are STRONGER than the MinHash index's:
 
@@ -30,54 +35,88 @@ Writer discipline is inherited: mutating writers hold the single-writer
 lease (``manifest.index_writer_lock``); appends are new parquet files
 (O(batch) per extend); :func:`compact_phash_index` reclaims replayed
 duplicates and restores the range clustering without re-decoding any
-image.
+payload.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .multimodal import PHASH_BANDS, PHASH_GRID, PHASH_RADIUS
+from .media_audio import AFP_WINDOWS, audio_dedup, audio_fingerprints
+from .media_core import PHASH_BANDS, PHASH_GRID, PHASH_RADIUS, phash_dedup
+from .media_image import image_hashes
+from .media_video import VFP_GRID_PIN, video_dedup, video_fingerprints
+
+
+@dataclass(frozen=True)
+class MediaFamily:
+    """One modality's binding of the shared media machinery: its id and
+    64-bit hash columns (``aux_cols`` ride along into the index), the
+    meta ``grid`` pin, ``fingerprint(df, id_col=…)`` (id, payload) →
+    hash frame, and ``dedup(fps, …)`` keep-first attribution."""
+
+    name: str
+    id_col: str
+    hash_col: str
+    aux_cols: tuple
+    grid: int
+    fingerprint: Callable
+    dedup: Callable
+
+
+IMAGE = MediaFamily(
+    "image", "img_id", "dhash", ("ahash",), PHASH_GRID, image_hashes,
+    phash_dedup,
+)
+AUDIO = MediaFamily(
+    "audio", "aud_id", "afp", (), AFP_WINDOWS, audio_fingerprints,
+    audio_dedup,
+)
+VIDEO = MediaFamily(
+    "video", "vid_id", "vfp", (), VFP_GRID_PIN, video_fingerprints,
+    video_dedup,
+)
+FAMILIES = {f.name: f for f in (IMAGE, AUDIO, VIDEO)}
 
 PHASH_INDEX_VERSION = 1
 _BAND_W = 64 // PHASH_BANDS
 _BAND_MASK = (1 << _BAND_W) - 1
 
 
-def _band_rows(
-    hashes: DataFrame, id_col: str = "img_id", hash_col: str = "dhash"
-) -> DataFrame:
-    """(band, band_val, <id>) — the on-disk banding, identical to the
-    batch operator's in-memory banding so batch and index probes can
-    never disagree on candidates.  Column names are parameters so the
-    AUDIO index (``afp_index.py`` — hash_col='afp') reuses the exact
-    same mechanics; the stored column names stay the image ones (the
-    artifact layout is shared)."""
+def _band_rows(h: DataFrame) -> DataFrame:
+    """(band, band_val, img_id) of a STORED-name frame — the on-disk
+    banding, identical to the batch operator's in-memory banding so batch
+    and index probes can never disagree on candidates."""
     pairs = []
     for k in range(PHASH_BANDS):
         pairs.extend(
             [
                 F.lit(k),
                 F.shiftrightunsigned(
-                    F.col(hash_col), _BAND_W * k
+                    F.col("dhash"), _BAND_W * k
                 ).bitwiseAND(F.lit(_BAND_MASK)),
             ]
         )
-    return hashes.select(
-        F.col(id_col).alias("img_id"),
-        F.stack(F.lit(PHASH_BANDS), *pairs).alias("band", "band_val"),
+    return h.select(
+        "img_id", F.stack(F.lit(PHASH_BANDS), *pairs).alias("band", "band_val")
     ).select("band", "band_val", "img_id")
 
 
 def _select_stored(
-    hashes: DataFrame, id_col: str, hash_col: str, aux_cols: tuple
+    hashes: DataFrame, family: MediaFamily, aux: bool = True
 ) -> DataFrame:
-    """Normalize an input frame to the STORED column names (img_id,
-    dhash[, ahash…]) — the artifact layout is shared across families, so
-    an audio frame (aud_id, afp) lands on disk as (img_id, dhash)."""
-    cols = [F.col(id_col).alias("img_id"), F.col(hash_col).alias("dhash")]
-    cols += [F.col(c) for c in aux_cols]
+    """Normalize a family's frame to the STORED column names (img_id,
+    dhash[, aux…]) — the artifact layout is shared across families."""
+    cols = [
+        F.col(family.id_col).alias("img_id"),
+        F.col(family.hash_col).alias("dhash"),
+    ]
+    if aux:
+        cols += [F.col(c) for c in family.aux_cols]
     return hashes.select(*cols)
 
 
@@ -87,23 +126,18 @@ def build_phash_index(
     n_files: int = 32,
     owner: str | None = None,
     *,
-    id_col: str = "img_id",
-    hash_col: str = "dhash",
-    aux_cols: tuple = ("ahash",),
-    grid: int = PHASH_GRID,
+    family: MediaFamily = IMAGE,
 ) -> None:
-    """Build the persisted index from an ``image_hashes`` frame
-    ``(img_id, …, dhash, ahash)``.  One pass: band rows range-clustered
-    on (band, band_val); hash rows clustered on img_id for the
-    verification join.  The keyword block parameterizes the family —
-    ``afp_index.py`` passes the audio column names and ``grid`` =
-    AFP_WINDOWS, which the meta check then enforces (an audio index
-    probed as an image index fails loudly on the grid pin)."""
+    """Build the persisted index from a ``family.fingerprint`` frame
+    (e.g. ``image_hashes``: ``(img_id, …, dhash, ahash)``).  One pass:
+    band rows range-clustered on (band, band_val); hash rows clustered on
+    img_id for the verification join; the meta row pins
+    ``family.grid``."""
     from ..sources.manifest import index_writer_lock
 
     spark = hashes.sparkSession
     with index_writer_lock(spark, path, owner):
-        h = _select_stored(hashes, id_col, hash_col, aux_cols).localCheckpoint()
+        h = _select_stored(hashes, family).localCheckpoint()
         (
             _band_rows(h)
             .repartitionByRange(n_files, "band", "band_val")
@@ -119,7 +153,7 @@ def build_phash_index(
             .parquet(f"{path}/hashes")
         )
         spark.createDataFrame(
-            [(PHASH_INDEX_VERSION, PHASH_BANDS, grid)],
+            [(PHASH_INDEX_VERSION, PHASH_BANDS, family.grid)],
             "version int, n_bands int, grid int",
         ).write.mode("overwrite").parquet(f"{path}/meta")
 
@@ -130,34 +164,29 @@ def extend_phash_index(
     epoch: int | None = None,
     owner: str | None = None,
     *,
-    id_col: str = "img_id",
-    hash_col: str = "dhash",
-    aux_cols: tuple = ("ahash",),
-    grid: int = PHASH_GRID,
+    family: MediaFamily = IMAGE,
 ) -> None:
     """Append a batch's band + hash rows (run AFTER dedup: index the
     SURVIVORS).  ``epoch`` stamps the hash rows with the writing
     micro-batch — the cross-epoch re-delivery attribution
-    ``streaming/image_ingest.py`` depends on (same contract as
+    ``streaming/media_ingest.py`` depends on (same contract as
     ``extend_minhash_index``).  Appends are new files; clustering is
     restored by the next :func:`compact_phash_index`."""
     from ..sources.manifest import index_writer_lock
 
     with index_writer_lock(hashes.sparkSession, path, owner):
-        _check_meta(hashes.sparkSession, path, grid)
-        h = _select_stored(hashes, id_col, hash_col, aux_cols).localCheckpoint()
+        _check_meta(hashes.sparkSession, path, family)
+        h = _select_stored(hashes, family).localCheckpoint()
         _band_rows(h).write.mode("append").parquet(f"{path}/bands")
         h.withColumn("epoch", F.lit(epoch).cast("long")).write.mode(
             "append"
         ).parquet(f"{path}/hashes")
 
 
-def _check_meta(
-    spark: SparkSession, path: str, grid: int = PHASH_GRID
-) -> None:
+def _check_meta(spark: SparkSession, path: str, family: MediaFamily) -> None:
     m = spark.read.parquet(f"{path}/meta").collect()[0]
     got = (m["version"], m["n_bands"], m["grid"])
-    want = (PHASH_INDEX_VERSION, PHASH_BANDS, grid)
+    want = (PHASH_INDEX_VERSION, PHASH_BANDS, family.grid)
     if got != want:
         raise ValueError(
             f"phash index at {path} was built with parameters {got}, "
@@ -171,27 +200,25 @@ def phash_against_index(
     radius: int = PHASH_RADIUS,
     broadcast_batch: bool = True,
     *,
-    id_col: str = "img_id",
-    hash_col: str = "dhash",
-    grid: int = PHASH_GRID,
+    family: MediaFamily = IMAGE,
 ) -> DataFrame:
-    """Probe the index with a batch's hash frame: ``(img_id,
-    matched_img_id, dist)`` — one row per (new image, indexed image)
-    pair within Hamming distance ``radius``; EXACT verification, exact
-    recall for ``radius <= PHASH_BANDS - 1``.
+    """Probe the index with a batch's hash frame: ``(<id>, matched_<id>,
+    dist)`` with ``<id> = family.id_col`` — one row per (new item,
+    indexed item) pair within Hamming distance ``radius``; EXACT
+    verification, exact recall for ``radius <= PHASH_BANDS - 1``.
 
     Scale shape: the batch's band rows broadcast (8 rows × ~24 bytes per
-    image); the candidate join runs map-side over the on-disk bands scan
+    item); the candidate join runs map-side over the on-disk bands scan
     with range-clustering pruning row groups — index data never
     shuffles.  The verify join reads only candidate hash rows."""
     spark = new_hashes.sparkSession
-    _check_meta(spark, path, grid)
+    _check_meta(spark, path, family)
     if radius > PHASH_BANDS - 1:
         raise ValueError(
             f"radius {radius} exceeds the exact-recall bound "
             f"{PHASH_BANDS - 1}; band the hash finer or lower the radius"
         )
-    h_new = _select_stored(new_hashes, id_col, hash_col, ()).localCheckpoint()
+    h_new = _select_stored(new_hashes, family, aux=False).localCheckpoint()
     bands_new = _band_rows(h_new)
     if broadcast_batch:
         bands_new = F.broadcast(bands_new)
@@ -228,8 +255,8 @@ def phash_against_index(
             cand["matched_img_id"] == F.col("b.img_id"),
         )
         .select(
-            cand["img_id"],
-            cand["matched_img_id"],
+            cand["img_id"].alias(family.id_col),
+            cand["matched_img_id"].alias(f"matched_{family.id_col}"),
             dist.alias("dist"),
         )
         .filter(F.col("dist") <= radius)
@@ -240,12 +267,12 @@ def novel_images(
     new_hashes: DataFrame,
     matches: DataFrame,
     id_col: str = "img_id",
-    match_id_col: str = "img_id",
 ) -> DataFrame:
     """The batch rows with no index match — the survivors to keep and
-    index (left-anti on the id)."""
+    index (left-anti on the id; the probe names its output id column
+    ``family.id_col``, so both sides share ``id_col``)."""
     return new_hashes.join(
-        matches.select(F.col(match_id_col).alias(id_col)).distinct(),
+        matches.select(id_col).distinct(),
         id_col,
         "left_anti",
     )
@@ -257,19 +284,19 @@ def compact_phash_index(
     n_files: int = 32,
     owner: str | None = None,
     *,
-    grid: int = PHASH_GRID,
+    family: MediaFamily = IMAGE,
 ) -> None:
     """Rewrite an appended-to index back into its initial clustering —
     exact-duplicate rows (a replayed extend's copies are row-identical,
     epoch included) dropped, range clustering restored; O(index rows),
-    no image ever re-decoded.  Same swap discipline as
+    no payload ever re-decoded.  Same swap discipline as
     ``compact_minhash_index``: rewrite to temp dirs under the lease,
     then swap."""
     from ..sources.manifest import index_writer_lock
     from .text_index import _swap_rewrite
 
     with index_writer_lock(spark, path, owner):
-        _check_meta(spark, path, grid)
+        _check_meta(spark, path, family)
         bands = spark.read.parquet(f"{path}/bands").distinct()
         hashes = spark.read.parquet(f"{path}/hashes").distinct()
         _swap_rewrite(

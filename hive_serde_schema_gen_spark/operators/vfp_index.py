@@ -1,30 +1,12 @@
-"""Incremental VIDEO near-dup dedup against a persisted fingerprint
-index — the video member of the persisted-artifact family (text:
-``dedup_index.py``, image: ``phash_index.py``, audio: ``afp_index.py``,
-embedding: ``clustering.persist_semdedup_index``).  A new video batch
-dedups against the historical corpus by probing the on-disk majority
-fingerprints, never re-decoding frames already processed.
+"""The persisted VIDEO fingerprint index: ``phash_index`` under the
+:data:`~.phash_index.VIDEO` family — probes return ``(vid_id,
+matched_vid_id, dist)``, and the meta grid pin (``VFP_GRID_PIN``) makes
+a cross-family probe fail loudly.  Kept as an import path."""
 
-The artifact mechanics are the pHash index's REUSED VERBATIM (same band
-layout, writer lease, exact-popcount verify, exact-recall bound at
-radius <= bands-1), exactly as ``afp_index`` does for audio —
-``phash_index``'s functions are parameterized by (id_col, hash_col,
-grid) and this module passes the video configuration: hash_col='vfp'
-(the 64-bit bitwise-majority frame-dHash pool,
-``multimodal.video_fingerprints``) and ``grid=VFP_GRID_PIN`` (72, the
-8x9 per-frame gray cells) pinned in the index meta — probing a video
-index with image or audio code fails loudly on the meta check instead
-of silently missing candidates.  On disk the shared layout keeps the
-image column names (img_id/dhash); this module's API renames at the
-boundary so callers see (vid_id, matched_vid_id, vfp)."""
+from functools import partial
 
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .multimodal import PHASH_RADIUS, VFP_GRID_PIN
 from .phash_index import (
+    VIDEO,
     build_phash_index,
     compact_phash_index,
     extend_phash_index,
@@ -32,68 +14,8 @@ from .phash_index import (
     phash_against_index,
 )
 
-_VFP_KW = dict(id_col="vid_id", hash_col="vfp", aux_cols=(), grid=VFP_GRID_PIN)
-
-
-def build_vfp_index(
-    fps: DataFrame, path: str, n_files: int = 32, owner: str | None = None
-) -> None:
-    """Build the persisted video index from a ``video_fingerprints``
-    frame ``(vid_id, …, vfp)``."""
-    build_phash_index(fps, path, n_files, owner, **_VFP_KW)
-
-
-def extend_vfp_index(
-    fps: DataFrame,
-    path: str,
-    epoch: int | None = None,
-    owner: str | None = None,
-) -> None:
-    """Append a batch's fingerprints (run AFTER dedup: index the
-    survivors); ``epoch`` stamps rows for the streaming replay
-    discipline."""
-    extend_phash_index(fps, path, epoch, owner, **_VFP_KW)
-
-
-def vfp_against_index(
-    new_fps: DataFrame,
-    path: str,
-    radius: int = PHASH_RADIUS,
-    broadcast_batch: bool = True,
-) -> DataFrame:
-    """Probe the index with a batch's fingerprint frame: ``(vid_id,
-    matched_vid_id, dist)`` — exact verification, exact recall at
-    ``radius <= bands - 1``."""
-    out = phash_against_index(
-        new_fps,
-        path,
-        radius,
-        broadcast_batch,
-        id_col="vid_id",
-        hash_col="vfp",
-        grid=VFP_GRID_PIN,
-    )
-    return out.select(
-        F.col("img_id").alias("vid_id"),
-        F.col("matched_img_id").alias("matched_vid_id"),
-        "dist",
-    )
-
-
-def novel_videos(new_fps: DataFrame, matches: DataFrame) -> DataFrame:
-    """The batch rows with no index match — the survivors to keep and
-    index."""
-    return novel_images(
-        new_fps, matches, id_col="vid_id", match_id_col="vid_id"
-    )
-
-
-def compact_vfp_index(
-    spark: SparkSession,
-    path: str,
-    n_files: int = 32,
-    owner: str | None = None,
-) -> None:
-    """Reclaim replayed duplicates and restore the range clustering —
-    the shared swap discipline, under the video meta pin."""
-    compact_phash_index(spark, path, n_files, owner, grid=VFP_GRID_PIN)
+build_vfp_index = partial(build_phash_index, family=VIDEO)
+extend_vfp_index = partial(extend_phash_index, family=VIDEO)
+vfp_against_index = partial(phash_against_index, family=VIDEO)
+novel_videos = partial(novel_images, id_col=VIDEO.id_col)
+compact_vfp_index = partial(compact_phash_index, family=VIDEO)

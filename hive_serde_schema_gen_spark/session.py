@@ -9,8 +9,15 @@ timezone is pinned to UTC so timestamp semantics match the DuckDB oracle.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+#: serializes every scoped conf change: a session's conf is global to all
+#: driver threads, so a second scope on the same key must wait for the
+#: first to restore, not interleave with it
+_CONF_LOCK = threading.RLock()
 
 
 def get_spark(app_name: str = "hive_serde_schema_gen_spark") -> SparkSession:
@@ -36,8 +43,22 @@ def get_spark(app_name: str = "hive_serde_schema_gen_spark") -> SparkSession:
     return builder.getOrCreate()
 
 
-def tune_for_oracle(spark: SparkSession) -> SparkSession:
-    """Settings every oracle-compared query applies defensively at runtime —
-    the driver may hand us a session with different conf."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark
+@contextmanager
+def scoped_conf(spark: SparkSession, **kv):
+    """Set session conf keys for the duration of a ``with`` block, then
+    restore each key's prior value, or unset it if it was unset.  Conf
+    keys contain dots, so pass them as ``**{"spark.sql.x": "v"}``.  The
+    module lock is held for the whole block (re-entrant, so scopes nest
+    on one thread)."""
+    with _CONF_LOCK:
+        prior = {k: spark.conf.get(k, None) for k in kv}
+        try:
+            for k, v in kv.items():
+                spark.conf.set(k, v)
+            yield spark
+        finally:
+            for k, v in prior.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
+from ..session import scoped_conf
+
 TABLES = (
     "region",
     "nation",
@@ -67,14 +69,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # analysis is eager, so the NTZ→LTZ cast captures UTC here and the
         # caller's session timeZone is restored before we return — a read
         # must not change how unrelated timestamps render afterwards.
-        prior_tz = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        try:
+        with scoped_conf(spark, **{"spark.sql.session.timeZone": "UTC"}):
             df = normalize_events_ts(
                 spark.read.parquet(f"{sf_dir}/events.parquet")
             )
-        finally:
-            spark.conf.set("spark.sql.session.timeZone", prior_tz)
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
@@ -115,22 +113,23 @@ def fanout_for_compute(df: DataFrame, key_col: str) -> DataFrame:
     dp = spark.sparkContext.defaultParallelism
     qe = df._jdf.queryExecution()
     # Driver-cost control (round 18): the partition probe forces physical
-    # planning (~25-40 ms on this box) and this helper sits inside hot
+    # planning (~25-40 ms, measured in round 18) and this helper sits inside hot
     # builders that are often called several times per query over the
     # SAME input (shingles_df, media synth stages).  Memoize the DECISION
-    # per (semantic plan, key, parallelism) on the session — a repeat
-    # call costs one semanticHash (~1 ms).  Only the integer target is
-    # cached, never a DataFrame, so a (vanishingly unlikely) 32-bit hash
-    # collision could at worst mis-size the fanout of the colliding
-    # plan — a performance nuance, not a correctness risk.  Staleness
-    # caveat: a path whose FILES change mid-session would reuse the old
-    # decision; the test tables are immutable and production inputs with
-    # >= defaultParallelism splits never consult the cache result anyway.
+    # per (semantic plan, plan size estimate, key, parallelism) on the
+    # session.  The size is part of the key because the semantic hash of
+    # a file scan does not change when the files under its path are
+    # rewritten; the size estimate (a fresh read re-lists the files) does.
+    # Only the integer target is cached, never a DataFrame, so a
+    # (vanishingly unlikely) hash collision could at worst mis-size the
+    # fanout of the colliding plan — a performance nuance, not a
+    # correctness risk.
     memo = getattr(spark, "_fanout_decisions", None)
     if memo is None:
         memo = {}
         spark._fanout_decisions = memo
-    key = (qe.analyzed().semanticHash(), key_col, dp)
+    size = int(qe.optimizedPlan().stats().sizeInBytes())
+    key = (qe.analyzed().semanticHash(), size, key_col, dp)
     target = memo.get(key)
     if target is None:
         # JVM-side partition probe: same physical planning as df.rdd but
@@ -139,7 +138,6 @@ def fanout_for_compute(df: DataFrame, key_col: str) -> DataFrame:
         if parts >= dp:
             target = 0
         else:
-            size = int(qe.optimizedPlan().stats().sizeInBytes())
             target = min(dp, max(1, size // FANOUT_BYTES_PER_TASK))
             if target <= parts:
                 target = 0

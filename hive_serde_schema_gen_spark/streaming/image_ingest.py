@@ -1,135 +1,15 @@
-"""Continuous image-ingest dedup against the persisted pHash index —
-the image twin of ``streaming/ingest.py``: every micro-batch of
-(img_id, payload) rows hashes its images, probes the on-disk index,
-keeps only novel images, and appends the survivors to BOTH the curated
-output and the index, so later batches (and later days) dedup against
-every image ever accepted at O(batch) cost.
+"""Image edition of :mod:`.media_ingest` (the IMAGE family), kept as an
+import path."""
 
-The replay discipline is the one ``ingest.py`` proved for text, applied
-verbatim (same interleavings, same guards):
+from functools import partial
 
-- the curated output is a deterministic ``epoch=N`` overwrite dir;
-- the probe EXCLUDES matches against img_ids present in the incoming
-  batch itself (a replayed epoch whose extend already committed would
-  otherwise match itself at distance 0, empty ``novel``, and erase the
-  epoch dir);
-- batch ids already indexed under a DIFFERENT epoch (or a None epoch:
-  batch-built history) are cross-epoch RE-DELIVERIES and are rejected
-  before the probe, so only this epoch's own replayed rows ever reach
-  the self-match exclusion;
-- index appends duplicated by a replay are row-identical and reclaimed
-  by the next ``compact_phash_index``.
-
-Intra-batch: exact-hash duplicates WITHIN one batch collapse to the
-minimum id before the probe (two copies arriving together are both
-absent from the index); intra-batch NEAR-dups are invisible to the
-probe until the next batch — run ``phash_near_dup_pairs`` over the
-(small) novel set in-line when that matters, exactly the text caveat.
-"""
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..operators.multimodal import image_hashes
-from ..operators.phash_index import (
-    extend_phash_index,
-    novel_images,
-    phash_against_index,
+from ..operators.phash_index import IMAGE
+from .media_ingest import (
+    process_media_ingest_batch,
+    read_ingested_media,
+    start_media_ingest,
 )
 
-
-def _novel_hashes_for_batch(
-    batch: DataFrame, index_path: str, intra_batch: bool, epoch_id: int
-) -> DataFrame | None:
-    """(img_id, dhash, ahash) of the batch's novel images, or None for an
-    effectively-empty batch — the shared probe pipeline with the two
-    replay-correctness joins (see module docstring)."""
-    if batch.isEmpty():
-        return None
-    hashes = image_hashes(batch).localCheckpoint()
-    if intra_batch:
-        from pyspark.sql.window import Window as W
-
-        w = W.partitionBy("dhash").orderBy("img_id")
-        hashes = (
-            hashes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .localCheckpoint()
-        )
-    idx_hashes = batch.sparkSession.read.parquet(f"{index_path}/hashes")
-    foreign = (
-        idx_hashes.filter(~F.col("epoch").eqNullSafe(F.lit(epoch_id)))
-        .select("img_id")
-        .join(F.broadcast(hashes.select("img_id")), "img_id", "left_semi")
-        .distinct()
-    )
-    hashes = hashes.join(
-        F.broadcast(foreign), "img_id", "left_anti"
-    ).localCheckpoint()
-    if hashes.isEmpty():
-        return None
-    matches = phash_against_index(hashes, index_path).join(
-        hashes.select(F.col("img_id").alias("matched_img_id")),
-        "matched_img_id",
-        "left_anti",
-    )
-    return novel_images(hashes, matches).localCheckpoint()
-
-
-def process_image_ingest_batch(
-    batch: DataFrame,
-    epoch_id: int,
-    index_path: str,
-    out_path: str,
-    intra_batch: bool = True,
-) -> None:
-    """One micro-batch → novel images → epoch-dir write + index extend
-    (plain function so the replay path is directly testable).  The epoch
-    dir stores (img_id, payload) of the ACCEPTED images — joined back to
-    the batch by id, since the hash frame deliberately dropped the
-    payloads."""
-    novel = _novel_hashes_for_batch(batch, index_path, intra_batch, epoch_id)
-    if novel is None:
-        return
-    accepted = batch.join(
-        F.broadcast(novel.select("img_id")), "img_id"
-    )
-    accepted.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
-    extend_phash_index(
-        novel, index_path, epoch=epoch_id, owner=f"image-ingest:{out_path}"
-    )
-
-
-def start_image_ingest(
-    stream: DataFrame,
-    index_path: str,
-    out_path: str,
-    checkpoint: str,
-    intra_batch: bool = True,
-    query_name: str = "image_ingest",
-):
-    """Start the ingest query over an (img_id, payload, …) stream;
-    returns the StreamingQuery."""
-
-    def _process(batch: DataFrame, epoch_id: int) -> None:
-        process_image_ingest_batch(
-            batch, epoch_id, index_path, out_path, intra_batch=intra_batch
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
-
-
-def read_ingested_images(spark, out_path: str) -> DataFrame:
-    """The accepted image corpus across all epochs (hive-partitioned, so
-    readers prune by epoch range)."""
-    return spark.read.option("basePath", out_path).parquet(
-        f"{out_path}/epoch=*"
-    )
+process_image_ingest_batch = partial(process_media_ingest_batch, family=IMAGE)
+start_image_ingest = partial(start_media_ingest, family=IMAGE)
+read_ingested_images = read_ingested_media

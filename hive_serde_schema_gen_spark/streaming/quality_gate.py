@@ -104,33 +104,3 @@ def process_gated_batch(
         )
     return results
 
-
-def start_quality_gate(
-    stream: DataFrame,
-    checks,
-    good_path: str,
-    quarantine_path: str,
-    report_path: str,
-    checkpoint: str,
-    row_predicate: str | None = None,
-    query_name: str = "quality_gate",
-):
-    """Start the gated stream; returns the StreamingQuery."""
-
-    def _process(batch: DataFrame, epoch_id: int) -> None:
-        process_gated_batch(
-            batch,
-            epoch_id,
-            checks,
-            good_path,
-            quarantine_path,
-            report_path,
-            row_predicate=row_predicate,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )

@@ -1,135 +1,15 @@
-"""Continuous video-ingest dedup against the persisted vfp index — the
-video twin of ``streaming/audio_ingest.py`` / ``image_ingest.py``
-(which are themselves editions of ``streaming/ingest.py``): every
-micro-batch of (vid_id, payload) raw-frame-container rows fingerprints
-its videos (majority-pooled frame dHashes), probes the on-disk index,
-keeps only novel videos, and appends the survivors to BOTH the curated
-output and the index, so later batches (and later days) dedup against
-every video ever accepted at O(batch) cost.
+"""Video edition of :mod:`.media_ingest` (the VIDEO family), kept as an
+import path."""
 
-The replay discipline is inherited verbatim (same interleavings, same
-guards as the text, image, and audio editions):
+from functools import partial
 
-- the curated output is a deterministic ``epoch=N`` overwrite dir;
-- the probe EXCLUDES matches against vid_ids present in the incoming
-  batch itself (a replayed epoch whose extend already committed would
-  otherwise match itself at distance 0, empty ``novel``, and erase the
-  epoch dir);
-- batch ids already indexed under a DIFFERENT epoch (or a None epoch:
-  batch-built history) are cross-epoch RE-DELIVERIES and are rejected
-  before the probe;
-- index appends duplicated by a replay are row-identical and reclaimed
-  by the next ``compact_vfp_index``.
-
-Intra-batch: exact-fingerprint duplicates WITHIN one batch collapse to
-the minimum id before the probe; intra-batch NEAR-dups are invisible to
-the probe until the next batch — run ``phash_near_dup_pairs`` with
-``hash_col='vfp'`` over the (small) novel set in-line when that
-matters, exactly the text caveat.
-"""
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..operators.multimodal import video_fingerprints
-from ..operators.vfp_index import (
-    extend_vfp_index,
-    novel_videos,
-    vfp_against_index,
+from ..operators.phash_index import VIDEO
+from .media_ingest import (
+    process_media_ingest_batch,
+    read_ingested_media,
+    start_media_ingest,
 )
 
-
-def _novel_fps_for_batch(
-    batch: DataFrame, index_path: str, intra_batch: bool, epoch_id: int
-) -> DataFrame | None:
-    """(vid_id, n_frames, n_sampled, vfp) of the batch's novel videos,
-    or None for an effectively-empty batch — the shared probe pipeline
-    with the two replay-correctness joins (see module docstring)."""
-    if batch.isEmpty():
-        return None
-    fps = video_fingerprints(batch).localCheckpoint()
-    if intra_batch:
-        from pyspark.sql.window import Window as W
-
-        w = W.partitionBy("vfp").orderBy("vid_id")
-        fps = (
-            fps.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .localCheckpoint()
-        )
-    # the shared artifact layout stores the id as img_id
-    idx_fps = batch.sparkSession.read.parquet(f"{index_path}/hashes")
-    foreign = (
-        idx_fps.filter(~F.col("epoch").eqNullSafe(F.lit(epoch_id)))
-        .select(F.col("img_id").alias("vid_id"))
-        .join(F.broadcast(fps.select("vid_id")), "vid_id", "left_semi")
-        .distinct()
-    )
-    fps = fps.join(
-        F.broadcast(foreign), "vid_id", "left_anti"
-    ).localCheckpoint()
-    if fps.isEmpty():
-        return None
-    matches = vfp_against_index(fps, index_path).join(
-        fps.select(F.col("vid_id").alias("matched_vid_id")),
-        "matched_vid_id",
-        "left_anti",
-    )
-    return novel_videos(fps, matches).localCheckpoint()
-
-
-def process_video_ingest_batch(
-    batch: DataFrame,
-    epoch_id: int,
-    index_path: str,
-    out_path: str,
-    intra_batch: bool = True,
-) -> None:
-    """One micro-batch → novel videos → epoch-dir write + index extend
-    (plain function so the replay path is directly testable).  The epoch
-    dir stores (vid_id, payload) of the ACCEPTED videos — joined back to
-    the batch by id, since the fingerprint frame deliberately dropped
-    the payloads."""
-    novel = _novel_fps_for_batch(batch, index_path, intra_batch, epoch_id)
-    if novel is None:
-        return
-    accepted = batch.join(F.broadcast(novel.select("vid_id")), "vid_id")
-    accepted.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
-    extend_vfp_index(
-        novel, index_path, epoch=epoch_id, owner=f"video-ingest:{out_path}"
-    )
-
-
-def start_video_ingest(
-    stream: DataFrame,
-    index_path: str,
-    out_path: str,
-    checkpoint: str,
-    intra_batch: bool = True,
-    query_name: str = "video_ingest",
-):
-    """Start the ingest query over a (vid_id, payload, …) stream;
-    returns the StreamingQuery."""
-
-    def _process(batch: DataFrame, epoch_id: int) -> None:
-        process_video_ingest_batch(
-            batch, epoch_id, index_path, out_path, intra_batch=intra_batch
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
-
-
-def read_ingested_videos(spark, out_path: str) -> DataFrame:
-    """The accepted video corpus across all epochs (hive-partitioned, so
-    readers prune by epoch range)."""
-    return spark.read.option("basePath", out_path).parquet(
-        f"{out_path}/epoch=*"
-    )
+process_video_ingest_batch = partial(process_media_ingest_batch, family=VIDEO)
+start_video_ingest = partial(start_media_ingest, family=VIDEO)
+read_ingested_videos = read_ingested_media

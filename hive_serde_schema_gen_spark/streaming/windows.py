@@ -29,6 +29,7 @@ import time
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import scoped_conf
 from ..sources.tables import normalize_events_ts
 
 # Far enough past any real event that every real window closes (year ~2191;
@@ -205,63 +206,66 @@ def streaming_window_counts(spark, sf_dir):
 
     from .exactly_once import idempotent_epoch_sink
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # the sentinel flush rides on the no-data micro-batch; don't depend on
-    # the (default-true) conf being untouched in the caller's session
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    # scale-adaptive state-store task count for ALL THREE drives (each
-    # streaming query captures the conf at start) — see _state_partitions
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark, sf_dir))
-    )
-    # raw physical schema (ts: int64 nanos or TIMESTAMP_NTZ, per generator)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream_dir = _stream_source_dir(sf_dir)
-    stream = normalize_events_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(stream_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias(
-                "total_value"
-            ),
+    # Session confs for the three drives, each restored on exit (every row
+    # is collected inside the scope): nanos-as-long for the raw events
+    # schema; the sentinel flush rides on the no-data micro-batch, so don't
+    # depend on the (default-true) conf being untouched in the caller's
+    # session; and a scale-adaptive state-store task count (each streaming
+    # query captures the conf at start) — see _state_partitions.
+    confs = {
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+        "spark.sql.shuffle.partitions": str(_state_partitions(spark, sf_dir)),
+    }
+    with scoped_conf(spark, **confs):
+        # raw physical schema (ts: int64 nanos or TIMESTAMP_NTZ)
+        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+        stream_dir = _stream_source_dir(sf_dir)
+        stream = normalize_events_ts(
+            spark.readStream.schema(raw_schema)
+            .option("maxFilesPerTrigger", "8")
+            .parquet(stream_dir)
         )
-    )
-    out_dir = tempfile.mkdtemp(prefix="spark_eo_windows_")
-    inner = idempotent_epoch_sink(out_dir)
+        agg = (
+            stream.withWatermark("ts", "30 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("value").cast("decimal(12,2)"))
+                .cast("double")
+                .alias("total_value"),
+            )
+        )
+        out_dir = tempfile.mkdtemp(prefix="spark_eo_windows_")
+        inner = idempotent_epoch_sink(out_dir)
 
-    def handler(batch_df, epoch_id: int) -> None:
-        inner(batch_df, epoch_id)
-        # injected redelivery of EVERY committed epoch: the commit ledger
-        # must turn each into a no-op (exactly-once under at-least-once
-        # delivery).  Redelivering all epochs — rather than probing for the
-        # first non-empty one with a take(), which would re-evaluate the
-        # whole batch plan — guarantees the row-carrying epochs are among
-        # the replays, so a broken ledger skip doubles real rows and the
-        # unchanged batch oracle catches it; the skip itself short-circuits
-        # before any Spark job runs, so the replays cost nothing.
-        inner(batch_df, epoch_id)
+        def handler(batch_df, epoch_id: int) -> None:
+            inner(batch_df, epoch_id)
+            # injected redelivery of EVERY committed epoch: the commit ledger
+            # must turn each into a no-op (exactly-once under at-least-once
+            # delivery).  Redelivering all epochs — rather than probing for the
+            # first non-empty one with a take(), which would re-evaluate the
+            # whole batch plan — guarantees the row-carrying epochs are among
+            # the replays, so a broken ledger skip doubles real rows and the
+            # unchanged batch oracle catches it; the skip itself short-circuits
+            # before any Spark job runs, so the replays cost nothing.
+            inner(batch_df, epoch_id)
 
-    q = agg.writeStream.outputMode("append").foreachBatch(handler).start()
-    try:
-        win_rows = _drive_and_read(spark, q, raw_schema, stream_dir, out_dir)
-        user_totals = _run_stateful(spark, raw_schema, stream_dir)
-        # the sentinel _drive_and_read wrote is still in stream_dir — the
-        # attribution stream consumes it as its watermark closer
-        attr_rows = _run_attribution(spark, raw_schema, stream_dir)
-    finally:
-        # single cleanup point: covers the success path AND any exception
-        # from the drive loop (TimeoutError, processAllAvailable failures),
-        # so neither scratch dir can accumulate across runs
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
+        q = agg.writeStream.outputMode("append").foreachBatch(handler).start()
+        try:
+            win_rows = _drive_and_read(
+                spark, q, raw_schema, stream_dir, out_dir
+            )
+            user_totals = _run_stateful(spark, raw_schema, stream_dir)
+            # the sentinel _drive_and_read wrote is still in stream_dir — the
+            # attribution stream consumes it as its watermark closer
+            attr_rows = _run_attribution(spark, raw_schema, stream_dir)
+        finally:
+            # single cleanup point: covers the success path AND any exception
+            # from the drive loop (TimeoutError, processAllAvailable failures),
+            # so neither scratch dir can accumulate across runs
+            shutil.rmtree(stream_dir, ignore_errors=True)
+            shutil.rmtree(out_dir, ignore_errors=True)
     out_schema = (
         "op string, window_start string, event_type string, n long,"
         " total_value double, user_id long, total_cents long,"

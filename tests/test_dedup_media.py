@@ -120,6 +120,79 @@ def test_image_index_probe_and_extend(spark, idx_dir):
     assert a2[9] == (4, "index")
 
 
+def _family_case(modality):
+    """(id column, payload encoder, fingerprint fn, index builder) — the
+    public per-modality entry points, so the test pins behaviour through
+    the same names callers import."""
+    from hive_serde_schema_gen_spark.operators.afp_index import (
+        build_afp_index,
+    )
+    from hive_serde_schema_gen_spark.operators.multimodal import (
+        _video_encode,
+        audio_fingerprints,
+        video_fingerprints,
+    )
+    from hive_serde_schema_gen_spark.operators.phash_index import (
+        build_phash_index,
+    )
+    from hive_serde_schema_gen_spark.operators.vfp_index import (
+        build_vfp_index,
+    )
+
+    return {
+        "image": ("img_id", _bmp_encode, image_hashes, build_phash_index),
+        "audio": ("aud_id", _wav_encode, audio_fingerprints, build_afp_index),
+        "video": (
+            "vid_id", _video_encode, video_fingerprints, build_vfp_index
+        ),
+    }[modality]
+
+
+@pytest.mark.parametrize("modality", ["image", "audio", "video"])
+def test_index_stage_per_modality(spark, idx_dir, modality):
+    """Stage 4 for every modality: build history, probe + extend through
+    ``dedup_media_corpus``, then re-probe the extended index — the
+    ``stage='index'`` attribution, the accounting, and the stored rows
+    (shared ``img_id`` layout, epoch stamp) pinned per family."""
+    id_col, enc, fp_fn, build = _family_case(modality)
+    schema = f"{id_col} long, payload binary"
+    body_a = b"the one true media body, with some content"
+    body_b = b"a completely different payload for this one"
+    history = spark.createDataFrame([(100, enc(1, body_a))], schema)
+    build(fp_fn(history), idx_dir, n_files=1)
+
+    acct: list = []
+    d = spark.createDataFrame([(1, enc(1, body_a)), (4, enc(4, body_b))], schema)
+    kept, attr, dropped = dedup_media_corpus(
+        d, modality, index_path=idx_dir, extend_epoch=7, accounting=acct
+    )
+    rows = [(r[id_col], r["dup_of"], r["dist"], r["stage"]) for r in attr.collect()]
+    assert rows == [(1, 100, 0, "index")]
+    assert {r[id_col] for r in kept.collect()} == {4}
+    assert dropped.count() == 0
+    assert acct == [
+        ("input", 2), ("byte_unique", 2), ("decoded", 2), ("dropped", 0),
+        ("percept_kept", 2), ("index_novel", 1), ("kept", 1),
+    ]
+    stored = spark.read.parquet(f"{idx_dir}/hashes")
+    assert stored.columns[:2] == ["img_id", "dhash"]
+    assert sorted((r["img_id"], r["epoch"]) for r in stored.collect()) == [
+        (4, 7), (100, None)
+    ]
+
+    # the extended index now holds id 4: the same payload under a new id
+    # is a history match, attributed to the indexed id
+    acct2: list = []
+    d2 = spark.createDataFrame([(9, enc(4, body_b))], schema)
+    kept2, attr2, _ = dedup_media_corpus(
+        d2, modality, index_path=idx_dir, accounting=acct2
+    )
+    assert kept2.count() == 0
+    rows2 = [(r[id_col], r["dup_of"], r["dist"], r["stage"]) for r in attr2.collect()]
+    assert rows2 == [(9, 4, 0, "index")]
+    assert dict(acct2)["index_novel"] == 0 and dict(acct2)["kept"] == 0
+
+
 def test_unknown_modality_and_custom_id_guard(spark, idx_dir):
     d = spark.createDataFrame(
         [(1, _bmp_encode(1, b"body"))], "media_id long, payload binary"

@@ -173,3 +173,33 @@ def test_all_tables_match_expected_families(spark, sf_dir):
             "the generator changed shape — update the loaders/queries that "
             "consume the changed columns, then this table's entry"
         )
+
+
+def test_fanout_decision_follows_rewritten_files(spark, tmp_path):
+    """The fanout memo must not serve a decision made for the files a
+    path held before they were rewritten: 10 rows → no fanout; the same
+    path rewritten to 200k rows (one file, one scan partition) → fanned
+    out to the count a fresh decision on the rewritten plan gives."""
+    from pyspark.sql import functions as F
+
+    from hive_serde_schema_gen_spark.sources.tables import (
+        FANOUT_BYTES_PER_TASK,
+        fanout_for_compute,
+    )
+
+    path = str(tmp_path / "grow.parquet")
+
+    def write_and_read(n):
+        spark.range(n).select(F.col("id").alias("k")).repartition(1).write.mode(
+            "overwrite"
+        ).parquet(path)
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() == 1
+        return df
+
+    assert fanout_for_compute(write_and_read(10), "k").rdd.getNumPartitions() == 1
+    grown = write_and_read(200_000)
+    size = int(grown._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    want = min(spark.sparkContext.defaultParallelism, size // FANOUT_BYTES_PER_TASK)
+    assert want > 1, "the rewritten file must be large enough to fan out"
+    assert fanout_for_compute(grown, "k").rdd.getNumPartitions() == want
