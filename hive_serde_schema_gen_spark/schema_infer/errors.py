@@ -64,13 +64,14 @@ class RowMismatch(SchemaGenError):
 class InconsistentArray(SchemaGenError):
     """Mixed-kind array elements (``Schemer.scala:27-30,37-38``)."""
 
-    def __init__(self, arr: Any, line: Optional[int] = None):
-        self.arr = arr
+    def __init__(self, arr: Any, line: Optional[int] = None, raw: Optional[Any] = None):
+        self.arr = arr  # the array, or the two element descriptors that clash
         self.line = line
+        self.raw = raw  # the parsed JSON row that holds it, if known
         super().__init__()
 
     def __reduce__(self):
-        return (type(self), (self.arr, self.line))
+        return (type(self), (self.arr, self.line, self.raw))
 
     def __str__(self) -> str:
         return (

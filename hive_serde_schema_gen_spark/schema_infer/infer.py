@@ -27,15 +27,16 @@ is embarrassingly parallel.  Line numbers are exact without a
 
 Error semantics: ``FAILFAST`` (the reference's behavior) aborts at the first
 bad line in *file order*; ``PERMISSIVE`` skips bad rows, keeps the earlier
-kind of a conflicting field, and returns the first 20 errors.  A partition
-whose partial conflicts with the schema of the partitions before it, or
-(FAILFAST) that stopped at a local error, is re-folded on its own — one
-one-task job, error path only — seeded with that schema.  The seeded re-fold
-is the one-partition fold of the file up to there, so FAILFAST's line and
-PERMISSIVE's schema and error lines do not depend on the split.  PERMISSIVE
-re-folds every later partition that conflicts with the same schema in that
-one job, so a field that changes kind partway through a file costs one
-parallel pass, not one job per partition.
+kind of a conflicting field, and returns the first 20 errors.  A FAILFAST
+partition that stopped at a local error, and whose partial merges with the
+schema of the partitions before it, costs no second job: the driver
+observes the failing row into that merge, which is the fold of the file up
+to it.  A partition whose partial conflicts with that schema is re-folded
+on its own — one one-task job, error path only — seeded with it.  So
+FAILFAST's error and PERMISSIVE's schema and error lines do not depend on
+the split.  PERMISSIVE re-folds every later partition that conflicts with
+the same schema in that one job, so a field that changes kind partway
+through a file costs one parallel pass, not one job per partition.
 
 ``infer_json_column`` applies the same kernel to a DataFrame string column
 (e.g. ``events.props``) via Arrow-batched ``mapInPandas`` — the Spark-idiomatic
@@ -149,8 +150,7 @@ def _fold(
             schema = observe(schema, value, n, detect_dates)
         except SchemaGenError as e:
             if not permissive:
-                if getattr(e, "raw", None) is None and hasattr(e, "raw"):
-                    e.raw = value
+                e.raw = value  # the row, so the driver can replay it
                 return schema, n, errors, e.with_line(n)
             if len(errors) < _MAX_ERROR_SAMPLES:
                 errors.append((n, type(e).__name__))
@@ -195,6 +195,18 @@ def _merge_or_none(a: Descriptor, b: Descriptor) -> Optional[Descriptor]:
         return merge(a, b)
     except SchemaGenError:
         return None
+
+
+def _replay(err: SchemaGenError, schema: Descriptor, detect_dates: bool) -> SchemaGenError:
+    """The error a fold that reaches ``err``'s row with ``schema`` meets
+    there: the kernel's row observed again (bad JSON stands as it is)."""
+    if not isinstance(err, BadJson):
+        try:
+            observe(schema, err.raw, detect_dates=detect_dates)
+        except SchemaGenError as e:
+            e.raw = err.raw
+            return e
+    return err
 
 
 def infer_path(
@@ -242,24 +254,21 @@ def infer_path(
     def at(pid: int, local: Optional[int]) -> Optional[int]:
         return None if sampled else offsets[pid] + local
 
-    # Merge in partition (= file) order.  A partition whose partial does not
-    # merge, or that stopped at a local error, is re-folded seeded with the
-    # schema of the partitions before it: the seeded fold is the fold of the
-    # file up to there, so its first error is the file's first error, and
-    # PERMISSIVE's schema and error lines do not depend on the split.
-    # PERMISSIVE re-folds, in the same job and with the same seed, every
-    # later partition whose partial conflicts with that schema too (a field
-    # that changes kind partway through a file conflicts in each of them);
-    # such a re-fold stands in for its partition's own as long as the
-    # schema before that partition still has the seed's kinds (_kinds).
+    # Merge in partition (= file) order.  Where a partition's partial merges
+    # with the schema of the partitions before it, the merge is the fold of
+    # the file up to there; so a FAILFAST partition that stopped at a local
+    # error holds the file's first error, and observing its row into the
+    # merge re-derives it exactly.  A partial that does not merge is
+    # re-folded seeded with that schema (its first conflicting line is not
+    # known), and PERMISSIVE re-folds, in the same job and with the same
+    # seed, every later partition whose partial conflicts with it too; such a
+    # re-fold stands in for its partition's own as long as the schema before
+    # that partition still has the seed's kinds (_kinds).
     schema: Descriptor = EMPTY_STRUCT
     all_errors: List[LineError] = []
     refolds = {}  # pid -> (kinds of the seed, seeded fold)
     for i, (pid, (partial, _n, errors, err)) in enumerate(recs):
-        if err is not None and schema == EMPTY_STRUCT:
-            # nothing before it: the partition's own fold is the seeded one
-            raise err.with_line(at(pid, err.line))
-        merged = None if err is not None else _merge_or_none(schema, partial)
+        merged = _merge_or_none(schema, partial)
         if merged is None:
             kinds = _kinds(schema)
             if pid not in refolds or refolds[pid][0] != kinds:
@@ -273,10 +282,10 @@ def infer_path(
                     partitions=pids,
                 )
                 refolds.update((p, (kinds, f)) for p, f in zip(pids, folds))
-            refolded, _n, errors, err = refolds[pid][1]
-            if err is not None:
-                raise err.with_line(at(pid, err.line))
-            merged = merge(schema, refolded)
+            partial, _n, errors, err = refolds[pid][1]
+            merged = merge(schema, partial)
+        if err is not None:
+            raise _replay(err, merged, detect_dates).with_line(at(pid, err.line))
         schema = merged
         all_errors.extend(LineError(at(pid, local), msg) for local, msg in errors)
     # each partition kept its own first errors, so these are the file's

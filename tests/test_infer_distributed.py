@@ -146,11 +146,12 @@ def test_infer_json_column_dedup_is_exact(spark):
 
 
 def _outcomes(spark, path, parts):
-    """FAILFAST's DDL or (error type, line); PERMISSIVE's DDL and errors."""
+    """FAILFAST's DDL or (error type, line, message); PERMISSIVE's DDL and
+    errors."""
     try:
         failfast = render_definition(infer_path(spark, path, min_partitions=parts).schema)
     except SchemaGenError as e:
-        failfast = (type(e).__name__, e.line)
+        failfast = (type(e).__name__, e.line, str(e))
     permissive = infer_path(spark, path, mode="PERMISSIVE", min_partitions=parts)
     errors = [(e.line, e.message) for e in permissive.errors]
     return failfast, render_definition(permissive.schema), errors
@@ -165,10 +166,16 @@ def _drift_line(i: int) -> str:
     return '{"id": %d, "v": %s%s}' % (i, v, w)
 
 
+def _numbered(template: str, planted: dict) -> list:
+    """Lines 1-40 of ``template % (i, i)``, with ``planted`` lines (by
+    line number) in their place."""
+    return [planted.get(i, template % (i, i)) for i in range(1, 41)]
+
+
 def test_infer_path_partition_matrix(spark, tmp_path):
     """The split never shows: 1, 2, 3, 4 and 8 partitions give the same
-    FAILFAST DDL or error line and the same PERMISSIVE schema and error
-    lines as the one-partition fold."""
+    FAILFAST DDL or error (type, line and message) and the same PERMISSIVE
+    schema and error lines as the one-partition fold."""
     growing = [
         '{"id": %d, "ts": %d, "user": {"n": "%s"}, "s": [%d]}'
         % (i, 1_700_000_000_000 + i * 997, "x" * (i % 7), -i)
@@ -184,24 +191,67 @@ def test_infer_path_partition_matrix(spark, tmp_path):
     conflict_then_bad[11] = '{"id": 12, "v": "x"}'
     conflict_then_bad[29] = "{broken"
     drift = [_drift_line(i) for i in range(1, 41)]
+    # an early partition widens the field past what the failing partition
+    # saw, so the error names the file's schema, not the partition's
+    widened_age = _numbered('{"id": %d, "age": %d}',
+                            {2: '{"id": 2, "age": 300}', 35: '{"id": 35, "age": "x"}'})
+    widened_tags = _numbered('{"id": %d, "tags": [%d]}',
+                             {2: '{"id": 2, "tags": [1000]}', 36: '{"id": 36, "tags": ["x"]}'})
+    first_conflict = _numbered('{"id": %d, "v": %d}', {3: '{"id": 3, "v": "x"}'})
+    late_bad = _numbered('{"id": %d, "v": %d}', {38: '{"id": 38, "v": '})
     cases = [
         ("growing", growing,
-         render_definition(infer_ndjson_strings(growing).schema), []),
+         render_definition(infer_ndjson_strings(growing).schema), [], None),
         ("array_conflict", array_conflict,
-         ("InconsistentArray", 23), [23]),
+         ("InconsistentArray", 23), [23], None),
         ("conflict_then_bad", conflict_then_bad,
-         ("RowMismatch", 12), [12, 30]),
+         ("RowMismatch", 12), [12, 30], None),
         # 34 conflicting rows: PERMISSIVE keeps the file's first 20
-        ("drift", drift, ("RowMismatch", 7), list(range(7, 27))),
+        ("drift", drift, ("RowMismatch", 7), list(range(7, 27)), None),
+        ("widened_age", widened_age, ("RowMismatch", 35), [35],
+         "into the schema with this signature:\nSMALLINT"),
+        # raised merging the row's array into the schema's element
+        ("widened_tags", widened_tags, ("InconsistentArray", 36), [36],
+         "Num(lo=1, hi=1000, max_scale=0)"),
+        ("first_conflict", first_conflict, ("RowMismatch", 3), [3], None),
+        ("late_bad", late_bad, ("BadJson", 38), [38], None),
     ]
-    for name, lines, failfast, error_lines in cases:
+    for name, lines, failfast, error_lines, says in cases:
         path = tmp_path / f"{name}.json"
         path.write_text("\n".join(lines) + "\n")
         want = _outcomes(spark, str(path), 1)
-        assert want[0] == failfast, name
+        assert (want[0] if isinstance(want[0], str) else want[0][:2]) == failfast, name
+        assert says is None or says in want[0][2], name
         assert [line for line, _ in want[2]] == error_lines, name
         for parts in (2, 3, 4, 8):
             assert _outcomes(spark, str(path), parts) == want, (name, parts)
+
+
+@pytest.mark.parametrize("parts", [4, 8])
+def test_infer_path_failfast_local_error_runs_one_job(spark, tmp_path, parts):
+    """A FAILFAST partition that stopped at a local error, and that
+    otherwise merges with the partitions before it, has its error re-derived
+    on the driver: the scan is the only job.  A partition that conflicts
+    with the partitions before it as a whole is still re-folded in a second
+    job, to find its first conflicting line."""
+    local = _numbered('{"id": %d, "v": %d}', {38: '{"id": 38, "v": "x"}'})
+    # v is absent from lines 11-37, so the partition holding line 38 sees
+    # only its string: that partial conflicts with the schema before it
+    late = [line if i <= 10 or i == 38 else '{"id": %d}' % i
+            for i, line in enumerate(local, 1)]
+    sc = spark.sparkContext
+    for name, lines, jobs in (("local", local, 1), ("late", late, 2)):
+        path = tmp_path / f"{name}.json"
+        path.write_text("\n".join(lines) + "\n")
+        group = f"failfast-{name}-{parts}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(RowMismatch) as ei:
+                infer_path(spark, str(path), min_partitions=parts)
+        finally:
+            sc.setJobGroup(None, None)
+        assert ei.value.line == 38, name
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs, name
 
 
 def test_infer_path_permissive_drift_refolds_in_few_jobs(spark, tmp_path):
