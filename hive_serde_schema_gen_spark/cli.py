@@ -8,7 +8,8 @@ from __future__ import annotations
 import argparse
 import sys
 
-from .schema_infer import SchemaGenError, infer_path
+from .schema_infer import SchemaGenError, alter_statements, infer_path
+from .schema_infer.lattice import structs_to_maps
 from .session import get_spark
 
 
@@ -212,27 +213,22 @@ def main(argv=None) -> int:
     args = p.parse_args(argv)
 
     spark = get_spark("hive-serde-schema-gen")
-    try:
+
+    def infer(path):
         result = infer_path(
-            spark, args.file, mode=args.mode, sampling_ratio=args.sampling_ratio,
+            spark, path, mode=args.mode, sampling_ratio=args.sampling_ratio,
             detect_dates=args.detect_dates,
         )
         if args.infer_maps is not None:
-            from .schema_infer.lattice import structs_to_maps
-
+            # FILE and OLD_FILE alike, or every mapped column would show
+            # up in --evolve-from as a spurious STRUCT->MAP type change
             result.schema = structs_to_maps(result.schema, args.infer_maps)
-        if args.evolve_from is not None:
-            from .schema_infer import alter_statements
+        return result
 
-            old = infer_path(
-                spark, args.evolve_from, mode=args.mode,
-                sampling_ratio=args.sampling_ratio,
-                detect_dates=args.detect_dates,
-            )
-            if args.infer_maps is not None:
-                # both sides rewritten, or every mapped column would
-                # show up as a spurious STRUCT->MAP type change
-                old.schema = structs_to_maps(old.schema, args.infer_maps)
+    try:
+        result = infer(args.file)
+        if args.evolve_from is not None:
+            old = infer(args.evolve_from)
             stmts = alter_statements(args.table, old.schema, result.schema)
             print(
                 "\n".join(stmts)

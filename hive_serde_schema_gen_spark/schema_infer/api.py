@@ -63,9 +63,7 @@ class SchemaGen:
         return render_table(self.schema, name, self.file)
 
     def spark_schema(self, for_read: bool = False):
-        return to_spark_schema(
-            self.schema, unknown_as_string=for_read, varchar_as_string=for_read
-        )
+        return to_spark_schema(self.schema, for_read)
 
     def dataframe(self) -> DataFrame:
         """Load the file typed with its own inferred schema."""

@@ -19,13 +19,30 @@ from typing import Any, Optional
 
 
 class SchemaGenError(Exception):
-    """Base class for all inference errors."""
+    """Base class for all inference errors.
 
-    line: Optional[int] = None
+    Every subclass takes the keywords ``line``, the 1-based input line (None
+    when unknown), and ``raw``, the parsed JSON row that raised, if known.
+    Constructors hand their positional arguments to ``Exception.__init__``,
+    so the default pickling rebuilds the error (executor → driver crossing)
+    and restores its attributes, ``line``/``raw`` set later included.
+    Messages start "On the line N" and end with :meth:`_detail`.
+    """
 
-    def with_line(self, line: int) -> "SchemaGenError":
+    def __init__(self, *args: Any, line: Optional[int] = None, raw: Optional[Any] = None):
+        super().__init__(*args)
+        self.line = line
+        self.raw = raw
+
+    def with_line(self, line: Optional[int]) -> "SchemaGenError":
         self.line = line
         return self
+
+    def __str__(self) -> str:
+        return f"On the line {self.line if self.line is not None else '?'} " + self._detail()
+
+    def _detail(self) -> str:
+        raise NotImplementedError
 
 
 class RowMismatch(SchemaGenError):
@@ -36,21 +53,15 @@ class RowMismatch(SchemaGenError):
     schema", Schemer.scala:20 — we follow the code).
     """
 
-    def __init__(self, a: Any, b: Any, line: Optional[int] = None, raw: Optional[Any] = None):
+    def __init__(self, a: Any, b: Any, **kw: Any):
         self.a = a  # descriptor: the running schema (or sub-schema)
         self.b = b  # descriptor: the offending value's schema
-        self.line = line
-        self.raw = raw  # the offending parsed JSON value, if known
-        super().__init__()
+        super().__init__(a, b, **kw)
 
-    def __reduce__(self):  # executor → driver crossing
-        return (type(self), (self.a, self.b, self.line, self.raw))
-
-    def __str__(self) -> str:
+    def _detail(self) -> str:
         from .render import render_type
 
         parts = [
-            f"On the line {self.line if self.line is not None else '?'} "
             "you attempted to insert this JSON:",
             json.dumps(self.raw, indent=2, default=str) if self.raw is not None else "(unknown)",
             "with the corresponding schema:",
@@ -64,20 +75,13 @@ class RowMismatch(SchemaGenError):
 class InconsistentArray(SchemaGenError):
     """Mixed-kind array elements (``Schemer.scala:27-30,37-38``)."""
 
-    def __init__(self, arr: Any, line: Optional[int] = None, raw: Optional[Any] = None):
+    def __init__(self, arr: Any, **kw: Any):
         self.arr = arr  # the array, or the two element descriptors that clash
-        self.line = line
-        self.raw = raw  # the parsed JSON row that holds it, if known
-        super().__init__()
+        super().__init__(arr, **kw)
 
-    def __reduce__(self):
-        return (type(self), (self.arr, self.line, self.raw))
-
-    def __str__(self) -> str:
-        return (
-            f"On the line {self.line if self.line is not None else '?'} "
-            "you have an array containing incompatible datatypes:"
-            + json.dumps(self.arr, indent=2, default=str)
+    def _detail(self) -> str:
+        return "you have an array containing incompatible datatypes:" + json.dumps(
+            self.arr, indent=2, default=str
         )
 
 
@@ -85,18 +89,11 @@ class BadJson(SchemaGenError):
     """A line failed to parse as JSON (extension beyond the reference,
     which lets the play-json exception escape raw, Schemer.scala:13)."""
 
-    def __init__(self, text: str, cause: str, line: Optional[int] = None):
+    def __init__(self, text: str, cause: str, **kw: Any):
         self.text = text
         self.cause = cause
-        self.line = line
-        super().__init__()
+        super().__init__(text, cause, **kw)
 
-    def __reduce__(self):
-        return (type(self), (self.text, self.cause, self.line))
-
-    def __str__(self) -> str:
+    def _detail(self) -> str:
         snippet = self.text if len(self.text) <= 200 else self.text[:200] + "…"
-        return (
-            f"On the line {self.line if self.line is not None else '?'} "
-            f"the input is not valid JSON ({self.cause}): {snippet}"
-        )
+        return f"the input is not valid JSON ({self.cause}): {snippet}"

@@ -62,7 +62,7 @@ from .lattice import (
     merge_lenient,
     observe,
 )
-from .render import render_definition, render_table
+from .render import render_table
 
 _MAX_ERROR_SAMPLES = 20
 
@@ -96,9 +96,6 @@ class InferenceResult:
     schema: Descriptor
     lines: int
     errors: List[LineError] = field(default_factory=list)
-
-    def definition(self, indent: int = 0) -> str:
-        return render_definition(self.schema, indent)
 
     def table(self, name: str, file: str) -> str:
         return render_table(self.schema, name, file)

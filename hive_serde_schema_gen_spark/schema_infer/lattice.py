@@ -43,16 +43,35 @@ from .errors import InconsistentArray, RowMismatch, SchemaGenError
 # Descriptors.  Plain classes with __slots__, never mutated once built:
 # merge and observe return new descriptors (observe returns its input
 # unchanged when nothing widens), so descriptors can be shared freely.  All
-# picklable.
+# picklable.  Equality, hash and repr come from the Descriptor base and
+# read each kind's __slots__.
 # ---------------------------------------------------------------------------
 
 
 class Descriptor:
+    """Base of the descriptor kinds: two descriptors are equal when they
+    have the same type and the same slot values, and hash alike when so."""
+
     __slots__ = ()
     kind = "?"
+    _positional = False  # repr ``Arr(elem)`` rather than ``Str(max_len=3)``
 
-    def copy(self) -> "Descriptor":
-        raise NotImplementedError
+    def _key(self) -> tuple:
+        return tuple(getattr(self, s) for s in self.__slots__)
+
+    def __eq__(self, other: object) -> bool:
+        return type(other) is type(self) and other._key() == self._key()
+
+    def __hash__(self) -> int:
+        # hash() of int/Decimal is value-consistent across numeric types
+        # (str() is not: '10' vs '10.0' — would break the eq/hash contract)
+        return hash((self.kind, self._key()))
+
+    def __repr__(self) -> str:
+        name = type(self).__name__
+        if self._positional:
+            return f"{name}({getattr(self, self.__slots__[0])!r})"
+        return f"{name}({', '.join(f'{s}={getattr(self, s)}' for s in self.__slots__)})"
 
 
 class Unknown(Descriptor):
@@ -61,18 +80,6 @@ class Unknown(Descriptor):
     __slots__ = ()
     kind = "unknown"
 
-    def copy(self) -> "Unknown":
-        return UNKNOWN
-
-    def __repr__(self) -> str:
-        return "Unknown()"
-
-    def __eq__(self, other: object) -> bool:
-        return isinstance(other, Unknown)
-
-    def __hash__(self) -> int:
-        return hash("unknown")
-
 
 UNKNOWN = Unknown()
 
@@ -80,18 +87,6 @@ UNKNOWN = Unknown()
 class Bool(Descriptor):
     __slots__ = ()
     kind = "boolean"
-
-    def copy(self) -> "Bool":
-        return BOOL
-
-    def __repr__(self) -> str:
-        return "Bool()"
-
-    def __eq__(self, other: object) -> bool:
-        return isinstance(other, Bool)
-
-    def __hash__(self) -> int:
-        return hash("boolean")
 
 
 BOOL = Bool()
@@ -112,18 +107,6 @@ class Str(Descriptor):
     def __init__(self, max_len: int = 0):
         self.max_len = max_len
 
-    def copy(self) -> "Str":
-        return Str(self.max_len)
-
-    def __repr__(self) -> str:
-        return f"Str(max_len={self.max_len})"
-
-    def __eq__(self, other: object) -> bool:
-        return isinstance(other, Str) and other.max_len == self.max_len
-
-    def __hash__(self) -> int:
-        return hash(("string", self.max_len))
-
 
 class Ts(Descriptor):
     """Opt-in ISO-8601 date/timestamp detection (``detect_dates=True`` —
@@ -142,22 +125,6 @@ class Ts(Descriptor):
         self.max_len = max_len
         self.has_time = has_time
 
-    def copy(self) -> "Ts":
-        return Ts(self.max_len, self.has_time)
-
-    def __repr__(self) -> str:
-        return f"Ts(max_len={self.max_len}, has_time={self.has_time})"
-
-    def __eq__(self, other: object) -> bool:
-        return (
-            isinstance(other, Ts)
-            and other.max_len == self.max_len
-            and other.has_time == self.has_time
-        )
-
-    def __hash__(self) -> int:
-        return hash(("timestamp", self.max_len, self.has_time))
-
 
 class Num(Descriptor):
     """Tracks lo/hi bounds and the maximum observed scale.
@@ -165,8 +132,9 @@ class Num(Descriptor):
     ``lo``/``hi`` are ``int`` (scale-0 values) or :class:`decimal.Decimal`.
     The reference keeps only ``max(value) setScale max(scale)``
     (Schemer.scala:52); precision for rendering is derived at output time
-    (Schemer.scala:77-85).  We reproduce the derivation from the bounds:
-    ``precision = int_digits(max(|lo|, |hi|)) + max_scale`` — identical to
+    (Schemer.scala:77-85).  :func:`.render.numeric_tier` reproduces the
+    derivation from the bounds: ``precision = integer digits of
+    max(|lo|, |hi|) + max_scale`` — identical to
     Java ``BigDecimal.precision`` of the reference's exemplar for all-positive
     columns (golden check: {12345678901234.5, 0.12} ⇒ NUMERIC(16, 2),
     README.md:42; {12544, 1234.5434} ⇒ precision 9 ⇒ DOUBLE, README.md:36).
@@ -180,25 +148,6 @@ class Num(Descriptor):
         self.hi = hi
         self.max_scale = max_scale
 
-    def copy(self) -> "Num":
-        return Num(self.lo, self.hi, self.max_scale)
-
-    def __repr__(self) -> str:
-        return f"Num(lo={self.lo}, hi={self.hi}, max_scale={self.max_scale})"
-
-    def __eq__(self, other: object) -> bool:
-        return (
-            isinstance(other, Num)
-            and other.lo == self.lo
-            and other.hi == self.hi
-            and other.max_scale == self.max_scale
-        )
-
-    def __hash__(self) -> int:
-        # hash() of int/Decimal is value-consistent across numeric types
-        # (str() is not: '10' vs '10.0' — would break the eq/hash contract)
-        return hash(("number", hash(self.lo), hash(self.hi), self.max_scale))
-
 
 class Arr(Descriptor):
     """Array with one unified element descriptor (Schemer.scala:32-41).
@@ -209,21 +158,10 @@ class Arr(Descriptor):
 
     __slots__ = ("element",)
     kind = "array"
+    _positional = True
 
     def __init__(self, element: Descriptor):
         self.element = element
-
-    def copy(self) -> "Arr":
-        return Arr(self.element.copy())
-
-    def __repr__(self) -> str:
-        return f"Arr({self.element!r})"
-
-    def __eq__(self, other: object) -> bool:
-        return isinstance(other, Arr) and other.element == self.element
-
-    def __hash__(self) -> int:
-        return hash(("array", self.element))
 
 
 class Struct(Descriptor):
@@ -231,25 +169,18 @@ class Struct(Descriptor):
 
     Key-union across rows (Schemer.scala:55-59); order is first-seen
     (deviation from the reference's hash-scrambled order, SURVEY §1.4).
+    Equality ignores field order, so the hash keys on the field set.
     """
 
     __slots__ = ("fields",)
     kind = "struct"
+    _positional = True
 
     def __init__(self, fields: Optional[dict] = None):
         self.fields = fields if fields is not None else {}
 
-    def copy(self) -> "Struct":
-        return Struct({k: v.copy() for k, v in self.fields.items()})
-
-    def __repr__(self) -> str:
-        return f"Struct({self.fields!r})"
-
-    def __eq__(self, other: object) -> bool:
-        return isinstance(other, Struct) and other.fields == self.fields
-
-    def __hash__(self) -> int:
-        return hash(("struct", tuple(self.fields.items())))
+    def _key(self) -> tuple:
+        return (frozenset(self.fields.items()),)
 
 
 EMPTY_STRUCT = Struct()
@@ -481,27 +412,6 @@ def _widen(d: Descriptor, v: Any) -> Optional[Descriptor]:
 
 
 # ---------------------------------------------------------------------------
-# Rendering helpers shared by render.py / spark_schema.py
-# ---------------------------------------------------------------------------
-
-
-def int_digits(x: Union[int, Decimal]) -> int:
-    """Digits in the integer part of ``|x|`` (0 for |x| < 1).
-
-    Matches Java ``BigDecimal.precision`` − scale for the values the
-    reference renders (Schemer.scala:82,85).
-    """
-    n = abs(int(x))
-    return 0 if n == 0 else len(str(n))
-
-
-def num_bounds_precision(num: Num) -> int:
-    """Decimal precision needed for the worst bound at ``max_scale``."""
-    d = max(int_digits(num.lo), int_digits(num.hi))
-    return max(1, d + num.max_scale)
-
-
-# ---------------------------------------------------------------------------
 # MAP inference (round-9 opt-in extension; the reference has no MAP type —
 # SURVEY §1.3 lists it as unsupported, so this is flag-gated and the
 # default output stays byte-identical to the reference contract)
@@ -515,21 +425,10 @@ class MapOf(Descriptor):
 
     __slots__ = ("value",)
     kind = "map"
+    _positional = True
 
     def __init__(self, value: Descriptor):
         self.value = value
-
-    def copy(self) -> "MapOf":
-        return MapOf(self.value.copy())
-
-    def __repr__(self) -> str:
-        return f"MapOf({self.value!r})"
-
-    def __eq__(self, other: object) -> bool:
-        return isinstance(other, MapOf) and other.value == self.value
-
-    def __hash__(self) -> int:
-        return hash(("map", self.value))
 
 
 def structs_to_maps(
@@ -548,8 +447,6 @@ def structs_to_maps(
     (e.g. mixed string/number values) stays a struct: lossy coercion is
     exactly what this engine refuses to do silently.  All-``UNKNOWN``
     structs also stay: there is no evidence of a value type to map to."""
-    from .errors import SchemaGenError
-
     if isinstance(desc, Arr):
         return Arr(structs_to_maps(desc.element, threshold, _root=False))
     if isinstance(desc, MapOf):
@@ -560,10 +457,10 @@ def structs_to_maps(
         # unify the ORIGINAL (reference-lattice) field descriptors — the
         # fold happens before any child becomes a MapOf, which merge()
         # deliberately does not know — then rewrite the unified value
-        unified: Descriptor = Unknown()
+        unified: Descriptor = UNKNOWN
         try:
             for v in desc.fields.values():
-                unified = merge(unified.copy(), v.copy())
+                unified = merge(unified, v)
         except SchemaGenError:
             unified = None  # heterogeneous values: keep the struct
         if unified is not None and not isinstance(unified, Unknown):

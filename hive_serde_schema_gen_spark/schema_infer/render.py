@@ -22,47 +22,47 @@ Faithfulness notes (each a documented decision, SURVEY §7):
 
 from __future__ import annotations
 
-from .lattice import (
-    MapOf,
-    Arr,
-    Bool,
-    Descriptor,
-    Num,
-    Str,
-    Struct,
-    Ts,
-    Unknown,
-    num_bounds_precision,
-)
+from typing import Tuple
+
+from .lattice import MapOf, Arr, Bool, Descriptor, Num, Str, Struct, Ts, Unknown
 
 VARCHAR_MAX = 65535  # Hive's real bound; reference typo'd 65356 (Schemer.scala:73)
 
-_TINY_MIN, _TINY_MAX = -128, 127
-_SMALL_MIN, _SMALL_MAX = -32768, 32767
-_INT_MIN, _INT_MAX = -2147483648, 2147483647
-_LONG_MIN, _LONG_MAX = -9223372036854775808, 9223372036854775807
+# Integer tiers by two's-complement width, narrowest first (Schemer.scala:77-81)
+_INT_TIERS = (("TINYINT", 8), ("SMALLINT", 16), ("INT", 32), ("BIGINT", 64))
 
 
-def _numeric_type(num: Num) -> str:
-    """The VARCHAR/int-ladder/FLOAT/DOUBLE/NUMERIC decision tree
-    (``Schemer.scala:77-85``), with min/max bounds instead of a max exemplar."""
-    if num.max_scale == 0:
+def _int_digits(x) -> int:
+    """Digits in the integer part of ``|x|`` (0 for |x| < 1): Java
+    ``BigDecimal.precision`` − scale for the values the reference renders
+    (Schemer.scala:82,85)."""
+    n = abs(int(x))
+    return len(str(n)) if n else 0
+
+
+def numeric_tier(num: Num) -> Tuple[str, int, int]:
+    """The int-ladder/FLOAT/DOUBLE/NUMERIC decision tree
+    (``Schemer.scala:77-85``), with min/max bounds instead of a max exemplar.
+
+    Returns ``(name, precision, scale)``: ``name`` is a Hive type name
+    (``NUMERIC`` takes the precision and scale), ``precision`` the decimal
+    precision the worst bound needs at ``max_scale``.  The DDL renderer and
+    the Spark bridge both read their tiers here.
+    """
+    s = num.max_scale
+    p = max(1, max(_int_digits(num.lo), _int_digits(num.hi)) + s)
+    if s == 0:
         lo, hi = int(num.lo), int(num.hi)
-        if _TINY_MIN <= lo and hi <= _TINY_MAX:
-            return "TINYINT"
-        if _SMALL_MIN <= lo and hi <= _SMALL_MAX:
-            return "SMALLINT"
-        if _INT_MIN <= lo and hi <= _INT_MAX:
-            return "INT"
-        if _LONG_MIN <= lo and hi <= _LONG_MAX:
-            return "BIGINT"
-        return f"NUMERIC({num_bounds_precision(num)}, 0)"
-    p = num_bounds_precision(num)
+        for name, bits in _INT_TIERS:
+            bound = 1 << (bits - 1)
+            if -bound <= lo and hi < bound:
+                return name, p, 0
+        return "NUMERIC", p, 0
     if p <= 7:
-        return "FLOAT"
+        return "FLOAT", p, s
     if p <= 15:
-        return "DOUBLE"
-    return f"NUMERIC({p}, {num.max_scale})"
+        return "DOUBLE", p, s
+    return "NUMERIC", p, s
 
 
 def render_type(desc: Descriptor, indent: int = 0, key: str | None = None) -> str:
@@ -82,7 +82,8 @@ def render_type(desc: Descriptor, indent: int = 0, key: str | None = None) -> st
             return prefix + f"VARCHAR({n})"
         return prefix + "STRING"
     if isinstance(desc, Num):
-        return prefix + _numeric_type(desc)
+        name, p, s = numeric_tier(desc)
+        return prefix + (f"NUMERIC({p}, {s})" if name == "NUMERIC" else name)
     if isinstance(desc, Arr):
         return "\n".join(
             [prefix + "ARRAY<", render_type(desc.element, indent + 1), pad + ">"]

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schema_infer import infer_path, to_spark_schema
+from ..schema_infer import SchemaGen
 
 
 def read_ndjson_lines(spark: SparkSession, path: str) -> DataFrame:
@@ -27,13 +27,10 @@ def read_ndjson(
     (unless given), then load with Spark's JVM JSON reader.
 
     This is the end-to-end payoff of the engine: the reference only *prints*
-    DDL; here the inferred schema immediately drives a typed distributed scan.
-    ``???`` columns load as strings (``unknown_as_string=True``) because
-    NullType is not readable back.
+    DDL; here the inferred schema immediately drives a typed distributed scan
+    (:meth:`SchemaGen.dataframe`, whose read schema has ``for_read=True``:
+    ``???`` columns load as strings, because NullType is not readable back).
     """
     if schema is None:
-        result = infer_path(spark, path, mode=mode)
-        schema = to_spark_schema(
-            result.schema, unknown_as_string=True, varchar_as_string=True
-        )
+        return SchemaGen(path, spark, mode=mode).dataframe()
     return spark.read.schema(schema).json(path)

@@ -60,9 +60,7 @@ def test_permissive_skips_bad_rows(spark, tmp_path):
 def test_to_spark_schema_roundtrip(spark):
     """Inferred schema loads the same file via Spark's typed JSON reader."""
     result = infer_path(spark, USERS)
-    schema = to_spark_schema(
-        result.schema, unknown_as_string=True, varchar_as_string=True
-    )
+    schema = to_spark_schema(result.schema, for_read=True)
     df = spark.read.schema(schema).json(USERS)
     rows = {r["id"]: r for r in df.collect()}
     assert rows[1]["city"]["name"] == "Grosuplje"

@@ -1,14 +1,17 @@
 """Unit tests for the type lattice (no Spark) — SURVEY §5 fixture families
 A2-A6 plus merge-law checks."""
 
+import pickle
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import types as T
 
 from hive_serde_schema_gen_spark.schema_infer import (
     EMPTY_STRUCT,
     UNKNOWN,
     Arr,
+    BadJson,
     Bool,
     InconsistentArray,
     Num,
@@ -20,6 +23,7 @@ from hive_serde_schema_gen_spark.schema_infer import (
     merge,
     observe,
     render_type,
+    to_spark_type,
 )
 
 
@@ -33,23 +37,30 @@ def col_type(schema, name):
 
 # --- A2: numeric ladder ---------------------------------------------------
 
+LADDER = [
+    ("127", "TINYINT", T.ByteType()),
+    ("-128", "TINYINT", T.ByteType()),
+    ("128", "SMALLINT", T.ShortType()),
+    ("-129", "SMALLINT", T.ShortType()),
+    ("32768", "INT", T.IntegerType()),
+    ("-32769", "INT", T.IntegerType()),
+    ("2147483648", "BIGINT", T.LongType()),
+    ("9223372036854775808", "NUMERIC(19, 0)", T.DecimalType(19, 0)),
+    ("1" + "0" * 39, "NUMERIC(40, 0)", T.DecimalType(38, 0)),  # capped at 38
+    ("1.5", "FLOAT", T.FloatType()),
+    ("1234567.89", "DOUBLE", T.DoubleType()),  # precision 9
+    ("1234567890123456.78", "NUMERIC(18, 2)", T.DecimalType(18, 2)),
+]
+
+
 @pytest.mark.parametrize(
-    "value,expected",
-    [
-        ("127", "TINYINT"),
-        ("128", "SMALLINT"),
-        ("-129", "SMALLINT"),
-        ("32768", "INT"),
-        ("2147483648", "BIGINT"),
-        ("9223372036854775808", "NUMERIC(19, 0)"),
-        ("1.5", "FLOAT"),
-        ("1234567.89", "DOUBLE"),  # precision 9
-        ("1234567890123456.78", "NUMERIC(18, 2)"),
-    ],
+    "value,expected,spark_type", LADDER, ids=[f"{v}-{e}" for v, e, _ in LADDER]
 )
-def test_numeric_ladder(value, expected):
+def test_numeric_ladder(value, expected, spark_type):
+    # the DDL renderer and the Spark bridge read the same tiers
     schema = infer_lines('{"v": %s}' % value)
     assert col_type(schema, "v") == expected
+    assert to_spark_type(schema.fields["v"]) == spark_type
 
 
 # --- A3: widening interactions -------------------------------------------
@@ -177,6 +188,23 @@ def test_inconsistent_array():
         infer_lines('{"a": ["a", {"b": 1}]}')
     assert ei.value.line == 1
     assert "incompatible datatypes" in str(ei.value)
+
+
+def test_errors_survive_pickling():
+    # the executor → driver crossing: type, line, row and message all survive
+    errors = [
+        RowMismatch(Str(3), Num(1, 1, 0)),
+        InconsistentArray([1, "a"]),
+        BadJson("{oops", "Expecting value"),
+    ]
+    for e in errors:
+        e.raw = {"v": [1, "a"]}
+        e.with_line(7)
+        back = pickle.loads(pickle.dumps(e))
+        assert type(back) is type(e)
+        assert (back.line, back.raw) == (7, {"v": [1, "a"]})
+        assert str(back) == str(e)
+        assert str(back).startswith("On the line 7 ")
 
 
 def test_non_object_row():

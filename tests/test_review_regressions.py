@@ -42,6 +42,13 @@ def test_num_hash_eq_contract():
     b = Num(Decimal("10.0"), Decimal("10.0"), 1)
     assert a == b
     assert hash(a) == hash(b)
+    # struct equality ignores field order, so the hash must too
+    s = describe({"x": 1, "y": "ab"})
+    t = describe({"y": "ab", "x": 1})
+    assert list(s.fields) != list(t.fields)
+    assert s == t
+    assert hash(s) == hash(t)
+    assert len({s, t}) == 1
 
 
 def test_merge_lenient_keeps_earlier_kind():
