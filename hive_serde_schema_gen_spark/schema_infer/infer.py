@@ -74,14 +74,27 @@ def _reject_constant(name: str):
     raise ValueError(f"{name} is not valid JSON")
 
 
+# One decoder for the process, the pattern of the json module's own
+# _default_decoder: json.loads with keyword arguments builds a new
+# JSONDecoder, and its C scanner, on every call.  Decoding keeps no state
+# between calls, so tasks and threads share it.
+_DECODER = json.JSONDecoder(parse_float=Decimal, parse_constant=_reject_constant)
+
+
 def parse_line(text: str):
-    """Parse one NDJSON line.
+    """Parse one NDJSON line, exactly as ``json.loads(text,
+    parse_float=Decimal, parse_constant=_reject_constant)`` does.
 
     ``parse_float=Decimal`` preserves the literal's textual scale so numeric
     widening matches the reference's play-json ``BigDecimal`` semantics
     (``Schemer.scala:13,52``): ``10.0`` is scale 1, ``0.12`` is scale 2.
     ``NaN``/``Infinity`` literals are rejected like the reference does.
+    A ``str`` is decoded by the module's one decoder, after the BOM check
+    ``json.loads`` makes; a line that starts with a BOM, or ``bytes`` from a
+    binary column, go to ``json.loads`` itself for its error or its decoding.
     """
+    if isinstance(text, str) and not text.startswith("\ufeff"):
+        return _DECODER.decode(text)
     return json.loads(text, parse_float=Decimal, parse_constant=_reject_constant)
 
 

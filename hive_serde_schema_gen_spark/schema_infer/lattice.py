@@ -194,11 +194,13 @@ def _scale(x: Union[int, float, Decimal]) -> int:
     """Scale à la Java BigDecimal, clamped at 0.
 
     JSON ints parse to ``int`` (scale 0); floats parse to ``Decimal``
-    preserving the literal's textual scale (``json.loads(parse_float=Decimal)``),
-    so ``10.0`` has scale 1 exactly as play-json's BigDecimal does
-    (Schemer.scala:52 ``ax.scale``).  Exponent-form literals (``1e3``) get
-    scale 0 (deviation: Java would report a negative scale; the rendered tier
-    is unchanged for the integral case).
+    preserving the literal's textual scale (``infer.parse_line``'s decoder
+    has ``parse_float=Decimal``), so ``10.0`` has scale 1 exactly as
+    play-json's BigDecimal does (Schemer.scala:52 ``ax.scale``).
+    Exponent-form literals (``1e3``) get scale 0 (deviation: Java would
+    report a negative scale; the rendered tier is unchanged for the
+    integral case).  :func:`_widen` reads a ``Decimal``'s scale the same
+    way, inline.
     """
     if isinstance(x, int):
         return 0
@@ -375,7 +377,11 @@ def _widen(d: Descriptor, v: Any) -> Optional[Descriptor]:
     if t is int or t is Decimal:  # exact types: bool is an int subclass
         if type(d) is not Num:
             return None
-        sc = 0 if t is int else _scale(v)
+        if t is int:
+            sc = 0
+        else:  # _scale inline, no call per number: exponent clamped at 0
+            sc = v.as_tuple().exponent
+            sc = -sc if type(sc) is int and sc < 0 else 0
         lo, hi, ms = d.lo, d.hi, d.max_scale
         if lo <= v <= hi and sc <= ms:
             return d

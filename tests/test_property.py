@@ -330,3 +330,156 @@ def test_seeded_fold_stands_in_for_a_wider_seed(head, middle, tail, detect_dates
     from_s, from_t = fold(tail, s), fold(tail, t)
     assert repr(merge(t, from_s[0])) == repr(from_t[0])
     assert from_s[1:] == from_t[1:]
+
+
+# JSON text written token by token, so it can hold what json.dumps never
+# writes: ints beyond 2**64, Decimal literals with trailing zeros or in
+# exponent form, lone-surrogate escapes and duplicate keys.
+JSON_NUMBER = st.one_of(
+    st.integers(min_value=-(2**80), max_value=2**80).map(str),
+    st.builds(
+        lambda i, frac, zeros: f"{i}.{frac}{'0' * zeros}",
+        st.integers(min_value=-(10**20), max_value=10**20),
+        st.integers(min_value=0, max_value=999),
+        st.integers(min_value=0, max_value=3),
+    ),
+    st.builds(
+        "{}{}{}".format,
+        st.sampled_from(["1", "-2.5", "10.00", "0.0", "123456789012345678901"]),
+        st.sampled_from(["e", "E"]),
+        st.sampled_from(["3", "+3", "-3", "0", "-30", "+308", "400"]),
+    ),
+)
+JSON_STRING = st.lists(
+    st.text(
+        st.characters(blacklist_categories=("Cs",), blacklist_characters='"\\'),
+        max_size=4,
+    )
+    | st.sampled_from(
+        ["\\n", '\\"', "\\\\", "\\/", "\\t", "\\u00e9", "\\ud800", "\\udc00", "\\ud83d\\ude00"]
+    ),
+    max_size=4,
+).map(lambda parts: '"' + "".join(parts) + '"')
+JSON_KEY = st.sampled_from(['"a"', '"b"', '"\\u0061"']) | JSON_STRING
+JSON_TEXT = st.recursive(
+    st.sampled_from(["true", "false", "null"]) | JSON_NUMBER | JSON_STRING,
+    lambda sub: st.lists(sub, max_size=3).map(lambda xs: "[" + ", ".join(xs) + "]")
+    | st.lists(st.tuples(JSON_KEY, sub), max_size=4).map(
+        lambda kv: "{" + ",".join(f"{k}: {v}" for k, v in kv) + "}"
+    ),
+    max_leaves=10,
+)
+WHITESPACE = st.sampled_from(["", " ", "\t", "\n", " \r\n ", "\x0b", "\u00a0"])
+
+
+@st.composite
+def json_variant(draw):
+    """Valid JSON text, or one of the ways a line can break."""
+    s = draw(JSON_TEXT)
+    how = draw(st.sampled_from(["as is", "bom", "trailing", "truncated", "constant", "space"]))
+    if how == "bom":
+        return "\ufeff" + s
+    if how == "trailing":
+        return s + draw(st.sampled_from([" x", "1", "{}", ",", "]", s]))
+    if how == "truncated":
+        return s[: draw(st.integers(min_value=0, max_value=max(0, len(s) - 1)))]
+    if how == "constant":
+        return f"[{s}, {draw(st.sampled_from(['NaN', 'Infinity', '-Infinity']))}]"
+    if how == "space":
+        return draw(WHITESPACE) + s + draw(WHITESPACE)
+    return s
+
+
+def _parsed(parse, text):
+    """``repr`` of what ``parse`` returns (pins Decimal scale and key
+    order), or the type and message of what it raises."""
+    try:
+        return repr(parse(text))
+    except Exception as e:  # noqa: BLE001 - the exception is the outcome
+        return type(e), str(e)
+
+
+@settings(max_examples=1000, deadline=None)
+@given(json_variant())
+@example('{"a": 1.50, "a": 2}')
+@example('{"\\ud800": 18446744073709551617}')
+@example("\ufeff{}")
+@example("[1e400, -0.0E-7, 10.00]")
+@example(b'\xef\xbb\xbf{"a": 1.0}')  # bytes, as from a binary column
+def test_parse_line_is_json_loads(text):
+    """``parse_line`` returns what ``json.loads`` with the same hooks
+    returns, and raises what it raises, message included."""
+    import json
+
+    from hive_serde_schema_gen_spark.schema_infer.infer import _reject_constant, parse_line
+
+    want = _parsed(
+        lambda s: json.loads(s, parse_float=Decimal, parse_constant=_reject_constant), text
+    )
+    assert _parsed(parse_line, text) == want
+
+
+def test_parse_line_builds_no_decoder_per_call(monkeypatch):
+    """The fold parses with one decoder built when the module loads: a row
+    does not construct a ``JSONDecoder``."""
+    import json
+
+    from hive_serde_schema_gen_spark.schema_infer.infer import parse_line
+
+    def no_decoder(*args, **kwargs):
+        raise AssertionError("a JSONDecoder was built for one row")
+
+    monkeypatch.setattr(json, "JSONDecoder", no_decoder)
+    assert repr(parse_line('{"a": 1.50}')) == "{'a': Decimal('1.50')}"
+
+
+def test_parse_line_shared_across_threads():
+    """Eight threads parsing the same lines at once get what one thread
+    gets, errors included (``NaN`` calls back into Python mid-scan, where
+    the interpreter may switch threads)."""
+    import random
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from hive_serde_schema_gen_spark.schema_infer.infer import parse_line
+
+    rng = random.Random(6)
+    lines = []
+    for i in range(2_000):
+        row = {
+            "id": str(i),
+            f"k{rng.randrange(50)}": f"{rng.randrange(10**6)}.{rng.randrange(100):02d}0",
+            "tags": "[%s]" % ", ".join(f'"t{rng.randrange(9)}"' for _ in range(rng.randrange(4))),
+            "nested": '{"x": %d, "y": [%d.5, null]}' % (rng.randrange(2**70), rng.randrange(99)),
+        }
+        if i % 97 == 0:
+            row["bad"] = "NaN"
+        lines.append("{" + ", ".join(f'"{k}": {v}' for k, v in row.items()) + "}")
+
+    def parse_all(_):
+        return [_parsed(parse_line, s) for s in lines]
+
+    want = parse_all(None)
+    assert sum(isinstance(w, tuple) for w in want) == 21  # the NaN rows raise
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(parse_all, range(8)))
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(g == want for g in got)
+
+
+def test_widen_reads_the_scale_describe_reads():
+    """``observe`` reads a Decimal's scale inline; it must agree with
+    ``describe``'s ``_scale`` for trailing zeros, exponent form, negative
+    exponents and the non-finite values no JSON line parses to."""
+    from hive_serde_schema_gen_spark.schema_infer.lattice import observe
+
+    schema = describe({"v": Decimal("5.5")})
+    for v in ["1.500", "1E+3", "1E-3", "-0.0E-7", "12345678901234567890.1", "Infinity", "-Inf"]:
+        value = {"v": Decimal(v)}
+        got = observe(schema, value)
+        want = merge(schema, describe(value))
+        assert repr(got) == repr(want), v
