@@ -184,7 +184,8 @@ def main(argv=None) -> int:
         choices=["FAILFAST", "PERMISSIVE"],
         default="FAILFAST",
         help="FAILFAST aborts on the first bad line (reference behavior); "
-        "PERMISSIVE skips bad rows",
+        "PERMISSIVE skips bad rows and types a field whose rows disagree on "
+        "kind as STRING",
     )
     p.add_argument("--sampling-ratio", type=float, default=None)
     p.add_argument(

@@ -21,6 +21,8 @@ from .lattice import (
     Num,
     Str,
     Struct,
+    TOP,
+    Top,
     Ts,
     Unknown,
     describe,
@@ -53,6 +55,8 @@ __all__ = [
     "Num",
     "Str",
     "Struct",
+    "TOP",
+    "Top",
     "Unknown",
     "describe",
     "merge",

@@ -12,7 +12,7 @@ classic **partial/final distributed aggregation**:
                                             # final merge (first-seen field order)
 
 One kernel, :func:`_fold`, is the only parse → observe loop: it folds every
-partition, re-folds a partition on the error path, folds each task of
+partition, re-folds a partition on FAILFAST's error path, folds each task of
 :func:`infer_json_column`, and is :func:`infer_ndjson_strings`.  It takes a
 seed schema, and folding lines seeded with the schema of the lines before
 them gives exactly the fold of all of them.
@@ -26,17 +26,18 @@ is embarrassingly parallel.  Line numbers are exact without a
 "cheap line numbers at scale").
 
 Error semantics: ``FAILFAST`` (the reference's behavior) aborts at the first
-bad line in *file order*; ``PERMISSIVE`` skips bad rows, keeps the earlier
-kind of a conflicting field, and returns the first 20 errors.  A FAILFAST
-partition that stopped at a local error, and whose partial merges with the
-schema of the partitions before it, costs no second job: the driver
-observes the failing row into that merge, which is the fold of the file up
-to it.  A partition whose partial conflicts with that schema is re-folded
-on its own — one one-task job, error path only — seeded with it.  So
-FAILFAST's error and PERMISSIVE's schema and error lines do not depend on
-the split.  PERMISSIVE re-folds every later partition that conflicts with
-the same schema in that one job, so a field that changes kind partway
-through a file costs one parallel pass, not one job per partition.
+bad line in *file order*.  A FAILFAST partition that stopped at a local
+error, and whose partial merges with the schema of the partitions before
+it, costs no second job: the driver observes the failing row into that
+merge, which is the fold of the file up to it.  A partition whose partial
+conflicts with that schema is re-folded on its own — one one-task job,
+error path only — seeded with it.  So FAILFAST's error does not depend on
+the split.  ``PERMISSIVE`` folds with the lattice's PERMISSIVE join: a field
+whose rows disagree on kind becomes ``TOP`` (``STRING``), so no row
+conflicts.  It skips only rows that are bad on their own — bad JSON, and a
+row that is not an object — and returns the first 20 of them.  The join is
+associative and commutative, so its schema and error lines do not depend on
+the split either, and it never runs a second job.
 
 ``infer_json_column`` applies the same kernel to a DataFrame string column
 (e.g. ``events.props``) via Arrow-batched ``mapInPandas`` — the Spark-idiomatic
@@ -49,19 +50,11 @@ import json
 import pickle
 from dataclasses import dataclass, field
 from decimal import Decimal
+from itertools import chain
 from typing import Iterable, List, Optional, Tuple
 
 from .errors import BadJson, SchemaGenError
-from .lattice import (
-    EMPTY_STRUCT,
-    Arr,
-    Descriptor,
-    Struct,
-    describe,
-    merge,
-    merge_lenient,
-    observe,
-)
+from .lattice import EMPTY_STRUCT, Descriptor, Top, merge, observe
 from .render import render_table
 
 _MAX_ERROR_SAMPLES = 20
@@ -114,17 +107,6 @@ class InferenceResult:
         return render_table(self.schema, name, file)
 
 
-def _observe_lenient(schema: Descriptor, value, detect_dates: bool = False) -> Descriptor:
-    """PERMISSIVE fold step for a row that conflicts with the schema:
-    field-wise best-effort merge (conflicting fields keep the earlier kind,
-    clean fields still contribute).  A row whose value cannot even be
-    described (e.g. a mixed-kind array) is skipped whole."""
-    try:
-        return merge_lenient(schema, describe(value, detect_dates=detect_dates))
-    except SchemaGenError:
-        return schema
-
-
 # What the kernel returns: (schema, lines seen, PERMISSIVE's sampled
 # (local line, message) errors, FAILFAST's first error or None)
 _Fold = Tuple[Descriptor, int, List[Tuple[int, str]], Optional[SchemaGenError]]
@@ -139,9 +121,10 @@ def _fold(
     """The fold kernel: parse each line and observe it into ``schema``.
 
     Lines are numbered from 1.  FAILFAST stops at the first bad line and
-    returns its error with that local line number set.  PERMISSIVE skips bad
-    JSON, degrades a conflicting row field-wise, and keeps going, keeping
-    the first ``_MAX_ERROR_SAMPLES`` errors.  Seeding ``schema`` with what the
+    returns its error with that local line number set.  PERMISSIVE joins a
+    row that conflicts with the schema into it (each conflicting field
+    becomes ``TOP``), skips bad JSON and a row that is not an object, and
+    keeps going, keeping the first ``_MAX_ERROR_SAMPLES`` of those errors.  Seeding ``schema`` with what the
     lines before these folded to gives exactly the fold of all of them.
     """
     n = 0
@@ -162,9 +145,11 @@ def _fold(
             if not permissive:
                 e.raw = value  # the row, so the driver can replay it
                 return schema, n, errors, e.with_line(n)
-            if len(errors) < _MAX_ERROR_SAMPLES:
-                errors.append((n, type(e).__name__))
-            schema = _observe_lenient(schema, value, detect_dates)
+            joined = observe(schema, value, n, detect_dates, permissive=True)
+            if type(joined) is not Top:  # a kind conflict joins in
+                schema = joined
+            elif len(errors) < _MAX_ERROR_SAMPLES:  # a row that is not an object
+                errors.append((n, "RowMismatch"))
     return schema, n, errors, None
 
 
@@ -187,22 +172,9 @@ def _input_bytes(sc, path: str) -> int:
     return total
 
 
-def _kinds(d: Descriptor):
-    """``d`` without its bounds.  Whether a row conflicts, and the kinds it
-    leaves, depend on nothing else; so if ``t`` is ``s`` widened by folding
-    and has the kinds of ``s``, a fold seeded with ``s`` meets the same
-    errors as one seeded with ``t``, and ``merge(t, fold(s))`` is
-    ``fold(t)``."""
-    if isinstance(d, Struct):
-        return ("struct", tuple((k, _kinds(v)) for k, v in d.fields.items()))
-    if isinstance(d, Arr):
-        return ("array", _kinds(d.element))
-    return d.kind
-
-
-def _merge_or_none(a: Descriptor, b: Descriptor) -> Optional[Descriptor]:
+def _merge_or_none(a: Descriptor, b: Descriptor, permissive: bool) -> Optional[Descriptor]:
     try:
-        return merge(a, b)
+        return merge(a, b, permissive=permissive)
     except SchemaGenError:
         return None
 
@@ -230,10 +202,12 @@ def infer_path(
     """Infer the schema of an NDJSON file/glob distributively.
 
     ``mode="FAILFAST"`` reproduces the reference's first-bad-line abort with
-    an exact line number; ``"PERMISSIVE"`` skips bad rows and returns the
-    first 20 errors in file order.  ``min_partitions`` defaults to one split
-    per core, but no more splits than MiB of input, and never fewer than
-    Spark's default of 2.
+    an exact line number; ``"PERMISSIVE"`` types a field whose rows disagree
+    on kind as ``TOP`` (``STRING``), skips bad JSON and non-object rows, and
+    returns the first 20 of those in file order, in one Spark job at any
+    partition count.  ``min_partitions`` defaults to one split per core,
+    but no more splits than MiB of input, and never fewer than Spark's
+    default of 2.
     ``sampling_ratio`` (like ``spark.read.json``'s option) infers from a
     deterministic row sample — line numbers are then relative to the sample
     and reported as None.  ``detect_dates`` (opt-in deviation, OFF for
@@ -268,31 +242,17 @@ def infer_path(
     # with the schema of the partitions before it, the merge is the fold of
     # the file up to there; so a FAILFAST partition that stopped at a local
     # error holds the file's first error, and observing its row into the
-    # merge re-derives it exactly.  A partial that does not merge is
-    # re-folded seeded with that schema (its first conflicting line is not
-    # known), and PERMISSIVE re-folds, in the same job and with the same
-    # seed, every later partition whose partial conflicts with it too; such a
-    # re-fold stands in for its partition's own as long as the schema before
-    # that partition still has the seed's kinds (_kinds).
+    # merge re-derives it exactly.  A FAILFAST partial that does not merge
+    # is re-folded seeded with that schema (its first conflicting line is
+    # not known).  A PERMISSIVE partial always joins.
     schema: Descriptor = EMPTY_STRUCT
     all_errors: List[LineError] = []
-    refolds = {}  # pid -> (kinds of the seed, seeded fold)
-    for i, (pid, (partial, _n, errors, err)) in enumerate(recs):
-        merged = _merge_or_none(schema, partial)
+    for pid, (partial, _n, errors, err) in recs:
+        merged = _merge_or_none(schema, partial, permissive)
         if merged is None:
-            kinds = _kinds(schema)
-            if pid not in refolds or refolds[pid][0] != kinds:
-                pids = [pid]
-                if permissive:
-                    pids += [p for p, (part, *_) in recs[i + 1:]
-                             if _merge_or_none(schema, part) is None]
-                folds = sc.runJob(
-                    rdd,
-                    lambda it: [_fold(it, schema, permissive, detect_dates)],
-                    partitions=pids,
-                )
-                refolds.update((p, (kinds, f)) for p, f in zip(pids, folds))
-            partial, _n, errors, err = refolds[pid][1]
+            [(partial, _n, errors, err)] = sc.runJob(
+                rdd, lambda it: [_fold(it, schema, False, detect_dates)], partitions=[pid]
+            )
             merged = merge(schema, partial)
         if err is not None:
             raise _replay(err, merged, detect_dates).with_line(at(pid, err.line))
@@ -317,7 +277,9 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     Null cells are skipped (column-level nullability, not a row error).
     Strict mode raises the first error as its :class:`SchemaGenError`
     subclass (line None: a column has no line numbers), wherever the
-    conflicting rows landed.
+    conflicting rows landed.  ``permissive=True`` folds and merges with the
+    PERMISSIVE join, so a field whose cells disagree on kind is ``TOP``
+    however the rows are ordered or partitioned.
 
     Repeated raw strings are folded ONCE per task: inference is
     multiplicity-insensitive — every lattice statistic (min/max bound,
@@ -374,17 +336,20 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
         partial, err = pickle.loads(bytes(row["blob"]))
         if err is not None:
             raise err.with_line(None)
-        if permissive:
-            schema = merge_lenient(schema, partial)
-        else:
-            schema = merge(schema, partial)
+        schema = merge(schema, partial, permissive=permissive)
     return schema
 
 
 def infer_ndjson_strings(lines: Iterable[str], detect_dates: bool = False) -> InferenceResult:
     """Single-process fold over an iterable of lines (testing / tiny inputs).
-    Semantics identical to the distributed path."""
-    schema, n, _errors, err = _fold(lines, EMPTY_STRUCT, False, detect_dates)
+    Semantics identical to the distributed path: a BOM that starts the first
+    line is dropped, as ``sc.textFile`` drops one that starts a file (a BOM
+    on a later line stays, and that line is bad JSON on both paths)."""
+    it = iter(lines)
+    first = next(it, None)
+    if first is not None:
+        it = chain([first.removeprefix("\ufeff")], it)
+    schema, n, _errors, err = _fold(it, EMPTY_STRUCT, False, detect_dates)
     if err is not None:
         raise err
     return InferenceResult(schema, n)

@@ -21,6 +21,7 @@ Descriptor kinds (mirroring ``Schemer.scala:67-97``'s decision tree):
 - ``STRUCT``   — key-union of fields (``Schemer.scala:55-59``).  DELIBERATE
   DEVIATION: field order is deterministic first-seen (the reference's Scala
   ``groupBy`` scrambles it nondeterministically, SURVEY §1.4).
+- ``TOP``      — top: every value fits (renders ``STRING``); PERMISSIVE only
 
 ``merge`` is an associative, commutative (up to struct field order, which is
 left-biased so partials must be combined in partition order for exact
@@ -29,7 +30,9 @@ the distributed aggregation.
 
 Cross-kind merges raise :class:`~.errors.RowMismatch`; mixed-kind array
 elements raise :class:`~.errors.InconsistentArray`
-(``Schemer.scala:16-30,37-38,61``).
+(``Schemer.scala:16-30,37-38,61``).  The PERMISSIVE join (``permissive=True``)
+yields ``TOP`` there instead, as Spark's JSON reader widens a kind conflict
+to a string; ``TOP`` absorbs in either mode.
 """
 
 from __future__ import annotations
@@ -185,6 +188,16 @@ class Struct(Descriptor):
 
 EMPTY_STRUCT = Struct()
 
+
+class Top(Descriptor):
+    """Top type: kinds met here under a PERMISSIVE join (renders STRING)."""
+
+    __slots__ = ()
+    kind = "any"
+
+
+TOP = Top()
+
 # ---------------------------------------------------------------------------
 # Value → descriptor (the "observe" direction of the fold)
 # ---------------------------------------------------------------------------
@@ -217,14 +230,15 @@ _ISO8601 = __import__("re").compile(
 
 
 def describe(
-    value: Any, line: Optional[int] = None, detect_dates: bool = False
+    value: Any, line: Optional[int] = None, detect_dates: bool = False, permissive: bool = False
 ) -> Descriptor:
     """Build a descriptor for one parsed JSON value (exemplar → descriptor).
 
     Mirrors the implicit typing in ``Schemer.scala:43-63`` with array
     normalization (``prepare``, Schemer.scala:32-41) applied eagerly: a
     multi-element array folds its elements into one unified element type;
-    element-kind conflicts raise InconsistentArray (Schemer.scala:37-38).
+    element-kind conflicts raise InconsistentArray (Schemer.scala:37-38), or
+    with ``permissive=True`` join to ``TOP``.
 
     ``detect_dates=True`` (opt-in deviation) types ISO-8601 strings as
     :class:`Ts`; OFF by default for reference fidelity.
@@ -247,12 +261,12 @@ def describe(
         elem: Descriptor = UNKNOWN
         try:
             for v in value:
-                elem = merge(elem, describe(v, line, detect_dates))
+                elem = merge(elem, describe(v, line, detect_dates, permissive), line, permissive)
         except RowMismatch:
             raise InconsistentArray(value, line=line) from None
         return Arr(elem)
     if isinstance(value, dict):
-        return Struct({k: describe(v, line, detect_dates) for k, v in value.items()})
+        return Struct({k: describe(v, line, detect_dates, permissive) for k, v in value.items()})
     raise TypeError(f"unsupported JSON value: {value!r}")
 
 
@@ -261,14 +275,17 @@ def describe(
 # ---------------------------------------------------------------------------
 
 
-def merge(a: Descriptor, b: Descriptor, line: Optional[int] = None) -> Descriptor:
+def merge(
+    a: Descriptor, b: Descriptor, line: Optional[int] = None, permissive: bool = False
+) -> Descriptor:
     """Least upper bound of two descriptors.
 
     Associative and commutative in the *type* it denotes; struct field order
     is left-biased (first-seen), so combine partition partials in partition
     order for deterministic global ordering.  Cross-kind ⇒ RowMismatch
     (null absorbs, Schemer.scala:45-46; everything else must match kinds,
-    Schemer.scala:61).
+    Schemer.scala:61), or ``TOP`` with ``permissive=True``.  ``TOP`` absorbs
+    in either mode.
     """
     if a is UNKNOWN or isinstance(a, Unknown):
         return b
@@ -292,44 +309,23 @@ def merge(a: Descriptor, b: Descriptor, line: Optional[int] = None) -> Descripto
         )
     if isinstance(a, Arr) and isinstance(b, Arr):
         try:
-            return Arr(merge(a.element, b.element, line))
+            return Arr(merge(a.element, b.element, line, permissive))
         except RowMismatch:
             raise InconsistentArray([a.element, b.element], line=line) from None
     if isinstance(a, Struct) and isinstance(b, Struct):
         fields = dict(a.fields)
         for k, bv in b.fields.items():
             av = fields.get(k)
-            fields[k] = bv if av is None else merge(av, bv, line)
+            fields[k] = bv if av is None else merge(av, bv, line, permissive)
         return Struct(fields)
     # MapOf never arises from observe() — the reference lattice above is
     # untouched — but rewritten schemas meet in evolve's diff, where two
     # map columns must widen by their VALUE types, not flag incompatible
     if a.kind == "map" and b.kind == "map":
-        return type(a)(merge(a.value, b.value, line))
+        return type(a)(merge(a.value, b.value, line, permissive))
+    if permissive or type(a) is Top or type(b) is Top:
+        return TOP
     raise RowMismatch(a, b, line=line)
-
-
-def merge_lenient(a: Descriptor, b: Descriptor) -> Descriptor:
-    """Best-effort merge for PERMISSIVE paths: kind conflicts keep the
-    *earlier* (left) descriptor instead of raising — field-wise for structs,
-    wholesale otherwise.  Mirrors the within-partition first-seen-kind-wins
-    behavior so results don't depend on partition boundaries."""
-    if isinstance(a, Struct) and isinstance(b, Struct):
-        fields = dict(a.fields)
-        for k, bv in b.fields.items():
-            av = fields.get(k)
-            if av is None:
-                fields[k] = bv
-            else:
-                try:
-                    fields[k] = merge(av, bv)
-                except SchemaGenError:
-                    pass  # keep the earlier kind
-        return Struct(fields)
-    try:
-        return merge(a, b)
-    except SchemaGenError:
-        return a if not isinstance(a, Unknown) else b
 
 
 def observe(
@@ -337,13 +333,15 @@ def observe(
     value: Any,
     line: Optional[int] = None,
     detect_dates: bool = False,
+    permissive: bool = False,
 ) -> Descriptor:
     """Fold one parsed JSON row into the running schema.
 
     ``schema ← merge(schema, describe(row))`` — the loop body of
-    ``Schemer.scala:11-14``.  The seed is :data:`EMPTY_STRUCT` (the
-    reference seeds with ``Json.obj()``, Schemer.scala:10), so a non-object
-    top-level row raises RowMismatch exactly as the reference does.
+    ``Schemer.scala:11-14``, with ``permissive`` handed to both.  The seed
+    is :data:`EMPTY_STRUCT` (the reference seeds with ``Json.obj()``,
+    Schemer.scala:10), so a non-object top-level row raises RowMismatch
+    exactly as the reference does (PERMISSIVE: the row joins to ``TOP``).
 
     The common row only widens a few leaves, so :func:`_widen` walks the
     value and the schema together: it returns ``schema`` itself when nothing
@@ -356,7 +354,7 @@ def observe(
         widened = _widen(schema, value)
         if widened is not None:
             return widened
-    return merge(schema, describe(value, line, detect_dates), line)
+    return merge(schema, describe(value, line, detect_dates, permissive), line, permissive)
 
 
 def _widen(d: Descriptor, v: Any) -> Optional[Descriptor]:
@@ -364,57 +362,57 @@ def _widen(d: Descriptor, v: Any) -> Optional[Descriptor]:
     None when it does not (the caller then takes the general path).
 
     Exact down to the objects kept: ``d`` itself when nothing widens, and
-    on a tie the existing bound, as ``merge`` keeps its left operand.
+    on a tie the existing bound, as ``merge`` keeps its left operand.  Any
+    ``v`` fits ``TOP`` and is not described, so a field past its first
+    kind conflict costs a PERMISSIVE fold no general path.
     """
     if v is None:
         return d
     t = type(v)
     if t is str:
-        if type(d) is not Str:
-            return None
-        n = len(v)
-        return d if n <= d.max_len else Str(n)
-    if t is int or t is Decimal:  # exact types: bool is an int subclass
-        if type(d) is not Num:
-            return None
-        if t is int:
-            sc = 0
-        else:  # _scale inline, no call per number: exponent clamped at 0
-            sc = v.as_tuple().exponent
-            sc = -sc if type(sc) is int and sc < 0 else 0
-        lo, hi, ms = d.lo, d.hi, d.max_scale
-        if lo <= v <= hi and sc <= ms:
+        if type(d) is Str:
+            n = len(v)
+            return d if n <= d.max_len else Str(n)
+    elif t is int or t is Decimal:  # exact types: bool is an int subclass
+        if type(d) is Num:
+            if t is int:
+                sc = 0
+            else:  # _scale inline, no call per number: exponent clamped at 0
+                sc = v.as_tuple().exponent
+                sc = -sc if type(sc) is int and sc < 0 else 0
+            lo, hi, ms = d.lo, d.hi, d.max_scale
+            if lo <= v <= hi and sc <= ms:
+                return d
+            return Num(v if v < lo else lo, v if v > hi else hi, sc if sc > ms else ms)
+    elif t is dict:
+        if type(d) is Struct:
+            fields = d.fields
+            out = None
+            for k, x in v.items():
+                old = fields.get(k)
+                if old is None:  # new field: first-seen order is merge's to keep
+                    return None
+                new = _widen(old, x)
+                if new is None:
+                    return None
+                if new is not old:
+                    if out is None:
+                        out = dict(fields)
+                    out[k] = new
+            return d if out is None else Struct(out)
+    elif t is bool:
+        if type(d) is Bool:
             return d
-        return Num(v if v < lo else lo, v if v > hi else hi, sc if sc > ms else ms)
-    if t is dict:
-        if type(d) is not Struct:
-            return None
-        fields = d.fields
-        out = None
-        for k, x in v.items():
-            old = fields.get(k)
-            if old is None:  # new field: first-seen order is merge's to keep
-                return None
-            new = _widen(old, x)
-            if new is None:
-                return None
-            if new is not old:
-                if out is None:
-                    out = dict(fields)
-                out[k] = new
-        return d if out is None else Struct(out)
-    if t is bool:
-        return d if type(d) is Bool else None
-    if t is list:
-        if type(d) is not Arr:
-            return None
-        elem = d.element
-        for x in v:
-            elem = _widen(elem, x)
-            if elem is None:
-                return None
-        return d if elem is d.element else Arr(elem)
-    return None
+    elif t is list:
+        if type(d) is Arr:
+            elem = d.element
+            for x in v:
+                elem = _widen(elem, x)
+                if elem is None:
+                    return None
+            return d if elem is d.element else Arr(elem)
+    # a miss: v is not of d's kind
+    return d if type(d) is Top else None
 
 
 # ---------------------------------------------------------------------------

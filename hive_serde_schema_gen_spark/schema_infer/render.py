@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from typing import Tuple
 
-from .lattice import MapOf, Arr, Bool, Descriptor, Num, Str, Struct, Ts, Unknown
+from .lattice import MapOf, Arr, Bool, Descriptor, Num, Str, Struct, Top, Ts, Unknown
 
 VARCHAR_MAX = 65535  # Hive's real bound; reference typo'd 65356 (Schemer.scala:73)
 
@@ -80,6 +80,8 @@ def render_type(desc: Descriptor, indent: int = 0, key: str | None = None) -> st
         n = desc.max_len
         if 0 < n <= VARCHAR_MAX:
             return prefix + f"VARCHAR({n})"
+        return prefix + "STRING"
+    if isinstance(desc, Top):  # PERMISSIVE: the field's rows disagree on kind
         return prefix + "STRING"
     if isinstance(desc, Num):
         name, p, s = numeric_tier(desc)

@@ -5,11 +5,11 @@ and friends — the Spark-native payoff the reference cannot offer (its only
 output is DDL text, ``/root/reference/Schemer.scala:107-115``).
 
 Mapping (SURVEY §1.5): ``???``→NullType, BOOLEAN→BooleanType,
-VARCHAR(n)→VarcharType(n), STRING→StringType, and the numeric tiers of
-:func:`.render.numeric_tier`: the int ladder→Byte/Short/Integer/LongType,
-FLOAT/DOUBLE→Float/DoubleType, NUMERIC(p,s)→DecimalType(min(p,38), min(s,38));
-ARRAY→ArrayType, STRUCT→StructType.  All fields nullable (Hive semantics —
-the reference has no NOT NULL inference, SURVEY §1.4).
+VARCHAR(n)→VarcharType(n), STRING and ``TOP``→StringType, and the numeric
+tiers of :func:`.render.numeric_tier`: the int ladder→Byte/Short/Integer/
+LongType, FLOAT/DOUBLE→Float/DoubleType, NUMERIC(p,s)→DecimalType(min(p,38),
+min(s,38)); ARRAY→ArrayType, STRUCT→StructType.  All fields nullable (Hive
+semantics — the reference has no NOT NULL inference, SURVEY §1.4).
 
 ``for_read=True`` gives a schema ``spark.read`` accepts: ``???`` becomes
 StringType (NullType does not read back) and VARCHAR(n) becomes StringType
@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from .lattice import MapOf, Arr, Bool, Descriptor, Num, Str, Struct, Ts, Unknown
+from .lattice import MapOf, Arr, Bool, Descriptor, Num, Str, Struct, Top, Ts, Unknown
 from .render import VARCHAR_MAX, numeric_tier
 
 _TIER_TYPES = {
@@ -46,6 +46,8 @@ def to_spark_type(desc: Descriptor, for_read: bool = False) -> T.DataType:
         n = desc.max_len
         if 0 < n <= VARCHAR_MAX and not for_read:
             return T.VarcharType(n)
+        return T.StringType()
+    if isinstance(desc, Top):  # Spark's JSON reader keeps any value's text
         return T.StringType()
     if isinstance(desc, Num):
         name, p, s = numeric_tier(desc)

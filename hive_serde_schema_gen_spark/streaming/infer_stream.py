@@ -16,7 +16,6 @@ import threading
 from typing import Optional
 
 from ..schema_infer import EMPTY_STRUCT, Descriptor, infer_json_column, merge
-from ..schema_infer.lattice import merge_lenient
 from ..schema_infer.render import render_definition
 
 
@@ -30,13 +29,11 @@ class StreamingSchemaAccumulator:
         self.permissive = permissive
 
     def absorb(self, partial: Descriptor, n_rows: int) -> None:
-        # lenient across batches when permissive: a cross-batch kind
-        # conflict must not terminate the StreamingQuery
+        # the PERMISSIVE join across batches when permissive: a cross-batch
+        # kind conflict types the field STRING, it does not terminate the
+        # StreamingQuery
         with self._lock:
-            if self.permissive:
-                self.schema = merge_lenient(self.schema, partial)
-            else:
-                self.schema = merge(self.schema, partial)
+            self.schema = merge(self.schema, partial, permissive=self.permissive)
             self.rows += n_rows
 
     def definition(self) -> str:

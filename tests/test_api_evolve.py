@@ -58,3 +58,19 @@ def test_diff_widened_nested_varchar():
     (change,) = [c for c in diff(old, new) if c.column == "s"]
     assert change.kind == "widened"
     assert "VARCHAR(6)" in change.new
+
+
+def test_diff_top_widens_to_string():
+    """A column that became ``TOP`` under a PERMISSIVE join widens to
+    STRING; a ``TOP`` column whose new data is one kind again is narrowed
+    (no ALTER needed)."""
+    from hive_serde_schema_gen_spark.schema_infer import describe, merge
+
+    typed = _schema('{"v": 1}')
+    top = merge(typed, describe({"v": "x"}), permissive=True)
+    (change,) = diff(typed, top)
+    assert (change.kind, change.old, change.new) == ("widened", "TINYINT", "STRING")
+    assert alter_statements("t", typed, top) == ["ALTER TABLE t CHANGE COLUMN v v STRING;"]
+    (change,) = diff(top, typed)
+    assert (change.kind, change.old, change.new) == ("narrowed", "STRING", "TINYINT")
+    assert alter_statements("t", top, typed) == []

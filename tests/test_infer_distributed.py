@@ -53,8 +53,9 @@ def test_permissive_skips_bad_rows(spark, tmp_path):
     p.write_text('{"v": 1}\n{not json\n{"v": "x"}\n{"v": 300}\n')
     result = infer_path(spark, str(p), mode="PERMISSIVE")
     assert result.lines == 4
-    assert render_definition(result.schema) == "v SMALLINT"
-    assert sorted(e.line for e in result.errors) == [2, 3]
+    # v's rows disagree on kind, so v joins to STRING; only bad JSON is skipped
+    assert render_definition(result.schema) == "v STRING"
+    assert sorted(e.line for e in result.errors) == [2]
 
 
 def test_to_spark_schema_roundtrip(spark):
@@ -95,15 +96,41 @@ def test_infer_json_column_strict_error_is_typed(spark, parts, rows, error):
 
 
 def test_infer_json_column_permissive_cross_partition_conflict(spark):
-    """Kind conflicts split across partitions must degrade gracefully in
-    permissive mode (first-seen kind wins) instead of raising at the driver
-    merge — regression for the cross-partition RowMismatch found in
-    verification."""
+    """Kind conflicts split across partitions join to STRING in permissive
+    mode instead of raising at the driver merge — regression for the
+    cross-partition RowMismatch found in verification."""
     df = spark.createDataFrame(
         [('{"a":1}',), ("{broken",), ('{"a":"xyz"}',)], ["props"]
     ).repartition(3)
     desc = infer_json_column(df, "props", permissive=True)
-    assert render_definition(desc) == "a TINYINT"
+    assert render_definition(desc) == "a STRING"
+
+
+def test_infer_json_column_permissive_is_order_and_split_free(spark):
+    """A shuffled column whose cells conflict at the top level, inside
+    structs and inside arrays gives one PERMISSIVE descriptor at 1, 3, 4
+    and 8 partitions, equal to the fold of the cells in their written
+    order."""
+    import random
+
+    from hive_serde_schema_gen_spark.schema_infer import EMPTY_STRUCT
+    from hive_serde_schema_gen_spark.schema_infer.infer import _fold
+
+    cells = [
+        '{"id": %d, "v": %s, "o": {"c": %s}, "xs": [%s]}'
+        % (i, [str(i), '"s%d"' % i, "true", "[%d]" % i][i % 4],
+           [str(i), '"c"'][i % 3 == 0], [str(i), '"x"', "null"][i % 5 % 3])
+        for i in range(200)
+    ] + ["{broken", "[1, 2]", "null"]
+    want, _n, _errors, _err = _fold(cells, EMPTY_STRUCT, True)
+    assert render_definition(want) == (
+        "id SMALLINT,\nv STRING,\no STRUCT<\n\tc: STRING\n>,\nxs ARRAY<\n\tSTRING\n>"
+    )
+    random.Random(7).shuffle(cells)
+    df = spark.createDataFrame([(c,) for c in cells], ["props"])
+    for parts in (1, 3, 4, 8):
+        got = infer_json_column(df.repartition(parts), "props", permissive=True)
+        assert got == want, parts
 
 
 def test_sampling_ratio(spark, tmp_path):
@@ -140,7 +167,7 @@ def test_infer_json_column_dedup_is_exact(spark):
         ["props"],
     ).repartition(3)
     desc = infer_json_column(dfp, "props", permissive=True)
-    assert render_definition(desc) == "a TINYINT"
+    assert render_definition(desc) == "a STRING"
 
 
 def _outcomes(spark, path, parts):
@@ -197,22 +224,28 @@ def test_infer_path_partition_matrix(spark, tmp_path):
                              {2: '{"id": 2, "tags": [1000]}', 36: '{"id": 36, "tags": ["x"]}'})
     first_conflict = _numbered('{"id": %d, "v": %d}', {3: '{"id": 3, "v": "x"}'})
     late_bad = _numbered('{"id": %d, "v": %d}', {38: '{"id": 38, "v": '})
+    non_object = _numbered('{"id": %d, "v": %d}', {19: "[1, 2]"})
+    clean = render_definition(
+        infer_ndjson_strings(non_object[:18] + non_object[19:]).schema
+    )
+    # PERMISSIVE skips only rows that are bad on their own (bad JSON, a row
+    # that is not an object); a kind conflict joins the field to STRING
     cases = [
         ("growing", growing,
          render_definition(infer_ndjson_strings(growing).schema), [], None),
         ("array_conflict", array_conflict,
-         ("InconsistentArray", 23), [23], None),
+         ("InconsistentArray", 23), [], None),
         ("conflict_then_bad", conflict_then_bad,
-         ("RowMismatch", 12), [12, 30], None),
-        # 34 conflicting rows: PERMISSIVE keeps the file's first 20
-        ("drift", drift, ("RowMismatch", 7), list(range(7, 27)), None),
-        ("widened_age", widened_age, ("RowMismatch", 35), [35],
+         ("RowMismatch", 12), [30], None),
+        ("drift", drift, ("RowMismatch", 7), [], None),
+        ("widened_age", widened_age, ("RowMismatch", 35), [],
          "into the schema with this signature:\nSMALLINT"),
         # raised merging the row's array into the schema's element
-        ("widened_tags", widened_tags, ("InconsistentArray", 36), [36],
+        ("widened_tags", widened_tags, ("InconsistentArray", 36), [],
          "Num(lo=1, hi=1000, max_scale=0)"),
-        ("first_conflict", first_conflict, ("RowMismatch", 3), [3], None),
+        ("first_conflict", first_conflict, ("RowMismatch", 3), [], None),
         ("late_bad", late_bad, ("BadJson", 38), [38], None),
+        ("non_object", non_object, ("RowMismatch", 19), [19], None),
     ]
     for name, lines, failfast, error_lines, says in cases:
         path = tmp_path / f"{name}.json"
@@ -221,6 +254,7 @@ def test_infer_path_partition_matrix(spark, tmp_path):
         assert (want[0] if isinstance(want[0], str) else want[0][:2]) == failfast, name
         assert says is None or says in want[0][2], name
         assert [line for line, _ in want[2]] == error_lines, name
+        assert name != "non_object" or want[1] == clean
         for parts in (2, 3, 4, 8):
             assert _outcomes(spark, str(path), parts) == want, (name, parts)
 
@@ -254,8 +288,8 @@ def test_infer_path_failfast_local_error_runs_one_job(spark, tmp_path, parts):
 
 def test_infer_path_permissive_drift_refolds_in_few_jobs(spark, tmp_path):
     """A field that changes kind partway through a file conflicts in every
-    later partition; PERMISSIVE re-folds them together, one job per change
-    of the schema's kinds, not one job per partition."""
+    later partition; PERMISSIVE joins it to STRING and re-folds nothing:
+    the scan is the only job."""
     path = tmp_path / "drift.json"
     path.write_text("\n".join(_drift_line(i) for i in range(1, 41)) + "\n")
     sc = spark.sparkContext
@@ -264,6 +298,44 @@ def test_infer_path_permissive_drift_refolds_in_few_jobs(spark, tmp_path):
         result = infer_path(spark, str(path), mode="PERMISSIVE", min_partitions=8)
     finally:
         sc.setJobGroup(None, None)
-    # the scan, then one re-fold job for v's change and one after w appears
-    assert len(sc.statusTracker().getJobIdsForGroup("drift")) <= 3
-    assert render_definition(result.schema) == "id TINYINT,\nv TINYINT,\nw TINYINT"
+    assert len(sc.statusTracker().getJobIdsForGroup("drift")) == 1
+    assert render_definition(result.schema) == "id TINYINT,\nv STRING,\nw STRING"
+    assert result.errors == []
+
+
+def test_bom_matches_infer_path(spark, tmp_path):
+    """``infer_ndjson_strings`` reads a BOM as ``infer_path`` does:
+    ``sc.textFile`` drops a BOM that starts the file, and a BOM that starts
+    a later line stays, so that line is bad JSON on both paths."""
+    for name, lines in (("first", ['\ufeff{"a": 1}', '{"a": 2}']),
+                        ("second", ['{"a": 1}', '\ufeff{"a": 2}'])):
+        path = tmp_path / f"bom_{name}.json"
+        path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+        got = []
+        for infer in (lambda: infer_path(spark, str(path)),
+                      lambda: infer_ndjson_strings(lines)):
+            try:
+                r = infer()
+                got.append((render_definition(r.schema), r.lines))
+            except SchemaGenError as e:
+                got.append((type(e).__name__, e.line, str(e)))
+        assert got[0] == got[1], name
+        if name == "first":
+            assert got[0] == ("a TINYINT", 2)
+        else:
+            assert got[0][:2] == ("BadJson", 2)
+            assert "Unexpected UTF-8 BOM" in got[0][2]
+
+
+def test_permissive_top_reads_back_as_text(spark, tmp_path):
+    """A field whose rows disagree on kind is ``TOP``; its read schema is
+    StringType, and Spark's JSON reader gives every row's value as text."""
+    path = tmp_path / "top.json"
+    path.write_text('{"v":1}\n{"v":"x"}\n{"v":{"c":1}}\n{"v":[1]}\n')
+    result = infer_path(spark, str(path), mode="PERMISSIVE")
+    assert render_definition(result.schema) == "v STRING"
+    assert result.errors == []
+    schema = to_spark_schema(result.schema, for_read=True)
+    assert schema.simpleString() == "struct<v:string>"
+    rows = spark.read.schema(schema).json(str(path)).collect()
+    assert [r["v"] for r in rows] == ["1", "x", '{"c":1}', "[1]"]

@@ -207,6 +207,23 @@ def test_errors_survive_pickling():
         assert str(back).startswith("On the line 7 ")
 
 
+def test_top_is_string_and_survives_pickling():
+    """``TOP`` renders STRING and maps to StringType in both bridge modes;
+    a pickled ``TOP`` (a partial from an executor is a new instance) is
+    equal to it, absorbs under either merge, and every value fits it."""
+    from hive_serde_schema_gen_spark.schema_infer import TOP
+
+    back = pickle.loads(pickle.dumps(Struct({"v": TOP}))).fields["v"]
+    assert back is not TOP and back == TOP and hash(back) == hash(TOP)
+    for top in (TOP, back):
+        assert render_type(top) == "STRING"
+        assert to_spark_type(top) == to_spark_type(top, for_read=True) == T.StringType()
+        for d in (UNKNOWN, Num(1, 1, 0), Str(3), describe({"a": [1]})):
+            assert merge(top, d) == merge(d, top) == merge(d, top, permissive=True) == TOP
+        for v in (None, 1, "x", True, [1, "x"], {"c": [{}]}):
+            assert observe(top, v) is top
+
+
 def test_non_object_row():
     with pytest.raises(RowMismatch) as ei:
         infer_lines("42")

@@ -228,25 +228,24 @@ def _line(v) -> str:
 
 def _row_fold(lines, permissive):
     """The fold by definition, one ``merge(schema, describe(row))`` per
-    line: the (schema, lines seen, sampled errors, first error) the kernel
-    must return, with the first error as (type, line)."""
-    from hive_serde_schema_gen_spark.schema_infer.infer import (
-        _observe_lenient,
-        parse_line,
-    )
-    from hive_serde_schema_gen_spark.schema_infer.lattice import EMPTY_STRUCT
+    line (PERMISSIVE: the join, skipping a row that joins to ``TOP``): the
+    (schema, lines seen, sampled errors, first error) the kernel must
+    return, with the first error as (type, line)."""
+    from hive_serde_schema_gen_spark.schema_infer.infer import parse_line
+    from hive_serde_schema_gen_spark.schema_infer.lattice import EMPTY_STRUCT, Top
 
     schema = EMPTY_STRUCT
     errors = []
     for n, raw in enumerate(lines, 1):
         value = parse_line(raw)
         try:
-            schema = merge(schema, describe(value, n), n)
+            joined = merge(schema, describe(value, n, permissive=permissive), n, permissive)
         except SchemaGenError as e:
-            if not permissive:
-                return schema, n, errors, (type(e), n)
-            errors.append((n, type(e).__name__))
-            schema = _observe_lenient(schema, value)
+            return schema, n, errors, (type(e), n)
+        if isinstance(joined, Top):
+            errors.append((n, "RowMismatch"))
+        else:
+            schema = joined
     return schema, len(lines), errors, None
 
 
@@ -314,22 +313,106 @@ NARROW_ROW = st.dictionaries(st.sampled_from("ab"), NARROW_VALUE, max_size=2)
 @example([{"a": []}], [{"a": [1]}], [{"a": ["x"]}], False)
 @example([{"a": {"c": None}}], [{"a": {"c": 1}}], [{"a": {"c": "x"}}], False)
 def test_seeded_fold_stands_in_for_a_wider_seed(head, middle, tail, detect_dates):
-    """What lets ``infer_path`` re-fold later PERMISSIVE partitions in one
-    job: if folding the middle lines leaves the seed's kinds, the tail
-    folded from the seed, merged into the wider schema, is the tail folded
-    from the wider schema, with the same errors."""
-    from hive_serde_schema_gen_spark.schema_infer.infer import _fold, _kinds
+    """A PERMISSIVE fold seeded with a schema stands in for one seeded with
+    any wider schema: the tail folded from the seed, joined into the wider
+    schema, is the tail folded from the wider schema, with the same
+    errors."""
+    from hive_serde_schema_gen_spark.schema_infer.infer import _fold
 
     def fold(rows, seed):
         return _fold([_line(r) for r in rows], seed, True, detect_dates)
 
     s = fold(head, Struct())[0]
     t = fold(middle, s)[0]
-    if _kinds(t) != _kinds(s):
-        return
     from_s, from_t = fold(tail, s), fold(tail, t)
-    assert repr(merge(t, from_s[0])) == repr(from_t[0])
+    assert repr(merge(t, from_s[0], permissive=True)) == repr(from_t[0])
     assert from_s[1:] == from_t[1:]
+
+
+# Conflict-heavy input for the PERMISSIVE join: few keys, every kind under
+# every key (ISO dates, so Ts meets Str too), nested arrays and objects, so
+# fields and array elements join to TOP at any depth.
+MIXED_LEAF = NARROW_LEAF | st.booleans() | st.sampled_from(
+    [Decimal("1.50"), Decimal("-0.5"), "2024-01-02", "2024-01-02 03:04:05"]
+)
+MIXED_VALUE = st.recursive(
+    MIXED_LEAF,
+    lambda sub: st.lists(sub, max_size=3) | st.dictionaries(st.sampled_from("ab"), sub, max_size=2),
+    max_leaves=6,
+)
+MIXED_ROW = st.dictionaries(st.sampled_from("abc"), MIXED_VALUE, max_size=3)
+# lines: mostly such rows, then bad JSON and top-level values that are not
+# objects (row-local errors), and a top-level null (no error in any mode)
+PERMISSIVE_LINE = st.one_of(
+    MIXED_ROW.map(_line),
+    NARROW_ROW.map(_line),
+    st.sampled_from(["{broken", '{"a": ', "[1, 2]", "5", '"x"', '[{"a": 1}]', "null"]),
+)
+
+
+@settings(max_examples=500, deadline=None)
+@given(MIXED_VALUE, MIXED_VALUE, MIXED_VALUE, st.booleans())
+@example({"a": 1}, {"a": "x"}, {"a": [1]}, False)
+@example([1, "x"], [[1], ["x"]], [{"a": 1}, {"a": True}], False)
+def test_permissive_join_is_a_semilattice(a, b, c, detect_dates):
+    """The PERMISSIVE join is commutative, associative (field order and
+    bound objects included) and idempotent, and ``TOP`` absorbs every
+    descriptor under the join and under the strict merge alike."""
+    from hive_serde_schema_gen_spark.schema_infer import TOP
+
+    def join(x, y):
+        return merge(x, y, permissive=True)
+
+    da, db, dc = (describe(v, detect_dates=detect_dates, permissive=True) for v in (a, b, c))
+    assert join(da, db) == join(db, da)
+    assert repr(join(join(da, db), dc)) == repr(join(da, join(db, dc)))
+    assert repr(join(da, da)) == repr(da)
+    for d in (da, db, dc):
+        assert join(TOP, d) == join(d, TOP) == merge(TOP, d) == merge(d, TOP) == TOP
+
+
+@settings(max_examples=500, deadline=None)
+@given(
+    st.lists(PERMISSIVE_LINE, max_size=12),
+    st.lists(st.integers(min_value=0, max_value=12), max_size=4),
+    st.booleans(),
+)
+@example(['{"a": 1}', '{"a": "x"}'], [1], False)
+@example(['{"a": [1]}', "[1, 2]", '{"a": ["x"]}', "{broken"], [1, 3], False)
+def test_permissive_fold_does_not_depend_on_the_split(lines, cuts, detect_dates):
+    """A PERMISSIVE fold cut at any points, its pieces folded from the empty
+    schema and joined in order (error lines offset by the lines before),
+    is the one-piece fold: the same descriptor, DDL and error lines."""
+    from hive_serde_schema_gen_spark.schema_infer import EMPTY_STRUCT, render_definition
+    from hive_serde_schema_gen_spark.schema_infer.infer import _fold
+
+    whole, n, errors, err = _fold(lines, EMPTY_STRUCT, True, detect_dates)
+    assert err is None
+    bounds = [0, *sorted(min(c, len(lines)) for c in cuts), len(lines)]
+    joined, joined_errors = EMPTY_STRUCT, []
+    for lo, hi in zip(bounds, bounds[1:]):
+        partial, m, piece_errors, _ = _fold(lines[lo:hi], EMPTY_STRUCT, True, detect_dates)
+        assert m == hi - lo
+        joined = merge(joined, partial, permissive=True)
+        joined_errors += [(lo + line, msg) for line, msg in piece_errors]
+    assert repr(joined) == repr(whole)
+    assert render_definition(joined) == render_definition(whole)
+    assert joined_errors == errors
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(PERMISSIVE_LINE, max_size=10).flatmap(
+    lambda lines: st.tuples(st.just(lines), st.permutations(lines))
+))
+def test_permissive_fold_does_not_depend_on_row_order(pair):
+    """Any order of the same lines gives an equal PERMISSIVE descriptor
+    (field order aside) and the same number of skipped rows."""
+    from hive_serde_schema_gen_spark.schema_infer.infer import _fold
+
+    lines, shuffled = pair
+    a, b = _fold(lines, permissive=True), _fold(shuffled, permissive=True)
+    assert a[0] == b[0]
+    assert len(a[2]) == len(b[2])
 
 
 # JSON text written token by token, so it can hold what json.dumps never
