@@ -8,7 +8,13 @@ from __future__ import annotations
 import argparse
 import sys
 
-from .schema_infer import SchemaGenError, alter_statements, infer_path
+from .schema_infer import (
+    SchemaGenError,
+    alter_statements,
+    infer_ndjson_strings,
+    infer_path,
+)
+from .schema_infer.infer import read_local_lines
 from .schema_infer.lattice import structs_to_maps
 from .session import get_spark
 
@@ -175,7 +181,8 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(
         prog="hive-serde-schema-gen-spark",
         description="Infer the strictest Hive schema for an NDJSON file and "
-        "emit a CREATE TABLE script (distributed via Spark).",
+        "emit a CREATE TABLE script (a small local file is folded in this "
+        "process; anything else by a Spark job).",
     )
     p.add_argument("file", help="NDJSON input path/glob (local or any Hadoop FS)")
     p.add_argument("table", nargs="?", default="data", help="table name (default: data)")
@@ -213,13 +220,21 @@ def main(argv=None) -> int:
     )
     args = p.parse_args(argv)
 
-    spark = get_spark("hive-serde-schema-gen")
+    spark = None
 
     def infer(path):
-        result = infer_path(
-            spark, path, mode=args.mode, sampling_ratio=args.sampling_ratio,
-            detect_dates=args.detect_dates,
-        )
+        # a small local file folds in this process; Spark's sampler has no
+        # local twin, and anything else is Spark's to read
+        nonlocal spark
+        lines = read_local_lines(path) if args.sampling_ratio is None else None
+        if lines is not None:
+            result = infer_ndjson_strings(lines, args.detect_dates, args.mode)
+        else:
+            spark = spark or get_spark("hive-serde-schema-gen")
+            result = infer_path(
+                spark, path, mode=args.mode, sampling_ratio=args.sampling_ratio,
+                detect_dates=args.detect_dates,
+            )
         if args.infer_maps is not None:
             # FILE and OLD_FILE alike, or every mapped column would show
             # up in --evolve-from as a spurious STRUCT->MAP type change

@@ -42,12 +42,20 @@ the split either, and it never runs a second job.
 ``infer_json_column`` applies the same kernel to a DataFrame string column
 (e.g. ``events.props``) via Arrow-batched ``mapInPandas`` — the Spark-idiomatic
 fast path when the JSON is already a column rather than a raw file.
+
+Where Spark does not pay, the kernel runs in the caller's process: the CLI
+reads a small plain local file with :func:`read_local_lines`, which splits
+it exactly as ``sc.textFile`` does, and folds it with
+:func:`infer_ndjson_strings` — no job and no JVM.  Every other input, and
+every library caller of :func:`infer_path`, takes the Spark path above.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import pickle
+import re
 from dataclasses import dataclass, field
 from decimal import Decimal
 from itertools import chain
@@ -156,6 +164,16 @@ def _fold(
 # Fewest bytes in a default split beyond Spark's own default of two, so a
 # small file does not pay a task start-up per core for a millisecond fold.
 _MIN_SPLIT_BYTES = 1 << 20
+# Largest file the CLI folds in its own process (read_local_lines) instead
+# of in a Spark job.  Warm sweep on a 4-core host, perfbench.gen nested
+# lines, median of 5: local fold time over infer_path time was, at
+# 1.7 / 3.4 / 5.1 / 6.8 / 10 / 14 / 27 MB, 0.32 / 0.54 / 0.57 / 0.84 /
+# 0.85 / 0.70 / 0.95 at local[32] (the CLI's default session), and
+# 0.35 / 0.44-0.64 / 0.66-0.71 / 1.07-1.13 / 1.15-1.31 / 1.26-1.57 / 1.94
+# at local[4] under load (an earlier, quieter sweep put that crossover
+# near 13 MB).  A fresh CLI process also pays Spark's start-up, 8-9 s, and
+# then folds even 68 MB faster in-process (6.3 s against 15-18 s).
+_LOCAL_MAX_BYTES = 8 << 20
 
 
 def _input_bytes(sc, path: str) -> int:
@@ -340,16 +358,64 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     return schema
 
 
-def infer_ndjson_strings(lines: Iterable[str], detect_dates: bool = False) -> InferenceResult:
-    """Single-process fold over an iterable of lines (testing / tiny inputs).
-    Semantics identical to the distributed path: a BOM that starts the first
-    line is dropped, as ``sc.textFile`` drops one that starts a file (a BOM
-    on a later line stays, and that line is bad JSON on both paths)."""
+def infer_ndjson_strings(
+    lines: Iterable[str], detect_dates: bool = False, mode: str = "FAILFAST"
+) -> InferenceResult:
+    """Single-process fold over an iterable of lines: the CLI's path for a
+    small local file (:func:`read_local_lines`), and the reference fold in
+    tests.  Semantics identical to :func:`infer_path` on a file of these
+    lines: a BOM that starts the first line is dropped, as ``sc.textFile``
+    drops one that starts a file (a BOM on a later line stays, and that
+    line is bad JSON on both paths); FAILFAST raises the first error with
+    its line number; PERMISSIVE returns the first 20 skipped lines."""
     it = iter(lines)
     first = next(it, None)
     if first is not None:
         it = chain([first.removeprefix("\ufeff")], it)
-    schema, n, _errors, err = _fold(it, EMPTY_STRUCT, False, detect_dates)
+    permissive = mode.upper() == "PERMISSIVE"
+    schema, n, errors, err = _fold(it, EMPTY_STRUCT, permissive, detect_dates)
     if err is not None:
         raise err
-    return InferenceResult(schema, n)
+    return InferenceResult(schema, n, [LineError(line, msg) for line, msg in errors])
+
+
+# Hadoop's line ends: textFile's LineRecordReader ends a line at \r\n, \r or
+# \n, and at nothing else (str.splitlines also splits on \x0b, \x0c, \x1c-\x1e,
+# \x85, \u2028 and \u2029).
+_LINE_BREAK = re.compile("\r\n|\r|\n")
+# What makes textFile read a path other than as one plain local file: glob
+# and path-list syntax or a URI scheme; a name its hidden-file filter skips;
+# a suffix the bundled Hadoop's codec factory decompresses (any case).
+_SPARK_PATH_CHARS = frozenset("*?[]{}\\,:")
+_CODEC_SUFFIXES = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst")
+
+
+def read_local_lines(path: str) -> Optional[List[str]]:
+    """The lines ``sc.textFile(path)`` reads from ``path`` (with a BOM that
+    starts the file still on line 1, for :func:`infer_ndjson_strings` to
+    drop), or None when Spark should read it: ``path`` is not one plain
+    local regular file of valid UTF-8 of at most ``_LOCAL_MAX_BYTES``.
+    Invalid UTF-8 goes to Spark, whose ``Text`` decoding substitutes
+    U+FFFD; so do names textFile hides or decompresses, and globs."""
+    name = os.path.basename(path)
+    if (
+        not _SPARK_PATH_CHARS.isdisjoint(path)
+        or name.startswith((".", "_"))
+        or name.lower().endswith(_CODEC_SUFFIXES)
+        or not os.path.isfile(path)
+    ):
+        return None
+    try:
+        with open(path, "rb") as f:
+            data = f.read(_LOCAL_MAX_BYTES + 1)
+        text = data.decode("utf-8")
+    except (OSError, UnicodeDecodeError):
+        return None
+    if len(data) > _LOCAL_MAX_BYTES:
+        return None
+    lines = _LINE_BREAK.split(text) if "\r" in text else text.split("\n")
+    # no line follows a final line break; and a file that is only a BOM
+    # has none, as Hadoop drops the BOM before it looks for a line
+    if lines[-1] == "" or text == "\ufeff":
+        lines.pop()
+    return lines

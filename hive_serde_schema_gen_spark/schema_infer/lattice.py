@@ -449,8 +449,10 @@ def structs_to_maps(
     parent is considered.  The TOP-LEVEL struct is never rewritten — its
     fields are the table's columns.  A struct whose field types conflict
     (e.g. mixed string/number values) stays a struct: lossy coercion is
-    exactly what this engine refuses to do silently.  All-``UNKNOWN``
-    structs also stay: there is no evidence of a value type to map to."""
+    exactly what this engine refuses to do silently; so does one where a
+    ``TOP`` (PERMISSIVE's mixed-kind field) would absorb a field of another
+    known kind, though strict ``merge`` lets it.  All-``UNKNOWN`` structs
+    also stay: there is no evidence of a value type to map to."""
     if isinstance(desc, Arr):
         return Arr(structs_to_maps(desc.element, threshold, _root=False))
     if isinstance(desc, MapOf):
@@ -467,7 +469,11 @@ def structs_to_maps(
                 unified = merge(unified, v)
         except SchemaGenError:
             unified = None  # heterogeneous values: keep the struct
-        if unified is not None and not isinstance(unified, Unknown):
+        if (
+            unified is not None
+            and not isinstance(unified, Unknown)
+            and not any(_coerces(v, unified) for v in desc.fields.values())
+        ):
             return MapOf(structs_to_maps(unified, threshold, _root=False))
     return Struct(
         {
@@ -475,3 +481,14 @@ def structs_to_maps(
             for k, v in desc.fields.items()
         }
     )
+
+
+def _coerces(d: Descriptor, into: Descriptor) -> bool:
+    """Whether widening ``d`` to ``into`` turns a known kind into ``TOP``."""
+    if type(into) is Top:
+        return not isinstance(d, (Top, Unknown))
+    if isinstance(d, Arr) and isinstance(into, Arr):
+        return _coerces(d.element, into.element)
+    if isinstance(d, Struct) and isinstance(into, Struct):
+        return any(_coerces(v, into.fields[k]) for k, v in d.fields.items())
+    return False

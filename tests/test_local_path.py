@@ -1,0 +1,240 @@
+"""The CLI's in-process path for a small local file equals ``infer_path``.
+
+``read_local_lines`` must split a file exactly as ``sc.textFile`` does, and
+``infer_ndjson_strings`` must fold those lines to the schema, line count,
+PERMISSIVE error lines and FAILFAST message that ``infer_path`` gives for
+the same file.  The routing tests check that every input the local path
+does not take reaches ``infer_path``; they need no Spark.
+"""
+
+import json
+import os
+import random
+import subprocess
+import sys
+
+import pytest
+
+from hive_serde_schema_gen_spark import cli
+from hive_serde_schema_gen_spark.schema_infer import (
+    InferenceResult,
+    SchemaGenError,
+    infer_ndjson_strings,
+    infer_path,
+)
+from hive_serde_schema_gen_spark.schema_infer import infer as infer_mod
+from hive_serde_schema_gen_spark.schema_infer.infer import read_local_lines
+from hive_serde_schema_gen_spark.schema_infer.lattice import EMPTY_STRUCT
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+USERS = os.path.join(ROOT, "tests", "fixtures", "users.json")
+
+BOM = "\ufeff".encode()
+ROWS = [b'{"a": 1, "s": "x"}', b'{"a": 300}', b'{"b": [1, 2]}']
+CASES = {
+    "crlf": b"\r\n".join(ROWS) + b"\r\n",
+    "lone_cr": b"\r".join(ROWS) + b"\r",
+    "mixed_breaks": ROWS[0] + b"\r\n" + ROWS[1] + b"\r" + ROWS[2] + b"\n",
+    "blank_mid": ROWS[0] + b"\n\n" + ROWS[1] + b"\n",
+    "blank_cr_cr": ROWS[0] + b"\r\r" + ROWS[1],
+    "no_trailing_newline": b"\n".join(ROWS),
+    "empty": b"",
+    "only_newline": b"\n",
+    "bom_line_1": BOM + b"\n".join(ROWS) + b"\n",
+    "bom_line_2": ROWS[0] + b"\n" + BOM + ROWS[1] + b"\n",
+    "bom_only": BOM,
+    "bom_then_newline": BOM + b"\n" + ROWS[0],
+    "two_boms": BOM + BOM + ROWS[0] + b"\n",
+    # str.splitlines would cut each of these lines in two
+    "separators_in_strings": "\n".join([
+        '{"s": "a\u0085b"}', '{"s": "a\u2028b", "t": "\u2029"}',
+        '{"s": "a\x0bb"}', '{"s": "a\x0cb"}', '{"s": "\x1c\x1d\x1e"}',
+        '{"s": "ok"}\x0c', '{"s": "tail"}',
+    ]).encode(),
+    "many_errors": b"\n".join(
+        b'{"v": %d}' % i if i % 3 else b"{bad" for i in range(75)
+    ) + b"\n",
+    "row_mismatch": b'{"v": 1}\n{"v": 2}\n{"v": "x"}\n{"v": 3}\n',
+    "nested_mismatch": b'{"o": {"c": 1}}\n{"o": {"c": [1]}}\n',
+    "inconsistent_array": b'{"v": [1]}\n{"v": [1, "x"]}\n',
+    "bad_json": b'{"v": 1}\n{"v": }\n{"v": 2}\n',
+    "non_object": b'{"v": 1}\n[1, 2]\n{"v": 2}\n',
+}
+
+
+def _outcome(infer):
+    try:
+        r = infer()
+    except SchemaGenError as e:
+        return ("error", type(e).__name__, e.line, str(e))
+    return ("ok", repr(r.schema), r.lines, [(e.line, e.message) for e in r.errors])
+
+
+def _local(path, mode):
+    lines = read_local_lines(str(path))
+    assert lines is not None, f"{path} did not take the local path"
+    return infer_ndjson_strings(lines, mode=mode)
+
+
+@pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE"])
+def test_local_path_equals_infer_path(spark, tmp_path, mode):
+    for name, data in CASES.items():
+        path = tmp_path / f"{name}.json"
+        path.write_bytes(data)
+        local = _outcome(lambda: _local(path, mode))
+        for parts in (None, 3):
+            remote = _outcome(lambda: infer_path(spark, str(path), mode=mode,
+                                                 min_partitions=parts))
+            assert local == remote, (name, parts)
+    # the cases reach what they are here for
+    assert _outcome(lambda: _local(tmp_path / "empty.json", mode)) == (
+        "ok", repr(EMPTY_STRUCT), 0, [])
+    many = _outcome(lambda: _local(tmp_path / "many_errors.json", mode))
+    if mode == "PERMISSIVE":
+        assert len(many[3]) == 20 and many[3][-1][0] == 58
+    else:
+        assert many[:3] == ("error", "BadJson", 1)
+        for name, kind, line in (("row_mismatch", "RowMismatch", 3),
+                                 ("inconsistent_array", "InconsistentArray", 2),
+                                 ("bad_json", "BadJson", 2)):
+            assert _outcome(lambda: _local(tmp_path / f"{name}.json", mode))[:3] == (
+                "error", kind, line)
+
+
+def _seeded_file(rng: random.Random) -> bytes:
+    breaks = [b"\n", b"\r", b"\r\n"]
+    text = ["plain", "a\u2028b", "c\u0085d", "e\u2029f", "\x1cg", "h\x1e"]
+    out = []
+    for i in range(rng.randint(5, 40)):
+        row = {"i": i, "s": rng.choice(text)}
+        if rng.random() < 0.3:
+            row["n"] = rng.choice([1, -70000, 2.50, None, True])
+        out.append(json.dumps(row, ensure_ascii=False).encode() + rng.choice(breaks))
+    if rng.random() < 0.5:
+        out[-1] = out[-1].rstrip(b"\r\n")
+    return b"".join(out)
+
+
+def test_seeded_mixed_line_breaks_match_text_file(spark, tmp_path):
+    """Lines are cut at \\n, \\r and \\r\\n only, as textFile cuts them; the
+    strings hold characters ``str.splitlines`` also breaks at."""
+    sc = spark.sparkContext
+    rng = random.Random(20261018)
+    for k in range(12):
+        path = tmp_path / f"mixed_{k}.json"
+        path.write_bytes(_seeded_file(rng))
+        lines = read_local_lines(str(path))
+        assert lines == sc.textFile(str(path), 2).collect(), k
+        for mode in ("FAILFAST", "PERMISSIVE"):
+            assert _outcome(lambda: infer_ndjson_strings(lines, mode=mode)) == _outcome(
+                lambda: infer_path(spark, str(path), mode=mode)), (k, mode)
+
+
+# ---------------------------------------------------------------------------
+# Routing: which inputs the CLI folds itself, which go to infer_path
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture
+def routed(monkeypatch):
+    """Runs ``cli.main`` with ``infer_path`` and ``get_spark`` replaced by
+    recorders; returns the paths that reached ``infer_path``."""
+    calls = []
+
+    def fake_infer_path(spark, path, **kw):
+        calls.append(path)
+        return InferenceResult(EMPTY_STRUCT, 0)
+
+    monkeypatch.setattr(cli, "infer_path", fake_infer_path)
+    monkeypatch.setattr(cli, "get_spark", lambda *a: "session")
+
+    def run(*argv):
+        calls.clear()
+        assert cli.main([str(a) for a in argv]) == 0
+        return list(calls)
+
+    return run
+
+
+def test_small_local_file_stays_in_process(routed, tmp_path, capsys):
+    assert routed(USERS) == []
+    assert "CREATE TABLE data" in capsys.readouterr().out
+    plain = tmp_path / "plain.json"
+    plain.write_text('{"a": 1}\n')
+    assert routed(plain, "t", "--mode", "PERMISSIVE", "--infer-maps", "2") == []
+
+
+def test_spark_inputs_reach_infer_path(routed, tmp_path, monkeypatch):
+    def file(name, data=b'{"a": 1}\n'):
+        path = tmp_path / name
+        path.write_bytes(data)
+        return str(path)
+
+    spark_paths = [file(n) for n in (
+        ".hidden.json", "_under.json", "x.gz", "x.bz2", "x.deflate", "x.lz4",
+        "x.snappy", "x.zst", "X.GZ")]
+    spark_paths.append(file("latin1.json", b'{"a": "caf\xe9"}\n'))
+    spark_paths += [str(tmp_path), str(tmp_path / "missing.json")]
+    for ch in "*?[]{}\\,:":
+        spark_paths.append(file(f"a{ch}b.json"))
+    spark_paths.append("file://" + file("scheme.json"))
+    spark_paths.append(str(tmp_path / "*.json"))
+    spark_paths.append(file("one.json") + "," + file("two.json"))
+    for path in spark_paths:
+        assert routed(path) == [path], path
+
+    small = file("small.json")
+    assert routed(small, "--sampling-ratio", "1.0") == [small]
+    assert routed(small, "--sampling-ratio", "0.5") == [small]
+
+    # the size bound, at a bound of 9 bytes
+    monkeypatch.setattr(infer_mod, "_LOCAL_MAX_BYTES", 9)
+    at_bound, over = file("nine.json", b'{"a": 1}\n'), file("ten.json", b'{"a": 10}\n')
+    assert routed(at_bound) == [] and routed(over) == [over]
+
+    # open() failing sends the file to Spark
+    def refuse(*a, **k):
+        raise PermissionError("denied")
+
+    monkeypatch.setattr(infer_mod, "open", refuse, raising=False)
+    assert read_local_lines(small) is None
+
+
+def test_each_input_is_routed_on_its_own(routed, tmp_path):
+    new, old = tmp_path / "new.json", tmp_path / "old.gz"
+    new.write_text('{"a": 1}\n')
+    old.write_bytes(b"")
+    assert routed(new, "t", "--evolve-from", old) == [str(old)]
+    assert routed(old, "t", "--evolve-from", new) == [str(old)]
+    assert routed(new, "t", "--evolve-from", new) == []
+
+
+# ---------------------------------------------------------------------------
+# No JVM for a small local file; the Spark path prints the same
+# ---------------------------------------------------------------------------
+
+_NO_JVM = """
+import sys
+from hive_serde_schema_gen_spark import cli
+rc = cli.main(sys.argv[1:])
+from pyspark import SparkContext
+assert SparkContext._active_spark_context is None, "a SparkContext was started"
+sys.exit(rc)
+"""
+
+
+def _cli(code, *argv):
+    env = dict(os.environ, PYTHONPATH=ROOT)
+    return subprocess.run([sys.executable, "-c", code, *argv], cwd=ROOT, env=env,
+                          stdout=subprocess.PIPE, stderr=subprocess.PIPE, timeout=300)
+
+
+def test_small_file_starts_no_jvm_and_matches_spark_path():
+    local = _cli(_NO_JVM, USERS, "people")
+    assert local.returncode == 0, local.stderr.decode()[-2000:]
+    assert local.stderr == b""
+    spark = _cli("import sys; from hive_serde_schema_gen_spark import cli; "
+                 "sys.exit(cli.main(sys.argv[1:]))", USERS, "people", "--sampling-ratio", "1.0")
+    assert spark.returncode == 0, spark.stderr.decode()[-2000:]
+    assert spark.stdout == local.stdout
+    assert b"CREATE TABLE people" in local.stdout

@@ -137,6 +137,44 @@ def test_evolve_widens_map_value_type(tmp_path, capsys):
     assert "INCOMPATIBLE" not in out
 
 
+def _permissive_maps(*rows):
+    from hive_serde_schema_gen_spark.schema_infer import infer_ndjson_strings
+
+    lines = [json.dumps(r) for r in rows]
+    schema = infer_ndjson_strings(lines, mode="PERMISSIVE").schema
+    return render_type(structs_to_maps(schema, 2).fields["o"]).split()
+
+
+def test_top_does_not_absorb_a_known_kind_into_a_map():
+    """Under PERMISSIVE a field whose rows disagree on kind is TOP; it must
+    not pull a sibling of another known kind into MAP<STRING, STRING>."""
+    assert _permissive_maps({"o": {"a": 1, "b": 2}}, {"o": {"a": 1, "b": "x"}}) == [
+        "STRUCT<", "a:", "TINYINT,", "b:", "STRING", ">"]
+    # nested: o.a.x is TOP, o.b.x TINYINT
+    assert _permissive_maps({"o": {"a": {"x": 1}, "b": {"x": 2}}},
+                            {"o": {"a": {"x": "q"}, "b": {"x": 3}}})[0] == "STRUCT<"
+    # every field TOP: a map of strings, as before
+    assert _permissive_maps({"o": {"a": 1, "b": 2}}, {"o": {"a": "y", "b": "x"}}) == [
+        "MAP<STRING,", "STRING", ">"]
+    # UNKNOWN still absorbs: TOP and an all-null field map to strings
+    assert _permissive_maps({"o": {"a": 1, "b": None}}, {"o": {"a": "y", "b": None}}) == [
+        "MAP<STRING,", "STRING", ">"]
+    # FAILFAST never yields TOP: a struct of one kind maps as before
+    assert render_type(structs_to_maps(_infer({"o": {"a": 1, "b": 300}}), 2).fields["o"]).split() == [
+        "MAP<STRING,", "SMALLINT", ">"]
+
+
+def test_cli_permissive_conflict_keeps_the_struct(tmp_path, capsys):
+    from hive_serde_schema_gen_spark.cli import main
+
+    p = tmp_path / "o.json"
+    p.write_text('{"o":{"a":1,"b":2}}\n{"o":{"a":1,"b":"x"}}\n')
+    assert main([str(p), "t", "--mode", "PERMISSIVE", "--infer-maps", "2"]) == 0
+    out = capsys.readouterr().out
+    assert "\to STRUCT<\n\t\ta: TINYINT,\n\t\tb: STRING\n\t>" in out
+    assert "MAP<" not in out
+
+
 def test_merge_map_with_nonmap_still_mismatch():
     from hive_serde_schema_gen_spark.schema_infer.errors import RowMismatch
 
