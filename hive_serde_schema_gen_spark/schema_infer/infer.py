@@ -172,7 +172,7 @@ _MIN_SPLIT_BYTES = 1 << 20
 # 0.35 / 0.44-0.64 / 0.66-0.71 / 1.07-1.13 / 1.15-1.31 / 1.26-1.57 / 1.94
 # at local[4] under load (an earlier, quieter sweep put that crossover
 # near 13 MB).  A fresh CLI process also pays Spark's start-up, 8-9 s, and
-# then folds even 68 MB faster in-process (6.3 s against 15-18 s).
+# then folds even 68 MB faster in-process (6.3 s against 10-18 s).
 _LOCAL_MAX_BYTES = 8 << 20
 
 
@@ -408,10 +408,10 @@ def read_local_lines(path: str) -> Optional[List[str]]:
     try:
         with open(path, "rb") as f:
             data = f.read(_LOCAL_MAX_BYTES + 1)
+        if len(data) > _LOCAL_MAX_BYTES:
+            return None
         text = data.decode("utf-8")
     except (OSError, UnicodeDecodeError):
-        return None
-    if len(data) > _LOCAL_MAX_BYTES:
         return None
     lines = _LINE_BREAK.split(text) if "\r" in text else text.split("\n")
     # no line follows a final line break; and a file that is only a BOM
