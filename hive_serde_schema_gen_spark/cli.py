@@ -8,13 +8,8 @@ from __future__ import annotations
 import argparse
 import sys
 
-from .schema_infer import (
-    SchemaGenError,
-    alter_statements,
-    infer_ndjson_strings,
-    infer_path,
-)
-from .schema_infer.infer import read_local_lines
+from .schema_infer import SchemaGenError, alter_statements, infer_path
+from .schema_infer.infer import infer_local_file
 from .schema_infer.lattice import structs_to_maps
 from .session import get_spark
 
@@ -181,8 +176,8 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(
         prog="hive-serde-schema-gen-spark",
         description="Infer the strictest Hive schema for an NDJSON file and "
-        "emit a CREATE TABLE script (a small local file is folded in this "
-        "process; anything else by a Spark job).",
+        "emit a CREATE TABLE script (a small local file is folded on this "
+        "host's cores with no JVM; anything else by a Spark job).",
     )
     p.add_argument("file", help="NDJSON input path/glob (local or any Hadoop FS)")
     p.add_argument("table", nargs="?", default="data", help="table name (default: data)")
@@ -223,13 +218,12 @@ def main(argv=None) -> int:
     spark = None
 
     def infer(path):
-        # a small local file folds in this process; Spark's sampler has no
-        # local twin, and anything else is Spark's to read
+        # a small local file folds on this host's cores with no JVM;
+        # Spark's sampler has no local twin, and anything else is Spark's
         nonlocal spark
-        lines = read_local_lines(path) if args.sampling_ratio is None else None
-        if lines is not None:
-            result = infer_ndjson_strings(lines, args.detect_dates, args.mode)
-        else:
+        result = (infer_local_file(path, args.mode, args.detect_dates)
+                  if args.sampling_ratio is None else None)
+        if result is None:
             spark = spark or get_spark("hive-serde-schema-gen")
             result = infer_path(
                 spark, path, mode=args.mode, sampling_ratio=args.sampling_ratio,

@@ -13,9 +13,12 @@ classic **partial/final distributed aggregation**:
 
 One kernel, :func:`_fold`, is the only parse → observe loop: it folds every
 partition, re-folds a partition on FAILFAST's error path, folds each task of
-:func:`infer_json_column`, and is :func:`infer_ndjson_strings`.  It takes a
-seed schema, and folding lines seeded with the schema of the lines before
-them gives exactly the fold of all of them.
+:func:`infer_json_column` and each chunk of :func:`infer_local_file`, and is
+:func:`infer_ndjson_strings`.  It takes a seed schema, and folding lines
+seeded with the schema of the lines before them gives exactly the fold of
+all of them.  One combine step, :func:`_combine`, turns the folds of a
+file's contiguous pieces into the fold of the file, for Spark's partitions
+and the local chunks alike.
 
 Each partition emits exactly one tiny record (partition id, then the
 kernel's partial schema, line count, sampled errors and first error), so the
@@ -43,23 +46,28 @@ the split either, and it never runs a second job.
 (e.g. ``events.props``) via Arrow-batched ``mapInPandas`` — the Spark-idiomatic
 fast path when the JSON is already a column rather than a raw file.
 
-Where Spark does not pay, the kernel runs in the caller's process: the CLI
-reads a small plain local file with :func:`read_local_lines`, which splits
-it exactly as ``sc.textFile`` does, and folds it with
-:func:`infer_ndjson_strings` — no job and no JVM.  Every other input, and
-every library caller of :func:`infer_path`, takes the Spark path above.
+Where Spark does not pay, the same fold runs with no JVM: the CLI hands a
+small plain local file to :func:`infer_local_file`, which reads it with
+:func:`read_local_lines` (split exactly as ``sc.textFile`` splits it), cuts
+it into one contiguous chunk per usable core (at most one per MiB), folds
+chunk 0 in the calling process and the others in forked children, and
+merges them with :func:`_combine` — a conflicting chunk is re-folded
+in-process instead of by a one-task job.  Every other input, and every
+library caller of :func:`infer_path`, takes the Spark path above.
 """
 
 from __future__ import annotations
 
 import json
+import multiprocessing
 import os
 import pickle
 import re
+from concurrent.futures import ProcessPoolExecutor
 from dataclasses import dataclass, field
 from decimal import Decimal
 from itertools import chain
-from typing import Iterable, List, Optional, Tuple
+from typing import Callable, Iterable, List, Optional, Tuple
 
 from .errors import BadJson, SchemaGenError
 from .lattice import EMPTY_STRUCT, Descriptor, Top, merge, observe
@@ -132,7 +140,10 @@ def _fold(
     returns its error with that local line number set.  PERMISSIVE joins a
     row that conflicts with the schema into it (each conflicting field
     becomes ``TOP``), skips bad JSON and a row that is not an object, and
-    keeps going, keeping the first ``_MAX_ERROR_SAMPLES`` of those errors.  Seeding ``schema`` with what the
+    keeps going, keeping the first ``_MAX_ERROR_SAMPLES`` of those errors.
+    A line nested too deeply to parse or observe within the recursion limit
+    is bad JSON too, so a deep line is reported with its line number, and
+    never before an earlier bad line.  Seeding ``schema`` with what the
     lines before these folded to gives exactly the fold of all of them.
     """
     n = 0
@@ -141,38 +152,47 @@ def _fold(
         n += 1
         try:
             value = parse_line(raw)
-        except ValueError as e:
-            if not permissive:
-                return schema, n, errors, BadJson(raw, str(e), line=n)
-            if len(errors) < _MAX_ERROR_SAMPLES:
-                errors.append((n, "BadJson: " + str(e)))
+            try:
+                schema = observe(schema, value, n, detect_dates)
+            except SchemaGenError as e:
+                if not permissive:
+                    e.raw = value  # the row, so the driver can replay it
+                    return schema, n, errors, e.with_line(n)
+                joined = observe(schema, value, n, detect_dates, permissive=True)
+                if type(joined) is not Top:  # a kind conflict joins in
+                    schema = joined
+                elif len(errors) < _MAX_ERROR_SAMPLES:  # a row that is not an object
+                    errors.append((n, "RowMismatch"))
             continue
-        try:
-            schema = observe(schema, value, n, detect_dates)
-        except SchemaGenError as e:
-            if not permissive:
-                e.raw = value  # the row, so the driver can replay it
-                return schema, n, errors, e.with_line(n)
-            joined = observe(schema, value, n, detect_dates, permissive=True)
-            if type(joined) is not Top:  # a kind conflict joins in
-                schema = joined
-            elif len(errors) < _MAX_ERROR_SAMPLES:  # a row that is not an object
-                errors.append((n, "RowMismatch"))
+        except ValueError as e:  # parse_line's: not JSON
+            cause = str(e)
+        except RecursionError:  # parsed or observed past the stack's depth
+            cause = "nested too deeply for the recursion limit"
+        if not permissive:
+            return schema, n, errors, BadJson(raw, cause, line=n)
+        if len(errors) < _MAX_ERROR_SAMPLES:
+            errors.append((n, "BadJson: " + cause))
     return schema, n, errors, None
 
 
 # Fewest bytes in a default split beyond Spark's own default of two, so a
 # small file does not pay a task start-up per core for a millisecond fold.
 _MIN_SPLIT_BYTES = 1 << 20
-# Largest file the CLI folds in its own process (read_local_lines) instead
-# of in a Spark job.  Warm sweep on a 4-core host, perfbench.gen nested
-# lines, median of 5: local fold time over infer_path time was, at
-# 1.7 / 3.4 / 5.1 / 6.8 / 10 / 14 / 27 MB, 0.32 / 0.54 / 0.57 / 0.84 /
-# 0.85 / 0.70 / 0.95 at local[32] (the CLI's default session), and
-# 0.35 / 0.44-0.64 / 0.66-0.71 / 1.07-1.13 / 1.15-1.31 / 1.26-1.57 / 1.94
-# at local[4] under load (an earlier, quieter sweep put that crossover
-# near 13 MB).  A fresh CLI process also pays Spark's start-up, 8-9 s, and
-# then folds even 68 MB faster in-process (6.3 s against 10-18 s).
+# Largest file the CLI folds with no JVM (infer_local_file) instead of in
+# a Spark job.  Warm sweep on a 4-core host, perfbench.gen nested lines,
+# median of 5, local read+fold time over infer_path time in one process
+# with a live session, at 1.7 / 3.4 / 5.1 / 6.8 / 10 / 14 / 27 MB:
+# - one process: 0.32 / 0.54 / 0.57 / 0.84 / 0.85 / 0.70 / 0.95 at
+#   local[32] (the CLI's default session), and 0.35 / 0.44-0.64 /
+#   0.66-0.71 / 1.07-1.13 / 1.15-1.31 / 1.26-1.57 / 1.94 at local[4]
+#   under load (an earlier, quieter sweep put that crossover near 13 MB);
+# - chunked on 4 cores: 0.23 / 0.32 / 0.38 / 0.34 / 0.33 / 0.30 / 0.31
+#   at local[32], and 0.25 / 0.34 / 0.42 / 0.37 / 0.51 / 0.56 / 0.72 at
+#   local[4] (0.19 s against 0.51 s at 6.8 MB, 0.66 s against 0.91 s at
+#   27 MB).
+# A fresh CLI process also pays Spark's start-up, 8-9 s; the chunked fold
+# takes the 68 MB file in 1.5-1.6 s (4.2-4.7 s in one process).  The
+# bound stays until a cold-CLI metric can measure a second, larger one.
 _LOCAL_MAX_BYTES = 8 << 20
 
 
@@ -246,38 +266,55 @@ def infer_path(
     ).collect()
     recs.sort(key=lambda r: r[0])
 
-    # Prefix-sum the per-partition line counts → global line offsets.
-    offsets = {}
-    total = 0
-    for pid, (_schema, n, _errors, _err) in recs:
-        offsets[pid] = total
-        total += n
+    def refold(pid: int, seed: Descriptor) -> _Fold:
+        [part] = sc.runJob(
+            rdd, lambda it: [_fold(it, seed, False, detect_dates)], partitions=[pid]
+        )
+        return part
 
-    def at(pid: int, local: Optional[int]) -> Optional[int]:
-        return None if sampled else offsets[pid] + local
+    return _combine((part for _pid, part in recs), refold, permissive, detect_dates,
+                    numbered=not sampled)
 
-    # Merge in partition (= file) order.  Where a partition's partial merges
-    # with the schema of the partitions before it, the merge is the fold of
-    # the file up to there; so a FAILFAST partition that stopped at a local
-    # error holds the file's first error, and observing its row into the
-    # merge re-derives it exactly.  A FAILFAST partial that does not merge
-    # is re-folded seeded with that schema (its first conflicting line is
-    # not known).  A PERMISSIVE partial always joins.
+
+def _combine(
+    parts: Iterable[_Fold],
+    refold: Callable[[int, Descriptor], _Fold],
+    permissive: bool,
+    detect_dates: bool,
+    numbered: bool = True,
+) -> InferenceResult:
+    """The fold of a file from the folds of its contiguous chunks, taken in
+    file order: chunk ``i``'s lines are numbered after the prefix sum of the
+    line counts before it (None when not ``numbered``, as for a sample).
+
+    Where a chunk's partial merges with the schema of the chunks before it,
+    the merge is the fold of the file up to there; so a FAILFAST chunk that
+    stopped at a local error holds the file's first error, and observing
+    its row into the merge re-derives it exactly.  A FAILFAST partial that
+    does not merge is re-folded by ``refold(i, seed)``, seeded with that
+    schema (its first conflicting line is not known).  A PERMISSIVE partial
+    always joins.  ``parts`` is consumed lazily, so a chunk after the one
+    that raises is never asked for.
+    """
     schema: Descriptor = EMPTY_STRUCT
     all_errors: List[LineError] = []
-    for pid, (partial, _n, errors, err) in recs:
+    offset = 0
+
+    def at(local: int) -> Optional[int]:
+        return offset + local if numbered else None
+
+    for i, (partial, n, errors, err) in enumerate(parts):
         merged = _merge_or_none(schema, partial, permissive)
         if merged is None:
-            [(partial, _n, errors, err)] = sc.runJob(
-                rdd, lambda it: [_fold(it, schema, False, detect_dates)], partitions=[pid]
-            )
+            partial, _n, errors, err = refold(i, schema)
             merged = merge(schema, partial)
         if err is not None:
-            raise _replay(err, merged, detect_dates).with_line(at(pid, err.line))
+            raise _replay(err, merged, detect_dates).with_line(at(err.line))
         schema = merged
-        all_errors.extend(LineError(at(pid, local), msg) for local, msg in errors)
-    # each partition kept its own first errors, so these are the file's
-    return InferenceResult(schema, total, all_errors[:_MAX_ERROR_SAMPLES])
+        all_errors.extend(LineError(at(local), msg) for local, msg in errors)
+        offset += n
+    # each chunk kept its own first errors, so these are the file's
+    return InferenceResult(schema, offset, all_errors[:_MAX_ERROR_SAMPLES])
 
 
 # ---------------------------------------------------------------------------
@@ -361,13 +398,14 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
 def infer_ndjson_strings(
     lines: Iterable[str], detect_dates: bool = False, mode: str = "FAILFAST"
 ) -> InferenceResult:
-    """Single-process fold over an iterable of lines: the CLI's path for a
-    small local file (:func:`read_local_lines`), and the reference fold in
-    tests.  Semantics identical to :func:`infer_path` on a file of these
-    lines: a BOM that starts the first line is dropped, as ``sc.textFile``
-    drops one that starts a file (a BOM on a later line stays, and that
-    line is bad JSON on both paths); FAILFAST raises the first error with
-    its line number; PERMISSIVE returns the first 20 skipped lines."""
+    """Single-process fold over an iterable of lines: the reference fold
+    that the chunked local fold (:func:`infer_local_file`) and
+    :func:`infer_path` are tested against.  Semantics identical to
+    :func:`infer_path` on a file of these lines: a BOM that starts the
+    first line is dropped, as ``sc.textFile`` drops one that starts a file
+    (a BOM on a later line stays, and that line is bad JSON on both paths);
+    FAILFAST raises the first error with its line number; PERMISSIVE
+    returns the first 20 skipped lines."""
     it = iter(lines)
     first = next(it, None)
     if first is not None:
@@ -392,9 +430,9 @@ _CODEC_SUFFIXES = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst")
 
 def read_local_lines(path: str) -> Optional[List[str]]:
     """The lines ``sc.textFile(path)`` reads from ``path`` (with a BOM that
-    starts the file still on line 1, for :func:`infer_ndjson_strings` to
-    drop), or None when Spark should read it: ``path`` is not one plain
-    local regular file of valid UTF-8 of at most ``_LOCAL_MAX_BYTES``.
+    starts the file still on line 1, for the fold to drop), or None when
+    Spark should read it: ``path`` is not one plain local regular file of
+    valid UTF-8 of at most ``_LOCAL_MAX_BYTES``.
     Invalid UTF-8 goes to Spark, whose ``Text`` decoding substitutes
     U+FFFD; so do names textFile hides or decompresses, and globs."""
     name = os.path.basename(path)
@@ -419,3 +457,86 @@ def read_local_lines(path: str) -> Optional[List[str]]:
     if lines[-1] == "" or text == "\ufeff":
         lines.pop()
     return lines
+
+
+def infer_local_file(
+    path: str, mode: str = "FAILFAST", detect_dates: bool = False
+) -> Optional[InferenceResult]:
+    """What :func:`infer_path` infers from ``path``, folded on this host's
+    cores with no JVM; or None when Spark should read ``path`` (see
+    :func:`read_local_lines`).  The file is cut into one contiguous chunk
+    per usable core, but no more chunks than MiB of input, so a file of at
+    most 1 MiB is folded in this process alone."""
+    lines = read_local_lines(path)
+    if lines is None:
+        return None
+    by_size = -(-os.path.getsize(path) // _MIN_SPLIT_BYTES)
+    k = max(1, min(_usable_cpus(), by_size))
+    return _fold_chunks(lines, k, mode.upper() == "PERMISSIVE", detect_dates)
+
+
+def _usable_cpus() -> int:
+    affinity = getattr(os, "sched_getaffinity", None)
+    return len(affinity(0)) if affinity else os.cpu_count() or 1
+
+
+# A forked chunk worker's view of the file's lines, set by _inherit in the
+# child only.  The list is inherited at fork time, so only each chunk's
+# (start, end) bounds cross the call queue; a spawned worker would unpickle
+# the whole list and import the package first.  The children run only the
+# fold kernel, which takes no lock a thread of the parent (a live Spark
+# session's, say) could hold at the fork.
+_INHERITED: List[str] = []
+
+
+def _inherit(lines: List[str]) -> None:
+    global _INHERITED
+    _INHERITED = lines
+
+
+def _fold_span(start: int, end: int, permissive: bool, detect_dates: bool) -> _Fold:
+    return _fold(_INHERITED[start:end], EMPTY_STRUCT, permissive, detect_dates)
+
+
+def _fold_chunks(
+    lines: List[str], k: int, permissive: bool, detect_dates: bool
+) -> InferenceResult:
+    """Fold a file's ``lines`` as ``k`` contiguous chunks and combine them
+    as :func:`infer_path` combines its partitions.  Chunk 0 folds in this
+    process and the others in ``k - 1`` forked children, which inherit
+    ``lines``; a re-fold runs here.  Where ``fork`` is not available every
+    chunk folds here.  A BOM that starts the first line is dropped, as
+    ``sc.textFile`` drops one that starts a file."""
+    if lines and lines[0].startswith("\ufeff"):
+        lines = [lines[0][1:], *lines[1:]]
+    bounds = [len(lines) * i // k for i in range(k + 1)]
+
+    def chunk(i: int) -> List[str]:
+        return lines[bounds[i]:bounds[i + 1]]
+
+    def fold(i: int) -> _Fold:
+        return _fold(chunk(i), EMPTY_STRUCT, permissive, detect_dates)
+
+    def refold(i: int, seed: Descriptor) -> _Fold:
+        return _fold(chunk(i), seed, False, detect_dates)
+
+    if k == 1 or "fork" not in multiprocessing.get_all_start_methods():
+        return _combine(map(fold, range(k)), refold, permissive, detect_dates)
+    with ProcessPoolExecutor(
+        k - 1, mp_context=multiprocessing.get_context("fork"),
+        initializer=_inherit, initargs=(lines,),
+    ) as pool:
+        futures = [
+            pool.submit(_fold_span, bounds[i], bounds[i + 1], permissive, detect_dates)
+            for i in range(1, k)
+        ]
+
+        def parts():
+            yield fold(0)
+            # a chunk whose child could not fold or send it (a partial
+            # nested too deeply to pickle, a killed worker) folds here,
+            # where an error of its own is raised in file order
+            for i, future in enumerate(futures, 1):
+                yield fold(i) if future.exception() else future.result()
+
+        return _combine(parts(), refold, permissive, detect_dates)

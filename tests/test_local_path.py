@@ -1,10 +1,13 @@
-"""The CLI's in-process path for a small local file equals ``infer_path``.
+"""The CLI's JVM-free path for a small local file equals ``infer_path``.
 
 ``read_local_lines`` must split a file exactly as ``sc.textFile`` does, and
 ``infer_ndjson_strings`` must fold those lines to the schema, line count,
 PERMISSIVE error lines and FAILFAST message that ``infer_path`` gives for
-the same file.  The routing tests check that every input the local path
-does not take reaches ``infer_path``; they need no Spark.
+the same file.  The chunked local fold (``infer_local_file``, forked
+children merged by ``infer_path``'s combine step) must give the same at
+any chunk count, and leave no process behind.  The routing tests check
+that every input the local path does not take reaches ``infer_path``;
+they need no Spark.
 """
 
 import json
@@ -238,3 +241,253 @@ def test_small_file_starts_no_jvm_and_matches_spark_path():
     assert spark.returncode == 0, spark.stderr.decode()[-2000:]
     assert spark.stdout == local.stdout
     assert b"CREATE TABLE people" in local.stdout
+
+
+# ---------------------------------------------------------------------------
+# The chunked local fold: contiguous chunks, forked children, one combine
+# ---------------------------------------------------------------------------
+
+CHUNKS = (1, 2, 3, 4, 8)
+
+
+def _chunked(lines, k, mode):
+    return infer_mod._fold_chunks(lines, k, mode == "PERMISSIVE", False)
+
+
+def _case_lines(tmp_path, name, data):
+    path = tmp_path / f"{name}.json"
+    path.write_bytes(data)
+    lines = read_local_lines(str(path))
+    assert lines is not None, name
+    return lines
+
+
+def _children():
+    """Pids of this process's live children, from /proc (Linux only)."""
+    pids = set()
+    try:
+        for task in os.listdir("/proc/self/task"):
+            with open(f"/proc/self/task/{task}/children") as f:
+                pids.update(int(p) for p in f.read().split())
+    except OSError:
+        pass
+    return pids
+
+
+@pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE"])
+def test_chunked_fold_equals_single_process(tmp_path, mode):
+    for name, data in CASES.items():
+        lines = _case_lines(tmp_path, name, data)
+        want = _outcome(lambda: infer_ndjson_strings(lines, mode=mode))
+        for k in CHUNKS:
+            assert _outcome(lambda: _chunked(lines, k, mode)) == want, (name, k)
+
+
+def _rows(n, bad=()):
+    """``n`` NDJSON lines; line numbers in ``bad`` (1-based) map to their
+    replacement text."""
+    bad = dict(bad)
+    return [bad.get(i, json.dumps({"i": i, "o": {"s": "x" * (i % 7)}}))
+            for i in range(1, n + 1)]
+
+
+@pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE"])
+def test_chunk_edges(mode):
+    # 12 lines in 3 chunks: lines 1-4, 5-8, 9-12
+    cases = {
+        "bad_first_of_chunk": _rows(12, {5: "{bad"}),
+        "bad_last_of_chunk": _rows(12, {8: "{bad"}),
+        "bad_first_and_last_line": _rows(12, {1: "[1]", 12: "{bad"}),
+        "mismatch_first_of_chunk": _rows(12, {9: '{"i": "x"}'}),
+        "mismatch_last_of_chunk": _rows(12, {4: '{"o": 1}', 8: '{"i": [1]}'}),
+        "bom_line_1": ["\ufeff" + ln if i == 0 else ln for i, ln in enumerate(_rows(12))],
+        # a partial too deep to pickle back from a child: folded here
+        "deep_partial": _rows(12, {10: '{"a":' * 300 + "1" + "}" * 300}),
+    }
+    for name, lines in cases.items():
+        want = _outcome(lambda: infer_ndjson_strings(lines, mode=mode))
+        for k in CHUNKS:
+            assert _outcome(lambda: _chunked(lines, k, mode)) == want, (name, k)
+    assert _outcome(lambda: _chunked(cases["bom_line_1"], 3, mode))[0] == "ok"
+    if mode == "FAILFAST":
+        for name, line in (("bad_first_of_chunk", 5), ("bad_last_of_chunk", 8),
+                           ("mismatch_first_of_chunk", 9), ("mismatch_last_of_chunk", 4)):
+            assert _outcome(lambda: _chunked(cases[name], 3, mode))[2] == line, name
+
+
+def test_conflict_across_chunks_takes_the_seeded_refold(monkeypatch):
+    # chunk 2 (lines 9-12) folds cleanly on its own, but its "x" conflicts
+    # with the number the chunks before it typed
+    lines = _rows(12, {i: '{"i": "x"}' for i in range(9, 13)})
+    want = _outcome(lambda: infer_ndjson_strings(lines))
+    assert want[:3] == ("error", "RowMismatch", 9)
+    seeds = []
+    fold = infer_mod._fold
+
+    def spy(chunk, schema=EMPTY_STRUCT, *a, **k):
+        seeds.append(schema)
+        return fold(chunk, schema, *a, **k)
+
+    monkeypatch.setattr(infer_mod, "_fold", spy)
+    assert _outcome(lambda: _chunked(lines, 3, "FAILFAST")) == want
+    # this process folded chunk 0, then re-folded chunk 2 seeded
+    assert len(seeds) == 2 and seeds[0] == EMPTY_STRUCT and seeds[1] != EMPTY_STRUCT
+
+
+def test_worker_exception_never_overtakes_an_earlier_error(monkeypatch):
+    fold = infer_mod._fold
+
+    def boom(chunk, *a, **k):
+        if any("boom" in ln for ln in chunk):
+            raise RuntimeError("boom")
+        return fold(chunk, *a, **k)
+
+    monkeypatch.setattr(infer_mod, "_fold", boom)
+    # 16 lines in 4 chunks; the file's first error is in chunk 1, the
+    # raising line in chunk 3
+    lines = _rows(16, {6: "{bad", 14: '{"boom": 1}'})
+    err = _outcome(lambda: _chunked(lines, 4, "FAILFAST"))
+    assert err[:3] == ("error", "BadJson", 6)
+    # with no earlier error, the raising chunk's exception is what surfaces
+    for mode in ("FAILFAST", "PERMISSIVE"):
+        with pytest.raises(RuntimeError, match="boom"):
+            _chunked(_rows(16, {14: '{"boom": 1}'}), 4, mode)
+    assert infer_mod.multiprocessing.active_children() == []
+
+
+def test_without_fork_every_chunk_folds_here(monkeypatch, tmp_path):
+    def no_pool(*a, **k):
+        raise AssertionError("a process pool was started")
+
+    monkeypatch.setattr(infer_mod.multiprocessing, "get_all_start_methods",
+                        lambda: ["spawn"])
+    monkeypatch.setattr(infer_mod, "ProcessPoolExecutor", no_pool)
+    monkeypatch.setattr(infer_mod, "_usable_cpus", lambda: 4)
+    for mode in ("FAILFAST", "PERMISSIVE"):
+        lines = _rows(40, {17: "{bad", 30: '{"i": "x"}'})
+        want = _outcome(lambda: infer_ndjson_strings(lines, mode=mode))
+        for k in CHUNKS:
+            assert _outcome(lambda: _chunked(lines, k, mode)) == want, (mode, k)
+    big = tmp_path / "big.json"
+    big.write_text("\n".join(_rows(40_000)) + "\n")
+    assert os.path.getsize(big) > 1 << 20
+    assert infer_mod.infer_local_file(str(big)).lines == 40_000
+
+
+def test_small_file_forks_nothing(monkeypatch, tmp_path):
+    pools = []
+    real = infer_mod.ProcessPoolExecutor
+
+    def spy(*a, **k):
+        pools.append(a)
+        return real(*a, **k)
+
+    monkeypatch.setattr(infer_mod, "ProcessPoolExecutor", spy)
+    monkeypatch.setattr(infer_mod, "_usable_cpus", lambda: 4)
+    row, n = b'{"a": 1}\n', (1 << 20) // 9
+    at_bound = tmp_path / "one_mib.json"
+    at_bound.write_bytes(b'{"a": 1' + b" " * ((1 << 20) % 9) + b'}\n' + row * (n - 1))
+    assert os.path.getsize(at_bound) == 1 << 20
+    assert infer_mod.infer_local_file(str(at_bound)).lines == n
+    assert pools == []
+    over = tmp_path / "over.json"
+    over.write_bytes(at_bound.read_bytes() + row)
+    assert infer_mod.infer_local_file(str(over)).lines == n + 1
+    assert pools == [(1,)]  # 2 chunks: this process and one child
+
+
+def test_no_child_outlives_cli_main(monkeypatch, tmp_path, capsys):
+    monkeypatch.setattr(infer_mod, "_usable_cpus", lambda: 4)
+    before = _children()
+    good = tmp_path / "good.json"
+    good.write_text("\n".join(_rows(120_000)) + "\n")
+    bad = tmp_path / "bad.json"
+    bad.write_text("\n".join(_rows(120_000, {119_000: "{bad"})) + "\n")
+    assert os.path.getsize(bad) > 3 << 20  # 4 chunks
+    assert cli.main([str(good)]) == 0
+    assert cli.main([str(bad)]) == 1
+    assert "On the line 119000 " in capsys.readouterr().err
+    fold = infer_mod._fold
+
+    def interrupt(chunk, *a, **k):
+        if os.getpid() == parent:
+            raise KeyboardInterrupt
+        return fold(chunk, *a, **k)
+
+    parent = os.getpid()
+    monkeypatch.setattr(infer_mod, "_fold", interrupt)
+    with pytest.raises(KeyboardInterrupt):
+        cli.main([str(good)])
+    assert infer_mod.multiprocessing.active_children() == []
+    assert _children() <= before
+
+
+# lines 1-2 conflict; a later partition holds a line too deep to parse
+DEEP = [b'{"v":1}', b'{"v":"x"}'] + [b'{"w": %d}' % i for i in range(20_000)] + [
+    b'{"a":' * 100_000 + b"1" + b"}" * 100_000]
+
+
+@pytest.fixture
+def default_recursion_limit():
+    """CPython's default limit, the one the CLI's process and Spark's
+    Python workers run at (a test run can leave it raised)."""
+    old = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    yield
+    sys.setrecursionlimit(old)
+
+
+@pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE"])
+def test_deep_line_is_bad_json_in_file_order(spark, tmp_path, mode, default_recursion_limit):
+    path = tmp_path / "deep.json"
+    path.write_bytes(b"\n".join(DEEP) + b"\n")
+    lines = read_local_lines(str(path))
+    local = _outcome(lambda: infer_mod.infer_local_file(str(path), mode))
+    for k in CHUNKS:
+        assert _outcome(lambda: _chunked(lines, k, mode)) == local, k
+    assert _outcome(lambda: infer_path(spark, str(path), mode=mode)) == local
+    if mode == "FAILFAST":
+        assert local[:3] == ("error", "RowMismatch", 2)
+    else:
+        assert local[3] == [(20_003, "BadJson: nested too deeply for the recursion limit")]
+    # a lone line that parses but is too deep to observe
+    lone = tmp_path / "lone.json"
+    lone.write_bytes(b'{"a":' * 600 + b"1" + b"}" * 600 + b"\n")
+    got = _outcome(lambda: infer_mod.infer_local_file(str(lone), mode))
+    assert _outcome(lambda: infer_path(spark, str(lone), mode=mode)) == got
+    if mode == "FAILFAST":
+        assert got[:3] == ("error", "BadJson", 1) and "recursion limit" in got[3]
+
+
+@pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE"])
+def test_chunked_fold_equals_infer_path(spark, tmp_path, mode):
+    files = dict(CASES)
+    files["edges"] = "\n".join(_rows(4_000, {1_000: "{bad", 2_001: '{"i": "x"}',
+                                             3_000: "[1]"})).encode()
+    for name, data in files.items():
+        lines = _case_lines(tmp_path, name, data)
+        want = _outcome(lambda: infer_path(spark, str(tmp_path / f"{name}.json"),
+                                           mode=mode, min_partitions=3))
+        for k in CHUNKS:
+            assert _outcome(lambda: _chunked(lines, k, mode)) == want, (name, k)
+
+
+def test_large_file_starts_no_jvm_and_matches_spark_path(tmp_path):
+    rng = random.Random(20261018)
+    rows = [json.dumps({"i": i, "u": {"name": "n" * rng.randint(0, 30),
+                                      "tags": [rng.random() for _ in range(rng.randint(0, 3))]},
+                        "f": rng.choice([1, 2.5, None, True, "s"]) if i % 9 else 7},
+                       separators=(",", ":"))
+            for i in range(30_000)]
+    path = tmp_path / "large.json"
+    path.write_text("\n".join(rows) + "\n")
+    assert os.path.getsize(path) > 2 << 20
+    local = _cli(_NO_JVM, path, "t", "--mode", "PERMISSIVE")
+    assert local.returncode == 0, local.stderr.decode()[-2000:]
+    assert local.stderr == b""
+    spark = _cli("import sys; from hive_serde_schema_gen_spark import cli; "
+                 "sys.exit(cli.main(sys.argv[1:]))", path, "t", "--mode", "PERMISSIVE",
+                 "--sampling-ratio", "1.0")
+    assert spark.returncode == 0, spark.stderr.decode()[-2000:]
+    assert spark.stdout == local.stdout
+    assert b"CREATE TABLE t" in local.stdout
