@@ -67,23 +67,6 @@ _U_BITS = 52
 _U_SCALE = float(1 << _U_BITS)
 
 
-def _gram_hash(col: F.Column, salt_str: str, hash_fn: str) -> F.Column:
-    """64-bit gram hash — same scheme as ``embedding._gram_hash``:
-    ``xxhash64`` production, ``md5`` (first 8 hex digits → int) solely so
-    the DuckDB oracle reproduces bucket ids bit-for-bit."""
-    if hash_fn == "xxhash64":
-        return F.xxhash64(F.lit(salt_str), col)
-    if hash_fn == "md5":
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt_str + "|"), col).cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-
 def _grams(text_col: str, bigrams: bool) -> F.Column:
     """Lowercased whitespace unigrams + (optionally) adjacent bigrams
     joined with a single space — the ``embed_text`` gram construction
@@ -109,6 +92,15 @@ def _grams(text_col: str, bigrams: bool) -> F.Column:
     )
 
 
+def _bucket(salt: str, hash_fn: str, m: int) -> F.Column:
+    """Bucket of the gram column ``__g``: ``hash(salt, gram) mod m`` with
+    ``embedding._gram_hash``, so DSIR and ``embed_text`` hash grams alike
+    (imported here for the cycle ``_grams`` names: embedding imports text)."""
+    from .embedding import _gram_hash
+
+    return F.pmod(_gram_hash(F.col("__g"), salt, hash_fn), F.lit(m)).cast("int")
+
+
 def hashed_gram_tf(
     d: DataFrame,
     m: int = 4096,
@@ -127,7 +119,7 @@ def hashed_gram_tf(
         F.col(id_col).alias(id_col),
         F.explode(_grams(text_col, bigrams)).alias("__g"),
     )
-    b = F.pmod(_gram_hash(F.col("__g"), salt, hash_fn), F.lit(m)).cast("int")
+    b = _bucket(salt, hash_fn, m)
     return (
         g.select(id_col, b.alias("b"))
         .groupBy(id_col, "b")
@@ -148,7 +140,7 @@ def fit_hash_counts(
     Both are lazy DataFrames; persist to parquet to amortize the fit
     across selection runs (the BM25-index artifact pattern)."""
     g = d.select(F.explode(_grams(text_col, bigrams)).alias("__g"))
-    b = F.pmod(_gram_hash(F.col("__g"), salt, hash_fn), F.lit(m)).cast("int")
+    b = _bucket(salt, hash_fn, m)
     counts = g.select(b.alias("b")).groupBy("b").agg(
         F.count(F.lit(1)).alias("c")
     )

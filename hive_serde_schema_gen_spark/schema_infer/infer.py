@@ -13,12 +13,12 @@ classic **partial/final distributed aggregation**:
 
 One kernel, :func:`_fold`, is the only parse → observe loop: it folds every
 partition, re-folds a partition on FAILFAST's error path, folds each task of
-:func:`infer_json_column` and each chunk of :func:`infer_local_file`, and is
-:func:`infer_ndjson_strings`.  It takes a seed schema, and folding lines
-seeded with the schema of the lines before them gives exactly the fold of
-all of them.  One combine step, :func:`_combine`, turns the folds of a
+:func:`infer_json_column` and each byte range of :func:`infer_local_file`,
+and is :func:`infer_ndjson_strings`.  It takes a seed schema, and folding
+lines seeded with the schema of the lines before them gives exactly the
+fold of all of them.  One combine step, :func:`_combine`, turns the folds of a
 file's contiguous pieces into the fold of the file, for Spark's partitions
-and the local chunks alike.
+and the local byte ranges alike.
 
 Each partition emits exactly one tiny record (partition id, then the
 kernel's partial schema, line count, sampled errors and first error), so the
@@ -47,13 +47,15 @@ the split either, and it never runs a second job.
 fast path when the JSON is already a column rather than a raw file.
 
 Where Spark does not pay, the same fold runs with no JVM: the CLI hands a
-small plain local file to :func:`infer_local_file`, which reads it with
-:func:`read_local_lines` (split exactly as ``sc.textFile`` splits it), cuts
-it into one contiguous chunk per usable core (at most one per MiB), folds
-chunk 0 in the calling process and the others in forked children, and
-merges them with :func:`_combine` — a conflicting chunk is re-folded
-in-process instead of by a one-task job.  Every other input, and every
-library caller of :func:`infer_path`, takes the Spark path above.
+small plain local file to :func:`infer_local_file`, which cuts it into one
+contiguous byte range per usable core (at most one per MiB), each cut moved
+forward to a line start as ``textFile``'s splits are.  The calling process
+folds range 0 and forked children fold the others; each reads, decodes and
+splits only its own range (:func:`_read_range`, split exactly as
+``sc.textFile`` splits lines), so no process holds the whole file.
+:func:`_combine` merges the folds; a conflicting range is re-read and
+re-folded in-process instead of by a one-task job.  Every other input, and
+every library caller of :func:`infer_path`, takes the Spark path above.
 """
 
 from __future__ import annotations
@@ -67,7 +69,7 @@ from concurrent.futures import ProcessPoolExecutor
 from dataclasses import dataclass, field
 from decimal import Decimal
 from itertools import chain
-from typing import Callable, Iterable, List, Optional, Tuple
+from typing import BinaryIO, Callable, Iterable, List, Optional, Tuple
 
 from .errors import BadJson, SchemaGenError
 from .lattice import EMPTY_STRUCT, Descriptor, Top, merge, observe
@@ -179,9 +181,11 @@ def _fold(
 # small file does not pay a task start-up per core for a millisecond fold.
 _MIN_SPLIT_BYTES = 1 << 20
 # Largest file the CLI folds with no JVM (infer_local_file) instead of in
-# a Spark job.  Warm sweep on a 4-core host, perfbench.gen nested lines,
-# median of 5, local read+fold time over infer_path time in one process
-# with a live session, at 1.7 / 3.4 / 5.1 / 6.8 / 10 / 14 / 27 MB:
+# a Spark job.  It decides only where Spark pays, not memory: each process
+# of the local fold holds one byte range, never the whole file.  Warm
+# sweep on a 4-core host, perfbench.gen nested lines, median of 5, local
+# read+fold time over infer_path time in one process with a live session,
+# at 1.7 / 3.4 / 5.1 / 6.8 / 10 / 14 / 27 MB:
 # - one process: 0.32 / 0.54 / 0.57 / 0.84 / 0.85 / 0.70 / 0.95 at
 #   local[32] (the CLI's default session), and 0.35 / 0.44-0.64 /
 #   0.66-0.71 / 1.07-1.13 / 1.15-1.31 / 1.26-1.57 / 1.94 at local[4]
@@ -419,8 +423,12 @@ def infer_ndjson_strings(
 
 # Hadoop's line ends: textFile's LineRecordReader ends a line at \r\n, \r or
 # \n, and at nothing else (str.splitlines also splits on \x0b, \x0c, \x1c-\x1e,
-# \x85, \u2028 and \u2029).
+# \x85, \u2028 and \u2029).  The same, in a file's bytes: none is a byte of
+# a multi-byte UTF-8 character, so a range cut after one decodes on its own.
 _LINE_BREAK = re.compile("\r\n|\r|\n")
+_BYTE_BREAK = re.compile(rb"\r\n|\r|\n")
+# Bytes read per step while moving a cut to the next line start.
+_SCAN_BYTES = 1 << 16
 # What makes textFile read a path other than as one plain local file: glob
 # and path-list syntax or a URI scheme; a name its hidden-file filter skips;
 # a suffix the bundled Hadoop's codec factory decompresses (any case).
@@ -428,13 +436,17 @@ _SPARK_PATH_CHARS = frozenset("*?[]{}\\,:")
 _CODEC_SUFFIXES = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst")
 
 
-def read_local_lines(path: str) -> Optional[List[str]]:
-    """The lines ``sc.textFile(path)`` reads from ``path`` (with a BOM that
-    starts the file still on line 1, for the fold to drop), or None when
-    Spark should read it: ``path`` is not one plain local regular file of
-    valid UTF-8 of at most ``_LOCAL_MAX_BYTES``.
-    Invalid UTF-8 goes to Spark, whose ``Text`` decoding substitutes
-    U+FFFD; so do names textFile hides or decompresses, and globs."""
+def infer_local_file(
+    path: str, mode: str = "FAILFAST", detect_dates: bool = False
+) -> Optional[InferenceResult]:
+    """What :func:`infer_path` infers from ``path``, folded on this host's
+    cores with no JVM; or None when Spark should read ``path``: it is not
+    one plain local regular file of valid UTF-8 of at most
+    ``_LOCAL_MAX_BYTES``.  Invalid UTF-8 goes to Spark, whose ``Text``
+    decoding substitutes U+FFFD; so do names textFile hides or decompresses,
+    and globs.  The file is cut into one contiguous byte range per usable
+    core, but no more ranges than MiB of input, so a file of at most 1 MiB
+    is folded in this process alone."""
     name = os.path.basename(path)
     if (
         not _SPARK_PATH_CHARS.isdisjoint(path)
@@ -445,34 +457,14 @@ def read_local_lines(path: str) -> Optional[List[str]]:
         return None
     try:
         with open(path, "rb") as f:
-            data = f.read(_LOCAL_MAX_BYTES + 1)
-        if len(data) > _LOCAL_MAX_BYTES:
-            return None
-        text = data.decode("utf-8")
-    except (OSError, UnicodeDecodeError):
+            size = os.fstat(f.fileno()).st_size
+            if size > _LOCAL_MAX_BYTES:
+                return None
+            k = max(1, min(_usable_cpus(), -(-size // _MIN_SPLIT_BYTES)))
+            cuts = _cuts(f, size, k)
+    except OSError:
         return None
-    lines = _LINE_BREAK.split(text) if "\r" in text else text.split("\n")
-    # no line follows a final line break; and a file that is only a BOM
-    # has none, as Hadoop drops the BOM before it looks for a line
-    if lines[-1] == "" or text == "\ufeff":
-        lines.pop()
-    return lines
-
-
-def infer_local_file(
-    path: str, mode: str = "FAILFAST", detect_dates: bool = False
-) -> Optional[InferenceResult]:
-    """What :func:`infer_path` infers from ``path``, folded on this host's
-    cores with no JVM; or None when Spark should read ``path`` (see
-    :func:`read_local_lines`).  The file is cut into one contiguous chunk
-    per usable core, but no more chunks than MiB of input, so a file of at
-    most 1 MiB is folded in this process alone."""
-    lines = read_local_lines(path)
-    if lines is None:
-        return None
-    by_size = -(-os.path.getsize(path) // _MIN_SPLIT_BYTES)
-    k = max(1, min(_usable_cpus(), by_size))
-    return _fold_chunks(lines, k, mode.upper() == "PERMISSIVE", detect_dates)
+    return _fold_ranges(path, cuts, mode.upper() == "PERMISSIVE", detect_dates)
 
 
 def _usable_cpus() -> int:
@@ -480,63 +472,134 @@ def _usable_cpus() -> int:
     return len(affinity(0)) if affinity else os.cpu_count() or 1
 
 
-# A forked chunk worker's view of the file's lines, set by _inherit in the
-# child only.  The list is inherited at fork time, so only each chunk's
-# (start, end) bounds cross the call queue; a spawned worker would unpickle
-# the whole list and import the package first.  The children run only the
-# fold kernel, which takes no lock a thread of the parent (a live Spark
-# session's, say) could hold at the fork.
-_INHERITED: List[str] = []
+def _cuts(f: BinaryIO, size: int, k: int) -> List[int]:
+    """The bounds of ``k`` contiguous byte ranges of the ``size``-byte file
+    ``f``: 0, then each ``i * size // k`` moved forward to the next
+    line start, then ``size``.  A range may be empty (a line longer than a
+    range) and never splits a line, a ``\\r\\n`` or a UTF-8 character."""
+    cuts = [0]
+    for i in range(1, k):
+        cuts.append(_line_start(f, max(size * i // k, cuts[-1]), size))
+    return cuts + [size]
 
 
-def _inherit(lines: List[str]) -> None:
-    global _INHERITED
-    _INHERITED = lines
+def _line_start(f: BinaryIO, t: int, size: int) -> int:
+    """The first line start at or after byte ``t`` of the file ``f``:
+    ``t`` itself when the byte before it ends a line (a ``\\r`` that
+    a ``\\n`` follows does not), or ``size`` when no line starts after ``t``.
+    Reads from byte ``t - 1`` to the next line break, in blocks: a file
+    cut shorter under an ``mmap`` would kill this process with SIGBUS,
+    where a short read here only leaves a range for its reader to find
+    short."""
+    if t == 0:
+        return 0
+    pos = t - 1
+    while True:
+        f.seek(pos)
+        block = f.read(min(_SCAN_BYTES, size - pos))
+        m = _BYTE_BREAK.search(block)
+        last = len(block) < _SCAN_BYTES  # the file's end is in this block
+        # a break that ends the block may be a \r whose \n comes next
+        if m and (last or m.end() < len(block)):
+            return pos + m.end()
+        if last:
+            return size
+        pos += len(block) - 1
 
 
-def _fold_span(start: int, end: int, permissive: bool, detect_dates: bool) -> _Fold:
-    return _fold(_INHERITED[start:end], EMPTY_STRUCT, permissive, detect_dates)
+def _read_range(path: str, start: int, end: int) -> Optional[List[str]]:
+    """The lines ``sc.textFile`` reads from bytes ``[start, end)`` of
+    ``path``, cut at line starts (a BOM that starts the file stays on line
+    1, for the fold to drop; a file that is only a BOM has no line, as
+    Hadoop drops the BOM before it looks for one); or None when the bytes
+    are not valid UTF-8 or the file no longer holds them all.  Reads
+    exactly ``end - start`` bytes: the caller has checked the size."""
+    try:
+        with open(path, "rb") as f:
+            f.seek(start)
+            data = f.read(end - start)
+        if len(data) < end - start:  # the file shrank after it was cut
+            return None
+        text = data.decode("utf-8")
+    except (OSError, UnicodeDecodeError):
+        return None
+    del data  # the bytes go before the lines are built
+    lines = _LINE_BREAK.split(text) if "\r" in text else text.split("\n")
+    # no line follows a final line break
+    if lines[-1] == "" or (start == 0 and text == "\ufeff"):
+        lines.pop()
+    return lines
 
 
-def _fold_chunks(
-    lines: List[str], k: int, permissive: bool, detect_dates: bool
-) -> InferenceResult:
-    """Fold a file's ``lines`` as ``k`` contiguous chunks and combine them
-    as :func:`infer_path` combines its partitions.  Chunk 0 folds in this
-    process and the others in ``k - 1`` forked children, which inherit
-    ``lines``; a re-fold runs here.  Where ``fork`` is not available every
-    chunk folds here.  A BOM that starts the first line is dropped, as
-    ``sc.textFile`` drops one that starts a file."""
-    if lines and lines[0].startswith("\ufeff"):
-        lines = [lines[0][1:], *lines[1:]]
-    bounds = [len(lines) * i // k for i in range(k + 1)]
+def _fold_range(
+    path: str, start: int, end: int, seed: Descriptor, permissive: bool, detect_dates: bool
+) -> Optional[_Fold]:
+    """The kernel's fold of bytes ``[start, end)`` of ``path`` (see
+    :func:`_read_range`), with a BOM that starts the file dropped, as
+    ``sc.textFile`` drops it; or None when the range is not readable."""
+    lines = _read_range(path, start, end)
+    if lines is None:
+        return None
+    if start == 0 and lines:
+        lines[0] = lines[0].removeprefix("\ufeff")
+    return _fold(lines, seed, permissive, detect_dates)
 
-    def chunk(i: int) -> List[str]:
-        return lines[bounds[i]:bounds[i + 1]]
 
-    def fold(i: int) -> _Fold:
-        return _fold(chunk(i), EMPTY_STRUCT, permissive, detect_dates)
+class _Unreadable(Exception):
+    """A byte range that is not valid UTF-8, or that the file no longer holds."""
+
+
+def _fold_ranges(
+    path: str, cuts: List[int], permissive: bool, detect_dates: bool
+) -> Optional[InferenceResult]:
+    """Fold bytes ``cuts[i]`` to ``cuts[i + 1]`` of ``path`` for each ``i``
+    and combine the folds as :func:`infer_path` combines its partitions; or
+    None when Spark should read the file: a range is not valid UTF-8 (it
+    decodes alike wherever its cuts fall) or reads short.  Range 0 folds in
+    this process and the others in forked children, each of which reads
+    its own range; a re-fold reads its range again here.  Where ``fork`` is
+    not available every range folds here, in file order, and a range after
+    a FAILFAST error is not read.  The children run only the range
+    reader and the fold kernel, which take no lock a thread of this process
+    (a live Spark session's, say) could hold at the fork."""
+    k = len(cuts) - 1
+
+    def fold(
+        i: int, seed: Descriptor = EMPTY_STRUCT, permissive: bool = permissive
+    ) -> _Fold:
+        part = _fold_range(path, cuts[i], cuts[i + 1], seed, permissive, detect_dates)
+        if part is None:
+            raise _Unreadable
+        return part
 
     def refold(i: int, seed: Descriptor) -> _Fold:
-        return _fold(chunk(i), seed, False, detect_dates)
+        return fold(i, seed, False)
 
-    if k == 1 or "fork" not in multiprocessing.get_all_start_methods():
-        return _combine(map(fold, range(k)), refold, permissive, detect_dates)
-    with ProcessPoolExecutor(
-        k - 1, mp_context=multiprocessing.get_context("fork"),
-        initializer=_inherit, initargs=(lines,),
-    ) as pool:
-        futures = [
-            pool.submit(_fold_span, bounds[i], bounds[i + 1], permissive, detect_dates)
-            for i in range(1, k)
-        ]
+    try:
+        if k == 1 or "fork" not in multiprocessing.get_all_start_methods():
+            return _combine(map(fold, range(k)), refold, permissive, detect_dates)
+        with ProcessPoolExecutor(
+            k - 1, mp_context=multiprocessing.get_context("fork")
+        ) as pool:
+            futures = [
+                pool.submit(_fold_range, path, cuts[i], cuts[i + 1], EMPTY_STRUCT,
+                            permissive, detect_dates)
+                for i in range(1, k)
+            ]
+            first = fold(0)
+            # a range that is not valid UTF-8 sends the file to Spark,
+            # whatever the ranges before it hold
+            if any(f.exception() is None and f.result() is None for f in futures):
+                return None
 
-        def parts():
-            yield fold(0)
-            # a chunk whose child could not fold or send it (a partial
-            # nested too deeply to pickle, a killed worker) folds here,
-            # where an error of its own is raised in file order
-            for i, future in enumerate(futures, 1):
-                yield fold(i) if future.exception() else future.result()
+            def parts():
+                yield first
+                # a range whose child could not fold or send it (a partial
+                # nested too deeply to pickle, a killed worker) folds here,
+                # where an error of its own is raised in file order
+                for i, future in enumerate(futures, 1):
+                    yield fold(i) if future.exception() else future.result()
 
-        return _combine(parts(), refold, permissive, detect_dates)
+            return _combine(parts(), refold, permissive, detect_dates)
+    except _Unreadable:
+        return None

@@ -1,13 +1,15 @@
 """The CLI's JVM-free path for a small local file equals ``infer_path``.
 
-``read_local_lines`` must split a file exactly as ``sc.textFile`` does, and
-``infer_ndjson_strings`` must fold those lines to the schema, line count,
-PERMISSIVE error lines and FAILFAST message that ``infer_path`` gives for
-the same file.  The chunked local fold (``infer_local_file``, forked
-children merged by ``infer_path``'s combine step) must give the same at
-any chunk count, and leave no process behind.  The routing tests check
-that every input the local path does not take reaches ``infer_path``;
-they need no Spark.
+The range reader (``infer._read_range``) must split a file exactly as
+``sc.textFile`` does, and ``infer_ndjson_strings`` must fold those lines to
+the schema, line count, PERMISSIVE error lines and FAILFAST message that
+``infer_path`` gives for the same file.  The local fold over byte ranges
+(``infer_local_file``: cuts moved to line starts, each range read and
+folded by its own process, merged by ``infer_path``'s combine step) must
+give the same at any range count, read only its own range in this
+process, and leave no process behind.  The routing tests check that every
+input the local path does not take reaches ``infer_path``; they need no
+Spark.
 """
 
 import json
@@ -26,7 +28,6 @@ from hive_serde_schema_gen_spark.schema_infer import (
     infer_path,
 )
 from hive_serde_schema_gen_spark.schema_infer import infer as infer_mod
-from hive_serde_schema_gen_spark.schema_infer.infer import read_local_lines
 from hive_serde_schema_gen_spark.schema_infer.lattice import EMPTY_STRUCT
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -73,10 +74,15 @@ def _outcome(infer):
     return ("ok", repr(r.schema), r.lines, [(e.line, e.message) for e in r.errors])
 
 
-def _local(path, mode):
-    lines = read_local_lines(str(path))
+def _whole(path):
+    """The file's lines, read as one range."""
+    lines = infer_mod._read_range(str(path), 0, os.path.getsize(path))
     assert lines is not None, f"{path} did not take the local path"
-    return infer_ndjson_strings(lines, mode=mode)
+    return lines
+
+
+def _local(path, mode):
+    return infer_ndjson_strings(_whole(path), mode=mode)
 
 
 @pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE"])
@@ -126,7 +132,7 @@ def test_seeded_mixed_line_breaks_match_text_file(spark, tmp_path):
     for k in range(12):
         path = tmp_path / f"mixed_{k}.json"
         path.write_bytes(_seeded_file(rng))
-        lines = read_local_lines(str(path))
+        lines = _whole(path)
         assert lines == sc.textFile(str(path), 2).collect(), k
         for mode in ("FAILFAST", "PERMISSIVE"):
             assert _outcome(lambda: infer_ndjson_strings(lines, mode=mode)) == _outcome(
@@ -190,6 +196,14 @@ def test_spark_inputs_reach_infer_path(routed, tmp_path, monkeypatch):
     assert routed(small, "--sampling-ratio", "1.0") == [small]
     assert routed(small, "--sampling-ratio", "0.5") == [small]
 
+    # invalid UTF-8 only in the last of 4 ranges sends the file to Spark,
+    # though line 1 is bad JSON
+    monkeypatch.setattr(infer_mod, "_usable_cpus", lambda: 4)
+    data = "\n".join(_rows(100_000, {1: "{bad"})).encode() + b'\n{"a": "caf\xe9"}\n'
+    late = file("late_latin1.json", data)
+    assert len(data) > 3 << 20 and _cut(late, 4)[3] < data.index(b"\xe9")
+    assert routed(late) == [late]
+
     # the size bound, at a bound of 9 bytes
     monkeypatch.setattr(infer_mod, "_LOCAL_MAX_BYTES", 9)
     at_bound, over = file("nine.json", b'{"a": 1}\n'), file("ten.json", b'{"a": 10}\n')
@@ -200,7 +214,31 @@ def test_spark_inputs_reach_infer_path(routed, tmp_path, monkeypatch):
         raise PermissionError("denied")
 
     monkeypatch.setattr(infer_mod, "open", refuse, raising=False)
-    assert read_local_lines(small) is None
+    assert infer_mod._read_range(at_bound, 0, 9) is None
+    assert routed(at_bound) == [at_bound]
+
+
+def test_short_read_goes_to_infer_path(routed, tmp_path, monkeypatch):
+    """Reads are exact: a bound far above a file's size costs nothing, and
+    a file that shrank after it was cut goes to Spark, whichever process
+    reads the short range."""
+    monkeypatch.setattr(infer_mod, "_LOCAL_MAX_BYTES", 1 << 40)
+    assert routed(USERS) == []
+    monkeypatch.setattr(infer_mod, "_usable_cpus", lambda: 4)
+    fold_ranges = infer_mod._fold_ranges
+
+    def shrink_then_fold(path, cuts, *a):
+        with open(path, "r+b") as f:
+            f.truncate(cuts[-1] - 1)
+        return fold_ranges(path, cuts, *a)
+
+    monkeypatch.setattr(infer_mod, "_fold_ranges", shrink_then_fold)
+    small, big = tmp_path / "small.json", tmp_path / "big.json"
+    small.write_bytes(b'{"a": 1}\n' * 3)  # one range, read here
+    big.write_text("\n".join(_rows(100_000)) + "\n")  # the last of 4, in a child
+    assert os.path.getsize(big) > 3 << 20
+    for path in (small, big):
+        assert routed(path) == [str(path)]
 
 
 def test_each_input_is_routed_on_its_own(routed, tmp_path):
@@ -244,22 +282,35 @@ def test_small_file_starts_no_jvm_and_matches_spark_path():
 
 
 # ---------------------------------------------------------------------------
-# The chunked local fold: contiguous chunks, forked children, one combine
+# The local fold over byte ranges: cuts at line starts, forked children,
+# one combine
 # ---------------------------------------------------------------------------
 
 CHUNKS = (1, 2, 3, 4, 8)
 
 
-def _chunked(lines, k, mode):
-    return infer_mod._fold_chunks(lines, k, mode == "PERMISSIVE", False)
-
-
-def _case_lines(tmp_path, name, data):
+def _write(tmp_path, name, data):
     path = tmp_path / f"{name}.json"
     path.write_bytes(data)
-    lines = read_local_lines(str(path))
-    assert lines is not None, name
-    return lines
+    return path
+
+
+def _even(tmp_path, name, lines):
+    """``lines`` written as rows of one byte length (padded with spaces),
+    so the cuts of ``k`` ranges of ``k * m`` rows fall every ``m`` rows."""
+    rows = [ln.encode() for ln in lines]
+    width = max(map(len, rows))
+    return _write(tmp_path, name, b"".join(r.ljust(width) + b"\n" for r in rows))
+
+
+def _cut(path, k):
+    """The bounds of ``k`` byte ranges of ``path``."""
+    with open(path, "rb") as f:
+        return infer_mod._cuts(f, os.path.getsize(path), k)
+
+
+def _chunked(path, k, mode):
+    return infer_mod._fold_ranges(str(path), _cut(path, k), mode == "PERMISSIVE", False)
 
 
 def _children():
@@ -277,10 +328,10 @@ def _children():
 @pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE"])
 def test_chunked_fold_equals_single_process(tmp_path, mode):
     for name, data in CASES.items():
-        lines = _case_lines(tmp_path, name, data)
-        want = _outcome(lambda: infer_ndjson_strings(lines, mode=mode))
+        path = _write(tmp_path, name, data)
+        want = _outcome(lambda: infer_ndjson_strings(_whole(path), mode=mode))
         for k in CHUNKS:
-            assert _outcome(lambda: _chunked(lines, k, mode)) == want, (name, k)
+            assert _outcome(lambda: _chunked(path, k, mode)) == want, (name, k)
 
 
 def _rows(n, bad=()):
@@ -292,8 +343,8 @@ def _rows(n, bad=()):
 
 
 @pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE"])
-def test_chunk_edges(mode):
-    # 12 lines in 3 chunks: lines 1-4, 5-8, 9-12
+def test_chunk_edges(tmp_path, mode):
+    # 12 rows of one length in 3 ranges: lines 1-4, 5-8, 9-12
     cases = {
         "bad_first_of_chunk": _rows(12, {5: "{bad"}),
         "bad_last_of_chunk": _rows(12, {8: "{bad"}),
@@ -304,22 +355,27 @@ def test_chunk_edges(mode):
         # a partial too deep to pickle back from a child: folded here
         "deep_partial": _rows(12, {10: '{"a":' * 300 + "1" + "}" * 300}),
     }
-    for name, lines in cases.items():
-        want = _outcome(lambda: infer_ndjson_strings(lines, mode=mode))
+    paths = {name: _even(tmp_path, name, lines) for name, lines in cases.items()}
+    for name, path in paths.items():
+        row = os.path.getsize(path) // 12
+        assert _cut(path, 3) == [0, 4 * row, 8 * row, 12 * row], name
+        want = _outcome(lambda: infer_ndjson_strings(_whole(path), mode=mode))
         for k in CHUNKS:
-            assert _outcome(lambda: _chunked(lines, k, mode)) == want, (name, k)
-    assert _outcome(lambda: _chunked(cases["bom_line_1"], 3, mode))[0] == "ok"
+            assert _outcome(lambda: _chunked(path, k, mode)) == want, (name, k)
+    assert _outcome(lambda: _chunked(paths["bom_line_1"], 3, mode))[0] == "ok"
     if mode == "FAILFAST":
         for name, line in (("bad_first_of_chunk", 5), ("bad_last_of_chunk", 8),
                            ("mismatch_first_of_chunk", 9), ("mismatch_last_of_chunk", 4)):
-            assert _outcome(lambda: _chunked(cases[name], 3, mode))[2] == line, name
+            assert _outcome(lambda: _chunked(paths[name], 3, mode))[2] == line, name
 
 
-def test_conflict_across_chunks_takes_the_seeded_refold(monkeypatch):
-    # chunk 2 (lines 9-12) folds cleanly on its own, but its "x" conflicts
-    # with the number the chunks before it typed
-    lines = _rows(12, {i: '{"i": "x"}' for i in range(9, 13)})
-    want = _outcome(lambda: infer_ndjson_strings(lines))
+def test_conflict_across_chunks_takes_the_seeded_refold(monkeypatch, tmp_path):
+    # range 2 (lines 9-12) folds cleanly on its own, but its "x" conflicts
+    # with the number the ranges before it typed
+    path = _even(tmp_path, "conflict", _rows(12, {i: '{"i": "x"}' for i in range(9, 13)}))
+    row = os.path.getsize(path) // 12
+    assert _cut(path, 3) == [0, 4 * row, 8 * row, 12 * row]
+    want = _outcome(lambda: infer_ndjson_strings(_whole(path)))
     assert want[:3] == ("error", "RowMismatch", 9)
     seeds = []
     fold = infer_mod._fold
@@ -329,12 +385,38 @@ def test_conflict_across_chunks_takes_the_seeded_refold(monkeypatch):
         return fold(chunk, schema, *a, **k)
 
     monkeypatch.setattr(infer_mod, "_fold", spy)
-    assert _outcome(lambda: _chunked(lines, 3, "FAILFAST")) == want
-    # this process folded chunk 0, then re-folded chunk 2 seeded
+    assert _outcome(lambda: _chunked(path, 3, "FAILFAST")) == want
+    # this process folded range 0, then re-folded range 2 seeded
     assert len(seeds) == 2 and seeds[0] == EMPTY_STRUCT and seeds[1] != EMPTY_STRUCT
 
 
-def test_worker_exception_never_overtakes_an_earlier_error(monkeypatch):
+def test_parent_reads_only_its_own_range(monkeypatch, tmp_path):
+    """This process reads range 0, and a range it re-folds; never the
+    whole file (the children read the others)."""
+    monkeypatch.setattr(infer_mod, "_usable_cpus", lambda: 4)
+    reads = []
+    read_range = infer_mod._read_range
+
+    def spy(path, start, end):
+        reads.append((start, end))
+        return read_range(path, start, end)
+
+    monkeypatch.setattr(infer_mod, "_read_range", spy)
+    n = 100_000  # 4 ranges of 25,000 rows; lines 50,001-100,000 conflict
+    good = _even(tmp_path, "good", _rows(n))
+    bad = _even(tmp_path, "bad", _rows(n, {i: '{"i": "x"}' for i in range(n // 2 + 1, n + 1)}))
+    assert os.path.getsize(good) == os.path.getsize(bad) > 3 << 20
+    c = _cut(good, 4)
+    assert c == [i * os.path.getsize(good) // 4 for i in range(5)]
+    assert infer_mod.infer_local_file(str(good)).lines == n
+    assert reads == [(c[0], c[1])]
+    reads.clear()
+    got = _outcome(lambda: infer_mod.infer_local_file(str(bad)))
+    assert got[:3] == ("error", "RowMismatch", n // 2 + 1)
+    assert reads == [(c[0], c[1]), (c[2], c[3])]
+
+
+def test_worker_exception_never_overtakes_an_earlier_error(monkeypatch, tmp_path):
     fold = infer_mod._fold
 
     def boom(chunk, *a, **k):
@@ -343,15 +425,18 @@ def test_worker_exception_never_overtakes_an_earlier_error(monkeypatch):
         return fold(chunk, *a, **k)
 
     monkeypatch.setattr(infer_mod, "_fold", boom)
-    # 16 lines in 4 chunks; the file's first error is in chunk 1, the
-    # raising line in chunk 3
-    lines = _rows(16, {6: "{bad", 14: '{"boom": 1}'})
-    err = _outcome(lambda: _chunked(lines, 4, "FAILFAST"))
+    # 16 rows of one length in 4 ranges; the file's first error is in
+    # range 1, the raising line in range 3
+    path = _even(tmp_path, "boom_after_bad", _rows(16, {6: "{bad", 14: '{"boom": 1}'}))
+    row = os.path.getsize(path) // 16
+    assert _cut(path, 4) == [0, 4 * row, 8 * row, 12 * row, 16 * row]
+    err = _outcome(lambda: _chunked(path, 4, "FAILFAST"))
     assert err[:3] == ("error", "BadJson", 6)
-    # with no earlier error, the raising chunk's exception is what surfaces
+    # with no earlier error, the raising range's exception is what surfaces
+    path = _even(tmp_path, "boom", _rows(16, {14: '{"boom": 1}'}))
     for mode in ("FAILFAST", "PERMISSIVE"):
         with pytest.raises(RuntimeError, match="boom"):
-            _chunked(_rows(16, {14: '{"boom": 1}'}), 4, mode)
+            _chunked(path, 4, mode)
     assert infer_mod.multiprocessing.active_children() == []
 
 
@@ -364,10 +449,11 @@ def test_without_fork_every_chunk_folds_here(monkeypatch, tmp_path):
     monkeypatch.setattr(infer_mod, "ProcessPoolExecutor", no_pool)
     monkeypatch.setattr(infer_mod, "_usable_cpus", lambda: 4)
     for mode in ("FAILFAST", "PERMISSIVE"):
-        lines = _rows(40, {17: "{bad", 30: '{"i": "x"}'})
-        want = _outcome(lambda: infer_ndjson_strings(lines, mode=mode))
+        path = _write(tmp_path, "rows", "\n".join(
+            _rows(40, {17: "{bad", 30: '{"i": "x"}'})).encode() + b"\n")
+        want = _outcome(lambda: infer_ndjson_strings(_whole(path), mode=mode))
         for k in CHUNKS:
-            assert _outcome(lambda: _chunked(lines, k, mode)) == want, (mode, k)
+            assert _outcome(lambda: _chunked(path, k, mode)) == want, (mode, k)
     big = tmp_path / "big.json"
     big.write_text("\n".join(_rows(40_000)) + "\n")
     assert os.path.getsize(big) > 1 << 20
@@ -441,10 +527,9 @@ def default_recursion_limit():
 def test_deep_line_is_bad_json_in_file_order(spark, tmp_path, mode, default_recursion_limit):
     path = tmp_path / "deep.json"
     path.write_bytes(b"\n".join(DEEP) + b"\n")
-    lines = read_local_lines(str(path))
     local = _outcome(lambda: infer_mod.infer_local_file(str(path), mode))
     for k in CHUNKS:
-        assert _outcome(lambda: _chunked(lines, k, mode)) == local, k
+        assert _outcome(lambda: _chunked(path, k, mode)) == local, k
     assert _outcome(lambda: infer_path(spark, str(path), mode=mode)) == local
     if mode == "FAILFAST":
         assert local[:3] == ("error", "RowMismatch", 2)
@@ -465,11 +550,83 @@ def test_chunked_fold_equals_infer_path(spark, tmp_path, mode):
     files["edges"] = "\n".join(_rows(4_000, {1_000: "{bad", 2_001: '{"i": "x"}',
                                              3_000: "[1]"})).encode()
     for name, data in files.items():
-        lines = _case_lines(tmp_path, name, data)
-        want = _outcome(lambda: infer_path(spark, str(tmp_path / f"{name}.json"),
-                                           mode=mode, min_partitions=3))
+        path = _write(tmp_path, name, data)
+        want = _outcome(lambda: infer_path(spark, str(path), mode=mode, min_partitions=3))
         for k in CHUNKS:
-            assert _outcome(lambda: _chunked(lines, k, mode)) == want, (name, k)
+            assert _outcome(lambda: _chunked(path, k, mode)) == want, (name, k)
+
+
+# a 33-byte row
+X = b'{"a": "' + b"x" * 24 + b'"}'
+
+
+def _aimed(head, at, last=b"\n"):
+    """``head``, then one row ending in ``last``, padded so that the cut
+    target at 2 ranges (``size // 2``) is byte ``at``."""
+    row = b'{"z": 0}' + last
+    data = head + b"{" + b" " * (2 * at - len(head) - len(row)) + row[1:]
+    assert len(data) // 2 == at
+    return data
+
+
+def _char_row(ch):
+    """A row holding ``ch``'s UTF-8 bytes from byte 27 on."""
+    return b'{"s": "' + b"x" * 20 + ch.encode() + b'"}\n'
+
+
+# name: (file, where the cut at 2 ranges falls)
+BYTE_EDGES = {
+    # the target is the \n of a \r\n (byte 34): the cut moves past it
+    "target_between_cr_and_lf": (_aimed(X + b"\r\n", 34), 35),
+    "target_at_line_start": (_aimed(X + b"\n", 34), 34),
+    # the target is the last byte of the character
+    "target_in_2_byte_char": (_aimed(_char_row("\u00e9"), 28), 32),
+    "target_in_3_byte_char": (_aimed(_char_row("\u20ac"), 29), 33),
+    "target_in_4_byte_char": (_aimed(_char_row("\U0001f600"), 30), 34),
+    # line 1 starts with a BOM, in range 0 at every k
+    "bom": (_aimed(BOM + X + b"\n", 24), 37),
+    "bom_only": (BOM, 3),
+    # the target is in line 2: range 1 is the empty line 3
+    "empty_last_line": (_aimed(X + b"\n", 38, b"\n\n"), 75),
+    # the target is in the last line: range 1 is empty
+    "no_final_break": (_aimed(X + b"\n", 38, b""), 76),
+    # a 210-byte line 1 holds 6 of 8 targets: ranges 1-5 are empty
+    "line_longer_than_a_range": (b'{"a": "' + b"x" * 200 + b'"}\n' + X + b"\n", 210),
+}
+
+
+def _line_starts(data):
+    """Every offset a line starts at under textFile's breaks, and the end."""
+    return {0, len(data)} | {i + 1 for i, b in enumerate(data)
+                             if b == 10 or (b == 13 and data[i + 1:i + 2] != b"\n")}
+
+
+@pytest.mark.parametrize("mode", ["FAILFAST", "PERMISSIVE"])
+def test_byte_range_edges(spark, tmp_path, mode):
+    """Each cut moves its target forward to the next line start, and every
+    range count folds to what the whole file and ``infer_path`` give."""
+    for name, (data, at_2) in BYTE_EDGES.items():
+        path = _write(tmp_path, name, data)
+        assert _cut(path, 2) == [0, at_2, len(data)], name
+        starts = _line_starts(data)
+        for k in CHUNKS:
+            targets = [len(data) * i // k for i in range(1, k)]
+            want_cuts = [min(s for s in starts if s >= t) for t in targets]
+            assert _cut(path, k) == [0, *want_cuts, len(data)], (name, k)
+        want = _outcome(lambda: infer_ndjson_strings(_whole(path), mode=mode))
+        assert _outcome(lambda: infer_path(spark, str(path), mode=mode,
+                                           min_partitions=3)) == want, name
+        for k in CHUNKS:
+            assert _outcome(lambda: _chunked(path, k, mode)) == want, (name, k)
+    assert _cut(tmp_path / "line_longer_than_a_range.json", 8) == [0] + [210] * 6 + [244] * 2
+    assert _outcome(lambda: _chunked(tmp_path / "bom.json", 8, mode))[:3] == (
+        "ok", repr(infer_ndjson_strings([X.decode(), '{"z": 0}']).schema), 2)
+    assert _outcome(lambda: _chunked(tmp_path / "bom_only.json", 8, mode))[2] == 0
+    empty_last = _outcome(lambda: _chunked(tmp_path / "empty_last_line.json", 2, mode))
+    if mode == "FAILFAST":
+        assert empty_last[:3] == ("error", "BadJson", 3)
+    else:
+        assert empty_last[2] == 3 and [line for line, _msg in empty_last[3]] == [3]
 
 
 def test_large_file_starts_no_jvm_and_matches_spark_path(tmp_path):
