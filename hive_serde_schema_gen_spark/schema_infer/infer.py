@@ -16,9 +16,12 @@ partition, re-folds a partition on FAILFAST's error path, folds each task of
 :func:`infer_json_column` and each byte range of :func:`infer_local_file`,
 and is :func:`infer_ndjson_strings`.  It takes a seed schema, and folding
 lines seeded with the schema of the lines before them gives exactly the
-fold of all of them.  One combine step, :func:`_combine`, turns the folds of a
-file's contiguous pieces into the fold of the file, for Spark's partitions
-and the local byte ranges alike.
+fold of all of them.  One combine step, :func:`_combine`, turns the folds of
+an input's contiguous pieces into the fold of the input, for all three
+executors: a file's Spark partitions, its local byte ranges and a column's
+tasks.  So they share one merge, one FAILFAST replay, one seeded re-fold
+rule and one PERMISSIVE error sample, and :func:`infer_ndjson_strings` is
+the one-process reference they are all tested against.
 
 Each partition emits exactly one tiny record (partition id, then the
 kernel's partial schema, line count, sampled errors and first error), so the
@@ -44,7 +47,9 @@ the split either, and it never runs a second job.
 
 ``infer_json_column`` applies the same kernel to a DataFrame string column
 (e.g. ``events.props``) via Arrow-batched ``mapInPandas`` — the Spark-idiomatic
-fast path when the JSON is already a column rather than a raw file.
+fast path when the JSON is already a column rather than a raw file.  Its
+tasks' folds go through :func:`_combine` unnumbered, so a strict error's
+text does not depend on the partition count.
 
 Where Spark does not pay, the same fold runs with no JVM: the CLI hands a
 small plain local file to :func:`infer_local_file`, which cuts it into one
@@ -287,9 +292,10 @@ def _combine(
     detect_dates: bool,
     numbered: bool = True,
 ) -> InferenceResult:
-    """The fold of a file from the folds of its contiguous chunks, taken in
-    file order: chunk ``i``'s lines are numbered after the prefix sum of the
-    line counts before it (None when not ``numbered``, as for a sample).
+    """The fold of a file (or a column) from the folds of its contiguous
+    chunks, taken in order: chunk ``i``'s lines are numbered after the
+    prefix sum of the line counts before it (None when not ``numbered``, as
+    for a sample or a column's rows).
 
     Where a chunk's partial merges with the schema of the chunks before it,
     the merge is the fold of the file up to there; so a FAILFAST chunk that
@@ -330,14 +336,19 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     """Infer the lattice schema of a JSON-bearing string column.
 
     Uses ``mapInPandas``: each task folds its Arrow batches with the same
-    kernel as :func:`infer_path` and emits one pickled (partial descriptor,
-    first error) record; the driver merges partials in partition order.  At
-    cluster scale this moves only O(partitions) tiny blobs to the driver.
-    Null cells are skipped (column-level nullability, not a row error).
-    Strict mode raises the first error as its :class:`SchemaGenError`
-    subclass (line None: a column has no line numbers), wherever the
-    conflicting rows landed.  ``permissive=True`` folds and merges with the
-    PERMISSIVE join, so a field whose cells disagree on kind is ``TOP``
+    kernel as :func:`infer_path` and emits one pickled fold record (partial
+    descriptor, row count, sampled errors, first error); the driver combines
+    them in partition order with :func:`_combine`, as :func:`infer_path`
+    combines its partitions.  At cluster scale this moves only
+    O(partitions) tiny blobs to the driver.  Null cells are skipped
+    (column-level nullability, not a row error).  Strict mode raises the
+    error the in-order fold of the cells meets, as its
+    :class:`SchemaGenError` subclass, with the same text at any partition
+    count (line None: a column has no line numbers).  A partition that
+    stopped at its own error is re-derived on the driver; one whose partial
+    conflicts with the partitions before it is re-folded, seeded with their
+    schema, by one one-task job.  ``permissive=True`` folds and merges with
+    the PERMISSIVE join, so a field whose cells disagree on kind is ``TOP``
     however the rows are ordered or partitioned.
 
     Repeated raw strings are folded ONCE per task: inference is
@@ -346,10 +357,18 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     so a value's second occurrence can never change the schema, and
     real-world JSON columns are heavily repetitive (the events.props
     benchmark column has 100 distinct values in 100 k rows — the dedup
-    collapses ~1000× of parse work).  The seen-set is bounded (entry count
-    and per-string length) so a genuinely high-cardinality column degrades
-    to plain parsing, never to unbounded task memory.
+    collapses ~1000× of parse work).  Nor can it raise: the fold stops at
+    its first error, so a cell seen before folded cleanly into a schema no
+    wider than today's.  The seen-set is bounded (entry count and
+    per-string length) so a genuinely high-cardinality column degrades to
+    plain parsing, never to unbounded task memory.
     """
+    return _infer_column(df, column, permissive).schema
+
+
+def _infer_column(df, column: str, permissive: bool) -> InferenceResult:
+    """:func:`infer_json_column`'s fold, with the column's row count (null
+    cells included) as the result's ``lines``."""
     from pyspark import TaskContext
 
     # seen-set bounds: past these, parse instead of remember — correctness
@@ -362,10 +381,11 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     _SEEN_MAX_LEN = 1 << 10
     _SEEN_MAX_BYTES = 1 << 24
 
-    def distinct_cells(batches):
+    def distinct_cells(batches, rows: List[int]):
         seen: set = set()
         seen_bytes = 0
         for pdf in batches:
+            rows[0] += len(pdf)
             for raw in pdf[column]:
                 if raw is None or raw in seen:
                     continue
@@ -378,36 +398,43 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
                     seen_bytes += len(raw)
                 yield raw
 
-    def fold(batches):
-        import pandas as pd  # worker-side
+    def folded(seed: Descriptor, permissive: bool):
+        """One (pid, pickled fold) row per task; the fold counts rows,
+        nulls included, where the kernel counts lines."""
 
-        pid = TaskContext.get().partitionId()
-        schema, _n, _errors, err = _fold(distinct_cells(batches), EMPTY_STRUCT, permissive)
-        yield pd.DataFrame({"pid": [pid], "blob": [pickle.dumps((schema, err))]})
+        def fold(batches):
+            import pandas as pd  # worker-side
 
-    parts = (
-        df.select(column)
-        .mapInPandas(fold, schema="pid int, blob binary")
-        .collect()
-    )
-    schema: Descriptor = EMPTY_STRUCT
-    for row in sorted(parts, key=lambda r: r["pid"]):
-        partial, err = pickle.loads(bytes(row["blob"]))
-        if err is not None:
-            raise err.with_line(None)
-        schema = merge(schema, partial, permissive=permissive)
-    return schema
+            rows = [0]
+            schema, _n, errors, err = _fold(distinct_cells(batches, rows), seed, permissive)
+            blob = pickle.dumps((schema, rows[0], errors, err))
+            yield pd.DataFrame({"pid": [TaskContext.get().partitionId()], "blob": [blob]})
+
+        return df.select(column).mapInPandas(fold, schema="pid int, blob binary")
+
+    def record(row) -> _Fold:
+        return pickle.loads(bytes(row["blob"]))
+
+    recs = sorted(folded(EMPTY_STRUCT, permissive).collect(), key=lambda r: r["pid"])
+
+    def refold(i: int, seed: Descriptor) -> _Fold:
+        sc = df.sparkSession.sparkContext
+        [row] = sc.runJob(folded(seed, False).rdd, list, partitions=[recs[i]["pid"]])
+        return record(row)
+
+    return _combine(map(record, recs), refold, permissive, False, numbered=False)
 
 
 def infer_ndjson_strings(
     lines: Iterable[str], detect_dates: bool = False, mode: str = "FAILFAST"
 ) -> InferenceResult:
     """Single-process fold over an iterable of lines: the reference fold
-    that the chunked local fold (:func:`infer_local_file`) and
-    :func:`infer_path` are tested against.  Semantics identical to
-    :func:`infer_path` on a file of these lines: a BOM that starts the
-    first line is dropped, as ``sc.textFile`` drops one that starts a file
-    (a BOM on a later line stays, and that line is bad JSON on both paths);
+    that the chunked local fold (:func:`infer_local_file`),
+    :func:`infer_path` and :func:`infer_json_column` are tested against.
+    Semantics identical to :func:`infer_path` on a file of these lines: a
+    BOM that starts the first line is dropped, as ``sc.textFile`` drops one
+    that starts a file (a BOM on a later line stays, and that line is bad
+    JSON on both paths);
     FAILFAST raises the first error with its line number; PERMISSIVE
     returns the first 20 skipped lines."""
     it = iter(lines)

@@ -2,9 +2,9 @@
 
 The reference's merge is a left fold over lines (``Schemer.scala:11-14``),
 which is exactly a streaming accumulator: each micro-batch folds to a partial
-descriptor (distributed, via ``infer_json_column``) and ``foreachBatch``
-merges it into the running schema on the driver.  State is O(schema size);
-the stream can run forever.
+descriptor and its row count (distributed, by ``infer_json_column``'s fold,
+one Spark job per batch) and ``foreachBatch`` merges it into the running
+schema on the driver.  State is O(schema size); the stream can run forever.
 
 This is SURVEY §7 M4 ("streaming inference") — the natural extension the
 single-pass batch design already paid for.
@@ -15,7 +15,8 @@ from __future__ import annotations
 import threading
 from typing import Optional
 
-from ..schema_infer import EMPTY_STRUCT, Descriptor, infer_json_column, merge
+from ..schema_infer import EMPTY_STRUCT, Descriptor, merge
+from ..schema_infer.infer import _infer_column
 from ..schema_infer.render import render_definition
 
 
@@ -52,17 +53,15 @@ def infer_stream(
 
     Returns ``(StreamingQuery, StreamingSchemaAccumulator)``; the caller
     drives the stream (``processAllAvailable`` for tests, or leave running).
-    Each micro-batch is itself folded distributively — the driver only ever
+    Each micro-batch is itself folded distributively, in one Spark job that
+    also counts its rows (null cells included) — the driver only ever
     merges one partial descriptor per batch.
     """
     acc = accumulator or StreamingSchemaAccumulator(permissive=permissive)
 
     def absorb_batch(batch_df, epoch_id: int) -> None:
-        n = batch_df.count()
-        if n == 0:
-            return
-        partial = infer_json_column(batch_df, column, permissive=permissive)
-        acc.absorb(partial, n)
+        result = _infer_column(batch_df, column, permissive)
+        acc.absorb(result.schema, result.lines)
 
     writer = stream_df.writeStream.outputMode("append").foreachBatch(absorb_batch)
     if checkpoint:

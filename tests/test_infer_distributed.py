@@ -5,6 +5,7 @@ commas inside STRUCT per the README golden rather than the comma-less
 ``Schemer.scala:92-95``)."""
 
 import os
+import re
 
 import pytest
 
@@ -93,6 +94,67 @@ def test_infer_json_column_strict_error_is_typed(spark, parts, rows, error):
     df = spark.createDataFrame([(r,) for r in rows], ["props"]).repartition(parts)
     with pytest.raises(error):
         infer_json_column(df, "props")
+
+
+def _ordered_column(spark, rows, parts):
+    """``rows`` as a string column in ``parts`` partitions, in order
+    (``repartition`` would reorder them)."""
+    rdd = spark.sparkContext.parallelize([(r,) for r in rows], parts)
+    return spark.createDataFrame(rdd, "props string")
+
+
+def _unnumbered(e):
+    """``e``'s type and text, its line number read as a column's ``?``."""
+    return type(e).__name__, re.sub(r"^On the line \d+ ", "On the line ? ", str(e))
+
+
+@pytest.mark.parametrize("row_2", ['{"v":"x"}', "[1,2]"])
+def test_infer_json_column_error_does_not_depend_on_the_split(spark, row_2):
+    """A strict column error names the row and the schema the in-order fold
+    meets, at any partition count: the one-process fold's text, with the
+    line read as ``?``."""
+    rows = ['{"v":1}', row_2, '{"v":2}', '{"v":3}']
+    with pytest.raises(RowMismatch) as want:
+        infer_ndjson_strings(rows)
+    assert want.value.line == 2
+    for parts in (1, 2, 4):
+        with pytest.raises(RowMismatch) as got:
+            infer_json_column(_ordered_column(spark, rows, parts), "props")
+        assert got.value.line is None
+        assert _unnumbered(got.value) == _unnumbered(want.value), parts
+    assert "this JSON:\n(unknown)" not in str(got.value)
+    assert str(got.value).endswith("this signature:\n" + (
+        "TINYINT" if row_2 == '{"v":"x"}' else "STRUCT<\n\tv: TINYINT\n>"))
+
+
+def test_infer_json_column_failfast_refolds_only_a_conflicting_partition(spark):
+    """Eight rows in four ordered partitions of two.  A partition that
+    stopped at its own error is re-derived on the driver: the fold is the
+    only job.  A partition whose partial conflicts with the partitions
+    before it as a whole is re-folded, seeded, in one more job."""
+    clean = ['{"v":%d}' % i for i in range(1, 9)]
+    # the last partition holds {"v":7} then {"v":"x"}: a local error
+    local = clean[:7] + ['{"v":"x"}']
+    # the last partition holds {"w":7} then {"v":"x"}: its partial
+    # {w, v: STRING} conflicts with v's TINYINT as a whole
+    whole = clean[:6] + ['{"w":7}', '{"v":"x"}']
+    sc = spark.sparkContext
+    for name, rows, jobs in (("clean", clean, 1), ("local", local, 1), ("whole", whole, 2)):
+        df = _ordered_column(spark, rows, 4)
+        group = f"column-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            if name == "clean":
+                assert render_definition(infer_json_column(df, "props")) == "v TINYINT"
+            else:
+                with pytest.raises(RowMismatch) as got:
+                    infer_json_column(df, "props")
+                with pytest.raises(RowMismatch) as want:
+                    infer_ndjson_strings(rows)
+                assert _unnumbered(got.value) == _unnumbered(want.value), name
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs, name
 
 
 def test_infer_json_column_permissive_cross_partition_conflict(spark):

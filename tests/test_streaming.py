@@ -39,6 +39,37 @@ def test_streaming_inference_matches_batch(spark, sf_dir, tmp_path):
     assert "k " in acc.definition()
 
 
+def test_streaming_inference_runs_one_job_per_batch(spark, tmp_path):
+    """Each non-empty micro-batch costs one Spark job, the fold, which also
+    counts the batch's rows: null cells count, as ``count()`` counted them."""
+    import json
+
+    src = tmp_path / "src"
+    src.mkdir()
+    cells = []
+    for f in range(3):
+        batch = [None if i % 4 == 0 else json.dumps({"k": f * 10 + i, "s": "x" * i})
+                 for i in range(5 + f)]
+        cells += batch
+        (src / f"part{f}.json").write_text(
+            "".join(json.dumps({"props": c}) + "\n" for c in batch))
+    stream = (spark.readStream.schema("props string")
+              .option("maxFilesPerTrigger", "1").json(str(src)))
+    q, acc = infer_stream(stream, "props", checkpoint=str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert acc.rows == len(cells) == 18
+    assert acc.definition() == "k TINYINT,\ns VARCHAR(6)"
+    # a micro-batch's jobs run under the query's run id as their job group
+    batches = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(batches) == len(jobs) == 3
+    # each batch was scanned once
+    assert sum(batches) == acc.rows
+
+
 def test_streaming_dedup_within_watermark(spark, sf_dir):
     """Streaming dedup: dropDuplicatesWithinWatermark on (user_id,
     event_type) — state-bounded dedup, the streaming twin of dedup_exact.
