@@ -1,16 +1,17 @@
 """CLI entry point — the Spark twin of ``Generator.main``
 (``/root/reference/Generator.scala:4-11``): ``file [tableName]`` →
 Hive DDL script on stdout; default table name ``data``
-(``Schemer.scala:117``)."""
+(``Schemer.scala:117``).  As ``Generator`` is ``new Schemer(file)`` plus a
+print, this is :class:`SchemaGen` plus a print: the class decides between
+the local fold (a small local file, no JVM) and a Spark job, and starts a
+session only for the latter."""
 
 from __future__ import annotations
 
 import argparse
 import sys
 
-from .schema_infer import SchemaGenError, alter_statements, infer_path
-from .schema_infer.infer import infer_local_file
-from .schema_infer.lattice import structs_to_maps
+from .schema_infer import SchemaGen, SchemaGenError, alter_statements
 from .session import get_spark
 
 
@@ -189,7 +190,10 @@ def main(argv=None) -> int:
         "PERMISSIVE skips bad rows and types a field whose rows disagree on "
         "kind as STRING",
     )
-    p.add_argument("--sampling-ratio", type=float, default=None)
+    p.add_argument("--sampling-ratio", type=float, default=None,
+                   help="infer from a random sample of this fraction of the "
+                   "lines (0 < ratio <= 1); any value, 1.0 included, runs a "
+                   "Spark job")
     p.add_argument(
         "--detect-dates",
         action="store_true",
@@ -214,32 +218,17 @@ def main(argv=None) -> int:
         "migrating it to FILE's schema (instead of a CREATE TABLE script)",
     )
     args = p.parse_args(argv)
-
-    spark = None
-
-    def infer(path):
-        # a small local file folds on this host's cores with no JVM;
-        # Spark's sampler has no local twin, and anything else is Spark's
-        nonlocal spark
-        result = (infer_local_file(path, args.mode, args.detect_dates)
-                  if args.sampling_ratio is None else None)
-        if result is None:
-            spark = spark or get_spark("hive-serde-schema-gen")
-            result = infer_path(
-                spark, path, mode=args.mode, sampling_ratio=args.sampling_ratio,
-                detect_dates=args.detect_dates,
-            )
-        if args.infer_maps is not None:
-            # FILE and OLD_FILE alike, or every mapped column would show
-            # up in --evolve-from as a spurious STRUCT->MAP type change
-            result.schema = structs_to_maps(result.schema, args.infer_maps)
-        return result
-
+    # FILE and OLD_FILE alike through --infer-maps, or every mapped column
+    # would show up in --evolve-from as a spurious STRUCT->MAP type change
+    opts = dict(mode=args.mode, sampling_ratio=args.sampling_ratio,
+                infer_maps=args.infer_maps, detect_dates=args.detect_dates)
     try:
-        result = infer(args.file)
+        new = SchemaGen(args.file, **opts)
         if args.evolve_from is not None:
-            old = infer(args.evolve_from)
-            stmts = alter_statements(args.table, old.schema, result.schema)
+            # FILE's session, if it started one: a second get_spark call
+            # would log a warning that it reuses it
+            old = SchemaGen(args.evolve_from, new._spark, **opts)
+            stmts = alter_statements(args.table, old.schema, new.schema)
             print(
                 "\n".join(stmts)
                 if stmts
@@ -259,8 +248,8 @@ def main(argv=None) -> int:
         )
         print(f"error: {cause}", file=sys.stderr)
         return 1
-    print(result.table(args.table, args.file))
-    for err in result.errors:
+    print(new.table(args.table))
+    for err in new.errors:
         print(f"skipped line {err.line}: {err.message}", file=sys.stderr)
     return 0
 

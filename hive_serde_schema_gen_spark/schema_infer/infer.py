@@ -51,16 +51,17 @@ fast path when the JSON is already a column rather than a raw file.  Its
 tasks' folds go through :func:`_combine` unnumbered, so a strict error's
 text does not depend on the partition count.
 
-Where Spark does not pay, the same fold runs with no JVM: the CLI hands a
-small plain local file to :func:`infer_local_file`, which cuts it into one
-contiguous byte range per usable core (at most one per MiB), each cut moved
-forward to a line start as ``textFile``'s splits are.  The calling process
-folds range 0 and forked children fold the others; each reads, decodes and
-splits only its own range (:func:`_read_range`, split exactly as
-``sc.textFile`` splits lines), so no process holds the whole file.
-:func:`_combine` merges the folds; a conflicting range is re-read and
-re-folded in-process instead of by a one-task job.  Every other input, and
-every library caller of :func:`infer_path`, takes the Spark path above.
+Where Spark does not pay, the same fold runs with no JVM: ``SchemaGen``
+(and so the CLI) hands a small plain local file to :func:`infer_local_file`,
+which cuts it into one contiguous byte range per usable core (at most one
+per MiB), each cut moved forward to a line start as ``textFile``'s splits
+are.  The calling process folds range 0 and forked children fold the
+others; each reads, decodes and splits only its own range
+(:func:`_read_range`, split exactly as ``sc.textFile`` splits lines), so no
+process holds the whole file.  :func:`_combine` merges the folds; a
+conflicting range is re-read and re-folded in-process instead of by a
+one-task job.  Every other input, a sampled read, and every direct caller
+of :func:`infer_path` takes the Spark path above.
 """
 
 from __future__ import annotations
@@ -219,6 +220,14 @@ def _input_bytes(sc, path: str) -> int:
     return total
 
 
+def _permissive(mode: str) -> bool:
+    """Whether ``mode``, ``FAILFAST`` or ``PERMISSIVE`` in any case, is
+    PERMISSIVE; any other value is a ``ValueError``, not a silent FAILFAST."""
+    if mode.upper() not in ("FAILFAST", "PERMISSIVE"):
+        raise ValueError(f"mode must be FAILFAST or PERMISSIVE, got {mode!r}")
+    return mode.upper() == "PERMISSIVE"
+
+
 def _merge_or_none(a: Descriptor, b: Descriptor, permissive: bool) -> Optional[Descriptor]:
     try:
         return merge(a, b, permissive=permissive)
@@ -257,10 +266,13 @@ def infer_path(
     default of 2.
     ``sampling_ratio`` (like ``spark.read.json``'s option) infers from a
     deterministic row sample — line numbers are then relative to the sample
-    and reported as None.  ``detect_dates`` (opt-in deviation, OFF for
-    reference fidelity) types ISO-8601 strings as DATE/TIMESTAMP.
+    and reported as None; it must be in ``(0, 1]``, and ``1.0`` reads every
+    line.  ``detect_dates`` (opt-in deviation, OFF for reference fidelity)
+    types ISO-8601 strings as DATE/TIMESTAMP.
     """
-    permissive = mode.upper() == "PERMISSIVE"
+    permissive = _permissive(mode)
+    if sampling_ratio is not None and not 0 < sampling_ratio <= 1:
+        raise ValueError(f"sampling_ratio must be in (0, 1], got {sampling_ratio!r}")
     sc = spark.sparkContext
     if not min_partitions:
         by_size = -(-_input_bytes(sc, path) // _MIN_SPLIT_BYTES)
@@ -366,9 +378,12 @@ def infer_json_column(df, column: str, permissive: bool = False) -> Descriptor:
     return _infer_column(df, column, permissive).schema
 
 
-def _infer_column(df, column: str, permissive: bool) -> InferenceResult:
-    """:func:`infer_json_column`'s fold, with the column's row count (null
-    cells included) as the result's ``lines``."""
+def _infer_column(
+    df, column: str, permissive: bool, seed: Descriptor = EMPTY_STRUCT
+) -> InferenceResult:
+    """:func:`infer_json_column`'s fold, seeded with ``seed`` (the schema of
+    the rows before these), with the column's row count (null cells
+    included) as the result's ``lines``."""
     from pyspark import TaskContext
 
     # seen-set bounds: past these, parse instead of remember — correctness
@@ -415,7 +430,7 @@ def _infer_column(df, column: str, permissive: bool) -> InferenceResult:
     def record(row) -> _Fold:
         return pickle.loads(bytes(row["blob"]))
 
-    recs = sorted(folded(EMPTY_STRUCT, permissive).collect(), key=lambda r: r["pid"])
+    recs = sorted(folded(seed, permissive).collect(), key=lambda r: r["pid"])
 
     def refold(i: int, seed: Descriptor) -> _Fold:
         sc = df.sparkSession.sparkContext
@@ -437,11 +452,11 @@ def infer_ndjson_strings(
     JSON on both paths);
     FAILFAST raises the first error with its line number; PERMISSIVE
     returns the first 20 skipped lines."""
+    permissive = _permissive(mode)
     it = iter(lines)
     first = next(it, None)
     if first is not None:
         it = chain([first.removeprefix("\ufeff")], it)
-    permissive = mode.upper() == "PERMISSIVE"
     schema, n, errors, err = _fold(it, EMPTY_STRUCT, permissive, detect_dates)
     if err is not None:
         raise err
@@ -474,6 +489,7 @@ def infer_local_file(
     and globs.  The file is cut into one contiguous byte range per usable
     core, but no more ranges than MiB of input, so a file of at most 1 MiB
     is folded in this process alone."""
+    permissive = _permissive(mode)
     name = os.path.basename(path)
     if (
         not _SPARK_PATH_CHARS.isdisjoint(path)
@@ -491,7 +507,7 @@ def infer_local_file(
             cuts = _cuts(f, size, k)
     except OSError:
         return None
-    return _fold_ranges(path, cuts, mode.upper() == "PERMISSIVE", detect_dates)
+    return _fold_ranges(path, cuts, permissive, detect_dates)
 
 
 def _usable_cpus() -> int:

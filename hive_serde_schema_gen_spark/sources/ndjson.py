@@ -30,6 +30,9 @@ def read_ndjson(
     DDL; here the inferred schema immediately drives a typed distributed scan
     (:meth:`SchemaGen.dataframe`, whose read schema has ``for_read=True``:
     ``???`` columns load as strings, because NullType is not readable back).
+    The schema is inferred as the CLI infers it, by :class:`SchemaGen`: a
+    small plain local file folds with no Spark job, anything else in one;
+    only the typed read runs on ``spark``.
     """
     if schema is None:
         return SchemaGen(path, spark, mode=mode).dataframe()

@@ -1,10 +1,11 @@
 """Streaming schema inference — the reference's fold, made incremental.
 
 The reference's merge is a left fold over lines (``Schemer.scala:11-14``),
-which is exactly a streaming accumulator: each micro-batch folds to a partial
-descriptor and its row count (distributed, by ``infer_json_column``'s fold,
-one Spark job per batch) and ``foreachBatch`` merges it into the running
-schema on the driver.  State is O(schema size); the stream can run forever.
+which is exactly a streaming accumulator: each micro-batch folds, seeded
+with the running schema, to a descriptor and its row count (distributed, by
+``infer_json_column``'s fold, one Spark job per batch) and ``foreachBatch``
+merges it into the running schema on the driver.  State is O(schema size);
+the stream can run forever.
 
 This is SURVEY §7 M4 ("streaming inference") — the natural extension the
 single-pass batch design already paid for.
@@ -60,7 +61,9 @@ def infer_stream(
     acc = accumulator or StreamingSchemaAccumulator(permissive=permissive)
 
     def absorb_batch(batch_df, epoch_id: int) -> None:
-        result = _infer_column(batch_df, column, permissive)
+        # seeded with the running schema, so a strict conflict with an
+        # earlier batch names its row, as the fold of all the rows would
+        result = _infer_column(batch_df, column, permissive, acc.schema)
         acc.absorb(result.schema, result.lines)
 
     writer = stream_df.writeStream.outputMode("append").foreachBatch(absorb_batch)

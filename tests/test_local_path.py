@@ -8,8 +8,9 @@ the schema, line count, PERMISSIVE error lines and FAILFAST message that
 folded by its own process, merged by ``infer_path``'s combine step) must
 give the same at any range count, read only its own range in this
 process, and leave no process behind.  The routing tests check that every
-input the local path does not take reaches ``infer_path``; they need no
-Spark.
+input the local path does not take reaches ``infer_path``; the routing is
+``SchemaGen``'s, which ``cli.main`` builds and prints, and the tests need
+no Spark.
 """
 
 import json
@@ -27,6 +28,7 @@ from hive_serde_schema_gen_spark.schema_infer import (
     infer_ndjson_strings,
     infer_path,
 )
+from hive_serde_schema_gen_spark.schema_infer import api
 from hive_serde_schema_gen_spark.schema_infer import infer as infer_mod
 from hive_serde_schema_gen_spark.schema_infer.lattice import EMPTY_STRUCT
 
@@ -154,8 +156,8 @@ def routed(monkeypatch):
         calls.append(path)
         return InferenceResult(EMPTY_STRUCT, 0)
 
-    monkeypatch.setattr(cli, "infer_path", fake_infer_path)
-    monkeypatch.setattr(cli, "get_spark", lambda *a: "session")
+    monkeypatch.setattr(api, "infer_path", fake_infer_path)
+    monkeypatch.setattr(api, "get_spark", lambda *a: "session")
 
     def run(*argv):
         calls.clear()
@@ -279,6 +281,77 @@ def test_small_file_starts_no_jvm_and_matches_spark_path():
     assert spark.returncode == 0, spark.stderr.decode()[-2000:]
     assert spark.stdout == local.stdout
     assert b"CREATE TABLE people" in local.stdout
+
+
+_SCHEMAGEN_NO_JVM = """
+import sys
+from hive_serde_schema_gen_spark.schema_infer import SchemaGen
+print(SchemaGen(sys.argv[1]).table(sys.argv[2]))
+from pyspark import SparkContext
+assert SparkContext._active_spark_context is None, "a SparkContext was started"
+"""
+
+
+def test_schemagen_is_the_cli_without_its_print():
+    lib = _cli(_SCHEMAGEN_NO_JVM, USERS, "people")
+    assert lib.returncode == 0, lib.stderr.decode()[-2000:]
+    assert lib.stderr == b""
+    assert lib.stdout == _cli(_NO_JVM, USERS, "people").stdout
+    assert b"CREATE TABLE people" in lib.stdout
+
+
+def test_schemagen_session_is_lazy(monkeypatch):
+    asked = []
+    monkeypatch.setattr(api, "get_spark", lambda *a: asked.append(a) or "session")
+    sg = api.SchemaGen(USERS)
+    assert asked == []
+    assert sg.spark == sg.spark == "session" and len(asked) == 1
+    assert api.SchemaGen(USERS, "given").spark == "given" and len(asked) == 1
+
+
+# ---------------------------------------------------------------------------
+# Arguments are checked before anything is read
+# ---------------------------------------------------------------------------
+
+
+def test_mode_is_failfast_or_permissive_in_any_case(monkeypatch, tmp_path):
+    def no_spark(*a):
+        raise AssertionError("a session was asked for")
+
+    monkeypatch.setattr(api, "get_spark", no_spark)
+    path = tmp_path / "conflict.json"
+    path.write_bytes(CASES["row_mismatch"])
+    for mode in ("permissive", "Permissive", "PERMISSIVE"):
+        assert infer_ndjson_strings(['{"v": 1}', '{"v": "x"}'], mode=mode).lines == 2
+        assert infer_mod.infer_local_file(str(path), mode).lines == 4
+        assert api.SchemaGen(str(path), mode=mode).definition() == "v STRING"
+    assert api.SchemaGen(USERS, mode="failfast").lines == 3
+    with pytest.raises(SchemaGenError):
+        infer_mod.infer_local_file(str(path), "FailFast")
+    for mode in ("PERMISIVE", "DROPMALFORMED", ""):
+        msg = f"mode must be FAILFAST or PERMISSIVE, got {mode!r}"
+        with pytest.raises(ValueError, match=msg):
+            infer_ndjson_strings(['{"v": 1}', '{"v": "x"}'], mode=mode)
+        with pytest.raises(ValueError, match=msg):
+            infer_mod.infer_local_file(str(path), mode)
+        # refused before the path is looked at, a glob's too
+        with pytest.raises(ValueError, match=msg):
+            infer_mod.infer_local_file(str(tmp_path / "*.json"), mode)
+        with pytest.raises(ValueError, match=msg):
+            api.SchemaGen(str(path), mode=mode)
+
+
+@pytest.mark.parametrize("ratio", ["0", "2.0", "nan", "-1"])
+def test_sampling_ratio_out_of_range_reads_nothing(spark, monkeypatch, capsys, tmp_path, ratio):
+    msg = r"sampling_ratio must be in \(0, 1\], got "
+    # a missing path: the ratio is refused before the path is looked at
+    with pytest.raises(ValueError, match=msg):
+        infer_path(spark, str(tmp_path / "missing.json"), sampling_ratio=float(ratio))
+    monkeypatch.setattr(api, "get_spark", lambda *a: spark)
+    assert cli.main([USERS, "t", "--sampling-ratio", ratio]) == 1
+    out, err = capsys.readouterr()
+    assert out == ""
+    assert err == f"error: sampling_ratio must be in (0, 1], got {float(ratio)!r}\n"
 
 
 # ---------------------------------------------------------------------------

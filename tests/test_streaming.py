@@ -70,6 +70,39 @@ def test_streaming_inference_runs_one_job_per_batch(spark, tmp_path):
     assert sum(batches) == acc.rows
 
 
+def test_strict_stream_names_the_row_that_conflicts_with_an_earlier_batch(spark, tmp_path):
+    """Each batch folds seeded with the running schema, so a strict kind
+    conflict with an earlier batch names its row, as the one-process fold
+    of the rows does."""
+    import json
+
+    from pyspark.errors import StreamingQueryException
+
+    from hive_serde_schema_gen_spark.schema_infer import SchemaGenError, infer_ndjson_strings
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for f, cell in enumerate(['{"a": 1}', '{"a": "x"}']):
+        path = src / f"part{f}.json"
+        path.write_text(json.dumps({"props": cell}) + "\n")
+        os.utime(path, (1_000_000 + f, 1_000_000 + f))  # file order
+    with pytest.raises(SchemaGenError) as want:
+        infer_ndjson_strings(['{"a": 1}', '{"a": "x"}'])
+    stream = (spark.readStream.schema("props string")
+              .option("maxFilesPerTrigger", "1").json(str(src)))
+    q, acc = infer_stream(stream, "props", permissive=False,
+                          checkpoint=str(tmp_path / "ckpt"))
+    try:
+        with pytest.raises(StreamingQueryException) as got:
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    detail = str(want.value).split(" ", 4)[4]  # past "On the line 2"
+    assert '"a": "x"' in detail and "(unknown)" not in detail
+    assert detail in str(got.value)
+    assert acc.definition() == "a TINYINT" and acc.rows == 1
+
+
 def test_streaming_dedup_within_watermark(spark, sf_dir):
     """Streaming dedup: dropDuplicatesWithinWatermark on (user_id,
     event_type) — state-bounded dedup, the streaming twin of dedup_exact.
