@@ -372,9 +372,9 @@ def main() -> None:
     # strategy='auto' bucket diagnostic, banded attribution.  Matches the
     # scale_check `phash_image_dedup` series' construction (default
     # strategy there too since round 16).
-    from hive_serde_schema_gen_spark.operators.multimodal import (
+    from hive_serde_schema_gen_spark.operators.media_core import phash_dedup
+    from hive_serde_schema_gen_spark.operators.media_image import (
         image_hashes,
-        phash_dedup,
         phash_evidence_images,
     )
     from hive_serde_schema_gen_spark.sources.tables import load_table
@@ -391,23 +391,24 @@ def main() -> None:
     # series — evidence synthesis, Arrow fingerprinting, exact collapse,
     # auto bucket diagnostic, banded attribution (strategy='auto'
     # defaults, the production plan).
-    from hive_serde_schema_gen_spark.operators.multimodal import (
-        audio_dedup,
+    from hive_serde_schema_gen_spark.operators.media_audio import (
         audio_evidence_clips,
         audio_fingerprints,
-        video_dedup,
+    )
+    from hive_serde_schema_gen_spark.operators.media_video import (
         video_evidence_clips,
         video_fingerprints,
     )
+    from hive_serde_schema_gen_spark.operators.phash_index import AUDIO, VIDEO
 
-    queries["audio_dedup_default"] = lambda s, d: audio_dedup(
+    queries["audio_dedup_default"] = lambda s, d: AUDIO.dedup(
         audio_fingerprints(
             audio_evidence_clips(
                 load_table(s, d, "documents").select("doc_id", "text")
             )
         ).localCheckpoint()
     ).filter("dist >= 0")
-    queries["video_dedup_default"] = lambda s, d: video_dedup(
+    queries["video_dedup_default"] = lambda s, d: VIDEO.dedup(
         video_fingerprints(
             video_evidence_clips(
                 load_table(s, d, "documents").select("doc_id", "text")

@@ -136,7 +136,8 @@ def _media_main(argv) -> int:
                    "cluster size)")
     args = p.parse_args(argv)
 
-    from .operators.multimodal import PHASH_RADIUS, dedup_media_corpus
+    from .operators.media_core import PHASH_RADIUS
+    from .operators.media_corpus import dedup_media_corpus
 
     spark = get_spark("hive-serde-schema-gen-media")
     accounting: list = []
@@ -225,9 +226,7 @@ def main(argv=None) -> int:
     try:
         new = SchemaGen(args.file, **opts)
         if args.evolve_from is not None:
-            # FILE's session, if it started one: a second get_spark call
-            # would log a warning that it reuses it
-            old = SchemaGen(args.evolve_from, new._spark, **opts)
+            old = SchemaGen(args.evolve_from, **opts)
             stmts = alter_statements(args.table, old.schema, new.schema)
             print(
                 "\n".join(stmts)

@@ -1,8 +1,8 @@
 """Audio member of the media-dedup family: the RIFF/WAV container walk,
 energy-difference fingerprints (AFP), banded near-dup dedup, the planted
 evidence corpus, and the audio oracle CTE chain.  Split out of
-``multimodal.py`` in round 17; re-exported there (the public import path
-is unchanged).
+``multimodal.py`` in round 17.  Dedup runs through
+``phash_index.AUDIO.near_dup_pairs`` / ``.dedup``.
 """
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ from typing import Iterator
 import pandas as pd
 
 from .media_core import (
-    PHASH_BANDS,
     PHASH_PERT_MOD,
     PHASH_PERT_OFFSET,
     PHASH_RADIUS,
@@ -21,8 +20,6 @@ from .media_core import (
     _check_variant_offsets,
     _pack_bits_signed64,
     payload_per_doc,
-    phash_dedup,
-    phash_near_dup_pairs,
     synth_from_docs,
 )
 
@@ -401,61 +398,6 @@ def audio_fingerprints(
             " afp long"
         ),
     )
-
-
-def audio_near_dup_pairs(
-    fps,
-    radius: int = PHASH_RADIUS,
-    n_bands: int = PHASH_BANDS,
-    id_col: str = "aud_id",
-    max_bucket: int | None = None,
-):
-    """(id_a, id_b, dist) for all clip pairs within Hamming distance
-    ``radius`` of each other's fingerprint — the banded-Hamming machinery
-    REUSED VERBATIM (:func:`phash_near_dup_pairs` with
-    ``hash_col='afp'``): banded candidate generation, never all-pairs,
-    exact recall at ``radius <= n_bands - 1`` by pigeonhole."""
-    return phash_near_dup_pairs(
-        fps,
-        radius=radius,
-        n_bands=n_bands,
-        hash_col="afp",
-        id_col=id_col,
-        max_bucket=max_bucket,
-    )
-
-
-def audio_dedup(
-    fps,
-    radius: int = PHASH_RADIUS,
-    n_bands: int = PHASH_BANDS,
-    id_col: str = "aud_id",
-    max_bucket: int | None = None,
-    strategy: str = "auto",
-):
-    """Keep-first perceptual audio dedup — :func:`phash_dedup` over the
-    fingerprint column: exact-fingerprint collapse in ONE aggregate
-    (linear however large a duplicate cluster — the shape that survives a
-    million-copy jingle), then attribution among the surviving
-    representatives via the banded join.  Returns ``(img_id, dup_of,
-    dist)`` keyed by clip id.
-
-    ``strategy='anchor'`` matters MORE for audio than for images: the
-    AFP is deliberately robust to small edits (window energies barely
-    move), so re-encode farms produce large near-identical-but-not-equal
-    fingerprint clusters that the exact collapse cannot fold — the
-    regime where minpair's pair enumeration is quadratic and the anchor
-    path stays linear (same duplicate set; see :func:`phash_dedup`)."""
-    return phash_dedup(
-        fps,
-        radius=radius,
-        n_bands=n_bands,
-        hash_col="afp",
-        id_col=id_col,
-        max_bucket=max_bucket,
-        strategy=strategy,
-    )
-
 
 
 def _afp_sql_ctes() -> str:

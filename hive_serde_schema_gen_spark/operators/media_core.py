@@ -3,8 +3,7 @@ Hamming candidate machinery every media family (image dHash, audio AFP,
 video VFP) rides, the planted-variant id-offset discipline, and the
 transitive duplicate lineage — split out of ``multimodal.py`` in round 17
 (the module had grown past 2,700 lines carrying five op families; see
-VERDICT r16 #4).  ``multimodal.py`` remains the public façade: every name
-here is re-exported there, so external imports are unchanged.
+VERDICT r16 #4).
 """
 
 from __future__ import annotations
@@ -293,9 +292,10 @@ def _band_rows(frame, n_bands, hash_col, id_col, max_bucket):
     """THE shared banded layout: ``(id, __h, __band, __bv)`` rows —
     ``n_bands`` per hash, ``__bv`` the band's ``64/n_bands``-bit slice —
     with the ``max_bucket`` hot-bucket cap applied.  Used by
-    :func:`phash_near_dup_pairs`, :func:`_anchor_near_dedup`, and the
-    ``strategy='auto'`` bucket diagnostic, so the three can never
-    disagree on which candidates a band generates."""
+    :func:`phash_near_dup_pairs`, :func:`_anchor_near_dedup`, the
+    ``strategy='auto'`` bucket diagnostic and the persisted index's band
+    rows (``phash_index``), so the four can never disagree on which
+    candidates a band generates."""
     band_w = 64 // n_bands
     mask = (1 << band_w) - 1
     pairs = []
@@ -371,9 +371,12 @@ def phash_dedup(
       reaches phase 2, which joins against ALL reps — pigeonhole still
       applies); only the ``dup_of`` attribution may differ (an anchor
       rather than the global minimum partner — still a true in-radius
-      smaller-id keeper).  Measured: the sf10 corpus's ~100-copy AFP
-      clusters take minpair from 1.2 s to 152 s at 100× data; 'anchor'
-      restores linear growth (BASELINE.md round 15).
+      smaller-id keeper).  It matters most for audio: the AFP is robust
+      to small edits, so re-encode farms leave near-identical but unequal
+      fingerprints that the exact collapse cannot fold.  Measured: the
+      sf10 corpus's ~100-copy AFP clusters take minpair from 1.2 s to
+      152 s at 100× data; 'anchor' restores linear growth (BASELINE.md
+      round 15).
     - ``'auto'`` (DEFAULT since round 16 — the ``semdedup``
       ``max_cell='auto'`` precedent): one cheap groupBy-count job over
       the representatives' band rows reads the largest band bucket; if
@@ -582,8 +585,8 @@ def media_dup_clusters(pairs, attribution=None):
     component)`` labels via ``clustering.connected_components``
     (size-gated union-find / pointer-jumping — O(log n) rounds, never a
     transitive self-join).  Pass ``attribution`` (the ``(img_id, dup_of,
-    dist)`` keep-first frame from :func:`phash_dedup` /
-    :func:`audio_dedup` / :func:`video_dedup`) to label EXACT-collapse
+    dist)`` keep-first frame from :func:`phash_dedup`, e.g. a family's
+    ``MediaFamily.dedup``) to label EXACT-collapse
     members too — pairs among byte/hash-identical copies never reach the
     pair stage (they collapse in one aggregate), so lineage built from
     pairs alone would miss them.  The component label is the smallest id

@@ -2,7 +2,7 @@
 decode, then fingerprint, then perceptual keep-first, then the optional
 persisted-index probe) and its accounting surfaces, for any media
 family (``phash_index.FAMILIES``).  Split out of ``multimodal.py`` in
-round 17; re-exported there (the public import path is unchanged).
+round 17.
 """
 
 from __future__ import annotations

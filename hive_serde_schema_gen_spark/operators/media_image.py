@@ -1,8 +1,7 @@
 """Image member of the media-dedup family: perceptual hashes (dHash /
 aHash) over decoded BMP pixel arrays, the planted evidence corpus, the
 resize evidence stage, and the image oracle CTE chain.  Split out of
-``multimodal.py`` in round 17; re-exported there (the public import path
-is unchanged).
+``multimodal.py`` in round 17.
 """
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
 """Video member of the media-dedup family: the raw-frame container,
 every-k-th frame sampling, per-frame dHash → bitwise-MAJORITY pooled
 fingerprints, banded near-dup dedup, the planted evidence corpus, and the
-video oracle CTE chain.  Split out of ``multimodal.py`` in round 17;
-re-exported there (the public import path is unchanged).
+video oracle CTE chain.  Split out of ``multimodal.py`` in round 17.
+Dedup runs through ``phash_index.VIDEO.near_dup_pairs`` / ``.dedup``.
 """
 
 from __future__ import annotations
@@ -12,10 +12,8 @@ from typing import Iterator
 import pandas as pd
 
 from .media_core import (
-    PHASH_BANDS,
     PHASH_RADIUS,
     _check_variant_offsets,
-    phash_dedup,
     synth_from_docs,
 )
 
@@ -299,33 +297,6 @@ def video_fingerprints(
         run,
         schema=f"{id_col} long, n_frames int, n_sampled int, vfp long",
     )
-
-
-def video_dedup(
-    fps,
-    radius: int = PHASH_RADIUS,
-    n_bands: int = PHASH_BANDS,
-    id_col: str = "vid_id",
-    max_bucket: int | None = None,
-    strategy: str = "auto",
-):
-    """Keep-first perceptual video dedup — :func:`phash_dedup` over the
-    majority fingerprint column: exact-fingerprint collapse in ONE
-    aggregate, then banded attribution among representatives.  Returns
-    ``(img_id, dup_of, dist)`` keyed by video id.  Re-encode farms that
-    perturb a frame or append a duplicated tail land within radius of
-    the original because majority pooling absorbs single-frame edits."""
-    return phash_dedup(
-        fps,
-        radius=radius,
-        n_bands=n_bands,
-        hash_col="vfp",
-        id_col=id_col,
-        max_bucket=max_bucket,
-        strategy=strategy,
-    )
-
-
 
 
 def _video_redub(doc_id: int, text: bytes) -> bytes:

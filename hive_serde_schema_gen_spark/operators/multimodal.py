@@ -9,6 +9,11 @@ this environment — it ships no codec libraries by design; a real
 deployment adds a ``PIL.Image.open`` / ``torchaudio.load`` decode stage
 with the same ``mapInPandas`` shape as ``_bmp_decode`` below, changing
 nothing structurally (schema, batching, partitioning all carry over).
+
+The media op families live in ``media_core`` / ``media_image`` /
+``media_audio`` / ``media_video`` / ``media_corpus``, bound per modality
+by ``phash_index.MediaFamily``; this module holds the registered driver
+slots and their oracles.
 """
 
 from __future__ import annotations
@@ -20,97 +25,19 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.tables import load_table
-
-
-# ---------------------------------------------------------------------------
-# Round-17 split: the five media op families moved to sibling modules
-# (media_core / media_image / media_audio / media_video / media_corpus —
-# VERDICT r16 #4: this file had grown past 2,700 lines).  This module
-# remains the public FAÇADE (the `curation.py` precedent): every moved
-# name is re-exported below, so external imports are unchanged, and the
-# three registered driver slots stay here with their oracle text intact.
-# ---------------------------------------------------------------------------
-
-from .media_core import (  # noqa: F401
-    AUTO_ANCHOR_BUCKET,
-    PHASH_BANDS,
-    PHASH_GRID,
-    PHASH_PERT_MOD,
-    PHASH_PERT_OFFSET,
-    PHASH_RADIUS,
-    PHASH_UP_MOD,
-    PHASH_UP_OFFSET,
-    _anchor_near_dedup,
-    _auto_pick,
-    _band_rows,
-    _bmp_decode,
-    _bmp_dims,
-    _bmp_encode,
-    _bmp_from_pixels,
-    _bmp_pixel_array,
-    _check_variant_offsets,
-    _pack_bits_signed64,
-    _pairs_from_bands,
-    _resize_nearest,
-    bmp_resize,
-    media_dup_clusters,
-    phash_dedup,
-    phash_near_dup_pairs,
-    with_bmp_payload,
-)
-from .media_image import (  # noqa: F401
-    RESIZE_H,
-    RESIZE_W,
-    _ahash,
-    _dhash,
-    _gray_grid,
-    _phash_sql_ctes,
-    image_hashes,
-    phash_evidence_images,
-    resize_checksums,
-)
-from .media_video import (  # noqa: F401
-    FRAME_EVERY_K,
-    VFP_DUP_MOD,
-    VFP_DUP_OFFSET,
-    VFP_GRID_PIN,
-    VFP_PERT_MOD,
-    VFP_PERT_OFFSET,
-    _VID_HEADER,
-    _VID_MAGIC,
-    _frame_dhash_u,
-    _video_encode,
-    _video_redub,
-    _vfp_sql_ctes,
-    sample_frames,
-    video_dedup,
-    video_evidence_clips,
-    video_fingerprints,
-    with_video_payload,
-)
-from .media_audio import (  # noqa: F401
-    AFP_ANCHORS,
-    AFP_WINDOWS,
-    AUDIO_PERT_RUN_DIV,
-    AUDIO_VOL_MOD,
-    AUDIO_VOL_OFFSET,
-    _WAV_RATES,
+from .media_audio import (
     _afp_sql_ctes,
-    _audio_fp,
-    _trim_silence,
-    _wav_container,
-    _wav_decode,
-    _wav_encode,
-    _wav_pcm_samples,
-    _wav_rate,
-    audio_dedup,
     audio_evidence_clips,
     audio_fingerprints,
-    audio_near_dup_pairs,
-    wav_features,
-    with_wav_payload,
 )
-from .media_corpus import (  # noqa: F401
+from .media_core import (
+    PHASH_RADIUS,
+    PHASH_UP_OFFSET,
+    _bmp_decode,
+    media_dup_clusters,
+    with_bmp_payload,
+)
+from .media_corpus import (
     MACCT_COPY_OFFSET,
     MACCT_GARB_MOD,
     MACCT_GARB_OFFSET,
@@ -118,6 +45,23 @@ from .media_corpus import (  # noqa: F401
     _MACCT_ORD,
     decode_drop_report,
     dedup_media_corpus,
+)
+from .media_image import (
+    RESIZE_H,
+    RESIZE_W,
+    _phash_sql_ctes,
+    image_hashes,
+    phash_evidence_images,
+    resize_checksums,
+)
+from .media_video import (
+    FRAME_EVERY_K,
+    VFP_DUP_OFFSET,
+    _vfp_sql_ctes,
+    sample_frames,
+    video_evidence_clips,
+    video_fingerprints,
+    with_video_payload,
 )
 from .phash_index import (
     AUDIO,
@@ -606,8 +550,8 @@ def multimodal_resize_frames(spark, sf_dir):
         return (
             _op_rows(hashed, "dhash", "img_id", checksum="dhash", **dims),
             _op_rows(hashed, "ahash", "img_id", checksum="ahash", **dims),
-            _pair_rows(phash_near_dup_pairs(hashed), "pdup"),
-            _dedup_rows(phash_dedup(hashed, strategy="minpair"), "pdedup"),
+            _pair_rows(IMAGE.near_dup_pairs(hashed), "pdup"),
+            _dedup_rows(IMAGE.dedup(hashed, strategy="minpair"), "pdedup"),
             # op='pprobe'/'pnovel': the PERSISTED index lifecycle driven
             # at query time — exact recall at the default radius means
             # the oracle's brute-force base×variant pair set IS the
@@ -627,8 +571,8 @@ def multimodal_resize_frames(spark, sf_dir):
                 afps, "afp", "aud_id", width="sample_rate",
                 height="n_samples", checksum="afp",
             ),
-            _pair_rows(audio_near_dup_pairs(afps), "apair"),
-            _dedup_rows(audio_dedup(afps, strategy="minpair"), "adedup"),
+            _pair_rows(AUDIO.near_dup_pairs(afps), "apair"),
+            _dedup_rows(AUDIO.dedup(afps, strategy="minpair"), "adedup"),
             # round-17: op='aprobe'/'anovel' — the same lifecycle under
             # the audio meta pin.
             *_index_lifecycle(
@@ -643,10 +587,8 @@ def multimodal_resize_frames(spark, sf_dir):
         vfps = video_fingerprints(video_evidence_clips(d)).localCheckpoint()
         # pairs and attribution feed THREE consumers each (their op rows +
         # the transitive-lineage clusters) — cut lineage once apiece
-        vpairs = phash_near_dup_pairs(
-            vfps, hash_col="vfp", id_col="vid_id"
-        ).localCheckpoint()
-        vatt = video_dedup(vfps, strategy="minpair").localCheckpoint()
+        vpairs = VIDEO.near_dup_pairs(vfps).localCheckpoint()
+        vatt = VIDEO.dedup(vfps, strategy="minpair").localCheckpoint()
         return (
             _op_rows(
                 vfps, "vfp", "vid_id", width="n_frames",

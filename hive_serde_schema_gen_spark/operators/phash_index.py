@@ -3,9 +3,10 @@ index — the media twin of ``dedup_index.py``: a new batch dedups against
 the historical corpus by probing an on-disk artifact, never re-decoding
 the petabytes already processed.  One index serves every modality: a
 :class:`MediaFamily` names the modality's id and hash columns, the meta
-grid pin, and its fingerprint and dedup functions, and every function
-here takes ``family=`` (default :data:`IMAGE`).  (Batch twin:
-``multimodal.phash_near_dup_pairs`` / ``phash_dedup``; streaming twin:
+grid pin and its fingerprint function, and every function here takes
+``family=`` (default :data:`IMAGE`).  (Batch twin:
+``MediaFamily.near_dup_pairs`` / ``.dedup``, over
+``media_core.phash_near_dup_pairs`` / ``phash_dedup``; streaming twin:
 ``streaming/media_ingest.py``.)
 
 Index layout (parquet, under one directory; shared by all families, so
@@ -46,18 +47,26 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .media_audio import AFP_WINDOWS, audio_dedup, audio_fingerprints
-from .media_core import PHASH_BANDS, PHASH_GRID, PHASH_RADIUS, phash_dedup
+from .media_audio import AFP_WINDOWS, audio_fingerprints
+from .media_core import (
+    PHASH_BANDS,
+    PHASH_GRID,
+    PHASH_RADIUS,
+    _band_rows,
+    phash_dedup,
+    phash_near_dup_pairs,
+)
 from .media_image import image_hashes
-from .media_video import VFP_GRID_PIN, video_dedup, video_fingerprints
+from .media_video import VFP_GRID_PIN, video_fingerprints
 
 
 @dataclass(frozen=True)
 class MediaFamily:
     """One modality's binding of the shared media machinery: its id and
     64-bit hash columns (``aux_cols`` ride along into the index), the
-    meta ``grid`` pin, ``fingerprint(df, id_col=…)`` (id, payload) →
-    hash frame, and ``dedup(fps, …)`` keep-first attribution."""
+    meta ``grid`` pin, and ``fingerprint(df, id_col=…)`` (id, payload) →
+    hash frame.  :meth:`near_dup_pairs` and :meth:`dedup` run the one
+    banded-Hamming core over the family's columns."""
 
     name: str
     id_col: str
@@ -65,45 +74,45 @@ class MediaFamily:
     aux_cols: tuple
     grid: int
     fingerprint: Callable
-    dedup: Callable
+
+    def _cols(self, kw: dict) -> dict:
+        # an explicit keyword wins (dedup_media_corpus passes its id_col)
+        return {"hash_col": self.hash_col, "id_col": self.id_col, **kw}
+
+    def near_dup_pairs(self, fps: DataFrame, **kw) -> DataFrame:
+        """:func:`~.media_core.phash_near_dup_pairs` over this family's
+        hash and id columns: ``(img_a, img_b, dist)``."""
+        return phash_near_dup_pairs(fps, **self._cols(kw))
+
+    def dedup(self, fps: DataFrame, **kw) -> DataFrame:
+        """:func:`~.media_core.phash_dedup` (keep-first attribution) over
+        this family's hash and id columns: ``(img_id, dup_of, dist)``
+        keyed by the family's id."""
+        return phash_dedup(fps, **self._cols(kw))
 
 
 IMAGE = MediaFamily(
-    "image", "img_id", "dhash", ("ahash",), PHASH_GRID, image_hashes,
-    phash_dedup,
+    "image", "img_id", "dhash", ("ahash",), PHASH_GRID, image_hashes
 )
 AUDIO = MediaFamily(
-    "audio", "aud_id", "afp", (), AFP_WINDOWS, audio_fingerprints,
-    audio_dedup,
+    "audio", "aud_id", "afp", (), AFP_WINDOWS, audio_fingerprints
 )
 VIDEO = MediaFamily(
-    "video", "vid_id", "vfp", (), VFP_GRID_PIN, video_fingerprints,
-    video_dedup,
+    "video", "vid_id", "vfp", (), VFP_GRID_PIN, video_fingerprints
 )
 FAMILIES = {f.name: f for f in (IMAGE, AUDIO, VIDEO)}
 
 PHASH_INDEX_VERSION = 1
-_BAND_W = 64 // PHASH_BANDS
-_BAND_MASK = (1 << _BAND_W) - 1
 
 
-def _band_rows(h: DataFrame) -> DataFrame:
-    """(band, band_val, img_id) of a STORED-name frame — the on-disk
-    banding, identical to the batch operator's in-memory banding so batch
-    and index probes can never disagree on candidates."""
-    pairs = []
-    for k in range(PHASH_BANDS):
-        pairs.extend(
-            [
-                F.lit(k),
-                F.shiftrightunsigned(
-                    F.col("dhash"), _BAND_W * k
-                ).bitwiseAND(F.lit(_BAND_MASK)),
-            ]
-        )
-    return h.select(
-        "img_id", F.stack(F.lit(PHASH_BANDS), *pairs).alias("band", "band_val")
-    ).select("band", "band_val", "img_id")
+def _index_band_rows(h: DataFrame) -> DataFrame:
+    """(band, band_val, img_id) of a STORED-name frame: the batch
+    operator's :func:`~.media_core._band_rows` under the stored column
+    names, so batch and index probes can never disagree on candidates."""
+    return _band_rows(h, PHASH_BANDS, "dhash", "img_id", None).select(
+        F.col("__band").alias("band"), F.col("__bv").alias("band_val"),
+        "img_id",
+    )
 
 
 def _select_stored(
@@ -139,7 +148,7 @@ def build_phash_index(
     with index_writer_lock(spark, path, owner):
         h = _select_stored(hashes, family).localCheckpoint()
         (
-            _band_rows(h)
+            _index_band_rows(h)
             .repartitionByRange(n_files, "band", "band_val")
             .sortWithinPartitions("band", "band_val")
             .write.mode("overwrite")
@@ -177,7 +186,7 @@ def extend_phash_index(
     with index_writer_lock(hashes.sparkSession, path, owner):
         _check_meta(hashes.sparkSession, path, family)
         h = _select_stored(hashes, family).localCheckpoint()
-        _band_rows(h).write.mode("append").parquet(f"{path}/bands")
+        _index_band_rows(h).write.mode("append").parquet(f"{path}/bands")
         h.withColumn("epoch", F.lit(epoch).cast("long")).write.mode(
             "append"
         ).parquet(f"{path}/hashes")
@@ -219,7 +228,7 @@ def phash_against_index(
             f"{PHASH_BANDS - 1}; band the hash finer or lower the radius"
         )
     h_new = _select_stored(new_hashes, family, aux=False).localCheckpoint()
-    bands_new = _band_rows(h_new)
+    bands_new = _index_band_rows(h_new)
     if broadcast_batch:
         bands_new = F.broadcast(bands_new)
     bands_idx = spark.read.parquet(f"{path}/bands")

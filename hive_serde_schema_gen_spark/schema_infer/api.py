@@ -27,7 +27,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from ..session import get_spark
-from .infer import infer_local_file, infer_path
+from .infer import _check_ratio, _permissive, infer_local_file, infer_path
 from .lattice import Descriptor, structs_to_maps
 from .render import render_definition, render_table
 from .spark_schema import to_spark_schema
@@ -54,6 +54,9 @@ class SchemaGen:
         infer_maps: Optional[int] = None,
         detect_dates: bool = False,
     ) -> None:
+        # the arguments are checked before a session is started for them
+        _permissive(mode)
+        _check_ratio(sampling_ratio)
         self._spark = spark
         self.file = file
         # Spark's sampler has no local twin

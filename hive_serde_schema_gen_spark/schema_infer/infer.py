@@ -228,6 +228,13 @@ def _permissive(mode: str) -> bool:
     return mode.upper() == "PERMISSIVE"
 
 
+def _check_ratio(sampling_ratio: Optional[float]) -> None:
+    """``sampling_ratio`` is None (every line) or in ``(0, 1]``; anything
+    else (``0``, ``2.0``, ``nan``, ``-1``) is a ``ValueError``."""
+    if sampling_ratio is not None and not 0 < sampling_ratio <= 1:
+        raise ValueError(f"sampling_ratio must be in (0, 1], got {sampling_ratio!r}")
+
+
 def _merge_or_none(a: Descriptor, b: Descriptor, permissive: bool) -> Optional[Descriptor]:
     try:
         return merge(a, b, permissive=permissive)
@@ -271,8 +278,7 @@ def infer_path(
     types ISO-8601 strings as DATE/TIMESTAMP.
     """
     permissive = _permissive(mode)
-    if sampling_ratio is not None and not 0 < sampling_ratio <= 1:
-        raise ValueError(f"sampling_ratio must be in (0, 1], got {sampling_ratio!r}")
+    _check_ratio(sampling_ratio)
     sc = spark.sparkContext
     if not min_partitions:
         by_size = -(-_input_bytes(sc, path) // _MIN_SPLIT_BYTES)

@@ -21,6 +21,15 @@ _CONF_LOCK = threading.RLock()
 
 
 def get_spark(app_name: str = "hive_serde_schema_gen_spark") -> SparkSession:
+    """The running session, untouched, or else a new one with the defaults
+    below.  Re-applying the builder's confs to a running session would reset
+    any runtime conf its owner changed (a session-global change with no
+    restore) and log a WARN.  The running session is the one a bare
+    ``getOrCreate`` returns, from any driver thread (``getActiveSession``
+    sees only the creating thread's)."""
+    live = SparkSession._instantiatedSession
+    if live is not None and live._sc._jsc is not None:
+        return live
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -28,13 +28,8 @@ verbatim (same interleavings, same guards):
 Intra-batch: exact-hash duplicates WITHIN one batch collapse to the
 minimum id before the probe (two copies arriving together are both
 absent from the index); intra-batch NEAR-dups are invisible to the
-probe until the next batch — run ``phash_near_dup_pairs`` (with the
-family's ``hash_col``/``id_col``) over the (small) novel set in-line
-when that matters, exactly the text caveat.
-
-``image_ingest`` / ``audio_ingest`` / ``video_ingest`` keep the
-per-modality names (``process_image_ingest_batch``,
-``start_audio_ingest``, ``read_ingested_videos``, …) as aliases.
+probe until the next batch — run ``family.near_dup_pairs`` over the
+(small) novel set in-line when that matters, exactly the text caveat.
 """
 
 from __future__ import annotations

@@ -52,10 +52,7 @@ def _state_partitions(spark, sf_dir: str) -> int:
     the SOURCE SIZE — one state partition per ~8 MiB, floor 4 — capped at
     ``defaultParallelism``, so a cluster-scale stream still gets every
     core (the local win is from right-sizing to data, not from a host
-    constant).  ``SPARK_GRAFT_STREAM_STATE_PARTS`` overrides."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-    if env:
-        return int(env)
+    constant)."""
     try:
         size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
     except OSError:

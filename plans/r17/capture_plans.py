@@ -32,17 +32,20 @@ def bench_queries(spark):
         text_quality_score,
     )
     from hive_serde_schema_gen_spark.operators.inference import infer_props_schema
-    from hive_serde_schema_gen_spark.operators.multimodal import (
-        audio_dedup,
+    from hive_serde_schema_gen_spark.operators.media_audio import (
         audio_evidence_clips,
         audio_fingerprints,
+    )
+    from hive_serde_schema_gen_spark.operators.media_core import phash_dedup
+    from hive_serde_schema_gen_spark.operators.media_image import (
         image_hashes,
-        phash_dedup,
         phash_evidence_images,
-        video_dedup,
+    )
+    from hive_serde_schema_gen_spark.operators.media_video import (
         video_evidence_clips,
         video_fingerprints,
     )
+    from hive_serde_schema_gen_spark.operators.phash_index import AUDIO, VIDEO
     from hive_serde_schema_gen_spark.sources.tables import load_table
 
     queries = dict(all_queries())
@@ -61,14 +64,14 @@ def bench_queries(spark):
             )
         ).localCheckpoint()
     ).filter("dist >= 0")
-    queries["audio_dedup_default"] = lambda s, d: audio_dedup(
+    queries["audio_dedup_default"] = lambda s, d: AUDIO.dedup(
         audio_fingerprints(
             audio_evidence_clips(
                 load_table(s, d, "documents").select("doc_id", "text")
             )
         ).localCheckpoint()
     ).filter("dist >= 0")
-    queries["video_dedup_default"] = lambda s, d: video_dedup(
+    queries["video_dedup_default"] = lambda s, d: VIDEO.dedup(
         video_fingerprints(
             video_evidence_clips(
                 load_table(s, d, "documents").select("doc_id", "text")

@@ -33,10 +33,8 @@ def timed_ckpt(self, eager=True):
 
 DataFrame.localCheckpoint = timed_ckpt
 
-import hive_serde_schema_gen_spark.operators.afp_index as AI
 import hive_serde_schema_gen_spark.operators.media_corpus as MC
 import hive_serde_schema_gen_spark.operators.phash_index as PI
-import hive_serde_schema_gen_spark.operators.vfp_index as VI
 
 
 def wrap(mod, name):
@@ -54,8 +52,6 @@ def wrap(mod, name):
 
 for mod, names in (
     (PI, ["build_phash_index", "extend_phash_index", "phash_against_index"]),
-    (AI, ["build_afp_index", "extend_afp_index", "afp_against_index"]),
-    (VI, ["build_vfp_index", "extend_vfp_index", "vfp_against_index"]),
     (MC, ["dedup_media_corpus", "decode_drop_report"]),
 ):
     for n in names:

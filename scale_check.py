@@ -291,17 +291,20 @@ def run_sf10() -> None:
     from hive_serde_schema_gen_spark.operators.similarity import (
         embedding_norms,
     )
-    from hive_serde_schema_gen_spark.operators.multimodal import (
-        audio_dedup,
+    from hive_serde_schema_gen_spark.operators.media_audio import (
         audio_evidence_clips,
         audio_fingerprints,
+    )
+    from hive_serde_schema_gen_spark.operators.media_core import phash_dedup
+    from hive_serde_schema_gen_spark.operators.media_image import (
         image_hashes,
-        phash_dedup,
         phash_evidence_images,
-        video_dedup,
+    )
+    from hive_serde_schema_gen_spark.operators.media_video import (
         video_evidence_clips,
         video_fingerprints,
     )
+    from hive_serde_schema_gen_spark.operators.phash_index import AUDIO, VIDEO
     from hive_serde_schema_gen_spark.operators.text import (
         text_lang_id,
         text_quality_score,
@@ -388,7 +391,7 @@ def run_sf10() -> None:
                 dup_offset=10**9, pert_offset=2 * 10**9,
             )
         ).filter("vfp IS NOT NULL AND n_sampled > 0"),
-        "video_dedup_default": lambda s, d: video_dedup(
+        "video_dedup_default": lambda s, d: VIDEO.dedup(
             video_fingerprints(
                 video_evidence_clips(
                     load_table(s, d, "documents").select("doc_id", "text"),
@@ -400,7 +403,7 @@ def run_sf10() -> None:
         # diagnostic must route this corpus's ~100-copy AFP clusters to
         # the anchor plan, so the default no longer cliffs (VERDICT r15
         # #3: "default-path sf10 row with no cliff").
-        "audio_dedup_default": lambda s, d: audio_dedup(
+        "audio_dedup_default": lambda s, d: AUDIO.dedup(
             audio_fingerprints(
                 audio_evidence_clips(
                     load_table(s, d, "documents").select("doc_id", "text"),
@@ -409,7 +412,7 @@ def run_sf10() -> None:
                 )
             ).localCheckpoint(),
         ).filter("dist >= 0"),
-        "audio_dedup_anchor": lambda s, d: audio_dedup(
+        "audio_dedup_anchor": lambda s, d: AUDIO.dedup(
             audio_fingerprints(
                 audio_evidence_clips(
                     load_table(s, d, "documents").select("doc_id", "text"),
@@ -492,12 +495,20 @@ def main() -> None:
     from hive_serde_schema_gen_spark.operators.dsir import dsir_weights
     from hive_serde_schema_gen_spark.operators.embedding import embed_text
     from hive_serde_schema_gen_spark.operators.html import html_to_text
-    from hive_serde_schema_gen_spark.operators import multimodal as _mm
-    from hive_serde_schema_gen_spark.operators.multimodal import (
+    from hive_serde_schema_gen_spark.operators.media_audio import (
+        audio_evidence_clips,
+        audio_fingerprints,
+    )
+    from hive_serde_schema_gen_spark.operators.media_core import phash_dedup
+    from hive_serde_schema_gen_spark.operators.media_image import (
         image_hashes,
-        phash_dedup,
         phash_evidence_images,
     )
+    from hive_serde_schema_gen_spark.operators.media_video import (
+        video_evidence_clips,
+        video_fingerprints,
+    )
+    from hive_serde_schema_gen_spark.operators.phash_index import AUDIO, VIDEO
     from hive_serde_schema_gen_spark.operators.text import script_token_stats
     from hive_serde_schema_gen_spark.operators.bpe import encode_bpe
     from hive_serde_schema_gen_spark.operators.packing import (
@@ -812,16 +823,16 @@ def main() -> None:
         ).filter("dist >= 0"),
         # audio twin (round 15): WAV synth+decode+fingerprint (Arrow
         # path), exact-fingerprint collapse, banded Hamming among reps
-        "audio_dedup": lambda s, d: _mm.audio_dedup(
-            _mm.audio_fingerprints(
-                _mm.audio_evidence_clips(_docs(s, d))
+        "audio_dedup": lambda s, d: AUDIO.dedup(
+            audio_fingerprints(
+                audio_evidence_clips(_docs(s, d))
             ).localCheckpoint()
         ).filter("dist >= 0"),
         # video twin (round 16): container decode + per-frame dHash +
         # majority pool (Arrow path), then the shared banded machinery
-        "video_dedup": lambda s, d: _mm.video_dedup(
-            _mm.video_fingerprints(
-                _mm.video_evidence_clips(_docs(s, d))
+        "video_dedup": lambda s, d: VIDEO.dedup(
+            video_fingerprints(
+                video_evidence_clips(_docs(s, d))
             ).localCheckpoint()
         ).filter("dist >= 0"),
         # 6 constraints in ONE aggregate pass; the filter keeps the
@@ -897,10 +908,10 @@ def _index_lifecycle(spark) -> dict:
         dedup_against_index,
         extend_minhash_index,
     )
-    from hive_serde_schema_gen_spark.operators.multimodal import (
-        image_hashes,
+    from hive_serde_schema_gen_spark.operators.media_core import (
         with_bmp_payload,
     )
+    from hive_serde_schema_gen_spark.operators.media_image import image_hashes
     from hive_serde_schema_gen_spark.operators.phash_index import (
         build_phash_index,
         extend_phash_index,

@@ -1,5 +1,6 @@
-"""Persisted AFP (audio fingerprint) index (`operators/afp_index.py`) +
-streaming audio ingest (`streaming/audio_ingest.py`): build→probe parity
+"""Persisted AFP (audio fingerprint) index (`operators/phash_index.py`
+under the AUDIO family) + streaming audio ingest
+(`streaming/media_ingest.py`): build→probe parity
 with the batch operator, extend/probe across batches, replay idempotence
 (the ingest.py interleavings applied to audio), compaction, the
 cross-family meta guard, and a real file-stream drive — the audio
@@ -18,22 +19,22 @@ import pytest
 
 pytestmark = pytest.mark.slow  # regression-depth tail (see pyproject.toml)
 
-from hive_serde_schema_gen_spark.operators.afp_index import (
-    afp_against_index,
-    build_afp_index,
-    compact_afp_index,
-    extend_afp_index,
-    novel_clips,
-)
-from hive_serde_schema_gen_spark.operators.multimodal import (
+from hive_serde_schema_gen_spark.operators.media_audio import (
     _wav_encode,
     audio_fingerprints,
-    audio_near_dup_pairs,
 )
-from hive_serde_schema_gen_spark.streaming.audio_ingest import (
-    process_audio_ingest_batch,
-    read_ingested_audio,
-    start_audio_ingest,
+from hive_serde_schema_gen_spark.operators.phash_index import (
+    AUDIO,
+    build_phash_index,
+    compact_phash_index,
+    extend_phash_index,
+    novel_images,
+    phash_against_index,
+)
+from hive_serde_schema_gen_spark.streaming.media_ingest import (
+    process_media_ingest_batch,
+    read_ingested_media,
+    start_media_ingest,
 )
 
 
@@ -70,19 +71,21 @@ def _frame(spark, rows):
 
 def test_build_probe_matches_batch_operator(spark, dirs):
     corpus = _frame(spark, CORPUS)
-    build_afp_index(audio_fingerprints(corpus), dirs["index"], n_files=2)
+    build_phash_index(
+        audio_fingerprints(corpus), dirs["index"], n_files=2, family=AUDIO
+    )
     batch = _frame(spark, [COPY_OF_2, NEAR_2, NOVEL_A])
     bf = audio_fingerprints(batch).localCheckpoint()
     got = {
         (r["aud_id"], r["matched_aud_id"], r["dist"])
-        for r in afp_against_index(bf, dirs["index"]).collect()
+        for r in phash_against_index(bf, dirs["index"], family=AUDIO).collect()
     }
     both = audio_fingerprints(corpus.unionAll(batch)).localCheckpoint()
     want = {
         (b, a, d)
         for a, b, d in (
             (r["img_a"], r["img_b"], r["dist"])
-            for r in audio_near_dup_pairs(both).collect()
+            for r in AUDIO.near_dup_pairs(both).collect()
         )
         if a <= 4 < b  # corpus × batch pairs only, batch id first
     }
@@ -90,19 +93,22 @@ def test_build_probe_matches_batch_operator(spark, dirs):
     assert (102, 2, 0) in got  # the exact copy
     novel = {
         r["aud_id"]
-        for r in novel_clips(
-            bf, afp_against_index(bf, dirs["index"])
+        for r in novel_images(
+            bf, phash_against_index(bf, dirs["index"], family=AUDIO),
+            AUDIO.id_col,
         ).collect()
     }
     assert 105 in novel and 102 not in novel
 
 
 def test_extend_then_probe_sees_new_history(spark, dirs):
-    build_afp_index(
-        audio_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2
+    build_phash_index(
+        audio_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2,
+        family=AUDIO,
     )
-    extend_afp_index(
-        audio_fingerprints(_frame(spark, [NOVEL_A])), dirs["index"], epoch=1
+    extend_phash_index(
+        audio_fingerprints(_frame(spark, [NOVEL_A])), dirs["index"], epoch=1,
+        family=AUDIO,
     )
     probe = audio_fingerprints(
         _frame(
@@ -112,7 +118,9 @@ def test_extend_then_probe_sees_new_history(spark, dirs):
     )
     got = {
         (r["aud_id"], r["matched_aud_id"], r["dist"])
-        for r in afp_against_index(probe, dirs["index"]).collect()
+        for r in phash_against_index(
+            probe, dirs["index"], family=AUDIO
+        ).collect()
     }
     assert (205, 105, 0) in got
 
@@ -121,10 +129,8 @@ def test_cross_family_meta_guard(spark, dirs):
     """An IMAGE-built index probed as an audio index fails loudly on the
     grid pin (8 vs 65) — the shared-layout hazard the meta row exists
     for."""
-    from hive_serde_schema_gen_spark.operators.multimodal import (
-        _bmp_encode,
-        image_hashes,
-    )
+    from hive_serde_schema_gen_spark.operators.media_core import _bmp_encode
+    from hive_serde_schema_gen_spark.operators.media_image import image_hashes
     from hive_serde_schema_gen_spark.operators.phash_index import (
         build_phash_index,
     )
@@ -135,24 +141,26 @@ def test_cross_family_meta_guard(spark, dirs):
     )
     build_phash_index(image_hashes(imgs), dirs["index"], n_files=1)
     with pytest.raises(ValueError, match="rebuild the index"):
-        afp_against_index(
-            audio_fingerprints(_frame(spark, [NOVEL_A])), dirs["index"]
+        phash_against_index(
+            audio_fingerprints(_frame(spark, [NOVEL_A])), dirs["index"],
+            family=AUDIO,
         )
 
 
 def test_ingest_replay_idempotent(spark, dirs):
-    build_afp_index(
-        audio_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2
+    build_phash_index(
+        audio_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2,
+        family=AUDIO,
     )
     b0 = _frame(spark, [COPY_OF_2, NOVEL_A, NOVEL_B])
-    process_audio_ingest_batch(b0, 0, dirs["index"], dirs["out"])
+    process_media_ingest_batch(b0, 0, dirs["index"], dirs["out"], family=AUDIO)
     first = {
-        r["aud_id"] for r in read_ingested_audio(spark, dirs["out"]).collect()
+        r["aud_id"] for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     # full replay of epoch 0 after its extend committed
-    process_audio_ingest_batch(b0, 0, dirs["index"], dirs["out"])
+    process_media_ingest_batch(b0, 0, dirs["index"], dirs["out"], family=AUDIO)
     again = {
-        r["aud_id"] for r in read_ingested_audio(spark, dirs["out"]).collect()
+        r["aud_id"] for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     assert first == again == {105, 106}
     # cross-epoch re-delivery of an accepted id: rejected outright
@@ -160,30 +168,35 @@ def test_ingest_replay_idempotent(spark, dirs):
         spark,
         [NOVEL_A, _clip(301, b"novel in epoch one, a new audio payload")],
     )
-    process_audio_ingest_batch(b1, 1, dirs["index"], dirs["out"])
+    process_media_ingest_batch(b1, 1, dirs["index"], dirs["out"], family=AUDIO)
     final = {
-        r["aud_id"] for r in read_ingested_audio(spark, dirs["out"]).collect()
+        r["aud_id"] for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     assert final == {105, 106, 301}
 
 
 def test_compaction_preserves_probe_results(spark, dirs):
-    build_afp_index(
-        audio_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2
+    build_phash_index(
+        audio_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2,
+        family=AUDIO,
     )
     ext = audio_fingerprints(_frame(spark, [NOVEL_A]))
-    extend_afp_index(ext, dirs["index"], epoch=1)
-    extend_afp_index(ext, dirs["index"], epoch=1)  # replayed append
+    extend_phash_index(ext, dirs["index"], epoch=1, family=AUDIO)
+    extend_phash_index(ext, dirs["index"], epoch=1, family=AUDIO)  # replayed append
     probe = audio_fingerprints(_frame(spark, [COPY_OF_2, NOVEL_B]))
     before = {
         (r["aud_id"], r["matched_aud_id"], r["dist"])
-        for r in afp_against_index(probe, dirs["index"]).collect()
+        for r in phash_against_index(
+            probe, dirs["index"], family=AUDIO
+        ).collect()
     }
     n_before = spark.read.parquet(f"{dirs['index']}/hashes").count()
-    compact_afp_index(spark, dirs["index"], n_files=2)
+    compact_phash_index(spark, dirs["index"], n_files=2, family=AUDIO)
     after = {
         (r["aud_id"], r["matched_aud_id"], r["dist"])
-        for r in afp_against_index(probe, dirs["index"]).collect()
+        for r in phash_against_index(
+            probe, dirs["index"], family=AUDIO
+        ).collect()
     }
     n_after = spark.read.parquet(f"{dirs['index']}/hashes").count()
     assert before == after
@@ -191,8 +204,9 @@ def test_compaction_preserves_probe_results(spark, dirs):
 
 
 def test_real_stream_drive(spark, dirs):
-    build_afp_index(
-        audio_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2
+    build_phash_index(
+        audio_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2,
+        family=AUDIO,
     )
 
     def _write(name, rows):
@@ -212,12 +226,13 @@ def test_real_stream_drive(spark, dirs):
         .option("maxFilesPerTrigger", "1")
         .parquet(dirs["in"])
     )
-    q = start_audio_ingest(
+    q = start_media_ingest(
         stream,
         dirs["index"],
         dirs["out"],
         dirs["chk"],
         query_name=f"aud_ingest_{int(time.time() * 1000)}",
+        family=AUDIO,
     )
     try:
         _write("b0.parquet", [COPY_OF_2, NOVEL_A])
@@ -227,6 +242,6 @@ def test_real_stream_drive(spark, dirs):
     finally:
         q.stop()
     got = {
-        r["aud_id"] for r in read_ingested_audio(spark, dirs["out"]).collect()
+        r["aud_id"] for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     assert got == {105, 106}

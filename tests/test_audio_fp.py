@@ -1,5 +1,5 @@
-"""Audio perceptual near-dup (`multimodal.audio_fingerprints` +
-`audio_near_dup_pairs` / `audio_dedup`): fingerprint correctness against
+"""Audio perceptual near-dup (`media_audio.audio_fingerprints` +
+`AUDIO.near_dup_pairs` / `AUDIO.dedup`): fingerprint correctness against
 an independent per-sample reference, the resample/volume invariances,
 brute-force pair parity (the banded join's exact recall at radius <=
 bands-1), keep-first dedup parity, the plan contract, and the decode
@@ -11,24 +11,27 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from hive_serde_schema_gen_spark.operators.multimodal import (
+from hive_serde_schema_gen_spark.operators.media_audio import (
     AFP_ANCHORS,
     AFP_WINDOWS,
     AUDIO_VOL_OFFSET,
-    PHASH_PERT_OFFSET,
-    PHASH_RADIUS,
-    PHASH_UP_OFFSET,
     _audio_fp,
     _wav_container,
     _wav_encode,
     _wav_pcm_samples,
-    audio_dedup,
     audio_evidence_clips,
     audio_fingerprints,
-    audio_near_dup_pairs,
-    decode_drop_report,
-    image_hashes,
 )
+from hive_serde_schema_gen_spark.operators.media_core import (
+    PHASH_PERT_OFFSET,
+    PHASH_RADIUS,
+    PHASH_UP_OFFSET,
+)
+from hive_serde_schema_gen_spark.operators.media_corpus import (
+    decode_drop_report,
+)
+from hive_serde_schema_gen_spark.operators.media_image import image_hashes
+from hive_serde_schema_gen_spark.operators.phash_index import AUDIO
 
 
 def _ref_afp(samples: list) -> int:
@@ -101,13 +104,13 @@ def test_pairs_match_brute_force(fps):
         }
         got = {
             (r["img_a"], r["img_b"])
-            for r in audio_near_dup_pairs(fps, radius=radius).collect()
+            for r in AUDIO.near_dup_pairs(fps, radius=radius).collect()
         }
         assert got == brute, f"radius={radius}"
 
 
 def test_planted_variants_are_found(fps):
-    pairs = audio_near_dup_pairs(fps).localCheckpoint()
+    pairs = AUDIO.near_dup_pairs(fps).localCheckpoint()
     # every 2x-resampled copy pairs with its base at distance 0
     up = pairs.filter(
         ((F.col("img_b") - F.col("img_a")) == PHASH_UP_OFFSET)
@@ -173,7 +176,7 @@ def test_audio_dedup_matches_brute_force(fps):
             )
     got = {
         r["img_id"]: (r["dup_of"], r["dist"])
-        for r in audio_dedup(fps).collect()
+        for r in AUDIO.dedup(fps).collect()
     }
     assert got == expect
 
@@ -181,7 +184,7 @@ def test_audio_dedup_matches_brute_force(fps):
 def test_plan_contract(fps):
     from hive_serde_schema_gen_spark.plans.explain import explain_str
 
-    plan = explain_str(audio_near_dup_pairs(fps))
+    plan = explain_str(AUDIO.near_dup_pairs(fps))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -213,7 +216,7 @@ def test_corrupt_payload_skipped_and_accounted(spark):
 
 
 def test_image_decode_drop_report(spark):
-    from hive_serde_schema_gen_spark.operators.multimodal import _bmp_encode
+    from hive_serde_schema_gen_spark.operators.media_core import _bmp_encode
 
     rows = [
         (1, _bmp_encode(1, b"a valid image body right here")),
@@ -231,8 +234,8 @@ def test_anchor_strategy_same_duplicate_set(fps):
     # the minpair enumeration (attribution target may differ but
     # must be a true in-radius smaller-id partner)
     hs = {r["aud_id"]: r["afp"] for r in fps.collect()}
-    base = {r["img_id"] for r in audio_dedup(fps, strategy="minpair").collect()}
-    anchor_rows = audio_dedup(fps, strategy="anchor").collect()
+    base = {r["img_id"] for r in AUDIO.dedup(fps, strategy="minpair").collect()}
+    anchor_rows = AUDIO.dedup(fps, strategy="anchor").collect()
     anchor = {r["img_id"] for r in anchor_rows}
     assert anchor == base
     for r in anchor_rows:
@@ -249,11 +252,11 @@ def test_anchor_strategy_on_planted_mega_cluster(spark):
     # and a far-outlier bucket-mate must not be absorbed
     import numpy as np
 
-    from hive_serde_schema_gen_spark.operators.multimodal import (
+    from hive_serde_schema_gen_spark.operators.media_audio import (
         _wav_container,
         _wav_pcm_samples,
-        phash_dedup,
     )
+    from hive_serde_schema_gen_spark.operators.media_core import phash_dedup
 
     base = _wav_pcm_samples(b"a long enough clip body for stable windows, yes.")
     rows = []
@@ -268,11 +271,11 @@ def test_anchor_strategy_on_planted_mega_cluster(spark):
     fps2 = audio_fingerprints(d).localCheckpoint()
     base_set = {
         (r["img_id"], r["dup_of"])
-        for r in audio_dedup(fps2, strategy="minpair").collect()
+        for r in AUDIO.dedup(fps2, strategy="minpair").collect()
     }
     anchor_set = {
         (r["img_id"], r["dup_of"])
-        for r in audio_dedup(fps2, strategy="anchor").collect()
+        for r in AUDIO.dedup(fps2, strategy="anchor").collect()
     }
     assert {i for i, _ in anchor_set} == {i for i, _ in base_set}
     assert 900 not in {i for i, _ in anchor_set}
@@ -306,7 +309,7 @@ def test_afp_invariance_properties():
 def test_anchor_plan_contract(fps):
     from hive_serde_schema_gen_spark.plans.explain import explain_str
 
-    plan = explain_str(audio_dedup(fps, strategy="anchor"))
+    plan = explain_str(AUDIO.dedup(fps, strategy="anchor"))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -337,7 +340,7 @@ def test_trim_silence_restores_padded_match(spark):
 def test_auto_pick_diagnostic(spark):
     # the strategy='auto' bucket diagnostic: distinct hashes sharing one
     # band value form a band bucket; above AUTO_ANCHOR_BUCKET -> anchor
-    from hive_serde_schema_gen_spark.operators.multimodal import (
+    from hive_serde_schema_gen_spark.operators.media_core import (
         AUTO_ANCHOR_BUCKET,
         _auto_pick,
         _band_rows,
@@ -359,10 +362,12 @@ def test_auto_pick_diagnostic(spark):
 def test_auto_default_same_duplicate_set_on_mega_cluster(spark):
     # default (auto) on a cluster LARGER than the diagnostic threshold:
     # must route to anchor and still mark exactly minpair's duplicate set
-    from hive_serde_schema_gen_spark.operators.multimodal import (
-        AUTO_ANCHOR_BUCKET,
+    from hive_serde_schema_gen_spark.operators.media_audio import (
         _wav_container,
         _wav_pcm_samples,
+    )
+    from hive_serde_schema_gen_spark.operators.media_core import (
+        AUTO_ANCHOR_BUCKET,
     )
 
     n = AUTO_ANCHOR_BUCKET + 10
@@ -374,8 +379,8 @@ def test_auto_default_same_duplicate_set_on_mega_cluster(spark):
         rows.append((i, _wav_container(16000, s.astype("<i2").tobytes())))
     d = spark.createDataFrame(rows, "aud_id long, payload binary")
     fps2 = audio_fingerprints(d).localCheckpoint()
-    minpair = {r["img_id"] for r in audio_dedup(fps2, strategy="minpair").collect()}
-    auto_rows = audio_dedup(fps2).collect()  # the DEFAULT path
+    minpair = {r["img_id"] for r in AUDIO.dedup(fps2, strategy="minpair").collect()}
+    auto_rows = AUDIO.dedup(fps2).collect()  # the DEFAULT path
     assert {r["img_id"] for r in auto_rows} == minpair
     for r in auto_rows:
         assert r["dup_of"] < r["img_id"]
@@ -386,18 +391,18 @@ def test_auto_default_small_corpus_matches_minpair_attribution(fps):
     # just the same duplicate set
     want = sorted(
         (r["img_id"], r["dup_of"], r["dist"])
-        for r in audio_dedup(fps, strategy="minpair").collect()
+        for r in AUDIO.dedup(fps, strategy="minpair").collect()
     )
     got = sorted(
-        (r["img_id"], r["dup_of"], r["dist"]) for r in audio_dedup(fps).collect()
+        (r["img_id"], r["dup_of"], r["dist"]) for r in AUDIO.dedup(fps).collect()
     )
     assert got == want
 
 
 def test_radius_bound_fails_loudly(spark):
-    from hive_serde_schema_gen_spark.operators.multimodal import (
+    from hive_serde_schema_gen_spark.operators.media_core import phash_dedup
+    from hive_serde_schema_gen_spark.operators.media_corpus import (
         dedup_media_corpus,
-        phash_dedup,
     )
 
     d = spark.createDataFrame([(1, 5)], "img_id long, dhash long")

@@ -68,7 +68,7 @@ def test_media_dedup_command(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from hive_serde_schema_gen_spark.operators.multimodal import _bmp_encode
+    from hive_serde_schema_gen_spark.operators.media_core import _bmp_encode
 
     base = _bmp_encode(1, b"the one true image body, with pixels")
     rows = [(1, base), (2, base),

@@ -11,12 +11,12 @@ import tempfile
 
 import pytest
 
-from hive_serde_schema_gen_spark.operators.multimodal import (
-    _bmp_encode,
-    _wav_encode,
+from hive_serde_schema_gen_spark.operators.media_audio import _wav_encode
+from hive_serde_schema_gen_spark.operators.media_core import _bmp_encode
+from hive_serde_schema_gen_spark.operators.media_corpus import (
     dedup_media_corpus,
-    image_hashes,
 )
+from hive_serde_schema_gen_spark.operators.media_image import image_hashes
 
 
 @pytest.fixture()
@@ -121,30 +121,26 @@ def test_image_index_probe_and_extend(spark, idx_dir):
 
 
 def _family_case(modality):
-    """(id column, payload encoder, fingerprint fn, index builder) — the
+    """(id column, payload encoder, fingerprint fn, media family) — the
     public per-modality entry points, so the test pins behaviour through
     the same names callers import."""
-    from hive_serde_schema_gen_spark.operators.afp_index import (
-        build_afp_index,
-    )
-    from hive_serde_schema_gen_spark.operators.multimodal import (
-        _video_encode,
+    from hive_serde_schema_gen_spark.operators.media_audio import (
         audio_fingerprints,
+    )
+    from hive_serde_schema_gen_spark.operators.media_video import (
+        _video_encode,
         video_fingerprints,
     )
     from hive_serde_schema_gen_spark.operators.phash_index import (
-        build_phash_index,
-    )
-    from hive_serde_schema_gen_spark.operators.vfp_index import (
-        build_vfp_index,
+        AUDIO,
+        IMAGE,
+        VIDEO,
     )
 
     return {
-        "image": ("img_id", _bmp_encode, image_hashes, build_phash_index),
-        "audio": ("aud_id", _wav_encode, audio_fingerprints, build_afp_index),
-        "video": (
-            "vid_id", _video_encode, video_fingerprints, build_vfp_index
-        ),
+        "image": ("img_id", _bmp_encode, image_hashes, IMAGE),
+        "audio": ("aud_id", _wav_encode, audio_fingerprints, AUDIO),
+        "video": ("vid_id", _video_encode, video_fingerprints, VIDEO),
     }[modality]
 
 
@@ -154,12 +150,16 @@ def test_index_stage_per_modality(spark, idx_dir, modality):
     ``dedup_media_corpus``, then re-probe the extended index — the
     ``stage='index'`` attribution, the accounting, and the stored rows
     (shared ``img_id`` layout, epoch stamp) pinned per family."""
-    id_col, enc, fp_fn, build = _family_case(modality)
+    from hive_serde_schema_gen_spark.operators.phash_index import (
+        build_phash_index,
+    )
+
+    id_col, enc, fp_fn, family = _family_case(modality)
     schema = f"{id_col} long, payload binary"
     body_a = b"the one true media body, with some content"
     body_b = b"a completely different payload for this one"
     history = spark.createDataFrame([(100, enc(1, body_a))], schema)
-    build(fp_fn(history), idx_dir, n_files=1)
+    build_phash_index(fp_fn(history), idx_dir, n_files=1, family=family)
 
     acct: list = []
     d = spark.createDataFrame([(1, enc(1, body_a)), (4, enc(4, body_b))], schema)

@@ -354,6 +354,17 @@ def test_sampling_ratio_out_of_range_reads_nothing(spark, monkeypatch, capsys, t
     assert err == f"error: sampling_ratio must be in (0, 1], got {float(ratio)!r}\n"
 
 
+@pytest.mark.parametrize("ratio", ["0", "2.0", "nan", "-1"])
+def test_sampling_ratio_out_of_range_starts_no_jvm(ratio):
+    # the ratio is refused before a session is started for the Spark route
+    r = _cli(_NO_JVM, USERS, "t", "--sampling-ratio", ratio)
+    assert r.returncode == 1, r.stderr.decode()[-2000:]
+    assert r.stdout == b""
+    assert r.stderr.decode() == (
+        f"error: sampling_ratio must be in (0, 1], got {float(ratio)!r}\n"
+    )
+
+
 # ---------------------------------------------------------------------------
 # The local fold over byte ranges: cuts at line starts, forked children,
 # one combine

@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from hive_serde_schema_gen_spark.operators.multimodal import (
+from hive_serde_schema_gen_spark.operators.media_audio import (
     _wav_decode,
     _wav_encode,
     _wav_rate,

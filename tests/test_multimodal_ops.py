@@ -8,17 +8,19 @@ import struct
 
 import pytest
 
-from hive_serde_schema_gen_spark.operators.multimodal import (
-    _VID_HEADER,
-    _VID_MAGIC,
+from hive_serde_schema_gen_spark.operators.media_core import (
     _bmp_decode,
     _bmp_encode,
     _bmp_from_pixels,
     _bmp_pixel_array,
-    _video_encode,
     bmp_resize,
-    sample_frames,
     with_bmp_payload,
+)
+from hive_serde_schema_gen_spark.operators.media_video import (
+    _VID_HEADER,
+    _VID_MAGIC,
+    _video_encode,
+    sample_frames,
     with_video_payload,
 )
 
@@ -45,7 +47,9 @@ def test_resize_pixel_mapping_reference():
     tw, th = 5, 3
     import numpy as np
 
-    from hive_serde_schema_gen_spark.operators.multimodal import _resize_nearest
+    from hive_serde_schema_gen_spark.operators.media_core import (
+        _resize_nearest,
+    )
 
     out = _resize_nearest(src, tw, th)
     assert out.shape == (th, tw, 3)
@@ -57,7 +61,9 @@ def test_resize_pixel_mapping_reference():
 
 def test_resize_identity_when_same_dims():
     src = _bmp_pixel_array(_bmp_encode(3, b"xyz" * 50))
-    from hive_serde_schema_gen_spark.operators.multimodal import _resize_nearest
+    from hive_serde_schema_gen_spark.operators.media_core import (
+        _resize_nearest,
+    )
 
     h, w = src.shape[:2]
     assert (_resize_nearest(src, w, h) == src).all()

@@ -9,17 +9,19 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from hive_serde_schema_gen_spark.operators.multimodal import (
+from hive_serde_schema_gen_spark.operators.media_core import (
     PHASH_RADIUS,
-    _ahash,
     _bmp_encode,
     _bmp_from_pixels,
     _bmp_pixel_array,
-    _dhash,
     _resize_nearest,
+    phash_near_dup_pairs,
+)
+from hive_serde_schema_gen_spark.operators.media_image import (
+    _ahash,
+    _dhash,
     image_hashes,
     phash_evidence_images,
-    phash_near_dup_pairs,
 )
 
 
@@ -85,7 +87,7 @@ def test_pairs_match_brute_force(hashed):
 
 
 def test_planted_variants_are_found(hashed):
-    from hive_serde_schema_gen_spark.operators.multimodal import (
+    from hive_serde_schema_gen_spark.operators.media_core import (
         PHASH_UP_MOD,
         PHASH_UP_OFFSET,
     )
@@ -128,7 +130,7 @@ def test_plan_contract(hashed):
 
 
 def test_phash_dedup_matches_brute_force(hashed):
-    from hive_serde_schema_gen_spark.operators.multimodal import phash_dedup
+    from hive_serde_schema_gen_spark.operators.media_core import phash_dedup
 
     rows = hashed.select("img_id", "dhash").collect()
     hs = {r["img_id"]: r["dhash"] for r in rows}

@@ -1,5 +1,5 @@
 """Persisted pHash index (`operators/phash_index.py`) + streaming image
-ingest (`streaming/image_ingest.py`): build→probe parity with the batch
+ingest (`streaming/media_ingest.py`): build→probe parity with the batch
 operator, exact recall at the radius bound, extend/probe across batches,
 replay idempotence (the ingest.py interleavings applied to images),
 compaction, meta guards, and a real file-stream drive."""
@@ -18,12 +18,12 @@ import pytest
 pytestmark = pytest.mark.slow  # regression-depth tail (see pyproject.toml)
 from pyspark.sql import functions as F
 
-from hive_serde_schema_gen_spark.operators.multimodal import (
+from hive_serde_schema_gen_spark.operators.media_core import (
     PHASH_RADIUS,
     _bmp_encode,
-    image_hashes,
     phash_near_dup_pairs,
 )
+from hive_serde_schema_gen_spark.operators.media_image import image_hashes
 from hive_serde_schema_gen_spark.operators.phash_index import (
     build_phash_index,
     compact_phash_index,
@@ -31,10 +31,10 @@ from hive_serde_schema_gen_spark.operators.phash_index import (
     novel_images,
     phash_against_index,
 )
-from hive_serde_schema_gen_spark.streaming.image_ingest import (
-    process_image_ingest_batch,
-    read_ingested_images,
-    start_image_ingest,
+from hive_serde_schema_gen_spark.streaming.media_ingest import (
+    process_media_ingest_batch,
+    read_ingested_media,
+    start_media_ingest,
 )
 
 
@@ -134,24 +134,24 @@ def test_ingest_replay_idempotent(spark, dirs):
         image_hashes(_frame(spark, CORPUS)), dirs["index"], n_files=2
     )
     b0 = _frame(spark, [COPY_OF_2, NOVEL_A, NOVEL_B])
-    process_image_ingest_batch(b0, 0, dirs["index"], dirs["out"])
+    process_media_ingest_batch(b0, 0, dirs["index"], dirs["out"])
     first = {
         r["img_id"]
-        for r in read_ingested_images(spark, dirs["out"]).collect()
+        for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     # full replay of epoch 0 after its extend committed
-    process_image_ingest_batch(b0, 0, dirs["index"], dirs["out"])
+    process_media_ingest_batch(b0, 0, dirs["index"], dirs["out"])
     again = {
         r["img_id"]
-        for r in read_ingested_images(spark, dirs["out"]).collect()
+        for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     assert first == again == {105, 106}
     # cross-epoch re-delivery of an accepted id: rejected outright
     b1 = _frame(spark, [NOVEL_A, _img(301, b"novel in epoch one, a new payload !!")])
-    process_image_ingest_batch(b1, 1, dirs["index"], dirs["out"])
+    process_media_ingest_batch(b1, 1, dirs["index"], dirs["out"])
     final = {
         r["img_id"]
-        for r in read_ingested_images(spark, dirs["out"]).collect()
+        for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     assert final == {105, 106, 301}
 
@@ -215,7 +215,7 @@ def test_real_stream_drive(spark, dirs):
         .option("maxFilesPerTrigger", "1")
         .parquet(dirs["in"])
     )
-    q = start_image_ingest(
+    q = start_media_ingest(
         stream,
         dirs["index"],
         dirs["out"],
@@ -231,6 +231,6 @@ def test_real_stream_drive(spark, dirs):
         q.stop()
     got = {
         r["img_id"]
-        for r in read_ingested_images(spark, dirs["out"]).collect()
+        for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     assert got == {105, 106}

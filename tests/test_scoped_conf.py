@@ -5,6 +5,8 @@ conf as it found it."""
 
 from __future__ import annotations
 
+import os
+import subprocess
 import sys
 import threading
 import time
@@ -115,3 +117,32 @@ def test_streaming_window_counts_restores_conf(spark, sf_dir):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+_SECOND_GET_SPARK = """
+import threading
+from hive_serde_schema_gen_spark.session import get_spark
+a = get_spark()
+a.conf.set("spark.sql.session.timeZone", "America/New_York")
+seen = []
+t = threading.Thread(target=lambda: seen.append(get_spark("other")))
+t.start(); t.join()
+assert get_spark() is a and seen == [a], "a second session"
+print(a.conf.get("spark.sql.session.timeZone"))
+a.stop()
+"""
+
+
+def test_get_spark_returns_a_running_session_untouched():
+    """A second ``get_spark`` (here, from another driver thread too) hands
+    back the running session without re-applying the builder's confs: a
+    changed zone stays, and no reuse WARN is logged."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", _SECOND_GET_SPARK], cwd=root,
+        env=dict(os.environ, PYTHONPATH=root),
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr.decode()[-2000:]
+    assert r.stdout.decode().strip() == "America/New_York"
+    assert b"Using an existing Spark session" not in r.stderr

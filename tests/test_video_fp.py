@@ -1,4 +1,4 @@
-"""Video perceptual near-dup (`video_fingerprints` / `video_dedup` /
+"""Video perceptual near-dup (`video_fingerprints` / `VIDEO.dedup` /
 the persisted vfp index): fingerprint correctness against an independent
 pure-Python per-byte reference, majority-pool semantics (strict
 majority, ties to 0), brute-force pair + dedup parity, malformed-
@@ -12,16 +12,16 @@ import struct
 import numpy as np
 import pytest
 
-from hive_serde_schema_gen_spark.operators.multimodal import (
+from hive_serde_schema_gen_spark.operators.media_video import (
     _VID_HEADER,
     _VID_MAGIC,
     _frame_dhash_u,
     _video_encode,
     _video_redub,
-    video_dedup,
     video_evidence_clips,
     video_fingerprints,
 )
+from hive_serde_schema_gen_spark.operators.phash_index import VIDEO
 from hive_serde_schema_gen_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -100,7 +100,7 @@ def test_redub_variant_fp_semantics(spark, docs, vfps):
     # invariance: a re-dub of an ODD-frame-count base is bit-identical
     # (the appended frame index n is odd, so every-2nd sampling never
     # sees it), which is what makes the re-dub a planted NEAR-dup
-    from hive_serde_schema_gen_spark.operators.multimodal import (
+    from hive_serde_schema_gen_spark.operators.media_video import (
         VFP_DUP_MOD,
         VFP_DUP_OFFSET,
         VFP_PERT_OFFSET,
@@ -160,7 +160,7 @@ def test_malformed_containers_skip_or_raise(spark):
 
 
 def test_banded_pairs_match_brute_force(vfps):
-    from hive_serde_schema_gen_spark.operators.multimodal import (
+    from hive_serde_schema_gen_spark.operators.media_core import (
         PHASH_RADIUS,
         phash_near_dup_pairs,
     )
@@ -183,9 +183,7 @@ def test_banded_pairs_match_brute_force(vfps):
 
 
 def test_video_dedup_matches_brute_force_keep_first(vfps):
-    from hive_serde_schema_gen_spark.operators.multimodal import (
-        PHASH_RADIUS,
-    )
+    from hive_serde_schema_gen_spark.operators.media_core import PHASH_RADIUS
 
     fps = {r["vid_id"]: r["vfp"] for r in vfps.collect()}
     ids = sorted(fps)
@@ -196,7 +194,7 @@ def test_video_dedup_matches_brute_force_keep_first(vfps):
             if d <= PHASH_RADIUS:
                 want_dups.add(b)
                 break
-    got_rows = video_dedup(vfps, strategy="minpair").collect()
+    got_rows = VIDEO.dedup(vfps, strategy="minpair").collect()
     assert {r["img_id"] for r in got_rows} == want_dups
     for r in got_rows:
         assert r["dup_of"] < r["img_id"]
@@ -205,11 +203,11 @@ def test_video_dedup_matches_brute_force_keep_first(vfps):
         ).count("1")
         assert r["dist"] == d or (r["dist"] == 0 and d == 0)
     # the default (auto) marks the same duplicate set
-    assert {r["img_id"] for r in video_dedup(vfps).collect()} == want_dups
+    assert {r["img_id"] for r in VIDEO.dedup(vfps).collect()} == want_dups
 
 
 def test_dedup_media_corpus_video_modality(spark):
-    from hive_serde_schema_gen_spark.operators.multimodal import (
+    from hive_serde_schema_gen_spark.operators.media_corpus import (
         dedup_media_corpus,
     )
 
@@ -243,28 +241,30 @@ def test_dedup_media_corpus_video_modality(spark):
 
 
 def test_vfp_index_lifecycle_and_grid_pin(spark, tmp_path, vfps):
-    from hive_serde_schema_gen_spark.operators.multimodal import (
-        PHASH_RADIUS,
+    from hive_serde_schema_gen_spark.operators.media_core import PHASH_RADIUS
+    from hive_serde_schema_gen_spark.operators.media_video import (
         VFP_DUP_OFFSET,
     )
     from hive_serde_schema_gen_spark.operators.phash_index import (
+        VIDEO,
+        build_phash_index,
+        extend_phash_index,
+        novel_images,
         phash_against_index,
-    )
-    from hive_serde_schema_gen_spark.operators.vfp_index import (
-        build_vfp_index,
-        extend_vfp_index,
-        novel_videos,
-        vfp_against_index,
     )
 
     idx = str(tmp_path / "vfp-idx")
     base = vfps.filter(f"vid_id < {VFP_DUP_OFFSET}")
     variants = vfps.filter(f"vid_id >= {VFP_DUP_OFFSET}")
-    build_vfp_index(base.filter("vid_id % 2 = 0"), idx, n_files=2)
-    extend_vfp_index(base.filter("vid_id % 2 = 1"), idx, epoch=3)
+    build_phash_index(
+        base.filter("vid_id % 2 = 0"), idx, n_files=2, family=VIDEO
+    )
+    extend_phash_index(
+        base.filter("vid_id % 2 = 1"), idx, epoch=3, family=VIDEO
+    )
     got = {
         (r["vid_id"], r["matched_vid_id"], r["dist"])
-        for r in vfp_against_index(variants, idx).collect()
+        for r in phash_against_index(variants, idx, family=VIDEO).collect()
     }
     fps_b = {r["vid_id"]: r["vfp"] for r in base.collect()}
     fps_v = {r["vid_id"]: r["vfp"] for r in variants.collect()}
@@ -275,7 +275,11 @@ def test_vfp_index_lifecycle_and_grid_pin(spark, tmp_path, vfps):
             if d <= PHASH_RADIUS:
                 brute.add((v, b, d))
     assert got == brute
-    novel = {r["vid_id"] for r in novel_videos(variants, vfp_against_index(variants, idx)).collect()}
+    matches = phash_against_index(variants, idx, family=VIDEO)
+    novel = {
+        r["vid_id"]
+        for r in novel_images(variants, matches, VIDEO.id_col).collect()
+    }
     assert novel == set(fps_v) - {v for v, _, _ in brute}
     # cross-family pin: probing the video index with the IMAGE default
     # grid must fail loudly, not miss candidates
@@ -288,7 +292,7 @@ def test_vfp_index_lifecycle_and_grid_pin(spark, tmp_path, vfps):
 def test_video_dedup_anchor_plan_contract(vfps):
     from hive_serde_schema_gen_spark.plans.explain import explain_str
 
-    plan = explain_str(video_dedup(vfps, strategy="anchor"))
+    plan = explain_str(VIDEO.dedup(vfps, strategy="anchor"))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -312,7 +316,7 @@ def test_media_dup_clusters_transitive_lineage(spark):
     # chain A-B-C within radius pairwise-adjacent plus an exact copy of
     # A collapsed at the exact stage: all four must share one component
     # labeled by the smallest id, and the unrelated pair its own
-    from hive_serde_schema_gen_spark.operators.multimodal import (
+    from hive_serde_schema_gen_spark.operators.media_core import (
         media_dup_clusters,
         phash_dedup,
         phash_near_dup_pairs,

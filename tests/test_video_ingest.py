@@ -1,4 +1,4 @@
-"""Streaming video ingest (`streaming/video_ingest.py`) against the
+"""Streaming video ingest (`streaming/media_ingest.py`, VIDEO) against the
 persisted vfp index: replay idempotence (the ingest.py interleavings
 applied to video), cross-epoch re-delivery rejection, compaction, and a
 real file-stream drive — the video edition of the audio tests in
@@ -17,20 +17,21 @@ import pytest
 
 pytestmark = pytest.mark.slow  # regression-depth tail (see pyproject.toml)
 
-from hive_serde_schema_gen_spark.operators.multimodal import (
+from hive_serde_schema_gen_spark.operators.media_video import (
     _video_encode,
     _video_redub,
     video_fingerprints,
 )
-from hive_serde_schema_gen_spark.operators.vfp_index import (
-    build_vfp_index,
-    compact_vfp_index,
-    vfp_against_index,
+from hive_serde_schema_gen_spark.operators.phash_index import (
+    VIDEO,
+    build_phash_index,
+    compact_phash_index,
+    phash_against_index,
 )
-from hive_serde_schema_gen_spark.streaming.video_ingest import (
-    process_video_ingest_batch,
-    read_ingested_videos,
-    start_video_ingest,
+from hive_serde_schema_gen_spark.streaming.media_ingest import (
+    process_media_ingest_batch,
+    read_ingested_media,
+    start_media_ingest,
 )
 
 
@@ -67,33 +68,37 @@ def _frame(spark, rows):
 
 
 def test_redub_matches_index_at_distance_zero(spark, dirs):
-    build_vfp_index(
-        video_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2
+    build_phash_index(
+        video_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2,
+        family=VIDEO,
     )
     probe = video_fingerprints(_frame(spark, [REDUB_2, NOVEL_A]))
     got = {
         (r["vid_id"], r["matched_vid_id"], r["dist"])
-        for r in vfp_against_index(probe, dirs["index"]).collect()
+        for r in phash_against_index(
+            probe, dirs["index"], family=VIDEO
+        ).collect()
     }
     assert (103, 2, 0) in got
     assert not any(v == 105 for v, _, _ in got)
 
 
 def test_ingest_replay_idempotent(spark, dirs):
-    build_vfp_index(
-        video_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2
+    build_phash_index(
+        video_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2,
+        family=VIDEO,
     )
     b0 = _frame(spark, [COPY_OF_2, NOVEL_A, NOVEL_B])
-    process_video_ingest_batch(b0, 0, dirs["index"], dirs["out"])
+    process_media_ingest_batch(b0, 0, dirs["index"], dirs["out"], family=VIDEO)
     first = {
         r["vid_id"]
-        for r in read_ingested_videos(spark, dirs["out"]).collect()
+        for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     # full replay of epoch 0 after its extend committed
-    process_video_ingest_batch(b0, 0, dirs["index"], dirs["out"])
+    process_media_ingest_batch(b0, 0, dirs["index"], dirs["out"], family=VIDEO)
     again = {
         r["vid_id"]
-        for r in read_ingested_videos(spark, dirs["out"]).collect()
+        for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     assert first == again == {105, 106}
     # cross-epoch re-delivery of an accepted id: rejected outright
@@ -101,35 +106,40 @@ def test_ingest_replay_idempotent(spark, dirs):
         spark,
         [NOVEL_A, _vid(301, b"novel in epoch one, a new video payload!")],
     )
-    process_video_ingest_batch(b1, 1, dirs["index"], dirs["out"])
+    process_media_ingest_batch(b1, 1, dirs["index"], dirs["out"], family=VIDEO)
     final = {
         r["vid_id"]
-        for r in read_ingested_videos(spark, dirs["out"]).collect()
+        for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     assert final == {105, 106, 301}
 
 
 def test_compaction_preserves_probe_results(spark, dirs):
-    from hive_serde_schema_gen_spark.operators.vfp_index import (
-        extend_vfp_index,
+    from hive_serde_schema_gen_spark.operators.phash_index import (
+        extend_phash_index,
     )
 
-    build_vfp_index(
-        video_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2
+    build_phash_index(
+        video_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2,
+        family=VIDEO,
     )
     ext = video_fingerprints(_frame(spark, [NOVEL_A]))
-    extend_vfp_index(ext, dirs["index"], epoch=1)
-    extend_vfp_index(ext, dirs["index"], epoch=1)  # replayed append
+    extend_phash_index(ext, dirs["index"], epoch=1, family=VIDEO)
+    extend_phash_index(ext, dirs["index"], epoch=1, family=VIDEO)  # replayed append
     probe = video_fingerprints(_frame(spark, [COPY_OF_2, NOVEL_B]))
     before = {
         (r["vid_id"], r["matched_vid_id"], r["dist"])
-        for r in vfp_against_index(probe, dirs["index"]).collect()
+        for r in phash_against_index(
+            probe, dirs["index"], family=VIDEO
+        ).collect()
     }
     n_before = spark.read.parquet(f"{dirs['index']}/hashes").count()
-    compact_vfp_index(spark, dirs["index"], n_files=2)
+    compact_phash_index(spark, dirs["index"], n_files=2, family=VIDEO)
     after = {
         (r["vid_id"], r["matched_vid_id"], r["dist"])
-        for r in vfp_against_index(probe, dirs["index"]).collect()
+        for r in phash_against_index(
+            probe, dirs["index"], family=VIDEO
+        ).collect()
     }
     n_after = spark.read.parquet(f"{dirs['index']}/hashes").count()
     assert before == after
@@ -137,8 +147,9 @@ def test_compaction_preserves_probe_results(spark, dirs):
 
 
 def test_real_stream_drive(spark, dirs):
-    build_vfp_index(
-        video_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2
+    build_phash_index(
+        video_fingerprints(_frame(spark, CORPUS)), dirs["index"], n_files=2,
+        family=VIDEO,
     )
 
     def _write(name, rows):
@@ -158,12 +169,13 @@ def test_real_stream_drive(spark, dirs):
         .option("maxFilesPerTrigger", "1")
         .parquet(dirs["in"])
     )
-    q = start_video_ingest(
+    q = start_media_ingest(
         stream,
         dirs["index"],
         dirs["out"],
         dirs["chk"],
         query_name=f"vid_ingest_{int(time.time() * 1000)}",
+        family=VIDEO,
     )
     try:
         _write("b0.parquet", [COPY_OF_2, NOVEL_A])
@@ -174,6 +186,6 @@ def test_real_stream_drive(spark, dirs):
         q.stop()
     got = {
         r["vid_id"]
-        for r in read_ingested_videos(spark, dirs["out"]).collect()
+        for r in read_ingested_media(spark, dirs["out"]).collect()
     }
     assert got == {105, 106}
