@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.decimal_safe import money_sum
+from ..functions.text_keys import words
 from ..functions.union import pad_union
 from ..registry import query
 from ..sources.tables import load_table
@@ -779,7 +780,7 @@ def stats_summary(spark, sf_dir):
                 docs.select(
                     F.explode(
                         F.filter(
-                            F.split(F.lower(F.trim(F.col("text"))), "[ \t\n\x0B\f\r]+"),
+                            words(F.lower(F.col("text"))),
                             lambda t: t != "",
                         )
                     ).alias("w")

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.localdf import local_rows_df
+from ..functions.text_keys import words
 from .similarity import (
     MULTIPROBE_FLIPS,
     N_TABLES,
@@ -276,7 +277,7 @@ def bm25_topk_indexed_batch(
         "qid",
         F.explode(
             F.array_distinct(
-                F.split(F.trim(F.lower(F.col("query"))), "[ \t\n\x0B\f\r]+")
+                words(F.lower(F.col("query")))
             )
         ).alias("term"),
     ).filter(F.col("term") != "")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text_keys import words
+
 END = "</w>"  # end-of-word marker (standard: lets merges learn suffixes)
 
 #: GPT-2-style pretokenizer, LOOKAHEAD-FREE by design so one pattern
@@ -65,9 +67,7 @@ def pretokens(col, lowercase: bool = True, mode: str = "whitespace"):
         col = F.lower(col)
     if mode == "gpt2":
         return F.regexp_extract_all(col, F.lit(PRETOKEN_PATTERN), 0)
-    return F.filter(
-        F.split(F.trim(col), "[ \t\n\x0B\f\r]+"), lambda w: w != ""
-    )
+    return F.filter(words(col), lambda w: w != "")
 
 
 def pretokenize_py(s: str) -> list:
@@ -356,17 +356,11 @@ def fertility_report(
     enc = encode_bpe(
         docs, merges, text_col=text_col, lowercase=lowercase, mode=mode
     )
-    # Explicit whitespace class, NOT \s: Java \s includes \x0B while
-    # RE2 (the DuckDB oracle engine) \s does not — a vertical tab in any
-    # doc would make ws_tokens diverge across engines.  The class below
-    # is Java's \s spelled out, and the oracle uses the same literal.
+    # words splits on Java's \s spelled out, NOT \s: RE2 (the DuckDB
+    # oracle engine) leaves \x0B out of its \s, so a vertical tab in any
+    # doc would make ws_tokens diverge across engines
     ws = F.coalesce(
-        F.size(
-            F.filter(
-                F.split(F.trim(F.col(text_col)), "[ \t\n\x0b\f\r]+"),
-                lambda t: t != "",
-            )
-        ),
+        F.size(F.filter(words(text_col), lambda t: t != "")),
         F.lit(0),
     )
     per = enc.select(

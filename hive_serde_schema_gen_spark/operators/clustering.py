@@ -366,7 +366,7 @@ def cluster_balanced_sample(
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Temperature-rebalanced sampling over embedding clusters — flattens
-    topic skew the same way :func:`curation.temperature_mix_rates`
+    topic skew the same way :func:`selection.temperature_mix_rates`
     flattens language/source skew, but with MACHINE-derived strata
     (k-means clusters) instead of metadata columns.  A crawl that is 60%
     boilerplate-adjacent lands mostly in a few giant clusters; α < 1
@@ -380,7 +380,7 @@ def cluster_balanced_sample(
     corpus×labels on the key (both sides row-per-document — co-locate by
     bucketing both on the key at scale); the filter itself runs at scan
     speed with no shuffle."""
-    from .curation import stratified_sample, temperature_mix_rates
+    from .selection import stratified_sample, temperature_mix_rates
 
     sizes = {
         r["cluster"]: r["n"]
@@ -429,7 +429,7 @@ def kmeans_curation_frames(spark, sf_dir, clustering=None, sd_base_pruned=None):
     :func:`semdedup_evidence_frame` (round 18 — same sharing posture
     for the base-corpus prune rows)."""
     from ..sources.tables import load_table
-    from .curation import temperature_mix_rates
+    from .selection import temperature_mix_rates
 
     e = load_table(spark, sf_dir, "embeddings")
     if clustering is not None:

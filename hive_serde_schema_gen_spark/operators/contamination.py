@@ -3,14 +3,16 @@ pretraining pipeline runs before training: exact verbatim n-gram overlap
 (:func:`ngram_contamination`), fuzzy shingle-Jaccard near-duplication
 (:func:`minhash_contamination`), and embedding-cosine paraphrase leakage
 (:func:`semantic_contamination`).  Split out of ``curation.py`` in round
-14 (the façade re-exports every name, so ``from .curation import ...``
-keeps working); every operator keeps the benchmark side BROADCAST and
-the corpus side streaming — the corpus never self-joins here.
+14; every operator keeps the benchmark side BROADCAST and the corpus side
+streaming — the corpus never self-joins here.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..functions.text_keys import word_grams, words
+
 
 def word_ngrams(
     d: DataFrame,
@@ -19,29 +21,14 @@ def word_ngrams(
     text_col: str = "text",
     hashed: bool = True,
 ) -> DataFrame:
-    """Distinct word n-grams per document, shuffle-free until the distinct
-    (the ``arrays_zip`` + shifted-slices formulation of
-    ``dedup.shingles_df_no_shuffle``, parameterized over n).  ``hashed``
-    replaces the gram string with xxhash64 — an 8-byte join payload instead
-    of a ~50-byte string, the production configuration (a 2⁻⁶⁴ collision
-    can only add one spurious shared gram)."""
-    words = F.split(F.trim(F.col(text_col)), "[ \t\n\x0B\f\r]+")
-    z = F.arrays_zip(
-        words.alias("t0"),
-        *[
-            F.slice(
-                words, i + 1, F.greatest(F.size(words) - i, F.lit(0))
-            ).alias(f"t{i}")
-            for i in range(1, n)
-        ],
-    )
-    kept = d.select(id_col, F.explode(z).alias("s")).filter(
-        F.col(f"s.t{n - 1}").isNotNull()
-    )
-    gram = F.concat_ws(" ", *[f"s.t{i}" for i in range(n)])
-    return kept.select(
-        F.col(id_col),
-        (F.xxhash64(gram) if hashed else gram).alias("gram"),
+    """Distinct word n-grams per document (:func:`text_keys.word_grams`),
+    shuffle-free until the distinct.  ``hashed`` replaces the gram string
+    with xxhash64 — an 8-byte join payload instead of a ~50-byte string,
+    the production configuration (a 2⁻⁶⁴ collision can only add one
+    spurious shared gram)."""
+    g = F.col("gram")
+    return word_grams(d, words(text_col), n, id_col).select(
+        id_col, (F.xxhash64(g) if hashed else g).alias("gram")
     ).distinct()
 
 

@@ -370,7 +370,7 @@ def curate_documents(
     - ``cjk_fallback``: apply ``text.pretokenize_cjk`` (each CJK char
       becomes its own token) so shingling/span-dedup/packing work on
       scripts without whitespace.
-    - ``c4_lines``: the C4 per-line cleanup (``curation.c4_line_filter``
+    - ``c4_lines``: the C4 per-line cleanup (``selection.c4_line_filter``
       — terminal punctuation, minimum words, blocklist, min-surviving-
       lines doc drop) applied before every statistical filter.
 
@@ -385,12 +385,12 @@ def curate_documents(
       threshold (eval-set leakage).
     - ``benchmark_near`` (+ ``near_dup_threshold``): ALSO drop documents
       that are shingle-Jaccard NEAR-DUPLICATES of a benchmark item
-      (``curation.minhash_contamination`` — banded candidates, exact
+      (``contamination.minhash_contamination`` — banded candidates, exact
       verify; catches lightly-reworded leaks that break verbatim
       n-grams).  May be the same frame as ``benchmark``.
     - ``benchmark_emb`` (+ ``semantic_contamination_threshold``): ALSO drop
       documents whose embedding is within cosine threshold of any
-      benchmark embedding (``curation.semantic_contamination`` — catches
+      benchmark embedding (``contamination.semantic_contamination`` — catches
       the paraphrased leakage the n-gram filter misses; doc_id ≡ vec_id,
       docs without an embeddings row pass through).
     - ``max_dup_gram_frac``: drop template/boilerplate docs whose
@@ -413,7 +413,7 @@ def curate_documents(
     - ``quality_top_frac`` = ``(num, den)`` (requires
       ``classifier_weights``): per-SOURCE percentile selection — keep
       each source's top num/den fraction by classifier score
-      (``curation.quality_top_fraction``, ties included), so a
+      (``selection.quality_top_fraction``, ties included), so a
       uniformly-low-scoring domain is thinned, not erased — the
       FineWeb-Edu-style selection knob.  REPLACES the global
       ``classifier_floor`` stage (a floor would erase low-scoring
@@ -449,12 +449,9 @@ def curate_documents(
       filter configuration from silently emptying the corpus before the
       expensive dedup/pack stages run.
     """
-    from .curation import (
-        ngram_contamination,
-        redact_pii,
-        repetition_stats,
-        stratified_sample,
-    )
+    from .contamination import ngram_contamination
+    from .curation import redact_pii, repetition_stats
+    from .selection import stratified_sample
 
     # docs= overrides the table load, the same escape hatch
     # prepare_training_corpus has — the crawl front end
@@ -500,7 +497,7 @@ def curate_documents(
         # c4_line_filter docstring); drops the rebuilt text in place.
         # This stage self-joins d, so cut lineage first — otherwise the
         # html/cjk transforms above re-evaluate on both join sides.
-        from .curation import c4_line_filter
+        from .selection import c4_line_filter
 
         d = _cut(d)
         d = d.join(
@@ -535,7 +532,7 @@ def curate_documents(
         dirty = True
         _acct("decontam_ngram")
     if benchmark_near is not None:
-        from .curation import minhash_contamination
+        from .contamination import minhash_contamination
 
         d = _cut(d)
         bad = (
@@ -549,7 +546,7 @@ def curate_documents(
         dirty = True
         _acct("decontam_fuzzy")
     if benchmark_emb is not None:
-        from .curation import semantic_contamination
+        from .contamination import semantic_contamination
 
         e = load_table(spark, sf_dir, "embeddings")
         bad = semantic_contamination(
@@ -581,7 +578,7 @@ def curate_documents(
         dirty = True
         _acct("classifier_floor")
     if quality_top_frac is not None:
-        from .curation import quality_top_fraction
+        from .selection import quality_top_fraction
         from .text import classifier_score
 
         if classifier_weights is None:

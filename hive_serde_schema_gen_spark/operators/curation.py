@@ -1,52 +1,29 @@
 """Corpus-curation operators a pretraining-data pipeline needs beyond
-dedup: benchmark decontamination (n-gram overlap against an eval set) and
-PII redaction.  Both are pure built-in-expression pipelines — no Python row
-path — and both sides of every join are shaped for the 100 TB case (the
-benchmark side broadcasts; the corpus side streams through one explode +
-one hash join).
+dedup: PII redaction, repetition signals, URL canonicalization and
+URL/domain filtering, snapshot diffs and vocabulary coverage, and the
+``curation_ops`` / ``dedup_url`` slots that drive them together with the
+decontamination (``contamination.py``) and selection (``selection.py``)
+families.  All are pure built-in-expression pipelines — no Python row
+path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text_keys import content_digest, word_grams, words
 from ..registry import query
-
-# ---------------------------------------------------------------------------
-# Round-14 split: the contamination and selection/filtering operator
-# families moved to sibling modules; these re-exports keep every public
-# (and test-visible) name importable from here — the façade contract.
-# ---------------------------------------------------------------------------
-from .contamination import (  # noqa: F401,E402
-    _lsh_contamination_candidates,
+from .contamination import (
     minhash_contamination,
     ngram_contamination,
     semantic_contamination,
-    word_ngrams,
 )
-from .selection import (  # noqa: F401,E402
-    C4_BLOCKLIST,
-    C4_MIN_DOC_LINES,
-    C4_MIN_LINE_WORDS,
-    C4_TERMINALS,
-    QSEL_QUANT,
-    QSEL_SHIFT,
+from .selection import (
     TOKMIX_SALT,
-    _integer_nth_root,
-    anneal_temperature_schedule,
-    c4_line_filter,
-    integer_power_budgets,
     integer_temperature_budgets,
-    materialize_mixture,
-    quality_top_fraction,
-    stratified_sample,
-    stratum_counts,
-    take_per_stratum,
     temperature_mix_rates,
     token_budget_mixture,
-    unimax_budgets,
 )
-
 
 # (pattern, replacement) — ordered: the more specific pattern first so an
 # email is redacted as EMAIL, not as a phone-ish digit run inside it.
@@ -109,24 +86,9 @@ def repetition_stats(
 
     One explode + one (doc, gram) count + one per-doc aggregate — all
     map-side combinable, shuffling only gram-hash longs keyed by doc."""
-    words = F.split(F.trim(F.col(text_col)), "[ \t\n\x0B\f\r]+")
-    z = F.arrays_zip(
-        words.alias("t0"),
-        *[
-            F.slice(
-                words, i + 1, F.greatest(F.size(words) - i, F.lit(0))
-            ).alias(f"t{i}")
-            for i in range(1, n)
-        ],
-    )
-    grams = d.select(id_col, F.explode(z).alias("s")).filter(
-        F.col(f"s.t{n - 1}").isNotNull()
-    )
+    grams = word_grams(d, words(text_col), n, id_col)
     per_gram = grams.select(
-        id_col,
-        F.xxhash64(
-            F.concat_ws(" ", *[f"s.t{i}" for i in range(n)])
-        ).alias("g"),
+        id_col, F.xxhash64("gram").alias("g")
     ).groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("c"))
     stats = per_gram.groupBy(id_col).agg(
         F.sum("c").alias("total"),
@@ -316,14 +278,15 @@ def corpus_diff(
     table a data-versioning workflow stores next to each release; at
     100 TB both sides reduce to (id, 16-byte digest) before anything
     shuffles, so the diff joins digests, never text."""
-    # NULL text must digest to a sentinel, not NULL: md5(NULL)=NULL would
-    # make a present-with-null-text row indistinguishable from an absent
-    # row, misreporting it as added/removed
-    digest = lambda c: F.coalesce(  # noqa: E731
-        F.md5(F.col(c).cast("binary")), F.lit("__NULL_TEXT__")
+    # NULL text must digest to content_digest's sentinel, not NULL:
+    # md5(NULL)=NULL would make a present-with-null-text row
+    # indistinguishable from an absent row, misreporting it as added/removed
+    o = old.select(
+        F.col(id_col).alias("doc_id"), content_digest(text_col).alias("__od")
     )
-    o = old.select(F.col(id_col).alias("doc_id"), digest(text_col).alias("__od"))
-    n = new.select(F.col(id_col).alias("doc_id"), digest(text_col).alias("__nd"))
+    n = new.select(
+        F.col(id_col).alias("doc_id"), content_digest(text_col).alias("__nd")
+    )
     j = o.join(n, "doc_id", "full_outer")
     return j.select(
         "doc_id",
@@ -362,7 +325,7 @@ def vocab_coverage(
         id_col,
         F.explode(
             F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), "[ \t\n\x0B\f\r]+"),
+                words(F.lower(F.col(text_col))),
                 lambda t: t != "",
             )
         ).alias("__t"),
@@ -1001,7 +964,7 @@ def curation_ops(spark, sf_dir):
     tok = docs.select(
         F.explode(
             F.filter(
-                F.split(F.lower(F.trim(F.col("text"))), "[ \t\n\x0B\f\r]+"),
+                words(F.lower(F.col("text"))),
                 lambda t: t != "",
             )
         ).alias("w")

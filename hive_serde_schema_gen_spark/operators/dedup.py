@@ -31,6 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text_keys import (
+    content_digest,
+    gram_array,
+    hex_long,
+    word_grams,
+    words,
+)
 from ..registry import query
 from ..sources.tables import load_table
 
@@ -78,7 +85,7 @@ def shingles_df(d: DataFrame, hashed: bool = False) -> DataFrame:
     d = fanout_for_compute(d.select("doc_id", "text"), "doc_id")
     toks = d.select(
         "doc_id",
-        F.posexplode(F.split(F.trim(F.col("text")), "[ \t\n\x0B\f\r]+")).alias("pos", "tok"),
+        F.posexplode(words("text")).alias("pos", "tok"),
     )
     w = W.partitionBy("doc_id").orderBy("pos")
     lead2 = F.lead("tok", SHINGLE - 1).over(w)
@@ -96,9 +103,10 @@ def shingles_df(d: DataFrame, hashed: bool = False) -> DataFrame:
 
 
 def shingles_df_no_shuffle(d: DataFrame, hashed: bool = False) -> DataFrame:
-    """Shuffle-free shingle formulation: ``arrays_zip(words, slice(words,2),
-    slice(words,3))`` + explode — NO window, so the token stream never
-    crosses the network before the distinct.
+    """Shuffle-free shingle formulation: :func:`text_keys.word_grams`
+    (``arrays_zip`` of the words and their shifted slices + explode) — NO
+    window, so the token stream never crosses the network before the
+    distinct.
 
     Emits exactly the rows of :func:`shingles_df` (asserted in
     tests/test_maxdf.py).  Unlike the nested-lambda array variant the
@@ -110,24 +118,9 @@ def shingles_df_no_shuffle(d: DataFrame, hashed: bool = False) -> DataFrame:
     on a real cluster the window form shuffles O(total tokens) bytes while
     this form shuffles nothing until the distinct, so network-bound
     deployments should prefer it."""
-    words = F.split(F.trim(F.col("text")), "[ \t\n\x0B\f\r]+")
-    # one shifted slice per shingle position, derived from SHINGLE so the
-    # two formulations can never disagree on shingle width
-    z = F.arrays_zip(
-        words.alias("t0"),
-        *[
-            F.slice(
-                words, i + 1, F.greatest(F.size(words) - i, F.lit(0))
-            ).alias(f"t{i}")
-            for i in range(1, SHINGLE)
-        ],
-    )
-    kept = d.select("doc_id", F.explode(z).alias("s")).filter(
-        F.col(f"s.t{SHINGLE - 1}").isNotNull()
-    )
-    sh = F.concat_ws(" ", *[f"s.t{i}" for i in range(SHINGLE)])
-    return kept.select(
-        "doc_id", (F.xxhash64(sh) if hashed else sh).alias("shingle")
+    g = F.col("gram")
+    return word_grams(d, words("text"), SHINGLE, "doc_id").select(
+        "doc_id", (F.xxhash64(g) if hashed else g).alias("shingle")
     ).distinct()
 
 
@@ -366,10 +359,7 @@ def _shingle_hash(hash_fn: str) -> F.Column:
       is the only reason it isn't the default here.
     """
     if hash_fn == "md5":
-        return (
-            F.conv(F.substring(F.md5(F.col("shingle").cast("binary")), 1, 8), 16, 10)
-            .cast("long")
-        )
+        return hex_long(F.md5(F.col("shingle").cast("binary")))
     if hash_fn == "xxhash64":
         return F.pmod(F.xxhash64(F.col("shingle")), F.lit(MINHASH_P)).cast("long")
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
@@ -654,11 +644,11 @@ def _dedup_index_probe_build(spark, d, path, signatures=None):
     # Round-12: sketch-only recrawl triage vs the same index — the Theta
     # estimates validate against exact digest counts (two bounded counts
     # at slot scale), the accuracy-contract boolean rides the hash
-    from .dedup_index import TRIAGE_REL_ERR, _content_digest, recrawl_triage
+    from .dedup_index import TRIAGE_REL_ERR, recrawl_triage
 
     tri = recrawl_triage(batch, path)
-    bd = batch.select(_content_digest().alias("dg")).distinct()
-    cd = d.select(_content_digest().alias("dg")).distinct()
+    bd = batch.select(content_digest().alias("dg")).distinct()
+    cd = d.select(content_digest().alias("dg")).distinct()
     b_exact = bd.count()
     s_exact = bd.join(cd, "dg", "left_semi").count()
     tol = lambda x: max(TRIAGE_REL_ERR * x, 1.0)  # noqa: E731
@@ -903,14 +893,12 @@ def simhash_signatures(d: DataFrame) -> DataFrame:
     d = fanout_for_compute(d.select("doc_id", "text"), "doc_id")
     toks = (
         d.select(
-            "doc_id", F.explode(F.split(F.trim(F.col("text")), "[ \t\n\x0B\f\r]+")).alias("tok")
+            "doc_id", F.explode(words("text")).alias("tok")
         ).distinct()
     )
     th = toks.select(
         "doc_id",
-        F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        hex_long(F.md5(F.col("tok").cast("binary"))).alias("h"),
     )
     bits = (
         th.select(
@@ -1133,7 +1121,7 @@ def kgram_postings(d: DataFrame, k: int, hashed: bool = True) -> DataFrame:
 
     toks = d.select(
         "doc_id",
-        F.posexplode(F.split(F.trim(F.col("text")), "[ \t\n\x0B\f\r]+")).alias("pos", "tok"),
+        F.posexplode(words("text")).alias("pos", "tok"),
     )
     w = W.partitionBy("doc_id").orderBy("pos")
     parts = [F.col("tok")] + [F.lead("tok", i).over(w) for i in range(1, k)]
@@ -1156,8 +1144,8 @@ def kgram_postings_no_shuffle(
     d: DataFrame, k: int, hashed: bool = True
 ) -> DataFrame:
     """Shuffle-free twin of :func:`kgram_postings` (same rows, asserted in
-    tests): the gram at each position is built row-locally with
-    ``transform(sequence(...)) → concat_ws(element_at...)``, so the token
+    tests): the gram at each position is built row-locally by
+    :func:`text_keys.gram_array`, so the token
     stream NEVER crosses the network — the first exchange in
     ``duplicate_spans`` becomes the per-gram count, which is map-side
     combined.  Same trade as ``shingles_df_no_shuffle``: the nested lambda
@@ -1165,17 +1153,7 @@ def kgram_postings_no_shuffle(
     box), but on a network-bound cluster this variant moves O(grams)
     pre-aggregated rows instead of O(tokens) raw ones.  Pass it via
     ``duplicate_spans(..., postings=kgram_postings_no_shuffle)``."""
-    words = F.split(F.trim(F.col("text")), "[ \t\n\x0B\f\r]+")
-    n = F.size(words)
-    grams = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(words, i + off + 1) for off in range(k)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = gram_array(words("text"), k)
     p = d.select("doc_id", F.posexplode(grams).alias("pos", "gram"))
     if hashed:
         p = p.select("doc_id", "pos", F.xxhash64("gram").alias("gram"))
@@ -1387,7 +1365,7 @@ def strip_duplicate_spans(docs: DataFrame, k: int = 20) -> DataFrame:
     per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_len")).alias("__spans")
     )
-    toks = F.split(F.trim(F.col("text")), "[ \t\n\x0B\f\r]+")
+    toks = words("text")
     covered = lambda tok, i: F.exists(  # noqa: E731
         F.col("__spans"),
         lambda s: (i >= s["span_start"]) & (i < s["span_start"] + s["span_len"]),

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text_keys import content_digest
 from .dedup import (
     BAND_SIZE,
     JACCARD_THRESHOLD,
@@ -348,14 +349,6 @@ def compact_minhash_index(
 TRIAGE_REL_ERR = 0.05
 
 
-def _content_digest(text_col: str = "text"):
-    """md5 of the document text with the corpus_diff NULL sentinel (NULL
-    text must sketch as a distinct value, not vanish)."""
-    return F.coalesce(
-        F.md5(F.col(text_col).cast("binary")), F.lit("__NULL_TEXT__")
-    )
-
-
 def digest_sketch_frame(docs: DataFrame, epoch: int | None = None) -> DataFrame:
     """One-row ``(epoch, sketch)`` Theta sketch of the batch's content
     digests — one map-side-combined aggregate pass."""
@@ -363,7 +356,7 @@ def digest_sketch_frame(docs: DataFrame, epoch: int | None = None) -> DataFrame:
 
     _require_sketch_functions(docs.sparkSession, ["theta_sketch_agg"])
     return (
-        docs.select(_content_digest().alias("__dg"))
+        docs.select(content_digest().alias("__dg"))
         .agg(F.expr("theta_sketch_agg(__dg)").alias("sketch"))
         .select(F.lit(epoch).cast("long").alias("epoch"), "sketch")
     )
@@ -422,7 +415,7 @@ def recrawl_triage(
         ) from e
     merged = idx.agg(F.expr("theta_union_agg(sketch)").alias("__u"))
     batch = (
-        new_docs.select(_content_digest().alias("__dg"))
+        new_docs.select(content_digest().alias("__dg"))
         .agg(F.expr("theta_sketch_agg(__dg)").alias("__b"))
     )
     row = (

@@ -61,6 +61,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions.text_keys import salted_hash, tokens
+
 #: 52 bits of hash → uniform grid on (0,1); +0.5 half-step keeps u
 #: strictly inside the interval (ln(-ln(u)) stays finite at both ends).
 _U_BITS = 52
@@ -71,12 +73,7 @@ def _grams(text_col: str, bigrams: bool) -> F.Column:
     """Lowercased whitespace unigrams + (optionally) adjacent bigrams
     joined with a single space — the ``embed_text`` gram construction
     (tokens cannot contain whitespace, so 'a b' is unambiguous)."""
-    # lazy: importing text at module scope closes the dsir → text →
-    # curation(oracle build) → dsir cycle and makes this module
-    # unimportable first (the .selection-leaf lesson in text._c4_sql)
-    from .text import _tokens
-
-    toks = _tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col(text_col)))
     if not bigrams:
         return toks
     return F.concat(
@@ -94,11 +91,9 @@ def _grams(text_col: str, bigrams: bool) -> F.Column:
 
 def _bucket(salt: str, hash_fn: str, m: int) -> F.Column:
     """Bucket of the gram column ``__g``: ``hash(salt, gram) mod m`` with
-    ``embedding._gram_hash``, so DSIR and ``embed_text`` hash grams alike
-    (imported here for the cycle ``_grams`` names: embedding imports text)."""
-    from .embedding import _gram_hash
-
-    return F.pmod(_gram_hash(F.col("__g"), salt, hash_fn), F.lit(m)).cast("int")
+    :func:`text_keys.salted_hash`, so DSIR and ``embed_text`` hash grams
+    alike."""
+    return F.pmod(salted_hash(F.col("__g"), salt, hash_fn), F.lit(m)).cast("int")
 
 
 def hashed_gram_tf(
@@ -228,19 +223,7 @@ def _gumbel(id_col: str, seed: str, hash_fn: str) -> F.Column:
     9 dp.  Pure per-row float ops after the hash — cross-engine ULP
     noise is absorbed by the rounding (g's derivative is bounded on the
     half-step-protected interval)."""
-    sid = F.col(id_col).cast("string")
-    if hash_fn == "xxhash64":
-        h = F.xxhash64(F.lit(seed), sid)
-    elif hash_fn == "md5":
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(seed + "|"), sid).cast("binary")), 1, 13
-            ),
-            16,
-            10,
-        ).cast("long")
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    h = salted_hash(F.col(id_col).cast("string"), seed, hash_fn, digits=13)
     u = (F.pmod(h, F.lit(1 << _U_BITS)).cast("double") + F.lit(0.5)) / F.lit(
         _U_SCALE
     )

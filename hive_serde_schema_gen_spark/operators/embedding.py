@@ -27,29 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text_keys import salted_hash, tokens
 from ..registry import query
-from .text import _tokens
-
-
-def _gram_hash(col: F.Column, salt_str: str, hash_fn: str) -> F.Column:
-    """Non-negative-ish 64-bit gram hash.  ``xxhash64`` is the production
-    configuration (native, fastest); ``md5`` (first 8 hex digits → int,
-    the same scheme ``dedup._shingle_hash`` uses) exists solely so the
-    DuckDB oracle can reproduce the slot/sign bits bit-for-bit — the
-    feature-hashing construction is hash-agnostic."""
-    if hash_fn == "xxhash64":
-        return F.xxhash64(F.lit(salt_str), col)
-    if hash_fn == "md5":
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt_str + "|"), col).cast("binary")),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 
 def embed_text(
@@ -72,7 +51,7 @@ def embed_text(
     (salt, text), identical across runs, partitionings, and retries."""
     if dim < 1:
         raise ValueError("dim must be >= 1")
-    toks = _tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col(text_col)))
     grams = F.concat(
         toks,
         F.when(
@@ -85,9 +64,9 @@ def embed_text(
         ).otherwise(F.array().cast("array<string>")),
     )
     g = d.select(F.col(id_col).alias("__id"), F.explode(grams).alias("__g"))
-    slot = F.pmod(_gram_hash(F.col("__g"), salt, hash_fn), F.lit(dim)).cast("int")
+    slot = F.pmod(salted_hash(F.col("__g"), salt, hash_fn), F.lit(dim)).cast("int")
     sign = (
-        F.pmod(_gram_hash(F.col("__g"), salt + ":sign", hash_fn), F.lit(2)) * 2
+        F.pmod(salted_hash(F.col("__g"), salt + ":sign", hash_fn), F.lit(2)) * 2
         - 1
     ).cast("double")
     sums = (
@@ -213,7 +192,7 @@ def embed_text_vectors(spark, sf_dir):
     every tenth document, emitted EXPLODED as (doc_id, pos, val) rows so
     the hash compare works on scalars rather than engine-specific array
     encodings.  The ``md5`` hash configuration makes slot/sign
-    re-derivable in the oracle (the same scheme the MinHash family uses);
+    re-derivable in the oracle (:func:`text_keys.salted_hash`);
     every value is exact-integer sums followed by one sqrt and one divide,
     so ``val`` reproduces bit-for-bit with no rounding.
 

@@ -45,9 +45,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.text_keys import tokens
 from ..registry import query
 from ..sources.tables import load_table
-from .text import _tokens
 
 # Lowercased mirror of text._SQL_TOKENS (same empty-text guard).
 _SQL_TOKENS_LOWER = (
@@ -57,7 +57,7 @@ _SQL_TOKENS_LOWER = (
 
 
 def _lower_tokens(text_col: str):
-    return _tokens(F.lower(F.col(text_col)))
+    return tokens(F.lower(F.col(text_col)))
 
 
 def train_bigram_lm(docs: DataFrame, text_col: str = "text"):

@@ -27,7 +27,7 @@ same aggregation as every other weight — no driver-side scalar loop.
 
 Scale posture (100 TB): full-batch GD costs one corpus pass per
 iteration.  The production recipe is train on a deterministic sample
-(``curation.stratified_sample`` / ``take_per_stratum`` — quality labels
+(``selection.stratified_sample`` / ``take_per_stratum`` — quality labels
 are cheap to produce on a sample) and serve the fitted weights over the
 full corpus with ``classifier_score``, which is a single pass.
 """
@@ -987,13 +987,13 @@ def quality_select_rows(
     spark, sf_dir, weights=None, cal_params=None, scored=None
 ):
     """Driver branches for op='clf_qsel'/'clf_qth': the per-domain
-    top-30% quality selection (`curation.quality_top_fraction`) over the
+    top-30% quality selection (`selection.quality_top_fraction`) over the
     full-corpus calibrated serve scores — returns
     ``(selected, report)``; selected rows carry the exact quantized
     score, the report pins (n_docs, k, threshold, n_sel) per source.
     Ties at the threshold are INCLUDED (n_sel ≥ k), which the oracle's
     rank-k threshold reproduces value-for-value."""
-    from .curation import quality_top_fraction
+    from .selection import quality_top_fraction
 
     if scored is None:
         scored = full_corpus_scored(
@@ -1009,12 +1009,12 @@ def sql_qsel_ctes() -> str:
     threshold the direct way — per-domain rank over quantized scores
     with a doc_id tiebreak, taking the score at rank k — which equals
     the operator's largest-qs-with-count≥k threshold exactly (see
-    `curation.quality_top_fraction`); selection then keeps every row at
+    `selection.quality_top_fraction`); selection then keeps every row at
     or above the threshold value (ties included), so both engines
     select identical row sets without ever comparing tiebreaks.
     Final CTEs: ``qssel`` (source, doc_id, qs), ``qsdom``
     (source, n_docs, k, t, n_sel)."""
-    from .curation import QSEL_QUANT
+    from .selection import QSEL_QUANT
 
     return f"""qsq AS (
       SELECT doc_id, source,

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.localdf import local_rows_df
+from ..functions.text_keys import hex_long, words
 from ..registry import query
 from ..sources.tables import load_table
 from .bpe import (
@@ -93,10 +94,7 @@ def ws_token_count(text_col: str = "text") -> F.Column:
     packer, so a tokenization tweak cannot diverge between them.  NULL
     text counts 0 tokens (a metadata-only row must degrade, not crash)."""
     return F.coalesce(
-        F.size(
-            F.filter(F.split(F.trim(F.col(text_col)), "[ \t\n\x0B\f\r]+"), lambda t: t != "")
-        ),
-        F.lit(0),
+        F.size(F.filter(words(text_col), lambda t: t != "")), F.lit(0)
     )
 
 
@@ -205,12 +203,7 @@ def assign_split(
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
     bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        % 10000
+        hex_long(F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col)))) % 10000
     )
     names = list(fractions)
     cum, expr = 0.0, None
@@ -276,8 +269,8 @@ def _digest_rows_spark(res: DataFrame) -> DataFrame:
     )
     canon = res.select(
         "op",
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("long").alias("h60"),
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("h32"),
+        hex_long(h, 15).alias("h60"),
+        hex_long(h).alias("h32"),
     )
     return canon.groupBy("op").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -773,7 +766,6 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     step = chunk_tokens - overlap
-    words = F.split(F.trim(F.col(text_col)), "[ \t\n\x0B\f\r]+")
     # chunk count = ceil((n - overlap) / step) clamped to >= 1, computed
     # as (n - overlap + step-1) DIV step — pure integer arithmetic (the
     # numerator is >= step-1-overlap >= 0, so truncation is the ceiling);
@@ -791,7 +783,7 @@ def chunk_documents(
         ),
     )
     return (
-        d.select(id_col, words.alias("__w"))
+        d.select(id_col, words(text_col).alias("__w"))
         .select(id_col, F.explode(chunks).alias("c"))
         .select(
             id_col,
@@ -917,22 +909,16 @@ def _epoch_order_hash(
             F.lit(salt), F.lit(epoch).cast("long"), F.col(key_col)
         )
     if hash_fn == "md5":
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.lit(salt),
-                        F.lit(epoch).cast("string"),
-                        F.col(key_col).cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        return hex_long(
+            F.md5(
+                F.concat_ws(
+                    ":",
+                    F.lit(salt),
+                    F.lit(epoch).cast("string"),
+                    F.col(key_col).cast("string"),
+                )
+            )
+        )
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 
@@ -948,7 +934,7 @@ def training_manifest(
 ) -> DataFrame:
     """The training-order EXPORT manifest — the last mile after
     selection: given selected documents with token counts (e.g. the
-    output of ``curation.token_budget_mixture``), assign each document
+    output of ``selection.token_budget_mixture``), assign each document
     its epoch-``epoch`` position — shard, within-shard order, first-token
     offset, and the ``context_len``-chunk range it occupies — so a
     training loader can read shard files sequentially and know exactly

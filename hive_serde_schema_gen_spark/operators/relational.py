@@ -24,6 +24,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.union import pad_union
 from ..functions.decimal_safe import dec, money_sum, one
+from ..functions.text_keys import words
 from ..registry import query
 from ..sources.tables import load_table
 
@@ -272,7 +273,7 @@ def explode_top_tokens(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select(
-            F.explode(F.split(F.trim(F.col("text")), "[ \t\n\x0B\f\r]+")).alias("tok")
+            F.explode(words("text")).alias("tok")
         )
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text_keys import content_digest
+
 
 def corpus_report(
     docs: DataFrame,
@@ -70,11 +72,8 @@ def corpus_report(
     # exact-dup rate: ONE map-side-combined aggregate over digests (no
     # window sort — we need the unique count, not the surviving rows)
     n_unique = docs.agg(
-        F.countDistinct(
-            F.coalesce(  # NULL text is one content class, not zero
-                F.md5(F.col("text").cast("binary")), F.lit("__NULL_TEXT__")
-            )
-        )
+        # NULL text is one content class, not zero
+        F.countDistinct(content_digest())
     ).collect()[0][0]
     out["exact_dup_frac"] = 1.0 - n_unique / out["n_docs"] if out["n_docs"] else 0.0
     if near_dup:
@@ -143,9 +142,7 @@ def corpus_report_rows(
     # convention forwards to the pair chain — round 18, corpus_pipeline)
     if not prepped:
         docs = docs.localCheckpoint()
-    digest = F.coalesce(
-        F.md5(F.col("text").cast("binary")), F.lit("__NULL_TEXT__")
-    )
+    digest = content_digest()
     row = lambda m, n=F.lit(None), v=F.lit(None): [  # noqa: E731
         F.lit(m).alias("metric"),
         n.cast("bigint").alias("n"),

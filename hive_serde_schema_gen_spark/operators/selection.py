@@ -3,14 +3,17 @@ decide WHAT of the crawl becomes training data: deterministic
 hash-threshold sampling and temperature mixes (document- and
 token-denominated), per-domain quality percentile selection, exact
 integer budget schedules, and the C4 per-line cleanup.  Split out of
-``curation.py`` in round 14 (the façade re-exports every name).  Every
-operator here is reproducibility-first: membership is a pure function of
-(salt, key), budgets are exact integers, and nothing sorts corpus rows.
+``curation.py`` in round 14.  Every operator here is
+reproducibility-first: membership is a pure function of (salt, key),
+budgets are exact integers, and nothing sorts corpus rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..functions.text_keys import WORD_SPLIT, salted_hash
+
 
 def stratified_sample(
     d: DataFrame,
@@ -33,27 +36,10 @@ def stratified_sample(
     shaped on purpose.  Narrow transformation: filters at scan speed,
     no shuffle.
 
-    ``hash_fn='md5'`` (``md5(salt|key)`` first 8 hex digits, the shared
-    oracle scheme) exists so the cluster-balanced-sampling oracle can
+    ``hash_fn='md5'`` (:func:`text_keys.salted_hash`, the shared oracle
+    scheme) exists so the cluster-balanced-sampling oracle can
     re-derive membership bit-for-bit; production stays on xxhash64."""
-    if hash_fn == "xxhash64":
-        h = F.xxhash64(F.lit(salt), F.col(key_col))
-    elif hash_fn == "md5":
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(salt + "|"), F.col(key_col).cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    h = salted_hash(F.col(key_col), salt, hash_fn)
     bucket = F.pmod(h, F.lit(1_000_000))
     expr = F.lit(0.0)
     for stratum, rate in sorted(rates.items()):
@@ -243,8 +229,8 @@ def token_budget_mixture(
     prefix); no per-domain single-reducer window, no global sort.  One
     shuffle on (domain, shard); the offsets frame broadcasts.
 
-    ``hash_fn='md5'`` is the shared oracle scheme (first 8 hex digits as
-    an integer); production stays on xxhash64."""
+    ``hash_fn='md5'`` is the shared oracle scheme
+    (:func:`text_keys.salted_hash`); production stays on xxhash64."""
     from pyspark.sql.window import Window as W
 
     from .packing import ws_token_count
@@ -252,26 +238,10 @@ def token_budget_mixture(
     n_tok = (
         token_count_col if token_count_col is not None else ws_token_count()
     )
-    if hash_fn == "xxhash64":
-        h = F.xxhash64(F.lit(salt), F.col(key_col))
-        shift = 58  # full signed int64 range → 64 hash-range shards
-    elif hash_fn == "md5":
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(salt + "|"), F.col(key_col).cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        shift = 26  # [0, 2^32) → 64 hash-range shards
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    h = salted_hash(F.col(key_col), salt, hash_fn)
+    # xxhash64 spans the signed int64 range, md5's 8 hex digits [0, 2^32):
+    # either way, 64 hash-range shards
+    shift = 58 if hash_fn == "xxhash64" else 26
     base = d.select(
         F.col(key_col),
         F.col(domain_col).alias("__dom"),
@@ -620,7 +590,7 @@ def c4_line_filter(
         F.array(*[F.lit(t) for t in terminals]), F.substring(ln, -1, 1)
     )
     words_ok = lambda ln: (  # noqa: E731
-        F.size(F.filter(F.split(ln, "[ \t\n\x0B\f\r]+"), lambda w: w != ""))
+        F.size(F.filter(F.split(ln, WORD_SPLIT), lambda w: w != ""))
         >= min_line_words
     )
     if blocklist:

@@ -27,8 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text_keys import tokens
 from .curation import repetition_stats
-from .text import LANG_PROFILES, _tokens, quality_features
+from .text import LANG_PROFILES, quality_features
 
 
 _LANGS = ("en", "de", "fr", "es", "zh")
@@ -95,7 +96,7 @@ def quality_signals(
     feats = ["n_chars", "n_tokens", "n_punct", "n_stopwords", "quality"]
     base = (
         quality_features(d.select(id_col, text_col))
-        .select(id_col, *feats, _tokens(text_col).alias("__toks"))
+        .select(id_col, *feats, tokens(text_col).alias("__toks"))
         .select(id_col, *feats, *_lang_score_cols(F.col("__toks")))
         .select(id_col, *feats, _lang_argmax().alias("pred_lang"))
     )
@@ -170,7 +171,7 @@ def gopher_rules(
     the paper's; bullet fraction is expressed as the max fraction of
     lines ALLOWED to start with a bullet — the paper keeps docs with
     ≤ 90% bullet lines and ≤ 30% ellipsis-ended lines)."""
-    toks = _tokens(text_col)
+    toks = tokens(text_col)
     base = d.select(
         id_col,
         F.col(text_col).alias("__text"),

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text_keys import hex_long, tokens, word_grams
 from ..registry import query
 from ..sources.tables import load_table
 
@@ -35,16 +36,6 @@ LANG_PROFILES = {
 # Fixed argmax tie-break priority (first wins ties) — the order every
 # CASE chain, Spark and SQL, is generated from.
 LANG_ORDER = ("en", "de", "fr", "es", "it", "pt", "nl", "zh")
-
-
-def _tokens(col):
-    """Whitespace tokenization of trimmed text; empty text → empty array.
-    (A bare split('') yields [''], inflating counts by one — both engines
-    guard the empty case the same way.)"""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.length(F.trim(c)) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(F.trim(c), "[ \t\n\x0B\f\r]+")
-    )
 
 
 _SQL_TOKENS = (
@@ -71,7 +62,7 @@ def text_token_count(spark, sf_dir, sort: bool = True):
     d = load_table(spark, sf_dir, "documents")
     out = d.select(
         "doc_id",
-        F.size(_tokens("text")).alias("n_tokens"),
+        F.size(tokens("text")).alias("n_tokens"),
         F.length("text").cast("int").alias("n_chars_computed"),
         F.size(
             F.regexp_extract_all(
@@ -125,7 +116,7 @@ def quality_features(docs):
     # Materialize the token array once: inlining the split expression into
     # every consumer re-executes the tokenization per column (Catalyst does
     # not CSE across projection items) — measured ~30% of query time here.
-    base = docs.select(*keep, _tokens("text").alias("__toks"))
+    base = docs.select(*keep, tokens("text").alias("__toks"))
     toks = F.col("__toks")
     n_chars = F.length("text").cast("int")
     n_tokens = F.size(toks)
@@ -303,9 +294,8 @@ _C4_LINES = (
 
 
 def _c4_sql() -> str:
-    # .selection, not the .curation façade: the façade module's import
-    # executes the curation_ops oracle build, which imports THIS module —
-    # selection is a leaf, so the oracle renders under any import order
+    # selection is a leaf module: this oracle renders while text itself is
+    # being imported, so it must not pull in a module that imports text
     from .selection import (
         C4_BLOCKLIST,
         C4_MIN_DOC_LINES,
@@ -361,7 +351,7 @@ def _lang_scored(spark, sf_dir):
     # single-row-group inputs otherwise run the 8-profile scoring
     # projection on one core (see fanout_for_compute; no-op at scale)
     src = fanout_for_compute(d.select("doc_id", "lang", "text"), "doc_id")
-    base = src.select("doc_id", "lang", _tokens("text").alias("toks"))
+    base = src.select("doc_id", "lang", tokens("text").alias("toks"))
     toks = F.col("toks")
 
     def profile_hits(words):
@@ -454,10 +444,10 @@ def lang_id_accuracy(spark, sf_dir):
 
 def _c4_evidence(spark, sf_dir):
     """op='c4' branch: plant the five-line page per selected doc (see
-    ``_C4_LINES``), run the REAL :func:`curation.c4_line_filter`, and pin
+    ``_C4_LINES``), run the REAL :func:`selection.c4_line_filter`, and pin
     the rebuilt text's md5 plus the kept/dropped line accounting."""
     from ..sources.tables import load_table
-    from .curation import c4_line_filter
+    from .selection import c4_line_filter
 
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % _C4_MOD == _C4_REM
@@ -700,7 +690,7 @@ def text_quality_lang(spark, sf_dir):
     monitor (`logreg.drift_rows` — full-corpus calibrated scores,
     planted −0.2 regime every 7th epoch, exact-int trailing z flags);
     op='clf_qsel' / op='clf_qth' pin the per-domain quality PERCENTILE
-    selection (`curation.quality_top_fraction` via
+    selection (`selection.quality_top_fraction` via
     `logreg.quality_select_rows`): keep each source's top 30% by
     calibrated score, exact integer k = n·3 // 10 and quantized-score
     threshold with ties included — selected rows AND the per-source
@@ -989,11 +979,9 @@ def text_fingerprint(spark, sf_dir, sort: bool = True):
     # (no-op at scale — see fanout_for_compute)
     d = fanout_for_compute(d.select("doc_id", "text"), "doc_id")
     tok = d.select(
-        "doc_id", F.posexplode(_tokens("text")).alias("pos", "tok")
+        "doc_id", F.posexplode(tokens("text")).alias("pos", "tok")
     )
-    h = F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 8), 16, 10).cast(
-        "long"
-    )
+    h = hex_long(F.md5(F.col("tok").cast("binary")))
     w = W.partitionBy("doc_id").orderBy("pos")
     led = tok.select(
         "doc_id",
@@ -1077,7 +1065,7 @@ def tfidf_top_terms(d, k: int = 5):
     from pyspark.sql.window import Window as W
 
     toks = d.select(
-        "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -1132,54 +1120,29 @@ def hashed_ngram_terms(
     pmod n_buckets — the classic hashing trick: fixed feature space, no
     vocabulary to build, ship, or keep consistent across a 100-TB corpus.
 
-    ``hash_fn='md5'`` (first 8 hex digits → int, the ``embed_text``
-    oracle scheme) exists solely so the classifier-training oracle can
-    re-derive bucket assignment bit-for-bit in DuckDB; production stays
-    on the native xxhash64 (bit-identical to every earlier round).
+    ``hash_fn='md5'`` (:func:`text_keys.hex_long` of the gram's md5)
+    exists solely so the classifier-training oracle can re-derive bucket
+    assignment bit-for-bit in DuckDB; production stays on the native
+    xxhash64 (bit-identical to every earlier round).
 
-    Same arrays_zip/slice n-gram formulation as ``repetition_stats``
-    (plain expressions, whole-stage codegen), one exploded scan PER gram
-    length, unioned.  Measured against the tempting single-scan
-    alternative (``transform(sequence(...)) → concat_ws(element_at...)``,
-    one pass but a nested interpreted lambda): at 50 000 docs the
-    max_ngram codegen'd scans take 1.9 s vs 70 s for the one
-    lambda-interpreted scan — per-element interpreter overhead dwarfs a
+    Grams come from :func:`text_keys.word_grams` (plain expressions,
+    whole-stage codegen), one exploded scan PER gram length, unioned.
+    Measured against the tempting single-scan alternative
+    (:func:`text_keys.gram_array`, one pass but a nested interpreted
+    lambda): at 50 000 docs the max_ngram codegen'd scans take 1.9 s vs
+    70 s for the one lambda-interpreted scan — per-element interpreter overhead dwarfs a
     second columnar read, so "fewer scans" loses by 37×.  Occurrences are
     NOT deduped because the scorer averages over all of them (fastText
     semantics)."""
-    words = _tokens(F.lower(F.col(text_col)))
-    grams = []
-    for n in range(1, max_ngram + 1):
-        if n == 1:
-            g = d.select(id_col, F.explode(words).alias("g"))
-        else:
-            z = F.arrays_zip(
-                words.alias("t0"),
-                *[
-                    F.slice(
-                        words, i + 1, F.greatest(F.size(words) - i, F.lit(0))
-                    ).alias(f"t{i}")
-                    for i in range(1, n)
-                ],
-            )
-            g = (
-                d.select(id_col, F.explode(z).alias("s"))
-                .filter(F.col(f"s.t{n - 1}").isNotNull())
-                .select(
-                    id_col,
-                    F.concat_ws(" ", *[f"s.t{i}" for i in range(n)]).alias("g"),
-                )
-            )
-        grams.append(g)
     from functools import reduce
 
+    words = tokens(F.lower(F.col(text_col)))
+    grams = [word_grams(d, words, n, id_col) for n in range(1, max_ngram + 1)]
     allg = reduce(lambda a, b: a.unionByName(b), grams)
     if hash_fn == "xxhash64":
-        h = F.xxhash64("g")
+        h = F.xxhash64("gram")
     elif hash_fn == "md5":
-        h = F.conv(
-            F.substring(F.md5(F.col("g").cast("binary")), 1, 8), 16, 10
-        ).cast("long")
+        h = hex_long(F.md5(F.col("gram").cast("binary")))
     else:
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
     return allg.select(id_col, F.pmod(h, F.lit(n_buckets)).alias("bucket"))
@@ -1350,11 +1313,11 @@ def bm25_topk(
     terms = sorted({t for t in query.strip().lower().split() if t})
     if not terms:
         raise ValueError("empty query")
-    # _tokens carries the empty-text guard (a bare split('') yields [''],
+    # tokens carries the empty-text guard (a bare split('') yields [''],
     # which would count phantom 1-token docs into avgdl)
     from ..sources.tables import fanout_for_compute
 
-    toks = _tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col(text_col)))
     # single-row-group inputs otherwise tokenize on one core — twice
     # (posting explode AND the avgdl stats scan); the fanned projection
     # feeds both (no-op at scale — see fanout_for_compute)
@@ -1566,7 +1529,7 @@ def script_token_stats(d: DataFrame, text_col: str = "text"):
     n_cjk = F.length(t) - F.length(F.regexp_replace(t, _CJK_CLASS, ""))
     n_sea = F.length(t) - F.length(F.regexp_replace(t, _SEA_CLASS, ""))
     rest = F.regexp_replace(t, _CJK_CLASS, " ")
-    n_ws = F.size(_tokens(rest))
+    n_ws = F.size(tokens(rest))
     nonspace = F.length(F.regexp_replace(t, r"\s", ""))
     denom = F.greatest(nonspace, F.lit(1)).cast("double")
     ratio = n_cjk.cast("double") / denom

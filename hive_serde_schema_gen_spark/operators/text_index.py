@@ -21,7 +21,7 @@ Layout under ``path``:
   count — the denominator Spark's AVG uses, so NULL-text corpora probe
   bit-identically to the scan-time form);
 - ``meta/``     — version + tokenizer pin (lowercase whitespace tokens,
-  the exact ``text._tokens`` contract) so a probe never scores against
+  the exact ``text_keys.tokens`` contract) so a probe never scores against
   an index built with a different tokenization.
 
 Every artifact is APPEND-ONLY and additive — ``extend_text_index``
@@ -47,8 +47,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.text_keys import tokens
 from ..registry import query
-from .text import _tokens, bm25_score_topk
+from .text import bm25_score_topk
 
 # v2: stats rows gained n_len (the AVG denominator excluding NULL-text
 # docs) — the bump makes a v1 index fail LOUDLY at _check_meta instead
@@ -69,7 +70,7 @@ def _write_batch(
 ) -> None:
     """One corpus pass → postings/df/doclens/stats for THIS batch, written
     with ``mode`` (overwrite = initial build, append = extend)."""
-    toks = _tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col(text_col)))
     # doc lengths are written as their own artifact — carrying a per-token
     # length column through the explode would widen the build's largest
     # intermediate for nothing

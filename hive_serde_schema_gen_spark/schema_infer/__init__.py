@@ -57,6 +57,7 @@ __all__ = [
     "Struct",
     "TOP",
     "Top",
+    "Ts",
     "Unknown",
     "describe",
     "merge",

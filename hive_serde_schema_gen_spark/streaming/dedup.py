@@ -39,14 +39,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text_keys import gram_array, words
 from ..operators.dedup import _AFFINE, BAND_SIZE, MINHASH_P, N_HASHES, SHINGLE
 
 N_BANDS = N_HASHES // BAND_SIZE
-
-
-def content_digest(text_col) -> F.Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.md5(c.cast("binary"))
 
 
 def streaming_dedup_exact(
@@ -66,7 +62,7 @@ def streaming_dedup_exact(
     equal (and null) keys as duplicates, and a bare ``md5(NULL)`` key
     would silently swallow every metadata-only row after the first."""
     digest = F.coalesce(
-        content_digest(text_col),
+        F.md5(F.col(text_col).cast("binary")),
         F.concat(F.lit("\u0000doc:"), F.col(id_col).cast("string")),
     )
     return (
@@ -77,25 +73,6 @@ def streaming_dedup_exact(
     )
 
 
-def _shingle_array(text_col) -> F.Column:
-    """array<string> of word-SHINGLE-shingles, computed per row (transform
-    over a sequence of start offsets — duplicates retained; MinHash minima
-    are identical over multiset and set, so the batch DISTINCT is
-    unnecessary here)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    words = F.split(F.trim(c), "[ \t\n\x0B\f\r]+")
-    n = F.size(words)
-    return F.when(
-        n >= SHINGLE,
-        F.transform(
-            F.sequence(F.lit(1), n - (SHINGLE - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(words, i + off) for off in range(SHINGLE)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def minhash_band_keys(text_col) -> F.Column:
     """array<long> of N_BANDS LSH band keys for one document, as a single
     row-level expression: base-hash each shingle
@@ -104,8 +81,10 @@ def minhash_band_keys(text_col) -> F.Column:
     Documents with no shingles get a single exact-text fallback band
     (xxhash64 of the raw text, offset out of the affine range)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
+    # duplicates retained: MinHash minima are identical over multiset and
+    # set, so the batch DISTINCT is unnecessary here
     harr = F.transform(
-        _shingle_array(c),
+        gram_array(words(c), SHINGLE),
         lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_P)),
     )
     sigs = [
@@ -127,7 +106,7 @@ def minhash_band_keys(text_col) -> F.Column:
     # guard on token count, not on re-deriving the shingle array — the
     # minhash tree above is the expensive expression; the guard must stay
     # cheap (one split+size)
-    has_shingles = F.size(F.split(F.trim(c), "[ \t\n\x0B\f\r]+")) >= SHINGLE
+    has_shingles = F.size(words(c)) >= SHINGLE
     return F.when(has_shingles, bands).otherwise(
         F.array(F.xxhash64(F.lit(-1), c))
     )

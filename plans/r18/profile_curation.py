@@ -33,7 +33,11 @@ def noop(df):
 
 load_table(spark, SF, "documents").count()  # warm session
 
+from hive_serde_schema_gen_spark.functions.text_keys import words
 from hive_serde_schema_gen_spark.operators import curation as C
+from hive_serde_schema_gen_spark.operators.contamination import (
+    minhash_contamination, ngram_contamination, semantic_contamination,
+)
 from hive_serde_schema_gen_spark.operators.clustering import (
     KM_ITERS, KM_K, kmeans_curation_frames, kmeans_topics,
     semdedup_probe_evidence,
@@ -50,7 +54,7 @@ t("mix", lambda: noop(C.curation_mix_query(spark, SF)))
 
 # --- sem (exact semantic contamination)
 bench = e.filter(F.col("vec_id") < C._SEM_BENCH_MAX_ID)
-t("sem", lambda: noop(C.semantic_contamination(
+t("sem", lambda: noop(semantic_contamination(
     e, bench, threshold=C._SEM_THRESHOLD, strategy="exact", quantize=True)))
 
 # --- dsir
@@ -76,7 +80,7 @@ t("sdprobe", lambda: noop(
 ngc_bench = docs.filter(
     F.col("doc_id") % C._NGC_BENCH_MOD == C._NGC_BENCH_REM
 ).select(F.col("doc_id").alias("bench_id"), "text")
-t("ngc", lambda: noop(C.ngram_contamination(
+t("ngc", lambda: noop(ngram_contamination(
     docs, ngc_bench, n=C._NGC_N, hashed=False)))
 
 # --- pii
@@ -116,7 +120,7 @@ def vocab_arm():
     tok = docs.select(
         F.explode(
             F.filter(
-                F.split(F.lower(F.trim(F.col("text"))), "[ \t\n\x0B\f\r]+"),
+                words(F.lower(F.col("text"))),
                 lambda t: t != "",
             )
         ).alias("w")
@@ -136,7 +140,7 @@ def tokmix_all():
 t("tokmix family (3 frames)", tokmix_all)
 
 # --- fuzzy
-t("fuzzy", lambda: noop(C.minhash_contamination(
+t("fuzzy", lambda: noop(minhash_contamination(
     docs,
     docs.filter(F.col("doc_id") % C._FUZZY_MOD == C._FUZZY_REM).select(
         F.col("doc_id").alias("bench_id"), "text"),

@@ -468,13 +468,17 @@ def main() -> None:
         QUALITY_FLOOR,
         prepare_training_corpus,
     )
-    from hive_serde_schema_gen_spark.operators.curation import (
-        materialize_mixture,
+    from hive_serde_schema_gen_spark.operators.contamination import (
         minhash_contamination,
         ngram_contamination,
-        quality_top_fraction,
+    )
+    from hive_serde_schema_gen_spark.operators.curation import (
         redact_pii,
         repetition_stats,
+    )
+    from hive_serde_schema_gen_spark.operators.selection import (
+        materialize_mixture,
+        quality_top_fraction,
         stratified_sample,
         token_budget_mixture,
     )

@@ -4,7 +4,7 @@ the all-codegen no-shuffle plan."""
 
 from __future__ import annotations
 
-from hive_serde_schema_gen_spark.operators.curation import c4_line_filter
+from hive_serde_schema_gen_spark.operators.selection import c4_line_filter
 
 DOC = "\n".join(
     [

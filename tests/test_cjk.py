@@ -41,7 +41,7 @@ def test_script_token_stats_counts_cjk_chars(spark):
 
 
 def test_pretokenize_preserves_latin_tokens(spark):
-    from hive_serde_schema_gen_spark.operators.text import _tokens
+    from hive_serde_schema_gen_spark.functions.text_keys import tokens as _tokens
     from pyspark.sql import functions as F
 
     d = spark.createDataFrame(

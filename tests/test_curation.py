@@ -7,11 +7,11 @@ import pytest
 pytestmark = pytest.mark.slow  # regression-depth tail (see pyproject.toml)
 from pyspark.sql import functions as F
 
-from hive_serde_schema_gen_spark.operators.curation import (
+from hive_serde_schema_gen_spark.operators.contamination import (
     ngram_contamination,
-    redact_pii,
     word_ngrams,
 )
+from hive_serde_schema_gen_spark.operators.curation import redact_pii
 
 
 @pytest.fixture(scope="module")
@@ -118,7 +118,7 @@ def test_redaction_runs_on_documents(spark, sf_dir):
 
 
 def test_stratified_sample_deterministic_and_rate_accurate(spark):
-    from hive_serde_schema_gen_spark.operators.curation import stratified_sample
+    from hive_serde_schema_gen_spark.operators.selection import stratified_sample
 
     d = spark.createDataFrame(
         [(i, "wiki" if i % 3 == 0 else "web") for i in range(3000)],
@@ -214,9 +214,7 @@ def test_curate_and_prepare_end_to_end(spark, sf_dir):
 
 
 def test_temperature_rates_math():
-    from hive_serde_schema_gen_spark.operators.curation import (
-        temperature_mix_rates,
-    )
+    from hive_serde_schema_gen_spark.operators.selection import temperature_mix_rates
 
     counts = {"web": 90_000, "wiki": 9_000, "code": 1_000}
     # alpha=1 == natural proportions: every stratum sampled at total/N
@@ -239,7 +237,7 @@ def test_temperature_rates_math():
 
 
 def test_temperature_rates_drive_stratified_sample(spark, sf_dir):
-    from hive_serde_schema_gen_spark.operators.curation import (
+    from hive_serde_schema_gen_spark.operators.selection import (
         stratified_sample,
         stratum_counts,
         temperature_mix_rates,
@@ -345,7 +343,7 @@ def test_curate_and_prepare_all_stages_compose(spark, sf_dir):
     """Every opt-in stage enabled at once — guards stage INTERACTION (each
     stage consumes the previous stage's filtered/rewritten docs)."""
     from hive_serde_schema_gen_spark.operators.corpus import curate_and_prepare
-    from hive_serde_schema_gen_spark.operators.curation import (
+    from hive_serde_schema_gen_spark.operators.selection import (
         stratum_counts,
         temperature_mix_rates,
     )
@@ -438,7 +436,7 @@ def _mix_corpus(spark, n=400):
 
 
 def test_materialize_integer_rate_exact_epochs(spark):
-    from hive_serde_schema_gen_spark.operators.curation import materialize_mixture
+    from hive_serde_schema_gen_spark.operators.selection import materialize_mixture
 
     d = _mix_corpus(spark)
     out = materialize_mixture(d, {"wiki": 2.0}).collect()
@@ -453,7 +451,7 @@ def test_materialize_integer_rate_exact_epochs(spark):
 
 
 def test_materialize_fractional_rate_deterministic_and_accurate(spark):
-    from hive_serde_schema_gen_spark.operators.curation import materialize_mixture
+    from hive_serde_schema_gen_spark.operators.selection import materialize_mixture
 
     d = _mix_corpus(spark, n=2000)
     out = materialize_mixture(d, {"web": 2.5})
@@ -465,7 +463,7 @@ def test_materialize_fractional_rate_deterministic_and_accurate(spark):
 
 
 def test_materialize_subunit_rate_matches_stratified_sample(spark):
-    from hive_serde_schema_gen_spark.operators.curation import (
+    from hive_serde_schema_gen_spark.operators.selection import (
         materialize_mixture,
         stratified_sample,
     )
@@ -479,7 +477,7 @@ def test_materialize_subunit_rate_matches_stratified_sample(spark):
 
 
 def test_uncapped_temperature_rates_hit_target_shares(spark):
-    from hive_serde_schema_gen_spark.operators.curation import (
+    from hive_serde_schema_gen_spark.operators.selection import (
         materialize_mixture,
         temperature_mix_rates,
     )
@@ -501,7 +499,7 @@ def test_uncapped_temperature_rates_hit_target_shares(spark):
 
 
 def test_materialize_no_python_udf(spark):
-    from hive_serde_schema_gen_spark.operators.curation import materialize_mixture
+    from hive_serde_schema_gen_spark.operators.selection import materialize_mixture
     from hive_serde_schema_gen_spark.plans.explain import assert_no_python_udf
 
     assert_no_python_udf(materialize_mixture(_mix_corpus(spark), {"wiki": 2.5}))
@@ -537,7 +535,7 @@ def test_curate_and_prepare_boilerplate_and_expectations(spark, sf_dir):
 
 
 def test_take_per_stratum_exact_nested_stable(spark):
-    from hive_serde_schema_gen_spark.operators.curation import take_per_stratum
+    from hive_serde_schema_gen_spark.operators.selection import take_per_stratum
 
     d = _mix_corpus(spark, n=400)  # 100 wiki / 300 web
     s50 = take_per_stratum(d, 50)
@@ -584,9 +582,7 @@ def test_canonical_url(spark):
 def test_semantic_contamination(spark, sf_dir):
     import numpy as np
 
-    from hive_serde_schema_gen_spark.operators.curation import (
-        semantic_contamination,
-    )
+    from hive_serde_schema_gen_spark.operators.contamination import semantic_contamination
     from hive_serde_schema_gen_spark.plans.explain import explain_str
     from hive_serde_schema_gen_spark.sources.tables import load_table
 
@@ -713,9 +709,7 @@ def test_semantic_contamination_lsh_prefilter_parity(spark, sf_dir):
     false positives anywhere (candidates are exact-verified)."""
     import numpy as np
 
-    from hive_serde_schema_gen_spark.operators.curation import (
-        semantic_contamination,
-    )
+    from hive_serde_schema_gen_spark.operators.contamination import semantic_contamination
     from hive_serde_schema_gen_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -850,9 +844,7 @@ def test_semantic_contamination_strategy_flag(spark, sf_dir):
     import numpy as np
     import pytest as _pt
 
-    from hive_serde_schema_gen_spark.operators.curation import (
-        semantic_contamination,
-    )
+    from hive_serde_schema_gen_spark.operators.contamination import semantic_contamination
     from hive_serde_schema_gen_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -975,9 +967,7 @@ def _tok_docs(spark, n=120, sources=("a", "b", "c")):
 
 
 def test_token_budget_mixture_exact_accounting(spark):
-    from hive_serde_schema_gen_spark.operators.curation import (
-        token_budget_mixture,
-    )
+    from hive_serde_schema_gen_spark.operators.selection import token_budget_mixture
 
     d = _tok_docs(spark)
     budgets = {"a": 50, "b": 10_000, "c": 0}
@@ -1016,9 +1006,7 @@ def test_token_budget_mixture_shard_prefix_equals_global(spark):
     equivalence, re-keyed)."""
     from pyspark.sql.window import Window as W
 
-    from hive_serde_schema_gen_spark.operators.curation import (
-        token_budget_mixture,
-    )
+    from hive_serde_schema_gen_spark.operators.selection import token_budget_mixture
     from hive_serde_schema_gen_spark.operators.packing import ws_token_count
 
     d = _tok_docs(spark, n=300, sources=("x", "y"))
@@ -1049,9 +1037,7 @@ def test_token_budget_mixture_shard_prefix_equals_global(spark):
 
 
 def test_integer_temperature_budgets(spark):
-    from hive_serde_schema_gen_spark.operators.curation import (
-        integer_temperature_budgets,
-    )
+    from hive_serde_schema_gen_spark.operators.selection import integer_temperature_budgets
 
     tot = {"big": 90_000, "mid": 10_000, "tiny": 100}
     b = integer_temperature_budgets(tot, 20_000)
@@ -1092,9 +1078,7 @@ def test_curate_and_prepare_quality_top_and_near_dup_stages(spark, sf_dir):
     # the neutral model ties every score, and ties are INCLUDED, so a
     # same-score source keeps all its docs — assert via the selection
     # operator's own report instead of raw counts
-    from hive_serde_schema_gen_spark.operators.curation import (
-        quality_top_fraction,
-    )
+    from hive_serde_schema_gen_spark.operators.selection import quality_top_fraction
     from hive_serde_schema_gen_spark.operators.text import classifier_score
 
     scored = classifier_score(docs, {}).join(
@@ -1130,7 +1114,7 @@ def test_integer_power_budgets_and_anneal_schedule():
     import math
     import random
 
-    from hive_serde_schema_gen_spark.operators.curation import (
+    from hive_serde_schema_gen_spark.operators.selection import (
         _integer_nth_root,
         anneal_temperature_schedule,
         integer_power_budgets,

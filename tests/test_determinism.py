@@ -16,6 +16,7 @@ import pytest
 pytestmark = pytest.mark.slow  # regression-depth tail (see pyproject.toml)
 
 from hive_serde_schema_gen_spark.registry import all_oracles, all_queries
+from hive_serde_schema_gen_spark.session import scoped_conf
 
 QUERIES = all_queries()
 COVERED = sorted(set(all_oracles()) - {"streaming_window_counts"})
@@ -28,11 +29,8 @@ def test_identical_across_shuffle_layouts(name, spark, sf_dir):
             tuple(str(v) for v in r) for r in QUERIES[name](spark, sf_dir).collect()
         )
 
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    a = run()
-    spark.conf.set("spark.sql.shuffle.partitions", "5")
-    try:
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "32"}):
+        a = run()
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "5"}):
         b = run()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
     assert a == b, f"{name}: results drift with shuffle layout"

@@ -5,7 +5,7 @@ pair."""
 
 from __future__ import annotations
 
-from hive_serde_schema_gen_spark.operators.curation import (
+from hive_serde_schema_gen_spark.operators.contamination import (
     minhash_contamination,
 )
 from hive_serde_schema_gen_spark.operators.dedup import SHINGLE

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from hive_serde_schema_gen_spark.operators.curation import (
+from hive_serde_schema_gen_spark.operators.selection import (
     quality_top_fraction,
 )
 

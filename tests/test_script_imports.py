@@ -69,3 +69,36 @@ def test_script_package_imports_resolve(script):
         if not _resolves(module, name)
     ]
     assert broken == []
+
+
+def _unused_relative_imports():
+    """``module:line: name`` for every module-level ``from .x import name``
+    in the package that its module neither reads nor lists in
+    ``__all__``: such a name is a re-export, and a re-export façade keeps
+    a second spelling of every import path alive."""
+    for dirpath, _, files in os.walk(os.path.join(ROOT, PKG)):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+            listed = set()
+            for node in tree.body:
+                if isinstance(node, ast.Assign) and any(
+                    isinstance(t, ast.Name) and t.id == "__all__"
+                    for t in node.targets
+                ):
+                    listed |= {e.value for e in node.value.elts}
+            for node in tree.body:
+                if isinstance(node, ast.ImportFrom) and node.level > 0:
+                    for alias in node.names:
+                        name = alias.asname or alias.name
+                        if name not in read and name not in listed:
+                            rel = os.path.relpath(path, ROOT)
+                            yield f"{rel}:{node.lineno}: {name}"
+
+
+def test_package_has_no_reexport_facades():
+    assert list(_unused_relative_imports()) == []
