@@ -13,54 +13,12 @@ long-lived cluster amortizes to zero, so the timed numbers measure the
 per-SF marginal cost — the quantity that actually extrapolates to 100 TB.
 Set SPARK_GRAFT_COLD=1 to skip the warmup and measure cold-start instead.
 
-Calibration — making host noise attributable: this box's throughput
-drifts between rounds (r8→r9 showed a uniform 1.22-1.62× multiplier on
-byte-identical query code — a sustained slow host window that min-of-N
-interleaving cannot correct).  To make such drift *measurable*, every
-timed sweep also runs four FROZEN synthetic workloads in the same
-session, one per execution regime the headline queries live in:
-
-  - jvm:     128M-row xxhash64 chain → bit_xor.  Pure whole-stage-codegen
-             CPU across all 32 cores, zero I/O.
-  - scan:    parquet scan of lineitem at the bench SF → row-hash bit_xor.
-             Parquet decode + page-cache/disk regime.
-  - shuffle: 8M rows → 100k-key groupBy → re-aggregate.  Exchange +
-             hash-aggregate machinery.
-  - arrow:   16M rows through a mapInPandas multiply-reduce.  The
-             Python-worker + Arrow-serialization regime
-             (infer_props_schema, multimodal live here).
-
-All four produce deterministic results that are ASSERTED every run (the
-scan constant is per-SF: asserted for sweep-to-sweep stability always,
-and against the recorded sf0.1 constant when benching sf0.1), so the
-yardstick can never silently change shape.  The JSON line reports
-per-component `calibration` times (min-of-N, same estimator as the
-queries), per-component drift factors, a combined `host_factor`
-(Σ measured / Σ reference — the component mix approximates the headline
-mix), and `queries_norm` = normalized query times.  The reference
-constants below were recorded in round 10 in a full bench run on this
-host (BASELINE.md §measurement-protocol); a future round that sees raw
-numbers drift while `queries_norm` holds steady has *proven* the drift
-is the host, not the code — and the per-component factors say WHICH
-regime (e.g. r10 measured Python-worker drift at 2.7× while JVM CPU sat
-at 1.08×, invisible to any single-factor design).
-
-Normalization is PER SWEEP (round 12 — the r11 lesson): each sweep's
-calibration pass yields that sweep's own `host_factor_i`, that sweep's
-query readings are divided by it, and `queries_norm` is the min over
-*normalized* values.  The previous design took min-over-sweeps of
-calibration and min-over-sweeps of queries INDEPENDENTLY and divided
-once at the end — so when the host moved *between* sweeps (round 11:
-the driver session, which runs a 50-query correctness sweep around the
-bench, read value_norm 17.83 while three builder sessions on identical
-code read 14.28-14.74), the calibration min could come from a fast
-window while a query's min sat in a slow one, decoupling numerator and
-denominator by the full between-sweep swing.  Pairing each query
-reading with the calibration reading taken seconds before it inside the
-same sweep bounds the residual error to *within-sweep* drift.  Raw mins
-are still reported alongside (`value`/`queries`), and the legacy
-single-division total is kept as `value_norm_pooled` so the r10/r11
-series stays interpretable.
+The JSON line holds `metric`, `value` (the sum of the per-query minima),
+`unit`, `queries` (each query's minimum over $SPARK_GRAFT_BENCH_REPS
+interleaved sweeps, default 3), `sf` and `queries_raw_per_sweep` (every
+timed reading).  The numbers are raw wall seconds on this host; compare
+them only with a run of the other tree in the same session shape, per
+query.
 """
 
 from __future__ import annotations
@@ -90,354 +48,27 @@ HEADLINE = [
     "asof_join_last_order",
     "multimodal_payload_meta",
     "infer_props_schema",
-    # round 16 (VERDICT r15 #6): the media family's sf0.1 headline — the
-    # DEFAULT-strategy pHash dedup over the planted evidence corpus
-    # (synth + decode + hash via Arrow, then banded attribution), so a
-    # media-path regression shows in the cross-round raw series instead
-    # of only in scale_check.  NOTE: a 17th headliner changes the summed
-    # `value` series vs rounds 1-15 — compare per-query minima across
-    # that boundary (BASELINE.md round-16 note).
+    # the media family's default-strategy dedups over their planted
+    # evidence corpora: synthesis, Arrow decode + fingerprint, exact
+    # collapse, the strategy='auto' bucket diagnostic, banded attribution
     "phash_image_dedup",
-    # round 17 (VERDICT r16 #3): the audio and video default-strategy
-    # dedups over their planted evidence corpora — the remaining two
-    # media modalities get cross-round regression tripwires.  Same
-    # series note as the 17th headliner: the summed `value` changes at
-    # this boundary; compare per-query minima (BASELINE.md round-17).
     "audio_dedup_default",
     "video_dedup_default",
-    # round 18 (VERDICT r17 #6): a CPU-scaling probe the driver's 8-core
-    # vs 32-core comparison can actually resolve.  At sf0.1 every real
-    # headline query is fixed-overhead-bound (r17 scaling block: every
-    # 8c/32c ratio was 0.55-0.91 — the 8-core run WON), so the fanout /
-    # vectorization work was invisible in driver ground truth.  The probe
-    # is a 100-deep xxhash64 chain over the lineitem scan, fanned out like
-    # any compute-heavy operator — ~60M hash evaluations whose wall is
-    # ∝ rows/cores, so the core count is finally the binding resource.
-    # Additions-only: the 19 existing series are untouched; the summed
-    # `value` series gains the probe's ~0.5 s at this boundary (compare
-    # per-query minima across it — same note as the round-16/17
-    # headliner additions).
+    # a CPU-scaling probe: at sf0.1 every real headliner is bound by fixed
+    # overhead, so core count shows only in a query whose wall is
+    # ∝ rows/cores
     "compute_scaling_probe",
 ]
-
-# Reference calibration times (sec), recorded round 10 (2026-08-14) from a
-# full bench run on the then-current host window; BENCH_r10.json's raw
-# numbers were taken in the same kind of session, so host_factor ≈ 1.0
-# defines that round's window as the yardstick.  Do not retune these
-# casually: the whole point is that they stay FIXED so cross-round host
-# drift shows up in host_factor instead of silently inflating per-query
-# seconds.
-CAL_REF = {"jvm": 0.57, "scan": 0.30, "shuffle": 1.00, "arrow": 2.50}
-
-# Round 13 (VERDICT r12 ask #1): per-regime normalization.  One scalar
-# host_factor cannot fit sweeps whose component factors disagree (r12c:
-# arrow 1.08 vs shuffle 0.51 — a ~2× split), because it over-corrects
-# queries living in the regime that did NOT slow down.
-#
-# The regime tags below are MEASURED, not guessed from plan shape.  The
-# round-13 designed experiment (BASELINE.md §round-13) ran the bench in
-# a clean session and in a deliberately r12c-shaped one (a full
-# correctness sweep running concurrently; component factors disagreed
-# ~1.9×, jvm 0.60 vs arrow 1.15) with per-sweep raw query times
-# recorded, then asked per query WHICH regime factor makes the two
-# sessions agree.  The answer was uniform: every JVM-side headline —
-# scans, joins, windows, aggregations alike — tracks the *jvm*
-# (pure codegen CPU) factor, because the scan/shuffle calibration jobs
-# are far MORE contention-sensitive than any real query (their exchange
-# / IO machinery saturates; e.g. shuffle calibration moved +60% while
-# the shuffle-heaviest query moved +7%).  The two mapInPandas headlines
-# track the *arrow* (Python-worker) factor — the r10 2.7× worker-drift
-# episode is a real, distinct failure mode the jvm factor cannot see.
-# scan/shuffle remain as DIAGNOSTIC components in the JSON (a drifting
-# scan factor with jvm flat still names the regime that moved), they
-# just don't normalize any query directly.
-#
-# `queries_norm_regime` divides each query's per-sweep reading by ITS
-# regime's factor from the SAME sweep and takes the MEDIAN over sweeps
-# — not the min: a normalized min inherits the denominator's noise (one
-# inflated calibration reading in one sweep makes that sweep's
-# normalized values spuriously small and the min locks them in; the
-# round-13 clean2 session hit exactly this, jvm factor 0.83 in sweep 1
-# vs 0.53 after), while the median over 3 sweeps shrugs off one
-# contaminated sweep in either direction.  Measured across the three
-# round-13 sessions (clean / concurrent-sweep stress / contaminated
-# sweep): median-of-normalized agreed within 0.8% where
-# min-of-normalized spread 37%.  `value_norm` (sum-weighted scalar,
-# min estimator) is kept unchanged for series continuity with rounds
-# 10-12.
-QUERY_REGIME = {
-    "q1_pricing_summary": "jvm",
-    "q3_shipping_priority": "jvm",
-    "q5_local_supplier": "jvm",
-    "agg_distinct": "jvm",
-    "window_topk_per_group": "jvm",
-    "sessionize_events": "jvm",
-    "pivot_events": "jvm",
-    "dedup_exact": "jvm",
-    "dedup_minhash_lsh_xxhash64": "jvm",
-    "text_quality_score": "jvm",
-    "text_lang_id": "jvm",
-    "similarity_topk_cosine": "jvm",
-    "embedding_norms": "jvm",
-    "asof_join_last_order": "jvm",
-    "multimodal_payload_meta": "arrow",
-    "infer_props_schema": "arrow",
-    # measured shape: the synth+decode+hash mapInPandas pass dominates
-    # (same regime evidence as the other two Arrow headliners)
-    "phash_image_dedup": "arrow",
-    # same measured regime evidence: one Arrow synth+decode+fingerprint
-    # pass dominates each media dedup chain
-    "audio_dedup_default": "arrow",
-    "video_dedup_default": "arrow",
-    # pure whole-stage-codegen CPU by construction (the probe IS the jvm
-    # calibration workload's shape, applied to the bench SF's scan)
-    "compute_scaling_probe": "jvm",
-}
-
-# Deterministic results of the calibration workloads — asserted on every
-# run so the yardstick can never silently change shape.  `scan` hashes
-# real table bytes, so its constant is per-SF; only the sf0.1 value (the
-# driver's bench SF) is pinned — at other SFs the run asserts
-# sweep-to-sweep stability instead.
-_CAL_EXPECT = {
-    "jvm": -6366918926092166270,
-    "shuffle": -8696676770792073530,
-    "arrow": 33176928256,
-}
-_CAL_EXPECT_SCAN_SF01 = 8129958389196522784
-
-
-def _calibration_jobs(spark, sf_dir):
-    """Fixed synthetic workloads timed alongside the headline queries — one
-    per execution regime (see module docstring).  FROZEN: edits here
-    invalidate every prior round's host_factor comparison.
-
-    Returns {name: thunk} where each thunk runs the workload and returns
-    its (deterministic) scalar result.  Sized so one sweep costs ~2.5 s:
-    large enough that scheduler jitter is <10% of each reading, small
-    enough not to dominate the bench.
-    """
-    from pyspark.sql import functions as F
-
-    def jvm():
-        df = spark.range(0, 32 * 4_000_000, 1, 32)
-        expr = F.col("id")
-        for _ in range(8):
-            expr = F.xxhash64(expr)
-        return df.select(F.bit_xor(expr).alias("s")).collect()[0][0]
-
-    def scan():
-        df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        return (
-            df.select(
-                F.xxhash64(
-                    "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
-                ).alias("h")
-            )
-            .agg(F.bit_xor("h").alias("s"))
-            .collect()[0][0]
-        )
-
-    def shuffle():
-        df = spark.range(0, 8_000_000, 1, 32)
-        g = df.groupBy((F.col("id") % 100_000).alias("k")).agg(
-            F.count(F.lit(1)).alias("c"),
-            F.bit_xor(F.xxhash64("id")).alias("x"),
-        )
-        return g.agg(
-            F.bit_xor(F.xxhash64("k", "c", "x")).alias("s")
-        ).collect()[0][0]
-
-    def arrow():
-        import pandas as pd
-
-        def work(it):
-            for pdf in it:
-                yield pd.DataFrame(
-                    {"x": [int((pdf["id"] * 2654435761 % 2**31).sum())]}
-                )
-
-        return (
-            spark.range(0, 32 * 500_000, 1, 32)
-            .mapInPandas(work, schema="x long")
-            .agg(F.bit_xor("x").alias("s"))
-            .collect()[0][0]
-        )
-
-    return {"jvm": jvm, "scan": scan, "shuffle": shuffle, "arrow": arrow}
-
-
-def _measure_shuffle_shares(spark, queries, sf_dir):
-    """Per-headline shuffle-time share from the UI REST task metrics —
-    the round-14 blended-normalization input (VERDICT r13 #6): one
-    untimed tagged pass per query, then
-    share = (shuffle write time + fetch wait) / executor run time over
-    the query's stages.  Requires SPARK_GRAFT_UI=1 (the session factory
-    keeps the UI off otherwise); returns {} when unavailable — the
-    blend then falls back to the plain regime factor."""
-    import urllib.request
-
-    sc = spark.sparkContext
-    base = sc.uiWebUrl
-    if not base:
-        return {}
-
-    def rest(path):
-        url = f"{base}/api/v1/applications/{sc.applicationId}{path}"
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return json.load(r)
-
-    shares = {}
-    for name in HEADLINE:
-        group = f"shufshare-{name}"
-        sc.setJobGroup(group, name)
-        try:
-            queries[name](spark, sf_dir).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        spark.catalog.clearCache()
-        try:
-            jobs = rest("/jobs")
-            stage_ids = {
-                sid
-                for j in jobs
-                if j.get("jobGroup") == group
-                for sid in j.get("stageIds", [])
-            }
-            run_ms, shuf_ms = 0.0, 0.0
-            for sid in stage_ids:
-                for st in rest(f"/stages/{sid}"):
-                    run_ms += st.get("executorRunTime", 0)
-                    shuf_ms += st.get("shuffleWriteTime", 0) / 1e6
-                    shuf_ms += st.get("shuffleFetchWaitTime", 0)
-            shares[name] = round(shuf_ms / run_ms, 4) if run_ms else 0.0
-        except Exception:
-            return {}  # partial shares would skew the blend asymmetrically
-    return shares
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from hive_serde_schema_gen_spark.registry import all_queries
     from hive_serde_schema_gen_spark.session import get_spark
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = dict(all_queries())
-
-    # Bench the production configuration of MinHash dedup under its OWN name
-    # (so the record never conflates it with the oracle-verified entry):
-    # xxhash64 base hash, native, ~3× less hashing cost.  The registry entry
-    # `dedup_minhash_lsh` keeps md5 only because the DuckDB oracle must
-    # reproduce the hash bit-for-bit; identical plan shape, and the
-    # exact-Jaccard verification is hash-free either way.
-    from hive_serde_schema_gen_spark.operators.dedup import minhash_lsh_pairs
-
-    queries["dedup_minhash_lsh_xxhash64"] = lambda s, d: minhash_lsh_pairs(
-        s, d, hash_fn="xxhash64"
-    )
-
-    # Registry-retired in round 10 (merged into the similarity_brute slot)
-    # but kept as headline entries under their own names so the per-query
-    # series stays comparable across rounds.
-    from hive_serde_schema_gen_spark.operators.similarity import (
-        embedding_norms,
-        similarity_topk_cosine,
-    )
-
-    queries["similarity_topk_cosine"] = similarity_topk_cosine
-    queries["embedding_norms"] = embedding_norms
-
-    # Same treatment for the round-10 text_quality_lang merge: the headline
-    # keeps timing the components under their original names.
-    from hive_serde_schema_gen_spark.operators.text import (
-        text_lang_id,
-        text_quality_score,
-    )
-
-    queries["text_quality_score"] = text_quality_score
-    queries["text_lang_id"] = text_lang_id
-
-    # The registry slot became a tagged union (props + --infer-maps) in
-    # round 10; the headline keeps timing the original props-only
-    # inference so its series stays comparable.
-    from hive_serde_schema_gen_spark.operators.inference import (
-        infer_props_schema,
-    )
-
-    queries["infer_props_schema"] = infer_props_schema
-
-    # Media headline (round 16): the production default path end-to-end —
-    # evidence-image synthesis, Arrow decode+hash, exact collapse, the
-    # strategy='auto' bucket diagnostic, banded attribution.  Matches the
-    # scale_check `phash_image_dedup` series' construction (default
-    # strategy there too since round 16).
-    from hive_serde_schema_gen_spark.operators.media_core import phash_dedup
-    from hive_serde_schema_gen_spark.operators.media_image import (
-        image_hashes,
-        phash_evidence_images,
-    )
-    from hive_serde_schema_gen_spark.sources.tables import load_table
-
-    queries["phash_image_dedup"] = lambda s, d: phash_dedup(
-        image_hashes(
-            phash_evidence_images(
-                load_table(s, d, "documents").select("doc_id", "text")
-            )
-        ).localCheckpoint()
-    ).filter("dist >= 0")
-
-    # Round 17: the audio and video members of the same default-path
-    # series — evidence synthesis, Arrow fingerprinting, exact collapse,
-    # auto bucket diagnostic, banded attribution (strategy='auto'
-    # defaults, the production plan).
-    from hive_serde_schema_gen_spark.operators.media_audio import (
-        audio_evidence_clips,
-        audio_fingerprints,
-    )
-    from hive_serde_schema_gen_spark.operators.media_video import (
-        video_evidence_clips,
-        video_fingerprints,
-    )
-    from hive_serde_schema_gen_spark.operators.phash_index import AUDIO, VIDEO
-
-    queries["audio_dedup_default"] = lambda s, d: AUDIO.dedup(
-        audio_fingerprints(
-            audio_evidence_clips(
-                load_table(s, d, "documents").select("doc_id", "text")
-            )
-        ).localCheckpoint()
-    ).filter("dist >= 0")
-    queries["video_dedup_default"] = lambda s, d: VIDEO.dedup(
-        video_fingerprints(
-            video_evidence_clips(
-                load_table(s, d, "documents").select("doc_id", "text")
-            )
-        ).localCheckpoint()
-    ).filter("dist >= 0")
-
-    # Round 18: the CPU-scaling probe (see the HEADLINE comment).  A
-    # 100-deep xxhash64 chain per lineitem row, fanned out exactly like a
-    # compute-heavy operator (fanout_for_compute — the single-row-group
-    # input would otherwise pin the whole chain to one core), reduced to
-    # one order-free bit_xor scalar so the result is deterministic and
-    # the collect is one row.  Reads the bench SF's parquet every run —
-    # nothing cached, nothing precomputed.
-    from pyspark.sql import functions as _F
-
-    from hive_serde_schema_gen_spark.sources.tables import fanout_for_compute
-
-    def _scaling_probe(s, d):
-        li = fanout_for_compute(
-            load_table(s, d, "lineitem").select("l_orderkey", "l_partkey"),
-            "l_orderkey",
-        )
-        h = _F.col("l_orderkey")
-        for _ in range(100):
-            h = _F.xxhash64(h, _F.col("l_partkey"))
-        return li.select(h.alias("h")).agg(_F.bit_xor("h").alias("x"))
-
-    queries["compute_scaling_probe"] = _scaling_probe
+    queries = headline_queries()
+    cold = os.environ.get("SPARK_GRAFT_COLD", "0") == "1"
 
     # warmup: JVM + parquet footer reads + Python worker pool, then one
     # tiny-SF pass per headline query to compile its codegen stages (see
@@ -446,167 +77,35 @@ def main() -> None:
     spark.range(1000).mapInPandas(
         lambda it: it, schema="id long"
     ).count()
-    if os.environ.get("SPARK_GRAFT_COLD", "0") != "1":
+    if not cold:
         warm_dir = "/root/testdata/sf0.001"
         if os.path.isdir(warm_dir):
             for name in HEADLINE:
-                queries[name](spark, warm_dir).collect()
-                spark.catalog.clearCache()
-                gc.collect()  # release localCheckpoint blocks (see sweep loop)
+                _run(spark, queries[name], warm_dir)
+        # One untimed priming sweep at the target SF: the sf0.001 warmup
+        # compiles codegen classes but leaves C2 JIT shallow (dedup_exact
+        # decays 0.91 s → 0.39 s over ~12 runs from compilation depth
+        # alone), so priming moves every timed rep onto the flat part of
+        # that curve.
+        for name in HEADLINE:
+            _run(spark, queries[name], sf_dir)
 
-    # Best-of-N per query: JVM JIT/GC plus bursty host CPU allocation
-    # introduce multi-second run-to-run noise on this box; the minimum over
-    # repetitions is the standard low-variance estimator of steady-state
-    # cost (what a tuned cluster delivers).  Reps are interleaved (full
-    # sweep 1..N over all queries, not N back-to-back runs per query) so a
-    # multi-second noise window can't poison every rep of one query.
-    #
-    # One UNTIMED priming sweep at the TARGET SF runs first: the sf0.001
-    # warmup compiles codegen classes but leaves C2 JIT shallow — measured
-    # on dedup_exact, per-run cost decays 0.91s → 0.39s over ~12 repetitions
-    # purely from compilation depth, which is exactly the r2↔r3 "regression"
-    # band (0.359 vs 0.507).  Priming at target SF moves every timed rep
-    # onto the flat part of that curve.  (Skipped in COLD mode, which
-    # exists precisely to measure the unwarmed state.)
+    # Best-of-N per query: JVM JIT/GC and bursty host CPU add multi-second
+    # run-to-run noise, and the minimum over repetitions is the
+    # low-variance estimator of steady-state cost.  Reps are interleaved
+    # (full sweeps over all queries, not N back-to-back runs per query) so
+    # one noisy window cannot poison every rep of one query.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = None
-    cal_jobs = _calibration_jobs(spark, sf_dir)
-    if os.environ.get("SPARK_GRAFT_COLD", "0") != "1":
-        for job in cal_jobs.values():
-            job()
-        for name in HEADLINE:
-            queries[name](spark, sf_dir).collect()
-            spark.catalog.clearCache()
-            gc.collect()  # release localCheckpoint blocks (see sweep loop)
-    # Round 14: shuffle-share blend (one untimed tagged pass; {} unless
-    # SPARK_GRAFT_UI=1).  Queries whose shuffle share is s normalize by
-    # s·shuffle_factor + (1−s)·regime_factor — the r13e/f residual was
-    # shuffle-regime host drift the pure-jvm factor cannot absorb.
-    shuffle_shares = (
-        _measure_shuffle_shares(spark, queries, sf_dir)
-        if os.environ.get("SPARK_GRAFT_COLD", "0") != "1"
-        else {}
-    )
-    timings = {}
-    norm_timings = {}
-    regime_norm_timings = {}
-    blend_norm_timings = {}
-    raw_sweeps = []  # per-sweep raw query seconds (diagnosis/fitting)
-    cal_timings = {}
-    cal_results = {}
-    host_factors = []
-    cal_factors_sweeps = []
-    for _ in range(reps):
-        # Calibration first in each sweep: if a slow host window spans the
-        # sweep, it inflates the calibration reading by the same factor as
-        # the query readings taken seconds later.  The sweep's OWN factor
-        # then normalizes the sweep's OWN query readings (see module
-        # docstring: between-sweep host movement must never decouple the
-        # numerator from the denominator).
-        sweep_cal = {}
-        for cal_name, job in cal_jobs.items():
-            # Two back-to-back runs per sweep: the calibration jobs are
-            # cheap relative to the queries, and the min-of-2 within the
-            # sweep tightens the noisier components (shuffle/arrow)
-            # without reaching outside the sweep's host window.
-            for _inner in range(2):
-                t0 = time.perf_counter()
-                result = job()
-                dt = time.perf_counter() - t0
-                expect = _CAL_EXPECT.get(cal_name, cal_results.get(cal_name))
-                if cal_name == "scan" and abs((sf or 0) - 0.1) < 1e-9:
-                    expect = _CAL_EXPECT_SCAN_SF01
-                assert expect is None or result == expect, (
-                    f"calibration workload '{cal_name}' changed: {result}"
-                )
-                cal_results[cal_name] = result
-                prev = sweep_cal.get(cal_name)
-                sweep_cal[cal_name] = dt if prev is None else min(prev, dt)
-        for cal_name, dt in sweep_cal.items():
-            prev = cal_timings.get(cal_name)
-            cal_timings[cal_name] = dt if prev is None else min(prev, dt)
-        # This sweep's host factor: total measured calibration cost over
-        # total reference cost — the four-regime mix approximates the
-        # headline mix, and every regime enters so e.g. a Python-worker-
-        # only slowdown (distinct failure signature from JVM CPU
-        # contention) still moves the factor.
-        sweep_factor = sum(sweep_cal.values()) / sum(CAL_REF.values())
-        host_factors.append(round(sweep_factor, 3))
-        sweep_regime_factors = {
-            n: sweep_cal[n] / CAL_REF[n] for n in CAL_REF
-        }
-        cal_factors_sweeps.append(
-            {n: round(sweep_regime_factors[n], 3) for n in CAL_REF}
-        )
-        sweep_raw = {}
-        for name in HEADLINE:
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).collect()
-            dt = time.perf_counter() - t0
-            spark.catalog.clearCache()  # queries cache() internally
-            # Round 17 (measurement hygiene, NOT in the timed region): the
-            # media headliners localCheckpoint() intermediates whose JVM
-            # block-manager entries are freed only when the Python-side
-            # DataFrame is garbage-collected and py4j dispatches the
-            # finalizer.  Left to lazy GC, blocks from EARLIER queries
-            # pile up and contaminate LATER readings — measured on this
-            # box: phash_image_dedup read 2.4-2.6 s in sweep 0 and
-            # 3.2-6.9 s in later sweeps of the same session; with an
-            # explicit collect after each query the series stays flat at
-            # 2.3-2.6 s (OPTIMIZATION_r17.md §bench-hygiene; the 3-media-
-            # headliner bench made the leak 3× worse than r16's).  The
-            # timed region above is unchanged — each query still pays for
-            # its OWN checkpoints.
-            gc.collect()
-            sweep_raw[name] = round(dt, 3)
-            prev = timings.get(name)
-            timings[name] = dt if prev is None else min(prev, dt)
-            nd = dt / sweep_factor
-            prevn = norm_timings.get(name)
-            norm_timings[name] = nd if prevn is None else min(prevn, nd)
-            # per-regime: this sweep's reading over THIS sweep's factor
-            # for the query's own regime (round 13) — median over sweeps
-            # taken after the loop
-            regime_norm_timings.setdefault(name, []).append(
-                dt / sweep_regime_factors[QUERY_REGIME[name]]
-            )
-            # blended factor: shuffle share from the UI metrics pass,
-            # remainder at the query's own regime factor
-            s = shuffle_shares.get(name)
-            bf = (
-                sweep_regime_factors[QUERY_REGIME[name]]
-                if s is None
-                else s * sweep_regime_factors["shuffle"]
-                + (1 - s) * sweep_regime_factors[QUERY_REGIME[name]]
-            )
-            blend_norm_timings.setdefault(name, []).append(dt / bf)
-        raw_sweeps.append(sweep_raw)
-    timings = {name: round(dt, 3) for name, dt in timings.items()}
-    cal_timings = {name: round(dt, 3) for name, dt in cal_timings.items()}
-    # Pooled factor (legacy, rounds <= 11): min-of-all-sweeps calibration
-    # over the reference — kept so the r10/r11 value_norm series stays
-    # interpretable, but `value_norm` itself is per-sweep from round 12.
-    host_factor = round(
-        sum(cal_timings.values()) / sum(CAL_REF.values()), 3
-    )
-    cal_factors = {
-        name: round(cal_timings[name] / CAL_REF[name], 3) for name in CAL_REF
-    }
-    queries_norm = {
-        name: round(dt, 3) for name, dt in norm_timings.items()
-    }
-    import statistics
-
-    queries_norm_regime = {
-        name: round(statistics.median(vals), 3)
-        for name, vals in regime_norm_timings.items()
-    }
-    queries_norm_blend = {
-        name: round(statistics.median(vals), 3)
-        for name, vals in blend_norm_timings.items()
+    sweeps = [
+        {name: _run(spark, queries[name], sf_dir) for name in HEADLINE}
+        for _ in range(reps)
+    ]
+    timings = {
+        name: round(min(s[name] for s in sweeps), 3) for name in HEADLINE
     }
 
     print(
@@ -617,46 +116,112 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
-                "calibration": cal_timings,
-                "calibration_sec": round(sum(cal_timings.values()), 3),
-                "calibration_ref": CAL_REF,
-                "calibration_factors": cal_factors,
-                "host_factor": host_factor,
-                "host_factors_per_sweep": host_factors,
-                # per-sweep per-regime factors: when value_norm moves,
-                # these say whether one REGIME moved (instrument mix
-                # mismatch — e.g. Python-worker drift with JVM flat)
-                # versus everything uniformly (real host/code change)
-                "calibration_factors_per_sweep": cal_factors_sweeps,
-                "value_norm": round(sum(queries_norm.values()), 3),
-                "queries_norm": queries_norm,
-                # round 13: per-regime per-sweep normalization — each
-                # query divided by its OWN regime's factor from the same
-                # sweep (see QUERY_REGIME); the mix-mismatch fix
-                "value_norm_regime": round(
-                    sum(queries_norm_regime.values()), 3
-                ),
-                "queries_norm_regime": queries_norm_regime,
-                "query_regimes": QUERY_REGIME,
-                # round 14 (diagnostic series): shuffle-share blended
-                # normalization — populated only when SPARK_GRAFT_UI=1
-                # measured the shares; equals queries_norm_regime when
-                # shares were unavailable
-                "shuffle_shares": shuffle_shares,
-                "value_norm_blend": round(
-                    sum(queries_norm_blend.values()), 3
-                ),
-                "queries_norm_blend": queries_norm_blend,
-                # raw per-sweep readings: lets any later analysis re-fit
-                # regime tags or re-derive any estimator offline
-                "queries_raw_per_sweep": raw_sweeps,
-                "value_norm_pooled": round(
-                    sum(timings.values()) / host_factor, 3
-                ),
+                "queries_raw_per_sweep": [
+                    {name: round(dt, 3) for name, dt in s.items()}
+                    for s in sweeps
+                ],
             }
         )
     )
     spark.stop()
+
+
+def headline_queries() -> dict:
+    """``{name: query(spark, sf_dir) -> DataFrame}`` for every HEADLINE
+    entry: the registry slot of that name, or the override below for a
+    name the registry does not hold or holds in another form.  Building
+    it starts no Spark session."""
+    from pyspark.sql import functions as F
+
+    from hive_serde_schema_gen_spark.operators.dedup import minhash_lsh_pairs
+    from hive_serde_schema_gen_spark.operators.inference import (
+        infer_props_schema,
+    )
+    from hive_serde_schema_gen_spark.operators.media_audio import (
+        audio_evidence_clips,
+    )
+    from hive_serde_schema_gen_spark.operators.media_image import (
+        phash_evidence_images,
+    )
+    from hive_serde_schema_gen_spark.operators.media_video import (
+        video_evidence_clips,
+    )
+    from hive_serde_schema_gen_spark.operators.phash_index import (
+        AUDIO,
+        IMAGE,
+        VIDEO,
+    )
+    from hive_serde_schema_gen_spark.operators.similarity import (
+        embedding_norms,
+        similarity_topk_cosine,
+    )
+    from hive_serde_schema_gen_spark.operators.text import (
+        text_lang_id,
+        text_quality_score,
+    )
+    from hive_serde_schema_gen_spark.registry import all_queries
+    from hive_serde_schema_gen_spark.sources.tables import (
+        fanout_for_compute,
+        load_table,
+    )
+
+    def media_dedup(family, evidence):
+        return lambda s, d: family.dedup(
+            family.fingerprint(
+                evidence(load_table(s, d, "documents").select("doc_id", "text"))
+            ).localCheckpoint()
+        ).filter("dist >= 0")
+
+    def scaling_probe(s, d):
+        # a 100-deep xxhash64 chain per lineitem row, fanned out like a
+        # compute-heavy operator (the single-row-group input would pin it
+        # to one core), reduced to one order-free bit_xor
+        li = fanout_for_compute(
+            load_table(s, d, "lineitem").select("l_orderkey", "l_partkey"),
+            "l_orderkey",
+        )
+        h = F.col("l_orderkey")
+        for _ in range(100):
+            h = F.xxhash64(h, F.col("l_partkey"))
+        return li.select(h.alias("h")).agg(F.bit_xor("h").alias("x"))
+
+    overrides = {
+        # the production hash under its own name: the registry slot
+        # `dedup_minhash_lsh` keeps md5 so its DuckDB oracle can re-derive
+        # every hash; the plan shape is the same
+        "dedup_minhash_lsh_xxhash64": lambda s, d: minhash_lsh_pairs(
+            s, d, hash_fn="xxhash64"
+        ),
+        # retired slots (folded into similarity_brute and
+        # text_quality_lang), timed under their own names
+        "similarity_topk_cosine": similarity_topk_cosine,
+        "embedding_norms": embedding_norms,
+        "text_quality_score": text_quality_score,
+        "text_lang_id": text_lang_id,
+        # props-only inference; the registry slot adds --infer-maps rows
+        "infer_props_schema": infer_props_schema,
+        "phash_image_dedup": media_dedup(IMAGE, phash_evidence_images),
+        "audio_dedup_default": media_dedup(AUDIO, audio_evidence_clips),
+        "video_dedup_default": media_dedup(VIDEO, video_evidence_clips),
+        "compute_scaling_probe": scaling_probe,
+    }
+    slots = all_queries()
+    return {name: overrides.get(name) or slots[name] for name in HEADLINE}
+
+
+def _run(spark, query, sf_dir) -> float:
+    """Wall seconds of building and collecting ``query`` at ``sf_dir``."""
+    t0 = time.perf_counter()
+    query(spark, sf_dir).collect()
+    dt = time.perf_counter() - t0
+    spark.catalog.clearCache()  # queries cache() internally
+    # The media headliners localCheckpoint() intermediates whose blocks
+    # the JVM frees only once the Python DataFrame is collected and py4j
+    # runs its finalizer; left to lazy GC they pile up and slow the
+    # queries after them.  Outside the timed region: each query still
+    # pays for its own checkpoints.
+    gc.collect()
+    return dt
 
 
 if __name__ == "__main__":

@@ -1,6 +1,7 @@
 """The rules that turn text into keys, each spelled once: the whitespace
-tokenizer, the two word n-gram forms, the md5-hex-prefix integer key, the
-salted hash and the NULL-safe content digest.
+class and its tokenizer, the whitespace token count, the two word n-gram
+forms, the hashed unigram + bigram bag, the md5-hex-prefix integer key,
+the salted hash and the NULL-safe content digest.
 
 The DuckDB oracles re-derive every one of these bit for bit in SQL
 (``string_split_regex(TRIM(text), '[ \\t\\n\\x0B\\f\\r]+')``, the first
@@ -15,8 +16,11 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 #: Java's default ``\s`` class, spelled out: RE2 (DuckDB) leaves ``\x0B``
 #: (vertical tab) out of its ``\s``, so a bare ``\s`` would split
-#: VT-containing text on one engine only.
-WORD_SPLIT = "[ \t\n\x0B\f\r]+"
+#: VT-containing text on one engine only.  Python's ``str.split()`` and
+#: ``str.strip()`` with no argument take Unicode whitespace (NBSP and
+#: more) too, so Python-side code strips and splits on this class.
+WHITESPACE = " \t\n\x0B\f\r"
+WORD_SPLIT = f"[{WHITESPACE}]+"
 
 
 def _col(c) -> Column:
@@ -40,6 +44,38 @@ def tokens(c) -> Column:
     return F.when(
         F.length(F.trim(c)) == 0, F.array().cast("array<string>")
     ).otherwise(words(c))
+
+
+def ws_token_count(text_col: str = "text") -> Column:
+    """Whitespace token count with the empty-token guard (``split('')``
+    yields ``['']``), the one definition for the chunker, the packer, the
+    token budgets and the tokenizer fertility report.  NULL text counts 0
+    tokens (a metadata-only row must degrade, not crash)."""
+    return F.coalesce(
+        F.size(F.filter(words(text_col), lambda t: t != "")), F.lit(0)
+    )
+
+
+def lower_grams(c, bigrams: bool = True) -> Column:
+    """The :func:`tokens` of lowercased ``c`` and, with ``bigrams``, then
+    each adjacent pair of them joined by one space (a token holds no
+    whitespace, so a pair reads back unambiguously): ``concat(toks,
+    gram_array(toks, 2))``, with one ``zip_with`` of two slices for the
+    pairs.  DSIR and ``embed_text`` hash these grams alike."""
+    toks = tokens(F.lower(_col(c)))
+    if not bigrams:
+        return toks
+    return F.concat(
+        toks,
+        F.when(
+            F.size(toks) > 1,
+            F.zip_with(
+                F.slice(toks, 1, F.size(toks) - 1),
+                F.slice(toks, 2, F.size(toks) - 1),
+                lambda a, b: F.concat_ws(" ", a, b),
+            ),
+        ).otherwise(F.array().cast("array<string>")),
+    )
 
 
 def word_grams(

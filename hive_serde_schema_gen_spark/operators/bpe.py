@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text_keys import words
+from ..functions.text_keys import WHITESPACE, WORD_SPLIT, words, ws_token_count
 
 END = "</w>"  # end-of-word marker (standard: lets merges learn suffixes)
 
@@ -77,7 +77,7 @@ def pretokenize_py(s: str) -> list:
     as the independent parity reference."""
     import unicodedata
 
-    WS = set(" \t\n\x0b\f\r")
+    WS = set(WHITESPACE)
 
     def cat(c):
         return unicodedata.category(c)
@@ -295,15 +295,15 @@ def encode_bpe(
         + [T.StructField(out_col, T.ArrayType(T.StringType()))]
     )
     ranks = {pair: i for i, pair in enumerate(merges)}
-    # split on EXACTLY Java's \s class ([ \t\n\x0B\f\r]) — training
-    # tokenizes with Spark's regex split, and Python str.split() treats
-    # Unicode whitespace (NBSP etc.) as separators where Java does not;
-    # a train/encode mismatch would void learned merges on crawl text
+    # split on the trainer's class (text_keys.WHITESPACE), not Python's:
+    # str.split() treats Unicode whitespace (NBSP etc.) as separators
+    # where Java does not, and a train/encode mismatch would void learned
+    # merges on crawl text
     if mode not in _MODES:
         raise ValueError(f"unknown pretokenize mode {mode!r}")
     import re
 
-    _ws = re.compile(r"[ \t\n\x0b\f\r]+")
+    _ws = re.compile(WORD_SPLIT)
 
     def enc(batches):
         memo: dict = {}
@@ -311,7 +311,7 @@ def encode_bpe(
             toks = []
             for t in pdf[text_col]:
                 if t is None or (mode == "whitespace"
-                                 and not t.strip(" \t\n\x0b\f\r")):
+                                 and not t.strip(WHITESPACE)):
                     toks.append([])
                     continue
                 if mode == "gpt2":
@@ -319,9 +319,7 @@ def encode_bpe(
                     # PRETOKEN_PATTERN extraction (parity in tests)
                     words = pretokenize_py(t.lower() if lowercase else t)
                 else:
-                    s = (t.lower() if lowercase else t).strip(
-                        " \t\n\x0b\f\r"
-                    )
+                    s = (t.lower() if lowercase else t).strip(WHITESPACE)
                     words = [w for w in _ws.split(s) if w]
                 row: list = []
                 for w in words:
@@ -356,16 +354,9 @@ def fertility_report(
     enc = encode_bpe(
         docs, merges, text_col=text_col, lowercase=lowercase, mode=mode
     )
-    # words splits on Java's \s spelled out, NOT \s: RE2 (the DuckDB
-    # oracle engine) leaves \x0B out of its \s, so a vertical tab in any
-    # doc would make ws_tokens diverge across engines
-    ws = F.coalesce(
-        F.size(F.filter(words(text_col), lambda t: t != "")),
-        F.lit(0),
-    )
     per = enc.select(
         F.col(domain_col).alias("domain"),
-        ws.cast("long").alias("__w"),
+        ws_token_count(text_col).cast("long").alias("__w"),
         F.size("bpe_tokens").cast("long").alias("__b"),
         F.octet_length(F.col(text_col)).cast("long").alias("__y"),
     )

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text_keys import ws_token_count
 from ..registry import query
 from ..sources.tables import load_table
 from .clustering import _materialize, dedup_canonical
@@ -751,7 +752,6 @@ def crawl_to_shards(
     shapes; the selection adds one hash-partition shuffle; the export
     adds the one per-shard shuffle the write needs anyway."""
     from ..sources.sinks import write_training_shards
-    from .packing import ws_token_count
     from .selection import integer_power_budgets, token_budget_mixture
 
     front, rest = _split_curate_kwargs(kwargs)

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.text_keys import content_digest, word_grams, words
+from ..functions.text_keys import content_digest, word_grams, words, ws_token_count
 from ..registry import query
 from .contamination import (
     minhash_contamination,
@@ -546,7 +546,7 @@ def token_mixture_frames(spark, sf_dir):
     chunk ranges — the complete selection→shuffle→shard→pack export,
     every column re-derived in SQL."""
     from ..sources.tables import load_table
-    from .packing import training_manifest, ws_token_count
+    from .packing import training_manifest
 
     docs = load_table(spark, sf_dir, "documents")
     totals = {

@@ -61,32 +61,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.text_keys import salted_hash, tokens
+from ..functions.text_keys import lower_grams, salted_hash
 
 #: 52 bits of hash → uniform grid on (0,1); +0.5 half-step keeps u
 #: strictly inside the interval (ln(-ln(u)) stays finite at both ends).
 _U_BITS = 52
 _U_SCALE = float(1 << _U_BITS)
-
-
-def _grams(text_col: str, bigrams: bool) -> F.Column:
-    """Lowercased whitespace unigrams + (optionally) adjacent bigrams
-    joined with a single space — the ``embed_text`` gram construction
-    (tokens cannot contain whitespace, so 'a b' is unambiguous)."""
-    toks = tokens(F.lower(F.col(text_col)))
-    if not bigrams:
-        return toks
-    return F.concat(
-        toks,
-        F.when(
-            F.size(toks) > 1,
-            F.zip_with(
-                F.slice(toks, 1, F.size(toks) - 1),
-                F.slice(toks, 2, F.size(toks) - 1),
-                lambda a, b: F.concat_ws(" ", a, b),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )
 
 
 def _bucket(salt: str, hash_fn: str, m: int) -> F.Column:
@@ -112,7 +92,7 @@ def hashed_gram_tf(
         raise ValueError("m must be >= 1")
     g = d.select(
         F.col(id_col).alias(id_col),
-        F.explode(_grams(text_col, bigrams)).alias("__g"),
+        F.explode(lower_grams(text_col, bigrams)).alias("__g"),
     )
     b = _bucket(salt, hash_fn, m)
     return (
@@ -134,7 +114,7 @@ def fit_hash_counts(
     ``counts(b, c)`` (≤ m rows) and the 1-row ``totals(t)`` gram count.
     Both are lazy DataFrames; persist to parquet to amortize the fit
     across selection runs (the BM25-index artifact pattern)."""
-    g = d.select(F.explode(_grams(text_col, bigrams)).alias("__g"))
+    g = d.select(F.explode(lower_grams(text_col, bigrams)).alias("__g"))
     b = _bucket(salt, hash_fn, m)
     counts = g.select(b.alias("b")).groupBy("b").agg(
         F.count(F.lit(1)).alias("c")

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.text_keys import salted_hash, tokens
+from ..functions.text_keys import lower_grams, salted_hash
 from ..registry import query
 
 
@@ -51,18 +51,7 @@ def embed_text(
     (salt, text), identical across runs, partitionings, and retries."""
     if dim < 1:
         raise ValueError("dim must be >= 1")
-    toks = tokens(F.lower(F.col(text_col)))
-    grams = F.concat(
-        toks,
-        F.when(
-            F.lit(bigrams) & (F.size(toks) > 1),
-            F.zip_with(
-                F.slice(toks, 1, F.size(toks) - 1),
-                F.slice(toks, 2, F.size(toks) - 1),
-                lambda a, b: F.concat_ws(" ", a, b),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )
+    grams = lower_grams(text_col, bigrams)
     g = d.select(F.col(id_col).alias("__id"), F.explode(grams).alias("__g"))
     slot = F.pmod(salted_hash(F.col("__g"), salt, hash_fn), F.lit(dim)).cast("int")
     sign = (

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.localdf import local_rows_df
-from ..functions.text_keys import hex_long, words
+from ..functions.text_keys import hex_long, words, ws_token_count
 from ..registry import query
 from ..sources.tables import load_table
 from .bpe import (
@@ -85,16 +85,6 @@ def _packeff_q9(windows_col: str) -> F.Column:
     return F.expr(
         f"CASE WHEN `{windows_col}` = 0 THEN 0L ELSE "
         f"(2000000000L * ({w} - `n_tokens`) + {w}) DIV (2 * {w}) END"
-    )
-
-
-def ws_token_count(text_col: str = "text") -> F.Column:
-    """Whitespace token count with the empty-token guard (``split('')``
-    yields ``['']``) — THE shared definition for this module's chunker and
-    packer, so a tokenization tweak cannot diverge between them.  NULL
-    text counts 0 tokens (a metadata-only row must degrade, not crash)."""
-    return F.coalesce(
-        F.size(F.filter(words(text_col), lambda t: t != "")), F.lit(0)
     )
 
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.text_keys import WORD_SPLIT, salted_hash
+from ..functions.text_keys import WORD_SPLIT, salted_hash, ws_token_count
 
 
 def stratified_sample(
@@ -232,8 +232,6 @@ def token_budget_mixture(
     ``hash_fn='md5'`` is the shared oracle scheme
     (:func:`text_keys.salted_hash`); production stays on xxhash64."""
     from pyspark.sql.window import Window as W
-
-    from .packing import ws_token_count
 
     n_tok = (
         token_count_col if token_count_col is not None else ws_token_count()

@@ -183,6 +183,17 @@ def _fold(
     return schema, n, errors, None
 
 
+def _drained(part: _Fold, rest: Iterable) -> _Fold:
+    """``part``, a Spark task's fold, once ``rest`` (its input) has been
+    read to the end.  A FAILFAST fold stops at its first error and leaves
+    the rest of its partition unread, and PySpark ends a Python worker
+    whose input was not read to the end instead of reusing it."""
+    if part[3] is not None:
+        for _ in rest:
+            pass
+    return part
+
+
 # Fewest bytes in a default split beyond Spark's own default of two, so a
 # small file does not pay a task start-up per core for a millisecond fold.
 _MIN_SPLIT_BYTES = 1 << 20
@@ -289,13 +300,13 @@ def infer_path(
         rdd = rdd.sample(False, float(sampling_ratio), seed=42)
 
     recs = rdd.mapPartitionsWithIndex(
-        lambda pid, it: [(pid, _fold(it, EMPTY_STRUCT, permissive, detect_dates))]
+        lambda pid, it: [(pid, _drained(_fold(it, EMPTY_STRUCT, permissive, detect_dates), it))]
     ).collect()
     recs.sort(key=lambda r: r[0])
 
     def refold(pid: int, seed: Descriptor) -> _Fold:
         [part] = sc.runJob(
-            rdd, lambda it: [_fold(it, seed, False, detect_dates)], partitions=[pid]
+            rdd, lambda it: [_drained(_fold(it, seed, False, detect_dates), it)], partitions=[pid]
         )
         return part
 
@@ -427,7 +438,9 @@ def _infer_column(
             import pandas as pd  # worker-side
 
             rows = [0]
-            schema, _n, errors, err = _fold(distinct_cells(batches, rows), seed, permissive)
+            schema, _n, errors, err = _drained(
+                _fold(distinct_cells(batches, rows), seed, permissive), batches
+            )
             blob = pickle.dumps((schema, rows[0], errors, err))
             yield pd.DataFrame({"pid": [TaskContext.get().partitionId()], "blob": [blob]})
 

@@ -39,9 +39,9 @@ def get_spark(app_name: str = "hive_serde_schema_gen_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # SPARK_GRAFT_UI=1 turns the UI (and its REST metrics API) on —
-        # bench.py's shuffle-share instrumentation reads per-stage task
-        # metrics from it; everything else runs headless
+        # SPARK_GRAFT_UI=1 turns the UI (and its REST metrics API) on:
+        # `perfbench/run.py --trace 1` reads per-stage task metrics from
+        # it; everything else runs headless
         .config(
             "spark.ui.enabled",
             "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",

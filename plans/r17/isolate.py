@@ -12,11 +12,9 @@ import statistics
 import sys
 import time
 
-_HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, os.path.join(_HERE, "..", ".."))
-sys.path.insert(0, _HERE)
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", ".."))
 
-from capture_plans import bench_queries  # noqa: E402  (same dir)
+from bench import headline_queries  # noqa: E402  (the repo root)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPS = int(os.environ.get("REPS", "3"))
@@ -24,11 +22,12 @@ ACTION = os.environ.get("ACTION", "noop")
 
 
 def main() -> None:
+    from hive_serde_schema_gen_spark.registry import all_queries
     from hive_serde_schema_gen_spark.session import get_spark
 
     spark = get_spark("isolate-r17")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = bench_queries(spark)
+    queries = {**all_queries(), **headline_queries()}
     names = sys.argv[1:]
     # warmup: codegen + python worker pool at tiny SF
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()

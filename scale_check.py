@@ -229,10 +229,8 @@ def _tokmix_probe(s, d):
     the distributed prefix sum and the manifest's per-shard layout."""
     from pyspark.sql import functions as F
 
-    from hive_serde_schema_gen_spark.operators.packing import (
-        training_manifest,
-        ws_token_count,
-    )
+    from hive_serde_schema_gen_spark.functions.text_keys import ws_token_count
+    from hive_serde_schema_gen_spark.operators.packing import training_manifest
     from hive_serde_schema_gen_spark.operators.selection import (
         integer_temperature_budgets,
         token_budget_mixture,
@@ -607,10 +605,8 @@ def main() -> None:
         ).filter("score >= 0")
 
     def _manifest_probe(s, d):
-        from hive_serde_schema_gen_spark.operators.packing import (
-            training_manifest,
-            ws_token_count,
-        )
+        from hive_serde_schema_gen_spark.functions.text_keys import ws_token_count
+        from hive_serde_schema_gen_spark.operators.packing import training_manifest
 
         return training_manifest(
             _docs(s, d).select(

@@ -1007,7 +1007,7 @@ def test_token_budget_mixture_shard_prefix_equals_global(spark):
     from pyspark.sql.window import Window as W
 
     from hive_serde_schema_gen_spark.operators.selection import token_budget_mixture
-    from hive_serde_schema_gen_spark.operators.packing import ws_token_count
+    from hive_serde_schema_gen_spark.functions.text_keys import ws_token_count
 
     d = _tok_docs(spark, n=300, sources=("x", "y"))
     got = {

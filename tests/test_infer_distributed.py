@@ -6,6 +6,7 @@ commas inside STRUCT per the README golden rather than the comma-less
 
 import os
 import re
+import time
 
 import pytest
 
@@ -346,6 +347,37 @@ def test_infer_path_failfast_local_error_runs_one_job(spark, tmp_path, parts):
             sc.setJobGroup(None, None)
         assert ei.value.line == 38, name
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs, name
+
+
+def test_infer_path_failfast_keeps_python_workers(spark, tmp_path):
+    """A FAILFAST task that stops at its partition's error still reads the
+    rest of the partition, so PySpark reuses its Python worker: four calls
+    that raise leave no more distinct workers behind than four clean
+    calls.  After each call a task per core reports its worker's pid."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+
+    def pid(_):
+        time.sleep(0.2)  # hold the worker, so each task takes its own
+        return os.getpid()
+
+    def workers(name, planted):
+        path = tmp_path / f"{name}.json"
+        path.write_text("\n".join(_numbered('{"id": %d, "v": %d}', planted)) + "\n")
+        pids, lines = set(), []
+        for _ in range(4):
+            try:
+                infer_path(spark, str(path), min_partitions=4)
+            except RowMismatch as e:
+                lines.append(e.line)
+            pids |= set(sc.parallelize(range(cores), cores).map(pid).collect())
+        return pids, lines
+
+    clean, no_errors = workers("clean", {})
+    # the error is local to the last of the 4 partitions, 4 lines from its end
+    failing, errors = workers("local", {36: '{"id": 36, "v": "x"}'})
+    assert (no_errors, errors) == ([], [36] * 4)
+    assert len(failing) <= len(clean)
 
 
 def test_infer_path_permissive_drift_refolds_in_few_jobs(spark, tmp_path):

@@ -1,7 +1,8 @@
-"""bench.py and scale_check.py are run by hand, not imported by the suite,
-so a renamed or deleted package name would break them silently.  Walk
-every ``from hive_serde_schema_gen_spark… import …`` (and ``import
-hive_serde_schema_gen_spark…``) in both scripts, at any depth — most sit
+"""bench.py, scale_check.py and the scripts under plans/ are run by hand,
+not imported by the suite, so a renamed or deleted package name would
+break them silently.  Walk every ``from hive_serde_schema_gen_spark…
+import …`` (and ``import hive_serde_schema_gen_spark…``, and the plans
+scripts' ``from bench import …``) in each script, at any depth — most sit
 inside functions — and check that each module imports and each name
 resolves.  No Spark session is needed: the package starts none on
 import."""
@@ -9,6 +10,7 @@ import."""
 from __future__ import annotations
 
 import ast
+import glob
 import importlib
 import importlib.util
 import os
@@ -17,6 +19,12 @@ import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "hive_serde_schema_gen_spark"
+# the repo-root modules a script may import, besides the package
+ROOT_MODULES = (PKG, "bench")
+PLAN_SCRIPTS = sorted(
+    os.path.relpath(path, ROOT)
+    for path in glob.glob(os.path.join(ROOT, "plans", "r18", "*.py"))
+) + [os.path.join("plans", "r17", "isolate.py")]
 
 
 def _package_imports(script):
@@ -29,7 +37,7 @@ def _package_imports(script):
     modules = {}  # alias -> dotted module path
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom) and node.level == 0:
-            if (node.module or "").split(".")[0] == PKG:
+            if (node.module or "").split(".")[0] in ROOT_MODULES:
                 for alias in node.names:
                     yield node.lineno, node.module, alias.name
                     if alias.asname:
@@ -59,16 +67,36 @@ def _resolves(module, name):
     return True
 
 
-@pytest.mark.parametrize("script", ["bench.py", "scale_check.py"])
-def test_script_package_imports_resolve(script):
-    found = list(_package_imports(script))
-    assert len(found) > 10, found  # the walk reaches the nested imports
-    broken = [
+def _broken(script, found):
+    return [
         f"{script}:{line}: from {module} import {name}"
         for line, module, name in found
         if not _resolves(module, name)
     ]
-    assert broken == []
+
+
+@pytest.mark.parametrize("script", ["bench.py", "scale_check.py"])
+def test_script_package_imports_resolve(script):
+    found = list(_package_imports(script))
+    assert len(found) > 10, found  # the walk reaches the nested imports
+    assert _broken(script, found) == []
+
+
+@pytest.mark.parametrize("script", PLAN_SCRIPTS)
+def test_plan_script_imports_resolve(script):
+    found = list(_package_imports(script))
+    assert found
+    assert _broken(script, found) == []
+
+
+def test_bench_headline_table():
+    """bench.py's one table of the callables it times, which the plans
+    scripts import: every headliner has a query, and nothing else."""
+    import bench
+
+    queries = bench.headline_queries()
+    assert sorted(queries) == sorted(bench.HEADLINE)
+    assert all(callable(q) for q in queries.values())
 
 
 def _unused_relative_imports():

@@ -1,17 +1,19 @@
 """``functions/text_keys.py`` is the one Spark-side spelling of the rules
 that turn text into keys; the DuckDB oracles re-derive them in SQL.
 
-- Spark-free: the tokenizer pattern appears in no other package module,
-  in any spelling, and every ``string_split_regex`` in the registered
-  oracles splits on the same class (the ``''`` character splits of the
-  BPE oracle aside).  ``bpe``'s Arrow path keeps a Python-side class of
-  its own; it builds no Spark pattern.
+- Spark-free: the whitespace class (so the tokenizer pattern built from
+  it) appears in no other package module, and every
+  ``string_split_regex`` in the registered oracles splits on the same
+  class (the ``''`` character splits of the BPE oracle aside).  ``bpe``'s
+  Arrow path strips and splits on the same constant.
 - The three tokenizer forms (bare ``words``, ``words`` filtered of
   ``''``, the guarded ``tokens``) give different arrays on edge texts;
   the table is pinned so that merging them fails here.
 - On edge texts the n-gram forms agree: ``word_grams`` rows equal
   ``gram_array``'s exploded rows, which (with positions) equal
-  ``kgram_postings``'s window rows, which equal a pure-Python reference.
+  ``kgram_postings``'s window rows, which equal a pure-Python reference;
+  and ``lower_grams`` equals the lowercased tokens followed by their
+  ``gram_array`` bigrams.
 """
 
 from __future__ import annotations
@@ -25,8 +27,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from hive_serde_schema_gen_spark.functions.text_keys import (
+    WHITESPACE,
     WORD_SPLIT,
     gram_array,
+    lower_grams,
     tokens,
     word_grams,
     words,
@@ -35,7 +39,7 @@ from hive_serde_schema_gen_spark.functions.text_keys import (
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "hive_serde_schema_gen_spark")
 
-EDGE_TEXTS = ["", "   ", "\thello world", "a", "a  b\tc\nd"]
+EDGE_TEXTS = ["", "   ", "\thello world", "a", "a  b\tc\nd", "Hello\x0bWORLD  x"]
 
 
 def _string_constants(path):
@@ -55,7 +59,7 @@ def test_tokenizer_literal_lives_in_text_keys_only():
                 found += [
                     os.path.relpath(path, PKG)
                     for value in _string_constants(path)
-                    if WORD_SPLIT in value
+                    if WHITESPACE in value
                 ]
     assert found == [os.path.join("functions", "text_keys.py")]
 
@@ -152,3 +156,16 @@ def test_gram_forms_agree_on_edge_texts(edge_docs, n):
         want += [(i, p, " ".join(w[p : p + n])) for p in range(len(w) - n + 1)]
     assert arrayed == windowed == sorted(want)
     assert zipped == sorted((i, g) for i, _, g in arrayed)
+
+
+def test_lower_grams_is_tokens_then_bigrams(edge_docs):
+    toks = tokens(F.lower(F.col("text")))
+    got = edge_docs.select(
+        "text",
+        lower_grams("text").alias("got"),
+        F.concat(toks, gram_array(toks, 2)).alias("want"),
+    ).collect()
+    assert [r["got"] for r in got] == [r["want"] for r in got]
+    assert {r["text"]: r["got"] for r in got}["Hello\x0bWORLD  x"] == [
+        "hello", "world", "x", "hello world", "world x"
+    ]
